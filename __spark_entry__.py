@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import sys
+from itertools import combinations
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -506,23 +507,23 @@ def q_dedup_jaccard(spark, sf_dir):
 
 
 def q_dedup_minhash(spark, sf_dir):
-    """MinHash+LSH candidate pairs, portable md5 flavor (oracle-checkable).
+    """MinHash+LSH candidate pairs (xxhash64 signatures).
 
     k=24 in 8 bands of 3 rows: the S-curve threshold (1/b)^(1/r) = 0.5
     matches the pipeline's Jaccard cut — the round-1 k=8/4-band config
     (2 rows/band) admitted ~80% of ALL pairs as candidates, which is a
     scale-killer masquerading as recall."""
     return dedup.minhash_dup_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8, portable=True
+        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8
     )
 
 
 def q_dedup_verified(spark, sf_dir):
     """Production near-dup flow: LSH candidates verified by exact Jaccard on
-    candidate pairs only (portable md5 flavor for the oracle)."""
+    candidate pairs only, over xxhash64 token hashes."""
     return dedup.verified_dup_pairs(
         _docs(spark, sf_dir), "doc_id", "text",
-        threshold_num=1, threshold_den=2, k=24, bands=8, portable=True,
+        threshold_num=1, threshold_den=2, k=24, bands=8,
     )
 
 
@@ -686,25 +687,12 @@ def _emb_double(spark, sf_dir):
 
 def q_embedding_dups(spark, sf_dir):
     """Embedding cosine near-dup pairs through hyperplane-LSH buckets — the
-    scale path (all-pairs only WITHIN a bucket, never a global crossJoin),
-    with portable md5-derived planes so DuckDB reproduces the buckets."""
-    planes = similarity.portable_planes(4, 64)
+    scale path (all-pairs only WITHIN a bucket, never a global crossJoin).
+    Plane components are computed on executors from xxhash64(seed, p, j);
+    the oracle embeds the same ±1 grid from functions/xxh64.py."""
     p = dedup.bucketed_embedding_dup_pairs(
         _emb_double(spark, sf_dir), "vec_id", "v",
-        threshold=0.5, n_planes=4, dim=64, planes=planes,
-    )
-    return p.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-
-
-def q_embedding_dups_fast(spark, sf_dir):
-    """Embedding near-dup through the PRODUCTION bucket branch: plane
-    components computed on executors from xxhash64(seed, p, j) — no literal
-    arrays in the plan.  Oracle-checkable anyway: functions/xxh64.py
-    replicates Spark's int-literal xxhash64 bit-for-bit (pytest-verified),
-    so the oracle embeds the identical ±1 grid."""
-    p = dedup.bucketed_embedding_dup_pairs(
-        _emb_double(spark, sf_dir), "vec_id", "v",
-        threshold=0.5, n_planes=4, dim=64,  # planes=None → xxhash64 branch
+        threshold=0.5, n_planes=4, dim=64,
     )
     return p.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
 
@@ -781,33 +769,32 @@ def q_union_decode_members(spark, sf_dir):
 
 def q_multimodal_features(spark, sf_dir):
     """Binary payload plumbing: Arrow-batched feature extraction over
-    mapInPandas with the stubbed decode kernel — portable md5 flavor, so the
-    feature VALUES themselves (not just shapes) hash-match the oracle."""
+    mapInPandas with the stubbed sha256 decode kernel, so the feature
+    VALUES themselves (not just shapes) hash-match the oracle."""
     from sissaschool_xmlschema_spark.operators import multimodal
 
     media = multimodal.synthetic_media(spark, _docs(spark, sf_dir))
-    feats = multimodal.extract_features(media, portable=True)
+    feats = multimodal.extract_features(media)
     return feats.select(
         "media_id", "mime", "n_bytes",
         F.size("feature").alias("dim"),
         *[
-            F.round(F.col("feature")[i], 6).alias(f"f{i}")
-            for i in range(multimodal.PORTABLE_FEATURE_DIM)
+            F.round(F.col("feature")[i].cast("double"), 6).alias(f"f{i}")
+            for i in range(multimodal.FEATURE_DIM)
         ],
     )
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs — portable md5 bit-string flavor (oracle-checkable);
-    chunk count derived from max_hamming (pigeonhole recall contract)."""
-    return dedup.portable_simhash_dup_pairs(
+    """SimHash near-dup pairs at radius 3; chunk count derived from
+    max_hamming (pigeonhole recall contract)."""
+    return dedup.simhash_dup_pairs(
         _docs(spark, sf_dir), "doc_id", "text", max_hamming=3
     )
 
 
-# non-SQL-expressible (rows-only check): production hash flavors
 def q_simhash_fast(spark, sf_dir):
-    """SimHash with xxhash64 signatures (production flavor, no oracle).
+    """SimHash near-dup pairs at radius 4 (five 12-13-bit chunk keys).
 
     max_hamming CAPPED at 4 per the round-2 verdict: radius 8 with
     single-chunk keys means ~7-bit chunk keys and n²·9/128 random candidate
@@ -822,69 +809,44 @@ def q_simhash_fast(spark, sf_dir):
 
 
 def q_simhash_keep(spark, sf_dir):
-    """SimHash dedup keep-list, portable md5 bit-string flavor (oracle-
-    checkable): drop iff a chunk bucket's min-id member is verified within
-    Hamming ≤ 3.  O(n·chunks) verify work, O(n) output."""
-    keep = dedup.portable_simhash_dedup_keep(
+    """SimHash dedup keep-list at radius 3: drop iff a chunk bucket's
+    min-id member is verified within Hamming ≤ 3.  O(n·chunks) verify work,
+    O(n) output."""
+    keep = dedup.simhash_dedup_keep(
         _docs(spark, sf_dir), "doc_id", "text", max_hamming=3
     )
     return keep.select(F.col("id").alias("doc_id"))
 
 
 def q_simhash_keep_fast(spark, sf_dir):
-    """Production radius-8 SimHash dedup: xxhash64 signatures, combined-chunk
-    tables (C(10,2)=45 tables of ~12.8-bit keys), verify only against bucket
-    minima — the scale shape the round-2 verdict asked for (rows-only)."""
+    """Production radius-8 SimHash dedup: combined-chunk tables
+    (C(10,2)=45 tables of ~12.8-bit keys), verify only against bucket
+    minima — the scale shape the round-2 verdict asked for."""
     keep = dedup.simhash_dedup_keep(
         _docs(spark, sf_dir), "doc_id", "text", max_hamming=8
     )
     return keep.select(F.col("id").alias("doc_id"))
 
 
-def q_minhash_fast(spark, sf_dir):
-    """MinHash+LSH with xxhash64 signatures (production flavor, no oracle)."""
-    return dedup.minhash_dup_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8, portable=False
-    )
-
-
 def q_dedup_keep(spark, sf_dir):
     """Greedy LSH dedup keep-list — O(n) output on any corpus (the pair
-    queries above enumerate O(cluster^2) pairs by definition); portable md5
-    flavor so DuckDB reproduces the drop decisions exactly."""
+    queries above enumerate O(cluster^2) pairs by definition)."""
     keep = dedup.lsh_dedup_keep(
-        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8, portable=True
-    )
-    return keep.select(F.col("id").alias("doc_id"))
-
-
-def q_dedup_keep_fast(spark, sf_dir):
-    """Production flavor of the keep-list (xxhash64 signatures, no oracle)."""
-    keep = dedup.lsh_dedup_keep(
-        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8, portable=False
+        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8
     )
     return keep.select(F.col("id").alias("doc_id"))
 
 
 def q_dedup_keep_cc(spark, sf_dir):
-    """Exact-connected-components keep-list (portable md5 flavor): iterative
+    """Exact-connected-components keep-list: iterative
     min-id label propagation over the LSH bucket graph to a fixpoint — one
     representative per candidate-graph component, bounding the greedy
     keep-list's chain artifact.  Oracle: recursive-CTE transitive closure."""
     keep = dedup.lsh_dedup_keep(
-        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8, portable=True,
+        _docs(spark, sf_dir), "doc_id", "text", k=24, bands=8,
         exact_components=True,
     )
     return keep.select(F.col("id").alias("doc_id"))
-
-
-def q_dedup_verified_fast(spark, sf_dir):
-    """Production near-dup pipeline end-to-end with xxhash64 signatures —
-    the flavor a 100 TB run uses (no string hashing; no oracle)."""
-    return dedup.verified_dup_pairs(
-        _docs(spark, sf_dir), "doc_id", "text",
-        threshold_num=1, threshold_den=2, k=24, bands=8, portable=False,
-    )
 
 
 def q_stats_approx(spark, sf_dir):
@@ -897,14 +859,12 @@ def q_stats_approx(spark, sf_dir):
 
 
 def q_lsh_topk(spark, sf_dir):
-    """Hyperplane-LSH bucketed approximate top-k, portable planes — the
-    query scans only its own bucket; buckets + cosines oracle-checkable."""
+    """Hyperplane-LSH bucketed approximate top-k — the query scans only its
+    own bucket; buckets + cosines oracle-checkable."""
     emb = _emb_double(spark, sf_dir)
     q = emb.filter("vec_id = 0").first()["v"]
-    planes = similarity.portable_planes(4, 64)
     r = similarity.lsh_topk(
         emb, "vec_id", "v", [float(x) for x in q], k=10, n_planes=4,
-        planes=planes,
     )
     return r.select(
         F.col("id").alias("vec_id"), F.round("cos", 6).alias("cos")
@@ -917,10 +877,9 @@ def q_lsh_topk_probe(spark, sf_dir):
     n_planes; still bucket-pruned scans, oracle-checkable via XOR."""
     emb = _emb_double(spark, sf_dir)
     q = emb.filter("vec_id = 0").first()["v"]
-    planes = similarity.portable_planes(4, 64)
     r = similarity.lsh_topk(
         emb, "vec_id", "v", [float(x) for x in q], k=10, n_planes=4,
-        planes=planes, multiprobe=True,
+        multiprobe=True,
     )
     return r.select(
         F.col("id").alias("vec_id"), F.round("cos", 6).alias("cos")
@@ -947,13 +906,11 @@ def q_ivf_topk(spark, sf_dir):
 def q_knn_join(spark, sf_dir):
     """Batch ANN serving shape: a query TABLE (8 vectors) joined to the
     corpus on multiprobe LSH buckets, per-query exact-cosine top-5 via one
-    row_number window.  The corpus never shuffles (queries broadcast);
-    portable planes make every bucket and rank DuckDB-reproducible."""
+    row_number window.  The corpus never shuffles (queries broadcast)."""
     emb = _emb_double(spark, sf_dir)
-    planes = similarity.portable_planes(4, 64)
     r = similarity.knn_join(
         emb.filter("vec_id < 8"), emb, k=5, n_planes=4, dim=64,
-        planes=planes, multiprobe=True,
+        multiprobe=True,
         q_id="vec_id", q_vec="v", c_id="vec_id", c_vec="v",
     )
     return r.select(
@@ -962,25 +919,14 @@ def q_knn_join(spark, sf_dir):
 
 
 def q_pipeline_keep(spark, sf_dir):
-    """End-to-end curation pipeline (portable md5 flavor): length + language
+    """End-to-end curation pipeline: length + language
     + stopword + punctuation gates composed with the greedy LSH dedup
     keep-list in one plan — the composition a 100 TB corpus job runs."""
     from sissaschool_xmlschema_spark.operators import pipeline
 
     keep = pipeline.pretraining_keep(
         _docs(spark, sf_dir), "doc_id", "text",
-        min_tokens=20, langs=("en",), k=24, bands=8, portable=True,
-    )
-    return keep.select(F.col("id").alias("doc_id"), "lang", "n_tokens")
-
-
-def q_pipeline_keep_fast(spark, sf_dir):
-    """Production flavor of the curation pipeline (xxhash64 signatures)."""
-    from sissaschool_xmlschema_spark.operators import pipeline
-
-    keep = pipeline.pretraining_keep(
-        _docs(spark, sf_dir), "doc_id", "text",
-        min_tokens=20, langs=("en",), k=24, bands=8, portable=False,
+        min_tokens=20, langs=("en",), k=24, bands=8,
     )
     return keep.select(F.col("id").alias("doc_id"), "lang", "n_tokens")
 
@@ -1103,7 +1049,7 @@ def q_mixture_weights(spark, sf_dir):
 
 
 def q_sample_stratified(spark, sf_dir):
-    """Deterministic hash-gated stratified sample (portable md5 flavor):
+    """Deterministic md5-gated stratified sample:
     per-lang keep rates in ppm; reproducible across retries/resumes, unlike
     F.rand()."""
     from sissaschool_xmlschema_spark.operators import curation
@@ -1111,17 +1057,6 @@ def q_sample_stratified(spark, sf_dir):
     return curation.stratified_sample(
         _docs(spark, sf_dir), "doc_id", "lang",
         {"en": 300000, "fr": 800000}, default_ppm=500000,
-    ).select("doc_id", "lang")
-
-
-def q_sample_stratified_fast(spark, sf_dir):
-    """Production sampler flavor: one xxhash64 per row, no hex round-trip
-    (different hash ⇒ different-but-equally-valid sample; rows-only)."""
-    from sissaschool_xmlschema_spark.operators import curation
-
-    return curation.stratified_sample(
-        _docs(spark, sf_dir), "doc_id", "lang",
-        {"en": 300000, "fr": 800000}, default_ppm=500000, portable=False,
     ).select("doc_id", "lang")
 
 
@@ -1736,7 +1671,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ks_binned": q_ks_binned,
         "stats_docs_by_source": q_stats_docs_by_source,
         "embedding_dups": q_embedding_dups,
-        "embedding_dups_fast": q_embedding_dups_fast,
+        "embedding_dups_fast": q_embedding_dups,
         "decode_failures": q_decode_failures,
         "nillable_events": q_nillable_events,
         "union_decode_members": q_union_decode_members,
@@ -1745,10 +1680,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_fast": q_simhash_fast,
         "simhash_keep": q_simhash_keep,
         "simhash_keep_fast": q_simhash_keep_fast,
-        "minhash_fast": q_minhash_fast,
-        "dedup_verified_fast": q_dedup_verified_fast,
+        "minhash_fast": q_dedup_minhash,
+        "dedup_verified_fast": q_dedup_verified,
         "dedup_keep": q_dedup_keep,
-        "dedup_keep_fast": q_dedup_keep_fast,
+        "dedup_keep_fast": q_dedup_keep,
         "dedup_keep_cc": q_dedup_keep_cc,
         "stats_approx": q_stats_approx,
         "lsh_topk": q_lsh_topk,
@@ -1756,7 +1691,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_topk": q_ivf_topk,
         "knn_join": q_knn_join,
         "pipeline_keep": q_pipeline_keep,
-        "pipeline_keep_fast": q_pipeline_keep_fast,
+        "pipeline_keep_fast": q_pipeline_keep,
         "decontam": q_decontam,
         "decontam_fast": q_decontam_fast,
         "decontam_keep": q_decontam_keep,
@@ -1767,7 +1702,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_dedup_fast": q_span_dedup_fast,
         "mixture_weights": q_mixture_weights,
         "sample_stratified": q_sample_stratified,
-        "sample_stratified_fast": q_sample_stratified_fast,
+        "sample_stratified_fast": q_sample_stratified,
         "bpe_vocab": q_bpe_vocab,
         "bpe_tokens": q_bpe_tokens,
         "bpe_tokens_fixed": q_bpe_tokens_fixed,
@@ -2316,37 +2251,54 @@ JOIN sizes sb ON sb.id = p.id_b
 WHERE (2 + 1) * p.inter >= 1 * (sa.n_tok + sb.n_tok)
 """
 
-    # portable md5 minhash: same seed strings as the Spark side,
-    # lexicographic min over the hex form (identical in any engine)
-    sql["dedup_minhash"] = f"""
-WITH toks AS (
+    # MinHash with Spark's xxhash64, evaluated by the spark_xxhash64 UDF
+    # (functions/xxh64.py, registered by tools/check_oracle.py):
+    # spark_xxhash64(s, [a, ...]) = F.xxhash64(s, F.lit(a), ...).  Minimum
+    # i is over signed BIGINTs of xxhash64(token, 42 + i); the band key is
+    # md5 of the band's decimal minima joined by '|'
+    _mh_toks = """toks AS (
   SELECT doc_id AS id, UNNEST(list_filter(list_distinct(
     string_split_regex(text, '\\s+')), t -> t <> '')) AS token
   FROM documents
-),
-sigs AS (SELECT id, MIN(md5('42:0:' || token)) AS h0, MIN(md5('42:1:' || token)) AS h1, MIN(md5('42:2:' || token)) AS h2, MIN(md5('42:3:' || token)) AS h3, MIN(md5('42:4:' || token)) AS h4, MIN(md5('42:5:' || token)) AS h5, MIN(md5('42:6:' || token)) AS h6, MIN(md5('42:7:' || token)) AS h7, MIN(md5('42:8:' || token)) AS h8, MIN(md5('42:9:' || token)) AS h9, MIN(md5('42:10:' || token)) AS h10, MIN(md5('42:11:' || token)) AS h11, MIN(md5('42:12:' || token)) AS h12, MIN(md5('42:13:' || token)) AS h13, MIN(md5('42:14:' || token)) AS h14, MIN(md5('42:15:' || token)) AS h15, MIN(md5('42:16:' || token)) AS h16, MIN(md5('42:17:' || token)) AS h17, MIN(md5('42:18:' || token)) AS h18, MIN(md5('42:19:' || token)) AS h19, MIN(md5('42:20:' || token)) AS h20, MIN(md5('42:21:' || token)) AS h21, MIN(md5('42:22:' || token)) AS h22, MIN(md5('42:23:' || token)) AS h23 FROM toks GROUP BY id),
-buckets AS (SELECT id, 0 AS band, md5(h0 || '|' || h1 || '|' || h2) AS bkey FROM sigs UNION ALL SELECT id, 1 AS band, md5(h3 || '|' || h4 || '|' || h5) AS bkey FROM sigs UNION ALL SELECT id, 2 AS band, md5(h6 || '|' || h7 || '|' || h8) AS bkey FROM sigs UNION ALL SELECT id, 3 AS band, md5(h9 || '|' || h10 || '|' || h11) AS bkey FROM sigs UNION ALL SELECT id, 4 AS band, md5(h12 || '|' || h13 || '|' || h14) AS bkey FROM sigs UNION ALL SELECT id, 5 AS band, md5(h15 || '|' || h16 || '|' || h17) AS bkey FROM sigs UNION ALL SELECT id, 6 AS band, md5(h18 || '|' || h19 || '|' || h20) AS bkey FROM sigs UNION ALL SELECT id, 7 AS band, md5(h21 || '|' || h22 || '|' || h23) AS bkey FROM sigs)
+)"""
+    _mh_sigs = (
+        "SELECT id, "
+        + ", ".join(
+            f"MIN(spark_xxhash64(token, [{42 + i}])) AS h{i}" for i in range(24)
+        )
+        + " FROM toks GROUP BY id"
+    )
+    _mh_buckets = " UNION ALL ".join(
+        f"SELECT id, {b} AS band, "
+        f"md5(concat_ws('|', h{3 * b}, h{3 * b + 1}, h{3 * b + 2})) AS bkey "
+        "FROM sigs"
+        for b in range(8)
+    )
+    sql["dedup_minhash"] = f"""
+WITH {_mh_toks},
+sigs AS ({_mh_sigs}),
+buckets AS ({_mh_buckets})
 SELECT DISTINCT a.id AS id_a, b.id AS id_b
 FROM buckets a JOIN buckets b
   ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
 """
+    sql["minhash_fast"] = sql["dedup_minhash"]
 
+    # verification intersects the distinct xxhash64(token) sets, as
+    # dedup.verified_dup_pairs does
     sql["dedup_verified"] = f"""
-WITH toks AS (
-  SELECT doc_id AS id, UNNEST(list_filter(list_distinct(
-    string_split_regex(text, '\\s+')), t -> t <> '')) AS token
-  FROM documents
-),
-sigs AS (SELECT id, MIN(md5('42:0:' || token)) AS h0, MIN(md5('42:1:' || token)) AS h1, MIN(md5('42:2:' || token)) AS h2, MIN(md5('42:3:' || token)) AS h3, MIN(md5('42:4:' || token)) AS h4, MIN(md5('42:5:' || token)) AS h5, MIN(md5('42:6:' || token)) AS h6, MIN(md5('42:7:' || token)) AS h7, MIN(md5('42:8:' || token)) AS h8, MIN(md5('42:9:' || token)) AS h9, MIN(md5('42:10:' || token)) AS h10, MIN(md5('42:11:' || token)) AS h11, MIN(md5('42:12:' || token)) AS h12, MIN(md5('42:13:' || token)) AS h13, MIN(md5('42:14:' || token)) AS h14, MIN(md5('42:15:' || token)) AS h15, MIN(md5('42:16:' || token)) AS h16, MIN(md5('42:17:' || token)) AS h17, MIN(md5('42:18:' || token)) AS h18, MIN(md5('42:19:' || token)) AS h19, MIN(md5('42:20:' || token)) AS h20, MIN(md5('42:21:' || token)) AS h21, MIN(md5('42:22:' || token)) AS h22, MIN(md5('42:23:' || token)) AS h23 FROM toks GROUP BY id),
-buckets AS (SELECT id, 0 AS band, md5(h0 || '|' || h1 || '|' || h2) AS bkey FROM sigs UNION ALL SELECT id, 1 AS band, md5(h3 || '|' || h4 || '|' || h5) AS bkey FROM sigs UNION ALL SELECT id, 2 AS band, md5(h6 || '|' || h7 || '|' || h8) AS bkey FROM sigs UNION ALL SELECT id, 3 AS band, md5(h9 || '|' || h10 || '|' || h11) AS bkey FROM sigs UNION ALL SELECT id, 4 AS band, md5(h12 || '|' || h13 || '|' || h14) AS bkey FROM sigs UNION ALL SELECT id, 5 AS band, md5(h15 || '|' || h16 || '|' || h17) AS bkey FROM sigs UNION ALL SELECT id, 6 AS band, md5(h18 || '|' || h19 || '|' || h20) AS bkey FROM sigs UNION ALL SELECT id, 7 AS band, md5(h21 || '|' || h22 || '|' || h23) AS bkey FROM sigs),
+WITH {_mh_toks},
+sigs AS ({_mh_sigs}),
+buckets AS ({_mh_buckets}),
 cands AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM buckets a JOIN buckets b
     ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
 ),
 tl AS (
-  SELECT doc_id AS id, list_filter(list_distinct(
-    string_split_regex(text, '\\s+')), t -> t <> '') AS toks
+  SELECT doc_id AS id, list_distinct(list_transform(list_filter(list_distinct(
+    string_split_regex(text, '\\s+')), t -> t <> ''),
+    t -> spark_xxhash64(t, []))) AS toks
   FROM documents
 )
 SELECT c.id_a, c.id_b,
@@ -2359,50 +2311,81 @@ JOIN tl tb ON tb.id = c.id_b
 WHERE (2 + 1) * len(list_intersect(ta.toks, tb.toks))
       >= 1 * (len(ta.toks) + len(tb.toks))
 """
+    sql["dedup_verified_fast"] = sql["dedup_verified"]
 
-    # portable md5 bit-string simhash: 64 conditional sums -> '0'/'1' string,
-    # 4 chunk bands (max_hamming=3), per-pair hamming = differing bit chars —
-    # every step byte-identical in DuckDB (generated, like the minhash sigs)
+    # SimHash: bit b of xxhash64(token, 42) votes +1/-1 per token occurrence;
+    # the signature is the signed BIGINT of the majority bits.  Candidate
+    # tables: C(n_chunks, combine) compound keys over contiguous chunks of
+    # 64 // n_chunks bits (the remainder spread over the leading chunks);
+    # Hamming distance = bit_count(xor(...))
     _sh_sums = ", ".join(
-        f"SUM(CASE WHEN substr(hex, {b + 1}, 1) >= '8' THEN 1 ELSE -1 END)"
-        f" AS b{b}"
+        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(64)
     )
-    _sh_sig = ", ".join(
-        f"CASE WHEN b{b} > 0 THEN '1' ELSE '0' END" for b in range(64)
-    )
-    _sh_chunks = " UNION ALL ".join(
-        f"SELECT id, sig, {c} AS chunk, substr(sig, {c * 16 + 1}, 16) AS ckey "
-        "FROM sigs"
-        for c in range(4)
-    )
-    _sh_ham = " + ".join(
-        f"(CASE WHEN substr(sig_a, {b + 1}, 1) <> substr(sig_b, {b + 1}, 1) "
-        "THEN 1 ELSE 0 END)"
+    _sh_sig = " + ".join(
+        f"(CASE WHEN b{b} > 0 THEN {(1 << b) if b < 63 else -(1 << 63)} "
+        "ELSE 0 END)"
         for b in range(64)
     )
-    sql["simhash_pairs"] = f"""
-WITH toks AS (
+    _sh_sigs = f"""toks AS (
   SELECT doc_id AS id, UNNEST(list_filter(
     string_split_regex(text, '\\s+'), t -> t <> '')) AS token
   FROM documents
 ),
-hx AS (
-  SELECT id, md5('42:a:' || token) || md5('42:b:' || token) AS hex FROM toks
-),
-sums AS (SELECT id, {_sh_sums} FROM hx GROUP BY id),
-sigs AS (SELECT id, concat({_sh_sig}) AS sig FROM sums),
-chunks AS ({_sh_chunks}),
+hs AS (SELECT id, spark_xxhash64(token, [42]) AS h FROM toks),
+sums AS (SELECT id, {_sh_sums} FROM hs GROUP BY id),
+sigs AS (SELECT id, CAST({_sh_sig} AS BIGINT) AS sig FROM sums)"""
+
+    def _sh_tables(n_chunks: int, combine: int) -> str:
+        base, rem = divmod(64, n_chunks)
+        widths = [base + (1 if c < rem else 0) for c in range(n_chunks)]
+        offs = [sum(widths[:c]) for c in range(n_chunks)]
+
+        def chunk(c):
+            return f"((sig >> {offs[c]}) & {(1 << widths[c]) - 1})"
+
+        return " UNION ALL ".join(
+            f"SELECT id, sig, {ti} AS tbl, "
+            f"concat_ws('|', {', '.join(chunk(c) for c in combo)}) AS ckey "
+            "FROM sigs"
+            for ti, combo in enumerate(combinations(range(n_chunks), combine))
+        )
+
+    def _simhash_pairs(radius: int, n_chunks: int, combine: int) -> str:
+        return f"""
+WITH {_sh_sigs},
+tables AS ({_sh_tables(n_chunks, combine)}),
 cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b,
          a.sig AS sig_a, b.sig AS sig_b
-  FROM chunks a JOIN chunks b
-    ON a.chunk = b.chunk AND a.ckey = b.ckey AND a.id < b.id
-),
-ham AS (SELECT id_a, id_b, {_sh_ham} AS hamming FROM cand)
-SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-FROM ham WHERE hamming <= 3
+  FROM tables a JOIN tables b
+    ON a.tbl = b.tbl AND a.ckey = b.ckey AND a.id < b.id
+)
+SELECT id_a, id_b, CAST(bit_count(xor(sig_a, sig_b)) AS BIGINT) AS hamming
+FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {radius}
 """
+
+    def _simhash_keep(radius: int, n_chunks: int, combine: int) -> str:
+        return f"""
+WITH {_sh_sigs},
+tables AS ({_sh_tables(n_chunks, combine)}),
+mins AS (
+  SELECT tbl, ckey, MIN(id) AS min_id, arg_min(sig, id) AS min_sig
+  FROM tables GROUP BY tbl, ckey
+),
+dropped AS (
+  SELECT DISTINCT t.id FROM tables t
+  JOIN mins m ON t.tbl = m.tbl AND t.ckey = m.ckey
+  WHERE t.id > m.min_id AND bit_count(xor(t.sig, m.min_sig)) <= {radius}
+)
+SELECT doc_id FROM documents
+WHERE doc_id NOT IN (SELECT id FROM dropped)
+"""
+
+    sql["simhash_pairs"] = _simhash_pairs(3, 4, 1)
+    sql["simhash_fast"] = _simhash_pairs(4, 5, 1)
+    sql["simhash_keep"] = _simhash_keep(3, 4, 1)
+    sql["simhash_keep_fast"] = _simhash_keep(8, 10, 2)
 
     sql["ann_cosine"] = """
 WITH e AS (
@@ -2418,10 +2401,13 @@ FROM e, q
 WHERE list_dot_product(embedding, embedding) > 0
 """
 
-    # hyperplane-LSH buckets with md5-derived ±1 planes (portable_planes):
-    # the SAME literal arrays the Spark plan embeds, so bucket assignments and
-    # the within-bucket cosines are bit-identical cross-engine
-    _planes = similarity.portable_planes(4, 64)
+    # hyperplane-LSH buckets: the ±1 grid Spark derives on executors from
+    # xxhash64(seed, p, j) & 1, replicated bit-for-bit by functions/xxh64.py
+    # as literals, so bucket assignments and the within-bucket cosines are
+    # bit-identical cross-engine
+    from sissaschool_xmlschema_spark.functions.xxh64 import xxhash64_planes
+
+    _planes = xxhash64_planes(4, 64)
 
     def _plane_lit(p):
         return "[" + ", ".join(f"{v:.1f}" for v in p) + "]"
@@ -2451,34 +2437,7 @@ p AS (
 )
 SELECT id_a, id_b, ROUND(cos, 6) AS cos FROM p WHERE cos >= 0.5
 """
-
-    # production-branch twin: the ±1 grid Spark derives on executors from
-    # xxhash64(seed, p, j) & 1, replicated bit-for-bit by functions/xxh64.py
-    # (pytest cross-checks the replication against F.xxhash64 itself)
-    from sissaschool_xmlschema_spark.functions.xxh64 import xxhash64_planes
-
-    _xplanes = xxhash64_planes(4, 64)
-    _emb_bucket_x = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_plane_lit(_xplanes[p])}) > 0 "
-        f"THEN {1 << p} ELSE 0 END)"
-        for p in range(4)
-    )
-    sql["embedding_dups_fast"] = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  WHERE list_dot_product(CAST(embedding AS DOUBLE[]),
-                         CAST(embedding AS DOUBLE[])) > 0
-),
-b AS (SELECT vec_id, v, {_emb_bucket_x} AS bucket FROM e),
-p AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-         list_dot_product(x.v, y.v)
-         / (sqrt(list_dot_product(x.v, x.v))
-            * sqrt(list_dot_product(y.v, y.v))) AS cos
-  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-)
-SELECT id_a, id_b, ROUND(cos, 6) AS cos FROM p WHERE cos >= 0.5
-"""
+    sql["embedding_dups_fast"] = sql["embedding_dups"]
 
     sql["lsh_topk"] = f"""
 WITH {_emb_cte},
@@ -2655,32 +2614,33 @@ SELECT "column", offending_value, CAST(COUNT(*) AS BIGINT) AS n
 FROM f GROUP BY "column", offending_value
 """
 
-    # portable multimodal features: component i = the i-th 4-hex-digit slice
-    # of md5(payload) as an integer / 65535 — hex digits decoded with strpos
-    # arithmetic (DuckDB has no hex→int conv); payload = utf-8 bytes of text
+    # multimodal features: component i = the i-th 4-hex-digit slice of
+    # sha256(payload) as an integer / 65535, stored as FLOAT by the kernel's
+    # schema — hex digits decoded with strpos arithmetic (DuckDB has no
+    # hex→int conv); payload = utf-8 bytes of text
     def _hexval(expr: str, pos: int) -> str:
         return (
             f"(strpos('0123456789abcdef', substr({expr}, {pos}, 1)) - 1)"
         )
 
     _mm_feats = ", ".join(
-        "ROUND(("
+        "ROUND(CAST(CAST(CAST("
         + " + ".join(
             f"{_hexval('h', 4 * i + 1 + j)} * {16 ** (3 - j)}"
             for j in range(4)
         )
-        + f") / 65535.0, 6) AS f{i}"
-        for i in range(8)
+        + f" AS DOUBLE) / 65535.0 AS FLOAT) AS DOUBLE), 6) AS f{i}"
+        for i in range(16)
     )
     sql["multimodal_features"] = f"""
 WITH m AS (
   SELECT 'm-' || CAST(doc_id AS VARCHAR(30)) AS media_id,
          'image/fake' AS mime,
          CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-         md5(text) AS h
+         sha256(text) AS h
   FROM documents
 )
-SELECT media_id, mime, n_bytes, 8 AS dim, {_mm_feats} FROM m
+SELECT media_id, mime, n_bytes, 16 AS dim, {_mm_feats} FROM m
 """
 
     sql["nillable_events"] = """
@@ -2712,13 +2672,9 @@ FROM d GROUP BY 1
 """
 
     sql["dedup_keep"] = f"""
-WITH toks AS (
-  SELECT doc_id AS id, UNNEST(list_filter(list_distinct(
-    string_split_regex(text, '\\s+')), t -> t <> '')) AS token
-  FROM documents
-),
-sigs AS (SELECT id, MIN(md5('42:0:' || token)) AS h0, MIN(md5('42:1:' || token)) AS h1, MIN(md5('42:2:' || token)) AS h2, MIN(md5('42:3:' || token)) AS h3, MIN(md5('42:4:' || token)) AS h4, MIN(md5('42:5:' || token)) AS h5, MIN(md5('42:6:' || token)) AS h6, MIN(md5('42:7:' || token)) AS h7, MIN(md5('42:8:' || token)) AS h8, MIN(md5('42:9:' || token)) AS h9, MIN(md5('42:10:' || token)) AS h10, MIN(md5('42:11:' || token)) AS h11, MIN(md5('42:12:' || token)) AS h12, MIN(md5('42:13:' || token)) AS h13, MIN(md5('42:14:' || token)) AS h14, MIN(md5('42:15:' || token)) AS h15, MIN(md5('42:16:' || token)) AS h16, MIN(md5('42:17:' || token)) AS h17, MIN(md5('42:18:' || token)) AS h18, MIN(md5('42:19:' || token)) AS h19, MIN(md5('42:20:' || token)) AS h20, MIN(md5('42:21:' || token)) AS h21, MIN(md5('42:22:' || token)) AS h22, MIN(md5('42:23:' || token)) AS h23 FROM toks GROUP BY id),
-buckets AS (SELECT id, 0 AS band, md5(h0 || '|' || h1 || '|' || h2) AS bkey FROM sigs UNION ALL SELECT id, 1 AS band, md5(h3 || '|' || h4 || '|' || h5) AS bkey FROM sigs UNION ALL SELECT id, 2 AS band, md5(h6 || '|' || h7 || '|' || h8) AS bkey FROM sigs UNION ALL SELECT id, 3 AS band, md5(h9 || '|' || h10 || '|' || h11) AS bkey FROM sigs UNION ALL SELECT id, 4 AS band, md5(h12 || '|' || h13 || '|' || h14) AS bkey FROM sigs UNION ALL SELECT id, 5 AS band, md5(h15 || '|' || h16 || '|' || h17) AS bkey FROM sigs UNION ALL SELECT id, 6 AS band, md5(h18 || '|' || h19 || '|' || h20) AS bkey FROM sigs UNION ALL SELECT id, 7 AS band, md5(h21 || '|' || h22 || '|' || h23) AS bkey FROM sigs),
+WITH {_mh_toks},
+sigs AS ({_mh_sigs}),
+buckets AS ({_mh_buckets}),
 mins AS (SELECT band, bkey, MIN(id) AS min_id FROM buckets GROUP BY band, bkey),
 dropped AS (
   SELECT DISTINCT b.id FROM buckets b
@@ -2728,30 +2684,14 @@ dropped AS (
 SELECT doc_id FROM documents
 WHERE doc_id NOT IN (SELECT id FROM dropped)
 """
+    sql["dedup_keep_fast"] = sql["dedup_keep"]
 
     # exact-connected-components keep-list: min-id label propagation as a
-    # recursive-CTE transitive closure over the SAME md5 minhash buckets —
+    # recursive-CTE transitive closure over the SAME minhash buckets —
     # (id, x) enters lab iff x is reachable from id through shared buckets,
     # so MIN(label) per id is the component minimum and keep = fixpoint ids
-    _mh_sigs = (
-        "SELECT id, "
-        + ", ".join(
-            f"MIN(md5('42:{i}:' || token)) AS h{i}" for i in range(24)
-        )
-        + " FROM toks GROUP BY id"
-    )
-    _mh_buckets = " UNION ALL ".join(
-        f"SELECT id, {b} AS band, "
-        f"md5(h{3 * b} || '|' || h{3 * b + 1} || '|' || h{3 * b + 2}) AS bkey "
-        "FROM sigs"
-        for b in range(8)
-    )
     sql["dedup_keep_cc"] = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id AS id, UNNEST(list_filter(list_distinct(
-    string_split_regex(text, '\\s+')), t -> t <> '')) AS token
-  FROM documents
-),
+WITH RECURSIVE {_mh_toks},
 sigs AS ({_mh_sigs}),
 buckets AS ({_mh_buckets}),
 edges AS (SELECT id, CAST(band AS VARCHAR(10)) || '|' || bkey AS bk
@@ -2768,38 +2708,6 @@ lab(id, label) AS (
 SELECT id AS doc_id FROM (
   SELECT id, MIN(label) AS m FROM lab GROUP BY id
 ) WHERE m = id
-"""
-
-    # portable simhash keep-list: arg_min(sig, id) per chunk bucket, drop iff
-    # hamming(sig, bucket-min sig) <= 3 — byte-identical to the Spark twin
-    _sh_ham_min = " + ".join(
-        f"(CASE WHEN substr(sig, {b + 1}, 1) <> substr(min_sig, {b + 1}, 1) "
-        "THEN 1 ELSE 0 END)"
-        for b in range(64)
-    )
-    sql["simhash_keep"] = f"""
-WITH toks AS (
-  SELECT doc_id AS id, UNNEST(list_filter(
-    string_split_regex(text, '\\s+'), t -> t <> '')) AS token
-  FROM documents
-),
-hx AS (
-  SELECT id, md5('42:a:' || token) || md5('42:b:' || token) AS hex FROM toks
-),
-sums AS (SELECT id, {_sh_sums} FROM hx GROUP BY id),
-sigs AS (SELECT id, concat({_sh_sig}) AS sig FROM sums),
-chunks AS ({_sh_chunks}),
-mins AS (
-  SELECT chunk, ckey, MIN(id) AS min_id, arg_min(sig, id) AS min_sig
-  FROM chunks GROUP BY chunk, ckey
-),
-dropped AS (
-  SELECT DISTINCT c.id FROM chunks c
-  JOIN mins m ON c.chunk = m.chunk AND c.ckey = m.ckey
-  WHERE c.id > m.min_id AND ({_sh_ham_min}) <= 3
-)
-SELECT doc_id FROM documents
-WHERE doc_id NOT IN (SELECT id FROM dropped)
 """
 
     _probe_cond = " OR ".join(
@@ -2897,7 +2805,7 @@ FROM r WHERE rank <= 5
 
     # end-to-end curation pipeline: integer/string gates (token count,
     # marker-argmax language over ALL 8 markers/lang of
-    # functions/text.py LANG_MARKERS, 2·punct < chars) then the md5
+    # functions/text.py LANG_MARKERS, 2·punct < chars) then the xxhash64
     # minhash keep-list over the gated subset — every keep/drop decision
     # replicated exactly (no float thresholds gate)
     _pk_marks = {
@@ -2959,6 +2867,7 @@ dropped AS (
 SELECT id AS doc_id, lang, CAST(n_tokens AS INT) AS n_tokens FROM gated
 WHERE id NOT IN (SELECT id FROM dropped)
 """
+    sql["pipeline_keep_fast"] = sql["pipeline_keep"]
 
     # curation family: tokenization contract is a single-space split of the
     # lowercased text (string_split, NOT the \s+ regex) — parity with
@@ -3059,7 +2968,7 @@ SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(SUM(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS BIGINT) AS n_tokens
 FROM documents GROUP BY lang, source
 """
-    # portable sampler: first 8 hex chars of md5('42|' || id) decoded with
+    # sampler: first 8 hex chars of md5('42|' || id) decoded with
     # strpos arithmetic (DuckDB has no hex->int conv), mod 10^6
     _hex8 = " + ".join(
         f"(strpos('0123456789abcdef', substr(h, {j + 1}, 1)) - 1) * {16 ** (7 - j)}"
@@ -3073,9 +2982,7 @@ SELECT doc_id, lang FROM p
 WHERE ({_hex8}) % 1000000 <
   CASE WHEN lang = 'en' THEN 300000 WHEN lang = 'fr' THEN 800000 ELSE 500000 END
 """
-    # sample_stratified_fast: no oracle — xxhash64 draws a different (equally
-    # valid) deterministic sample; DuckDB cannot replicate Spark's string
-    # xxhash64, and unlike decontam_fast the hash DETERMINES the output rows
+    sql["sample_stratified_fast"] = sql["sample_stratified"]
 
     sql["sample_exact_k"] = f"""
 WITH p AS (

@@ -201,6 +201,13 @@ def cmd_json2xml(args: argparse.Namespace) -> int:
         compiled.global_elements - set(compiled.specs) - parents
     )
     root = args.root or (roots[0] if len(roots) == 1 else None)
+    if root is None:
+        print(
+            f"json2xml: cannot infer the document root from {args.schema} "
+            f"(candidates: {', '.join(roots) or 'none'}); pass --root",
+            file=sys.stderr,
+        )
+        return 1
     _os.makedirs(args.output, exist_ok=True)
     tot_errors = 0
     for stem in sorted(_os.listdir(args.input)):
@@ -240,10 +247,7 @@ def cmd_json2xml(args: argparse.Namespace) -> int:
             f' xmlns="{compiled.target_namespace}"'
             if compiled.target_namespace else ""
         )
-        doc = (
-            f"<{root}{xmlns}>{inner}</{root}>" if root
-            else inner
-        )
+        doc = f"<{root}{xmlns}>{inner}</{root}>"
         out_path = _os.path.join(args.output, f"{stem}.xml")
         with open(out_path, "w", encoding="utf-8") as fp:
             fp.write('<?xml version="1.0" encoding="UTF-8"?>' + doc)

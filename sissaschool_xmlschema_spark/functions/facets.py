@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import math
 import re
+from decimal import Decimal
 from typing import Tuple
 
 from pyspark.sql import Column
@@ -221,12 +222,14 @@ def _lower(facet: S.Facet, c: Column, column: str) -> Tuple[Column, str]:
         # builtin integer width (builtins.py:216-330): tolerant decimal
         # cast, then value-space bounds.  A non-castable value yields NULL
         # (no bit set) — BuiltinLexical owns the malformed-lexical report.
+        # Bounds are decimal literals: a Python int beyond int64 (the
+        # unsignedLong max) cannot cross Py4J as a plain literal.
         d = c.cast("string").try_cast("decimal(38,0)")
         pred = F.lit(True)
         if facet.lo is not None:
-            pred = pred & (d >= facet.lo)
+            pred = pred & (d >= F.lit(Decimal(facet.lo)))
         if facet.hi is not None:
-            pred = pred & (d <= facet.hi)
+            pred = pred & (d <= F.lit(Decimal(facet.hi)))
         return _null_ok(c, pred), (
             f"value out of the builtin integer range "
             f"[{facet.lo}, {facet.hi}]"

@@ -31,9 +31,8 @@ Scale notes:
   top-n-gram count uses explode + two partial-agg groupBys rather than an
   O(len^2) per-row array scan, so a 10^5-token document costs 10^5 rows,
   not 10^10 comparisons.
-* The sampler gates on ``md5(id) mod 10^6 < ppm`` (portable flavor) or
-  ``xxhash64`` (production flavor): deterministic, seedable, no RNG state,
-  reproducible across retries/partitions — the property a resumable 100 TB
+* The sampler gates on ``md5(seed|id) mod 10^6 < ppm``: deterministic,
+  seedable, no RNG state, reproducible across retries/partitions — the property a resumable 100 TB
   job needs (rand() is NOT stable across task retries).
 """
 
@@ -243,7 +242,7 @@ def span_dedup(
     ``hash_spans=True`` is the 100 TB shape: only ``(xxhash64(span), id,
     pos)`` tuples ever shuffle — span *text* never leaves its scan; surviving
     positions join back to the original row and the text is rebuilt
-    row-locally by re-slicing.  Output is identical to the portable string
+    row-locally by re-slicing.  Output is identical to the string-key
     flavor barring 64-bit hash collisions (the hash is key-only, never an
     output column).
     """
@@ -343,25 +342,19 @@ def mixture_weights(
     )
 
 
-def sample_ppm(id_col: Column, seed: int = 42, portable: bool = True) -> Column:
+def sample_ppm(id_col: Column, seed: int = 42) -> Column:
     """Deterministic per-id sample coordinate in ``[0, 10^6)``.
 
-    ``portable=True`` decodes the first 8 hex chars of ``md5(seed||id)``
-    (32 uniform bits — DuckDB reproduces them with strpos hex arithmetic,
-    so the flavor is oracle-able).  ``portable=False`` uses ``xxhash64``
-    (one 8-byte hash, no hex round-trip — the production flavor).  Either
-    way the gate is a pure function of (seed, id): task retries, resumes
-    and re-runs keep the SAME sample, which ``F.rand()`` does not
-    guarantee.
+    Decodes the first 8 hex chars of ``md5(seed|id)`` (32 uniform bits —
+    DuckDB reproduces them with strpos hex arithmetic).  The gate is a pure
+    function of (seed, id): task retries, resumes and re-runs keep the SAME
+    sample, which ``F.rand()`` does not guarantee.
     """
-    if portable:
-        h = F.conv(
-            F.substring(F.md5(F.concat_ws("|", F.lit(str(seed)), id_col.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-    else:
-        h = F.abs(F.xxhash64(F.lit(seed), id_col.cast("string")))
+    h = F.conv(
+        F.substring(F.md5(F.concat_ws("|", F.lit(str(seed)), id_col.cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("bigint")
     return F.pmod(h, F.lit(1_000_000))
 
 
@@ -372,7 +365,6 @@ def stratified_sample(
     rates_ppm: Mapping[str, int],
     default_ppm: int = 0,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """Rows kept by per-stratum deterministic rates (parts per million).
 
@@ -380,7 +372,7 @@ def stratified_sample(
     ``default_ppm``.  The rate lookup compiles to a CASE expression and the
     gate to one hash comparison — row-local, zero shuffle, reproducible.
     """
-    ppm = sample_ppm(F.col(id_col), seed=seed, portable=portable)
+    ppm = sample_ppm(F.col(id_col), seed=seed)
     rate: Column = F.lit(default_ppm)
     for value, r in sorted(rates_ppm.items()):
         rate = F.when(F.col(stratum_col) == value, F.lit(int(r))).otherwise(rate)
@@ -393,7 +385,6 @@ def sample_exact_k(
     stratum_col: str,
     k: int,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """EXACTLY min(k, |stratum|) rows per stratum, deterministically.
 
@@ -416,7 +407,7 @@ def sample_exact_k(
     w = (
         Window.partitionBy(stratum_col)
         .orderBy(
-            sample_ppm(F.col(id_col), seed=seed, portable=portable).asc(),
+            sample_ppm(F.col(id_col), seed=seed).asc(),
             F.col(id_col).asc(),
         )
     )
@@ -484,7 +475,6 @@ def mixture_apply(
     id_col: str,
     stratum_col: str,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """Apply a :func:`mixture_plan`: keep rows whose deterministic sample
     coordinate clears their stratum's planned rate.  The plan (one row per
@@ -494,7 +484,7 @@ def mixture_apply(
     return (
         df.join(F.broadcast(rates), stratum_col, "left")
         .filter(
-            sample_ppm(F.col(id_col), seed=seed, portable=portable)
+            sample_ppm(F.col(id_col), seed=seed)
             < F.coalesce(F.col("target_ppm"), F.lit(0))
         )
         .drop("target_ppm")

@@ -8,20 +8,19 @@ north-star "training-data pipeline" extensions, built Spark-first:
 * **token Jaccard** — exploded distinct tokens self-joined on token: candidate
   pair generation is an equi-join (shuffle on token), never an O(n²) cross join;
   hot tokens are capped (stopword-style document-frequency cut) to bound skew.
-* **MinHash + LSH** — signature = k per-token hash minima (one explode + one
-  groupBy agg with k min() columns); banding turns near-dup search into an
-  equi-join on (band_id, band_key).  Two hash flavors:
-  ``portable=True`` uses md5 hex strings (bit-identical in DuckDB → oracle-able);
-  ``portable=False`` uses xxhash64 (JVM-native, ~3× faster) for production.
+* **MinHash + LSH** — signature = k per-token xxhash64 minima (one explode +
+  one groupBy agg with k min() columns); banding turns near-dup search into an
+  equi-join on (band_id, band_key).
 * **SimHash** — 64-bit signature via per-bit weighted majority in one groupBy
   with 64 conditional sums; near-dups via a chunk equi-join with the chunk
   count DERIVED from max_hamming (pigeonhole: Hamming ≤ k pairs share a chunk
-  only with ≥ k+1 chunks — fewer chunks than that raises).  A portable md5
-  bit-string flavor exists for cross-engine oracle checks.
+  only with ≥ k+1 chunks — fewer chunks than that raises).
 * **embedding near-dup** — brute-force all-pairs cosine within small groups, or
   LSH-bucketed via random hyperplanes for scale (see similarity.py).
 
-All operators are pure Column expressions — no Python row path.
+All operators are pure Column expressions — no Python row path.  Every hash
+is Spark's ``xxhash64``; the DuckDB oracle reproduces it through
+functions/xxh64.py.
 """
 
 from __future__ import annotations
@@ -169,30 +168,20 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     k: int = 16,
-    portable: bool = False,
     seed: int = 42,
 ) -> DataFrame:
     """``(id, h0..h{k-1})`` — k min-hash values over the distinct token set.
 
     One explode + one groupBy(id) carrying k ``min()`` partial aggregates —
     map-side combine reduces each partition to one k-wide row per id before the
-    shuffle.  ``portable=True`` hashes with md5(seed_i || token) and keeps the
-    *hex string* minimum (lexicographic order — identical in any engine);
-    ``portable=False`` uses xxhash64 (JVM, no string materialization).
+    shuffle.  Hash i is ``xxhash64(token, seed + i)`` (JVM, no string
+    materialization); minima are over signed longs.
     """
     toks = distinct_tokens(df, id_col, text_col)
-    if portable:
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"{seed}:{i}:"), F.col("token")))).alias(
-                f"h{i}"
-            )
-            for i in range(k)
-        ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.col("token"), F.lit(seed + i))).alias(f"h{i}")
-            for i in range(k)
-        ]
+    aggs = [
+        F.min(F.xxhash64(F.col("token"), F.lit(seed + i))).alias(f"h{i}")
+        for i in range(k)
+    ]
     return toks.groupBy("id").agg(*aggs)
 
 
@@ -256,7 +245,6 @@ def lsh_dedup_keep(
     text_col: str,
     k: int = 24,
     bands: int = 8,
-    portable: bool = False,
     seed: int = 42,
     exact_components: bool = False,
     max_iterations: int = 50,
@@ -280,7 +268,7 @@ def lsh_dedup_keep(
     the round count is the component diameter (≤ log n rounds for realistic
     cluster shapes); still no pair enumeration anywhere.
     """
-    sigs = minhash_signatures(df, id_col, text_col, k, portable, seed)
+    sigs = minhash_signatures(df, id_col, text_col, k, seed)
     buckets = band_buckets(sigs, k, bands)
     if not exact_components:
         mins = buckets.groupBy("band", "bkey").agg(
@@ -342,11 +330,10 @@ def minhash_dup_pairs(
     text_col: str,
     k: int = 16,
     bands: int = 4,
-    portable: bool = False,
     seed: int = 42,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs ``(id_a, id_b)``."""
-    sigs = minhash_signatures(df, id_col, text_col, k, portable, seed)
+    sigs = minhash_signatures(df, id_col, text_col, k, seed)
     return lsh_candidate_pairs(sigs, k, bands)
 
 
@@ -608,168 +595,6 @@ def simhash_dedup_keep(
     return df.select(F.col(id_col).alias("id")).join(dropped, "id", "left_anti")
 
 
-def portable_simhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    seed: int = 42,
-) -> DataFrame:
-    """``(id, sig)`` — SimHash as a 64-char '0'/'1' *bit string* built from md5.
-
-    Oracle-portable flavor: per-token bit b is the high bit of the b-th hex
-    digit of md5, i.e. ``substr(hex, b+1, 1) >= '8'`` — an expression any SQL
-    engine reproduces byte-for-byte (two md5 calls give the 64 digits).  The
-    xxhash64/long flavor (:func:`simhash_signatures`) stays the production
-    path; this one exists so the pair set is hash-checkable cross-engine.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-        ).alias("token"),
-    ).select(
-        "id",
-        F.concat(
-            F.md5(F.concat(F.lit(f"{seed}:a:"), F.col("token"))),
-            F.md5(F.concat(F.lit(f"{seed}:b:"), F.col("token"))),
-        ).alias("hex"),
-    )
-    aggs = [
-        F.sum(
-            F.when(F.substring(F.col("hex"), b + 1, 1) >= "8", 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    sums = toks.groupBy("id").agg(*aggs)
-    sig = F.concat(
-        *[
-            F.when(F.col(f"b{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for b in range(64)
-        ]
-    )
-    return sums.select("id", sig.alias("sig"))
-
-
-def portable_simhash_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    seed: int = 42,
-    n_chunks: Optional[int] = None,
-) -> DataFrame:
-    """Portable (md5 bit-string) SimHash near-dup pairs, same banding contract
-    as :func:`simhash_dup_pairs`; Hamming = count of differing bit chars."""
-    if n_chunks is None:
-        n_chunks = max_hamming + 1
-    if n_chunks < max_hamming + 1:
-        raise ValueError(
-            f"n_chunks={n_chunks} cannot guarantee recall at "
-            f"max_hamming={max_hamming}"
-        )
-    if n_chunks > 64:
-        # same guard as the non-portable twin: >64 chunks would yield
-        # zero-width slices whose empty-string keys bucket EVERY document
-        # together — a silent full cross join instead of an error
-        raise ValueError("n_chunks cannot exceed the 64 signature bits")
-    sigs = portable_simhash_signatures(df, id_col, text_col, seed)
-    chunks = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("chunk"),
-                        F.substring(F.col("sig"), off + 1, w).alias("ckey"),
-                    )
-                    for ci, (off, w) in enumerate(_chunk_slices(64, n_chunks))
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "sig", "c.chunk", "c.ckey")
-    a = chunks.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "chunk", "ckey"
-    )
-    b = chunks.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "chunk", "ckey"
-    )
-    ham = sum(
-        F.when(
-            F.substring(F.col("sig_a"), bb + 1, 1)
-            != F.substring(F.col("sig_b"), bb + 1, 1),
-            1,
-        ).otherwise(0)
-        for bb in range(64)
-    ).cast("long")
-    return (
-        a.join(b, ["chunk", "ckey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def portable_simhash_dedup_keep(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    seed: int = 42,
-    n_chunks: Optional[int] = None,
-) -> DataFrame:
-    """Oracle-portable twin of :func:`simhash_dedup_keep` (md5 bit strings,
-    single-chunk keys): drop iff some chunk bucket's smallest-id member is
-    within Hamming ≤ max_hamming — reproducible byte-for-byte in any SQL
-    engine (arg_min + per-character compares)."""
-    if n_chunks is None:
-        n_chunks = max_hamming + 1
-    if n_chunks < max_hamming + 1:
-        raise ValueError(
-            f"n_chunks={n_chunks} cannot guarantee recall at "
-            f"max_hamming={max_hamming}"
-        )
-    if n_chunks > 64:
-        raise ValueError("n_chunks cannot exceed the 64 signature bits")
-    sigs = portable_simhash_signatures(df, id_col, text_col, seed)
-    chunks = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("chunk"),
-                        F.substring(F.col("sig"), off + 1, w).alias("ckey"),
-                    )
-                    for ci, (off, w) in enumerate(_chunk_slices(64, n_chunks))
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "sig", "c.chunk", "c.ckey")
-    mins = chunks.groupBy("chunk", "ckey").agg(
-        F.min("id").alias("_min_id"),
-        F.min_by("sig", "id").alias("_min_sig"),
-    )
-    ham = sum(
-        F.when(
-            F.substring(F.col("sig"), b + 1, 1)
-            != F.substring(F.col("_min_sig"), b + 1, 1),
-            1,
-        ).otherwise(0)
-        for b in range(64)
-    )
-    dropped = (
-        chunks.join(mins, ["chunk", "ckey"])
-        .filter(F.col("id") > F.col("_min_id"))
-        .filter(ham <= max_hamming)
-        .select("id")
-        .distinct()
-    )
-    return df.select(F.col(id_col).alias("id")).join(dropped, "id", "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
@@ -835,19 +660,16 @@ def bucketed_embedding_dup_pairs(
     n_planes: int = 4,
     dim: int = 64,
     seed: int = 42,
-    planes: Optional[list] = None,
 ) -> DataFrame:
     """The scale path for embedding near-dup: random-hyperplane LSH bucket as
     the join key, so the only all-pairs structure is WITHIN buckets
     (~n/2^n_planes rows each) — never a global crossJoin.  Recall is the LSH
-    collision probability (raise it by lowering n_planes or multiprobing);
-    pass ``planes`` from ``similarity.portable_planes`` for an
-    oracle-reproducible bucket assignment.
+    collision probability (raise it by lowering n_planes or multiprobing).
     """
     from sissaschool_xmlschema_spark.operators.similarity import bucket_expr
 
     src = df.withColumn(
-        "_bucket", bucket_expr(vec_col, n_planes, dim, seed, planes)
+        "_bucket", bucket_expr(vec_col, n_planes, dim, seed)
     )
     return embedding_dup_pairs(
         src, id_col, vec_col, threshold, group_col="_bucket"
@@ -862,7 +684,6 @@ def verified_dup_pairs(
     threshold_den: int = 2,
     k: int = 16,
     bands: int = 4,
-    portable: bool = False,
     seed: int = 42,
 ) -> DataFrame:
     """The production near-dup flow: MinHash-LSH candidates, then exact
@@ -875,19 +696,18 @@ def verified_dup_pairs(
     stays exact integer arithmetic.  This is the shape that survives 100 TB:
     the only all-pairs structure is within LSH buckets.
     """
-    cands = minhash_dup_pairs(df, id_col, text_col, k, bands, portable, seed)
+    cands = minhash_dup_pairs(df, id_col, text_col, k, bands, seed)
+    # verify over 64-bit token hashes — per-pair array_intersect on longs is
+    # ~3x cheaper than on strings (no string hashing/compare per element);
+    # 64-bit collisions are negligible at any realistic vocabulary
     tok_arr = F.array_distinct(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    )
-    if not portable:
-        # production flavor: verify over 64-bit token hashes — per-pair
-        # array_intersect on longs is ~3x cheaper than on strings (no string
-        # hashing/compare per element); 64-bit collisions are negligible at
-        # any realistic vocabulary.  The portable flavor keeps raw strings
-        # so the DuckDB oracle reproduces intersections exactly.
-        tok_arr = F.array_distinct(
-            F.transform(tok_arr, lambda t: F.xxhash64(t))
+        F.transform(
+            F.array_distinct(
+                F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+            ),
+            lambda t: F.xxhash64(t),
         )
+    )
     toks = df.select(F.col(id_col).alias("id"), tok_arr.alias("toks"))
     a = toks.select(F.col("id").alias("id_a"), F.col("toks").alias("t_a"))
     b = toks.select(F.col("id").alias("id_b"), F.col("toks").alias("t_b"))

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     FloatType,
     IntegerType,
     StringType,
@@ -57,19 +56,6 @@ FEATURE_SCHEMA = StructType(
 
 FEATURE_DIM = 16
 
-# portable flavor: md5 (32 hex digits) → 8 components of 4 hex digits each,
-# double precision so any SQL oracle reproduces the values bit-for-bit
-PORTABLE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("feature", ArrayType(DoubleType())),
-    ]
-)
-PORTABLE_FEATURE_DIM = 8
-
-
 def synthetic_media(spark, docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Deterministic fake media table: payload = utf-8 bytes of the text.
@@ -90,16 +76,14 @@ def extract_features(
     media: DataFrame,
     decode_stub: bool = True,
     batch_payloads: int = 256,
-    portable: bool = False,
 ) -> DataFrame:
     """Decode + featurize payloads via mapInPandas (Arrow-batched).
 
     With ``decode_stub`` the feature is a deterministic hash-derived vector —
-    byte-identical across runs.  ``portable=True`` derives
-    PORTABLE_FEATURE_DIM doubles from md5 hex digits (4 digits per
-    component), which a SQL oracle reproduces with substring arithmetic; the
-    default sha256/float flavor is the production stand-in.  The real path
-    raises NotImplementedError naming the missing codec dependency.
+    byte-identical across runs: component i is bytes [2i, 2i+2) of
+    sha256(payload), big-endian, over 65535 — which a SQL oracle reproduces
+    with ``sha256()`` and hex-digit arithmetic.  The real path raises
+    NotImplementedError naming the missing codec dependency.
     """
 
     def kernel(batches: Iterator) -> Iterator:
@@ -115,23 +99,14 @@ def extract_features(
                 )
             feats = []
             for payload in pdf["payload"]:
-                if portable:
-                    hx = hashlib.md5(bytes(payload)).hexdigest()
-                    feats.append(
-                        [
-                            int(hx[4 * i: 4 * i + 4], 16) / 65535.0
-                            for i in range(PORTABLE_FEATURE_DIM)
-                        ]
-                    )
-                else:
-                    digest = hashlib.sha256(bytes(payload)).digest()
-                    feats.append(
-                        [
-                            int.from_bytes(digest[2 * i: 2 * i + 2], "big")
-                            / 65535.0
-                            for i in range(FEATURE_DIM)
-                        ]
-                    )
+                digest = hashlib.sha256(bytes(payload)).digest()
+                feats.append(
+                    [
+                        int.from_bytes(digest[2 * i: 2 * i + 2], "big")
+                        / 65535.0
+                        for i in range(FEATURE_DIM)
+                    ]
+                )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -145,8 +120,7 @@ def extract_features(
     spark.conf.set(
         "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_payloads)
     )
-    schema = PORTABLE_FEATURE_SCHEMA if portable else FEATURE_SCHEMA
-    return media.mapInPandas(kernel, schema)
+    return media.mapInPandas(kernel, FEATURE_SCHEMA)
 
 
 def media_metadata_stats(media: DataFrame) -> DataFrame:

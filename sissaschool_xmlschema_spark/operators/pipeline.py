@@ -46,7 +46,6 @@ def pretraining_keep(
     langs: Optional[Sequence[str]] = ("en",),
     k: int = 24,
     bands: int = 8,
-    portable: bool = False,
     seed: int = 42,
 ) -> DataFrame:
     """``(id, lang, n_tokens)`` of documents surviving the full pipeline.
@@ -84,7 +83,7 @@ def pretraining_keep(
         T.token_count(t).alias("n_tokens"),
     ).filter(cond)
 
-    sigs = dedup.minhash_signatures(gated, "id", "_text", k, portable, seed)
+    sigs = dedup.minhash_signatures(gated, "id", "_text", k, seed)
     buckets = dedup.band_buckets(sigs, k, bands)
     mins = buckets.groupBy("band", "bkey").agg(F.min("id").alias("_min_id"))
     dropped = (

@@ -78,55 +78,32 @@ def cosine_topk(
     return scores.orderBy(F.col("cos").desc(), F.col("id").asc()).limit(k)
 
 
-def portable_planes(n_planes: int, dim: int, seed: int = 42) -> list:
-    """±1 hyperplane component lists derived from md5 — deterministic AND
-    engine-portable: the Spark plan and any SQL oracle embed the *same*
-    literal arrays, so bucket assignments are bit-identical cross-engine.
-    Component (p, j) = +1 iff the first hex digit of md5('{seed}:{p}:{j}')
-    has its high bit set."""
-    import hashlib
-
-    return [
-        [
-            1.0
-            if hashlib.md5(f"{seed}:{p}:{j}".encode()).hexdigest()[0] >= "8"
-            else -1.0
-            for j in range(dim)
-        ]
-        for p in range(n_planes)
-    ]
-
-
 def bucket_expr(
     vec_col: str,
     n_planes: int = 8,
     dim: int = 64,
     seed: int = 42,
-    planes: list | None = None,
 ) -> Column:
     """Sign-pattern LSH bucket id in [0, 2^n_planes) as a Column expression.
 
-    With ``planes`` (e.g. from :func:`portable_planes`) the ±1 components are
-    plan literals shared with an oracle; otherwise they are recomputed on
-    executors from xxhash64(seed, p, j) — nothing is shipped either way.
+    The ±1 plane components are recomputed on executors from
+    xxhash64(seed, p, j) — nothing is shipped (functions/xxh64.py
+    ``xxhash64_planes`` gives the same grid as driver-side literals).
     sign(v·h_p) gives bit p; cosine-similar vectors collide with probability
     1 − θ/π per plane (Charikar 2002).
     """
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
-        if planes is not None:
-            comps = F.array(*[F.lit(float(v)) for v in planes[p]])
-        else:
-            comps = F.array(
-                *[
-                    F.when(
-                        F.xxhash64(F.lit(seed), F.lit(p), F.lit(j))
-                        .bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1.0),
-                    ).otherwise(F.lit(-1.0))
-                    for j in range(dim)
-                ]
-            )
+        comps = F.array(
+            *[
+                F.when(
+                    F.xxhash64(F.lit(seed), F.lit(p), F.lit(j))
+                    .bitwiseAND(F.lit(1)) == 1,
+                    F.lit(1.0),
+                ).otherwise(F.lit(-1.0))
+                for j in range(dim)
+            ]
+        )
         proj = dot(F.col(vec_col), comps)
         bucket = bucket + F.when(
             proj > 0, F.shiftleft(F.lit(1).cast("long"), p)
@@ -141,7 +118,6 @@ def hyperplane_buckets(
     n_planes: int = 8,
     dim: int = 64,
     seed: int = 42,
-    planes: list | None = None,
 ) -> DataFrame:
     """``(id, bucket)`` — see :func:`bucket_expr`.  At 100 TB the bucket
     column becomes the table's partition/bucketing key so a probe prunes to
@@ -149,7 +125,7 @@ def hyperplane_buckets(
     ~n/2^n_planes rows."""
     return df.select(
         F.col(id_col).alias("id"),
-        bucket_expr(vec_col, n_planes, dim, seed, planes).alias("bucket"),
+        bucket_expr(vec_col, n_planes, dim, seed).alias("bucket"),
     )
 
 
@@ -173,7 +149,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     seed: int = 42,
-    planes: list | None = None,
     multiprobe: bool = False,
 ) -> DataFrame:
     """Approximate top-k: score only rows in the query's probe bucket(s).
@@ -185,7 +160,7 @@ def lsh_topk(
     partition-pruned file scan, not a shuffle.
     """
     dim = len(query)
-    qb = query_bucket(df.sparkSession, query, n_planes, seed, planes)
+    qb = query_bucket(df.sparkSession, query, n_planes, seed)
     probes = probe_buckets(qb, n_planes, multiprobe)
     # the bucket is a pure row-local expression, so it is computed inline and
     # filtered in the SAME scan — no self-join, no shuffle; on a
@@ -194,7 +169,7 @@ def lsh_topk(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_vec"),
-            bucket_expr(vec_col, n_planes, dim, seed, planes).alias("_b"),
+            bucket_expr(vec_col, n_planes, dim, seed).alias("_b"),
         )
         .filter(F.col("_b").isin(probes))
         .select("_id", "_vec")
@@ -210,7 +185,6 @@ def knn_join(
     n_planes: int = 8,
     dim: int = 64,
     seed: int = 42,
-    planes: list | None = None,
     multiprobe: bool = False,
     q_id: str = "id",
     q_vec: str = "vec",
@@ -240,14 +214,14 @@ def knn_join(
     AQE's skew-join split since the corpus side is the shuffled one only
     when queries aren't broadcast.  Ties are broken by ``c_id`` so results
     are deterministic and portable (the DuckDB oracle reproduces them with
-    the same ``portable_planes`` literals).
+    the ``xxhash64_planes`` literals).
     """
     from pyspark.sql import Window
 
     qb = queries.select(
         F.col(q_id).alias("q_id"),
         F.col(q_vec).alias("_qv"),
-        bucket_expr(q_vec, n_planes, dim, seed, planes).alias("_qb"),
+        bucket_expr(q_vec, n_planes, dim, seed).alias("_qb"),
     )
     if multiprobe:
         probes = F.array(
@@ -267,7 +241,7 @@ def knn_join(
     cb = corpus.select(
         F.col(c_id).alias("c_id"),
         F.col(c_vec).alias("_cv"),
-        bucket_expr(c_vec, n_planes, dim, seed, planes).alias("bucket"),
+        bucket_expr(c_vec, n_planes, dim, seed).alias("bucket"),
     )
     cos = dot(F.col("_cv"), F.col("_qv")) / (
         norm(F.col("_cv")) * norm(F.col("_qv"))
@@ -286,15 +260,14 @@ def knn_join(
 
 
 def query_bucket(spark, query: Sequence[float], n_planes: int = 8,
-                 seed: int = 42, planes: list | None = None) -> int:
+                 seed: int = 42) -> int:
     """Bucket of the query vector, computed with the *identical* Spark
     expression on a local 1-row DataFrame - guaranteed to match executors
     (no driver-side reimplementation of xxhash64)."""
     one = spark.createDataFrame(
         [(0, [float(v) for v in query])], "id long, vec array<double>"
     )
-    row = hyperplane_buckets(one, "id", "vec", n_planes, len(query), seed,
-                             planes)
+    row = hyperplane_buckets(one, "id", "vec", n_planes, len(query), seed)
     return row.first()["bucket"]
 
 

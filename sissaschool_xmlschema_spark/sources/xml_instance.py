@@ -66,6 +66,7 @@ from pyspark.sql import types as T
 
 from sissaschool_xmlschema_spark.operators.identity import keyref_violations
 from sissaschool_xmlschema_spark.plans.runner import validate
+from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import CompiledXsd, compile_xsd
 
 
@@ -83,7 +84,7 @@ def sniff_prefix(path: str, local_root: str) -> str:
         rf"<(?:([A-Za-z_][\w.-]*):)?{re.escape(local_root)}[\s>/]"
     )
     tail = ""
-    enc = _sniff_encoding(path)
+    enc = declared_encoding(path)
     with open(path, "rb") as f:
         while True:
             chunk = f.read(65536)
@@ -107,7 +108,7 @@ def sniff_nsmap(path: str) -> dict:
     sniff's reach — their wildcard checks fall back to prefix heuristics
     (an unmapped prefix counts as a foreign namespace)."""
     with open(path, "rb") as f:
-        head = f.read(65536).decode(_sniff_encoding(path), "replace")
+        head = f.read(65536).decode(declared_encoding(path), "replace")
     nsmap: dict = {}
     for m in re.finditer(
         r"""xmlns(?::([A-Za-z_][\w.-]*))?\s*=\s*("([^"]*)"|'([^']*)')""",
@@ -121,7 +122,7 @@ def _sniff_root_local(path: str) -> str:
     """Local name of the document's root element (driver-side head peek,
     prolog/comments/DOCTYPE skipped)."""
     with open(path, "rb") as f:
-        head = f.read(65536).decode(_sniff_encoding(path), "replace")
+        head = f.read(65536).decode(declared_encoding(path), "replace")
     head = re.sub(r"<\?.*?\?>", "", head, flags=re.S)
     head = re.sub(r"<!--.*?-->", "", head, flags=re.S)
     head = re.sub(r"<!DOCTYPE[^>]*>", "", head, flags=re.S)
@@ -391,18 +392,6 @@ class _TableReader:
                 )
 
 
-def _sniff_encoding(path: str) -> str:
-    """Declared encoding from the XML prolog ('utf-8' when absent) — the
-    cp1252 menù document reads mojibake under Spark's UTF-8 default."""
-    with open(path, "rb") as f:
-        head = f.read(200)
-    m = re.match(
-        rb"""[^>]{0,200}?encoding\s*=\s*["']([A-Za-z0-9._-]+)["']""",
-        head, re.S,
-    )
-    return m.group(1).decode("ascii") if m else "utf-8"
-
-
 def _read_container(
     spark: SparkSession, path: str, row_tag: str,
     preserve_space: bool = False,
@@ -410,7 +399,7 @@ def _read_container(
     return (
         spark.read.format("xml")
         .option("rowTag", row_tag)
-        .option("charset", _sniff_encoding(path))
+        .option("charset", declared_encoding(path))
         # keep stray character data visible instead of silently dropping
         # it; preserve_space keeps surrounding whitespace too (document
         # value of a whiteSpace=preserve simple type — issue_223)

@@ -45,7 +45,6 @@ def run_incremental_dedup(
     text_col: str = "text",
     k: int = 24,
     bands: int = 8,
-    portable: bool = False,
     seed: int = 42,
     schema: Optional[str] = None,
     max_files_per_trigger: Optional[int] = None,
@@ -66,9 +65,7 @@ def run_incremental_dedup(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(
-            batch, id_col, text_col, k=k, portable=portable, seed=seed
-        )
+        sigs = minhash_signatures(batch, id_col, text_col, k=k, seed=seed)
         # band_buckets normalizes the id column's name to "id"
         buckets = band_buckets(sigs, k=k, bands=bands).select(
             "band", "bkey", F.col("id").alias(id_col)

@@ -52,7 +52,6 @@ chain.
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import xml.etree.ElementTree as ET
@@ -64,6 +63,7 @@ from sissaschool_xmlschema_spark.functions.lexical import (
     INTEGER_RANGES,
     XSD_LEXICAL,
 )
+from sissaschool_xmlschema_spark.xml_text import read_xml_text
 
 XSD_NS = "http://www.w3.org/2001/XMLSchema"
 
@@ -1023,27 +1023,11 @@ def _flatten_field(selector_rest: list, field_tokens: list) -> str:
 # ---------------------------------------------------------------------------
 
 
-def read_xml_text(path) -> str:
-    """Read an XML document honoring its DECLARED encoding (menù-cp1252:
-    ``encoding='CP1252'`` — a UTF-8-only read raises UnicodeDecodeError on
-    legal documents).  Unknown/undeclared encodings fall back to UTF-8
-    with replacement."""
-    with open(path, "rb") as f:
-        data = f.read()
-    m = re.match(
-        rb"""[^>]{0,200}?encoding\s*=\s*["']([A-Za-z0-9._-]+)["']""",
-        data, re.S,
-    )
-    enc = m.group(1).decode("ascii") if m else "utf-8"
-    try:
-        return data.decode(enc)
-    except (LookupError, UnicodeDecodeError):
-        return data.decode("utf-8", "replace")
-
-
 def _parse_schema_text(text: str, what: str) -> ET.Element:
     try:
-        root = ET.parse(io.StringIO(text)).getroot()
+        # fromstring parses the decoded text as text: a file-like source
+        # would re-apply the declared encoding to its UTF-8 re-encoding
+        root = ET.fromstring(text)
     except ET.ParseError as err:
         # a malformed schema DOCUMENT is a compile error with a clear
         # source, not a raw parser traceback (resources/malformed.xsd)

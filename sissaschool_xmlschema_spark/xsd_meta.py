@@ -53,6 +53,7 @@ from dataclasses import dataclass, field
 from typing import Optional, Union
 
 from sissaschool_xmlschema_spark.functions.lexical import XSD_LEXICAL
+from sissaschool_xmlschema_spark.xml_text import read_xml_text
 
 XSD_NS = "http://www.w3.org/2001/XMLSchema"
 VC_NS = "http://www.w3.org/2007/XMLSchema-versioning"
@@ -170,8 +171,7 @@ def _load_graph(ctx: _Ctx, source, base_dir: Optional[str]) -> None:
             if path in visited:
                 return
             visited.add(path)
-            with open(path, "r", encoding="utf-8") as f:
-                text = f.read()
+            text = read_xml_text(path)
             where, here = os.path.basename(path), os.path.dirname(path)
         try:
             root, nsmaps = _parse_with_ns(text)

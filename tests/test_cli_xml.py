@@ -88,3 +88,30 @@ def test_json2xml_roundtrip(spark, tmp_path, capsys):
         (r["make"], r["model"]) for r in tables["bike"].collect()
     )
     assert bikes == [("Harley-Davidson", "WL"), ("Yamaha", "XS650")]
+
+
+def test_json2xml_without_inferable_root_fails_clearly(spark, tmp_path, capsys):
+    """Two candidate root elements and no --root: a non-zero exit with a
+    message, and no rootless document written."""
+    xsd = tmp_path / "two_roots.xsd"
+    xsd.write_text(
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">'
+        '<xs:element name="doc"><xs:complexType><xs:sequence>'
+        '<xs:element name="row" maxOccurs="unbounded"><xs:complexType>'
+        '<xs:sequence><xs:element name="v" type="xs:int"/></xs:sequence>'
+        "</xs:complexType></xs:element>"
+        "</xs:sequence></xs:complexType></xs:element>"
+        '<xs:element name="a" type="xs:string"/>'
+        '<xs:element name="b" type="xs:string"/>'
+        "</xs:schema>"
+    )
+    (tmp_path / "j" / "doc").mkdir(parents=True)
+    out = tmp_path / "x"
+    rc = main([
+        "json2xml", "--schema", str(xsd),
+        "--input", str(tmp_path / "j"), "-o", str(out),
+    ])
+    assert rc != 0
+    _out, err = capsys.readouterr()
+    assert "--root" in err and "a, b" in err
+    assert not out.exists()

@@ -250,7 +250,7 @@ def test_stratified_sample_deterministic_and_rate(spark):
 
 
 def test_sample_ppm_portable_matches_python_md5(spark):
-    # cross-check the portable gate against a pure-Python md5 oracle
+    # cross-check the md5 gate against a pure-Python md5 oracle
     import hashlib
 
     ids = list(range(50))

@@ -55,12 +55,13 @@ def test_max_doc_freq_skew_guard(spark, docs):
     assert all(n < 9 for n in sizes.values())
 
 
-@pytest.mark.parametrize("portable", [True, False])
-def test_minhash_identical_docs_always_pair(spark, docs, portable):
+@pytest.mark.parametrize("reseed", [True, False])
+def test_minhash_identical_docs_always_pair(spark, docs, reseed):
+    # the invariant holds for every hash family, not just the default seed
     pairs = {
         (r["id_a"], r["id_b"])
         for r in dedup.minhash_dup_pairs(
-            docs, "doc_id", "text", k=8, bands=4, portable=portable
+            docs, "doc_id", "text", k=8, bands=4, seed=7 if reseed else 42
         ).collect()
     }
     assert (1, 5) in pairs  # identical text → identical signature
@@ -129,32 +130,26 @@ def test_simhash_rejects_insufficient_chunks(spark, docs):
         dedup.simhash_dup_pairs(
             docs, "doc_id", "text", max_hamming=8, n_chunks=4
         )
-    with pytest.raises(ValueError):
-        dedup.portable_simhash_dup_pairs(
-            docs, "doc_id", "text", max_hamming=8, n_chunks=4
-        )
 
 
-def test_portable_simhash_matches_python_md5(spark, docs):
-    """The portable bit-string signature is reproducible outside Spark —
-    recompute one document's signature with hashlib and compare."""
-    import hashlib
+def test_simhash_matches_python_xxh64(spark, docs):
+    """The signature is reproducible outside Spark — recompute every
+    document's signature with the pure-Python XXH64 and compare."""
+    from sissaschool_xmlschema_spark.functions.xxh64 import spark_xxhash64
 
-    sigs = {r["id"]: r["sig"] for r in
-            dedup.portable_simhash_signatures(docs, "doc_id", "text").collect()}
-    text = DOCS[3][1]
-    sums = [0] * 64
-    for tok in text.split():
-        hx = (hashlib.md5(f"42:a:{tok}".encode()).hexdigest()
-              + hashlib.md5(f"42:b:{tok}".encode()).hexdigest())
-        for b in range(64):
-            sums[b] += 1 if hx[b] >= "8" else -1
-    expect = "".join("1" if s > 0 else "0" for s in sums)
-    assert sigs[4] == expect
-    assert sigs[1] == sigs[5]  # identical text → identical signature
+    sigs = {r["id"]: r["simhash"] for r in
+            dedup.simhash_signatures(docs, "doc_id", "text").collect()}
+    for doc_id, text in DOCS:
+        sums = [0] * 64
+        for tok in text.split():
+            h = spark_xxhash64([tok, 42])
+            for b in range(64):
+                sums[b] += 1 if (h >> b) & 1 else -1
+        expect = sum(1 << b for b in range(64) if sums[b] > 0)
+        assert sigs[doc_id] & (2**64 - 1) == expect
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in dedup.portable_simhash_dup_pairs(
+        for r in dedup.simhash_dup_pairs(
             docs, "doc_id", "text", max_hamming=3
         ).collect()
     }
@@ -179,8 +174,6 @@ def test_embedding_dup_pairs(spark):
 def test_bucketed_embedding_dups_subset_of_bruteforce(spark):
     """Bucketed pairs are a subset of the brute-force pairs (LSH candidates
     only), and same-vector pairs always collide (identical sign pattern)."""
-    from sissaschool_xmlschema_spark.operators.similarity import portable_planes
-
     rows = [(i, [float((i * 7) % 13) - 6.0, float((i * 3) % 11) - 5.0,
                  1.0, -2.0]) for i in range(40)]
     rows.append((99, rows[0][1]))  # exact duplicate of vector 0
@@ -191,23 +184,22 @@ def test_bucketed_embedding_dups_subset_of_bruteforce(spark):
             df, "id", "v", 0.99, allow_global=True
         ).collect()
     }
-    planes = portable_planes(3, 4)
     bucketed = {
         (r["id_a"], r["id_b"])
         for r in dedup.bucketed_embedding_dup_pairs(
-            df, "id", "v", 0.99, n_planes=3, dim=4, planes=planes
+            df, "id", "v", 0.99, n_planes=3, dim=4
         ).collect()
     }
     assert bucketed <= brute
     assert (0, 99) in bucketed  # identical vectors share every bucket bit
 
 
-def test_portable_planes_deterministic():
-    from sissaschool_xmlschema_spark.operators.similarity import portable_planes
+def test_xxhash64_planes_deterministic():
+    from sissaschool_xmlschema_spark.functions.xxh64 import xxhash64_planes
 
-    a, b = portable_planes(4, 8), portable_planes(4, 8)
+    a, b = xxhash64_planes(4, 8), xxhash64_planes(4, 8)
     assert a == b and all(v in (1.0, -1.0) for row in a for v in row)
-    assert portable_planes(4, 8, seed=7) != a
+    assert xxhash64_planes(4, 8, seed=7) != a
 
 
 def test_cosine_topk_exact(spark):
@@ -256,7 +248,7 @@ def test_lsh_dedup_keep_output_is_linear(spark, docs):
     keep = {
         r["id"]
         for r in dedup.lsh_dedup_keep(
-            docs, "doc_id", "text", k=8, bands=4, portable=True
+            docs, "doc_id", "text", k=8, bands=4
         ).collect()
     }
     # ids 1/3/5 share the token set (identical signatures): only 1 survives
@@ -338,19 +330,19 @@ def test_simhash_economics_guard(spark, docs):
         )
     with pytest.raises(ValueError, match="no default table scheme"):
         dedup.simhash_table_params(max_hamming=20)
-    with pytest.raises(ValueError):
-        dedup.portable_simhash_dup_pairs(
+    with pytest.raises(ValueError, match="cannot exceed"):
+        dedup.simhash_dup_pairs(
             docs, "doc_id", "text", max_hamming=3, n_chunks=70
         )
-    with pytest.raises(ValueError):
-        dedup.portable_simhash_dedup_keep(
+    with pytest.raises(ValueError, match="cannot exceed"):
+        dedup.simhash_dedup_keep(
             docs, "doc_id", "text", max_hamming=3, n_chunks=70
         )
 
 
 def test_simhash_dedup_keep(spark, docs):
     """Keep-list: identical-signature docs collapse to the smallest id; the
-    unrelated doc survives; both hash flavors agree on this corpus."""
+    unrelated doc survives."""
     keep = {
         r["id"]
         for r in dedup.simhash_dedup_keep(
@@ -359,13 +351,6 @@ def test_simhash_dedup_keep(spark, docs):
     }
     assert 1 in keep and 3 not in keep and 5 not in keep
     assert 4 in keep
-    pkeep = {
-        r["id"]
-        for r in dedup.portable_simhash_dedup_keep(
-            docs, "doc_id", "text", max_hamming=3
-        ).collect()
-    }
-    assert 1 in pkeep and 3 not in pkeep and 5 not in pkeep and 4 in pkeep
 
 
 def test_lsh_dedup_keep_exact_components_vs_union_find(spark):
@@ -373,7 +358,7 @@ def test_lsh_dedup_keep_exact_components_vs_union_find(spark):
     buckets (one representative — the min id — per connected component), and
     be a subset of the greedy keep-list (components only merge further)."""
     docs_df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = dedup.minhash_signatures(docs_df, "doc_id", "text", 24, True, 42)
+    sigs = dedup.minhash_signatures(docs_df, "doc_id", "text", 24, 42)
     buckets = dedup.band_buckets(sigs, 24, 8).collect()
 
     parent: dict = {}
@@ -403,7 +388,7 @@ def test_lsh_dedup_keep_exact_components_vs_union_find(spark):
     cc_keep = {
         r["id"]
         for r in dedup.lsh_dedup_keep(
-            docs_df, "doc_id", "text", k=24, bands=8, portable=True,
+            docs_df, "doc_id", "text", k=24, bands=8,
             exact_components=True,
         ).collect()
     }
@@ -411,7 +396,7 @@ def test_lsh_dedup_keep_exact_components_vs_union_find(spark):
     greedy_keep = {
         r["id"]
         for r in dedup.lsh_dedup_keep(
-            docs_df, "doc_id", "text", k=24, bands=8, portable=True
+            docs_df, "doc_id", "text", k=24, bands=8
         ).collect()
     }
     assert cc_keep <= greedy_keep
@@ -427,10 +412,10 @@ def test_lsh_dedup_keep_chain_collapses_in_component_mode(spark):
     # with real chains: every component keeps exactly one doc.
     docs_df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     keep = dedup.lsh_dedup_keep(
-        docs_df, "doc_id", "text", k=24, bands=8, portable=True,
+        docs_df, "doc_id", "text", k=24, bands=8,
         exact_components=True,
     )
-    sigs = dedup.minhash_signatures(docs_df, "doc_id", "text", 24, True, 42)
+    sigs = dedup.minhash_signatures(docs_df, "doc_id", "text", 24, 42)
     pairs = dedup.lsh_candidate_pairs(sigs, 24, 8)
     # no two kept docs may be LSH candidates of each other (they'd be in
     # the same component), which greedy does NOT guarantee under chains
@@ -448,7 +433,6 @@ def test_lsh_topk_multiprobe_dominates_single_bucket(spark):
         cosine_topk,
         hyperplane_buckets,
         lsh_topk,
-        portable_planes,
         probe_buckets,
         query_bucket,
     )
@@ -459,21 +443,20 @@ def test_lsh_topk_multiprobe_dominates_single_bucket(spark):
     ]
     df = spark.createDataFrame(rows, "id int, v array<double>")
     query = rows[5][1]
-    planes = portable_planes(4, 8)
     exact = [r["id"] for r in cosine_topk(df, "id", "v", query, 10).collect()]
     single = {r["id"] for r in lsh_topk(
-        df, "id", "v", query, k=10, n_planes=4, planes=planes).collect()}
+        df, "id", "v", query, k=10, n_planes=4).collect()}
     multi = {r["id"] for r in lsh_topk(
-        df, "id", "v", query, k=10, n_planes=4, planes=planes,
+        df, "id", "v", query, k=10, n_planes=4,
         multiprobe=True).collect()}
     recall_single = len(single & set(exact)) / 10
     recall_multi = len(multi & set(exact)) / 10
     assert recall_multi >= recall_single
     # the probe set really is bigger: candidate counts from the buckets
-    qb = query_bucket(spark, query, 4, planes=planes)
+    qb = query_bucket(spark, query, 4)
     probes = probe_buckets(qb, 4, True)
     assert probes[0] == qb and len(probes) == 5
-    buckets = hyperplane_buckets(df, "id", "v", 4, 8, planes=planes)
+    buckets = hyperplane_buckets(df, "id", "v", 4, 8)
     n_single = buckets.filter(F.col("bucket") == qb).count()
     n_multi = buckets.filter(F.col("bucket").isin(probes)).count()
     assert n_multi > n_single
@@ -481,29 +464,49 @@ def test_lsh_topk_multiprobe_dominates_single_bucket(spark):
 
 def test_xxh64_replication_matches_spark(spark):
     """functions/xxh64.py must reproduce Spark's xxhash64 bit-for-bit over
-    int and long literals — the basis for oracling the PRODUCTION
-    hyperplane-bucket branch (no portable planes in the plan)."""
+    int and long literals and over strings of 0-77 UTF-8 bytes (every
+    stripe/word/int/byte tail of XXH64, non-ASCII included) — the basis for
+    oracling every hash-based operator."""
     from sissaschool_xmlschema_spark.functions.xxh64 import (
         _signed,
-        spark_xxhash64_ints,
-        xxh64_long,
+        spark_xxhash64,
+        xxh64_bytes,
         xxhash64_planes,
     )
 
     ints = [0, 1, -1, 42, 7, 1000003, 2**31 - 1, -(2**31)]
     df = spark.createDataFrame([(v,) for v in ints], "a int")
     got = [r[0] for r in df.select(F.xxhash64("a")).collect()]
-    assert got == [spark_xxhash64_ints([v]) for v in ints]
+    assert got == [spark_xxhash64([v]) for v in ints]
 
     triples = [(s, p, j) for s in (42, 7) for p in range(4) for j in range(6)]
     df3 = spark.createDataFrame(triples, "a int, b int, c int")
     got3 = [r[0] for r in df3.select(F.xxhash64("a", "b", "c")).collect()]
-    assert got3 == [spark_xxhash64_ints(list(t)) for t in triples]
+    assert got3 == [spark_xxhash64(list(t)) for t in triples]
 
     longs = [0, 1, -5, 2**40, -(2**63), 2**63 - 1]
     dfl = spark.createDataFrame([(v,) for v in longs], "a long")
     gotl = [r[0] for r in dfl.select(F.xxhash64("a")).collect()]
-    assert gotl == [_signed(xxh64_long(v, 42)) for v in longs]
+    assert gotl == [
+        _signed(xxh64_bytes(v.to_bytes(8, "little", signed=True), 42))
+        for v in longs
+    ]
+
+    strs = ["x" * n for n in range(78)] + [
+        "héllo", "日本語のテキスト", "é" * 16, "ü" * 38, "aé日" * 9,
+    ]
+    dfs = spark.createDataFrame([(v,) for v in strs], "s string")
+    gots = dfs.select(
+        "s",
+        F.xxhash64("s").alias("plain"),
+        F.xxhash64("s", F.lit(7)).alias("salted"),
+        F.xxhash64(F.lit(42), "s").alias("prefixed"),
+    ).collect()
+    assert len(gots) == len(strs)
+    for r in gots:
+        assert r["plain"] == spark_xxhash64([r["s"]])
+        assert r["salted"] == spark_xxhash64([r["s"], 7])
+        assert r["prefixed"] == spark_xxhash64([42, r["s"]])
 
     # the derived plane grid matches the executor-side bucket bits
     from sissaschool_xmlschema_spark.operators.similarity import (
@@ -514,10 +517,13 @@ def test_xxh64_replication_matches_spark(spark):
             for i in range(30)]
     vdf = spark.createDataFrame(vecs, "id int, v array<double>")
     prod = {r["id"]: r["bucket"] for r in hyperplane_buckets(
-        vdf, "id", "v", n_planes=3, dim=8).collect()}  # xxhash64 branch
-    lit = {r["id"]: r["bucket"] for r in hyperplane_buckets(
-        vdf, "id", "v", n_planes=3, dim=8,
-        planes=xxhash64_planes(3, 8)).collect()}  # replicated literals
+        vdf, "id", "v", n_planes=3, dim=8).collect()}
+    planes = xxhash64_planes(3, 8)
+    lit = {
+        i: sum(1 << p for p, pl in enumerate(planes)
+               if sum(a * c for a, c in zip(v, pl)) > 0)
+        for i, v in vecs
+    }
     assert prod == lit
 
 

@@ -266,3 +266,64 @@ def test_xsd_regex_dialect_exactness(spark):
     ]
     bad = [(p, v, e, g) for p, v, e, g in rows if e != g]
     assert not bad, bad
+
+
+def test_every_builtin_integer_type_validates_end_to_end(spark):
+    """Every builtin integer type with a value-space range goes through
+    compile_xsd → compile_plan → validate without a driver-side raise
+    (xs:unsignedLong's 2**64-1 bound once crashed the plan build), passes
+    its own bounds and flags exactly one step past each finite bound."""
+    from sissaschool_xmlschema_spark.functions.lexical import XSD_LEXICAL
+    from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+    from sissaschool_xmlschema_spark.plans.runner import validate
+    from sissaschool_xmlschema_spark.xsd_compile import (
+        builtin_facets,
+        compile_xsd,
+    )
+
+    ranges = {
+        t: next(f for f in builtin_facets(t) if isinstance(f, S.IntRange))
+        for t in XSD_LEXICAL
+        if any(isinstance(f, S.IntRange) for f in builtin_facets(t))
+    }
+    assert {"unsignedLong", "long", "nonNegativeInteger"} <= set(ranges)
+    elems = "".join(
+        f'<xs:element name="{t}" type="xs:{t}" minOccurs="0"/>'
+        for t in ranges
+    )
+    src = (
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">'
+        '<xs:element name="doc"><xs:complexType><xs:sequence>'
+        '<xs:element name="row" maxOccurs="unbounded"><xs:complexType>'
+        f"<xs:sequence>{elems}</xs:sequence>"
+        "</xs:complexType></xs:element>"
+        "</xs:sequence></xs:complexType></xs:element></xs:schema>"
+    )
+    plan = compile_plan(compile_xsd(src).spec("row"))
+    cols = list(ranges)
+    rows, expect_out = [], {}
+    for t, r in ranges.items():
+        inside = [b for b in (r.lo, r.hi) if b is not None]
+        outside = ([r.lo - 1] if r.lo is not None else []) + (
+            [r.hi + 1] if r.hi is not None else []
+        )
+        expect_out[t] = len(outside)
+        for v, tag in [(v, "in") for v in inside] + [
+            (v, "out") for v in outside
+        ]:
+            rows.append(
+                (tag, len(rows), *[str(v) if c == t else None for c in cols])
+            )
+    df = spark.createDataFrame(
+        rows,
+        "doc_id string, row_idx long, "
+        + ", ".join(f"{c} string" for c in cols),
+    )
+    v = validate(df, plan).violations.collect()
+    assert not [r for r in v if r["conv_id"] == "in"]
+    got = {}
+    for r in v:
+        if r["constraint_id"].endswith(":IntRange"):
+            col = r["constraint_id"].split(":")[1]
+            got[col] = got.get(col, 0) + 1
+    assert got == expect_out

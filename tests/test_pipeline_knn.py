@@ -5,6 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from sissaschool_xmlschema_spark.functions.xxh64 import xxhash64_planes
 from sissaschool_xmlschema_spark.operators import pipeline, similarity
 
 
@@ -61,9 +62,9 @@ def _python_knn(rows, planes, queries, k, multiprobe):
 
 
 def test_knn_join_matches_python_oracle(spark, vecs):
-    planes = similarity.portable_planes(3, 8)
+    planes = xxhash64_planes(3, 8)
     got = similarity.knn_join(
-        vecs.filter("id < 5"), vecs, k=4, n_planes=3, dim=8, planes=planes,
+        vecs.filter("id < 5"), vecs, k=4, n_planes=3, dim=8,
         q_id="id", q_vec="v", c_id="id", c_vec="v",
     ).collect()
     expect = _python_knn(_vec_rows(), planes, range(5), 4, multiprobe=False)
@@ -74,9 +75,9 @@ def test_knn_join_matches_python_oracle(spark, vecs):
 
 
 def test_knn_join_multiprobe_dominates(spark, vecs):
-    planes = similarity.portable_planes(3, 8)
+    planes = xxhash64_planes(3, 8)
     kwargs = dict(
-        k=4, n_planes=3, dim=8, planes=planes,
+        k=4, n_planes=3, dim=8,
         q_id="id", q_vec="v", c_id="id", c_vec="v",
     )
     single = similarity.knn_join(
@@ -148,7 +149,6 @@ def corpus(spark):
 def test_pipeline_gates_and_dedup(spark, corpus):
     kept = pipeline.pretraining_keep(
         corpus, "doc_id", "text", min_tokens=20, langs=("en",),
-        portable=True,
     ).collect()
     assert {r["id"] for r in kept} == {1}
     row = kept[0]
@@ -169,14 +169,13 @@ def test_pipeline_dedup_ignores_rejected_docs(spark, corpus):
         "text",
         min_tokens=20,
         langs=("en",),
-        portable=True,
     ).collect()
     assert {r["id"] for r in stricter} == {2}
 
 
 def test_pipeline_no_lang_gate(spark, corpus):
     kept = pipeline.pretraining_keep(
-        corpus, "doc_id", "text", min_tokens=20, langs=None, portable=True
+        corpus, "doc_id", "text", min_tokens=20, langs=None
     ).collect()
     assert {r["id"] for r in kept} == {1, 3}
     langs = {r["id"]: r["lang"] for r in kept}

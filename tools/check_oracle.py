@@ -66,6 +66,22 @@ FROM t
     return problems
 
 
+def register_udfs(con) -> None:
+    """DuckDB twins of the Spark functions the oracles call but DuckDB lacks:
+    ``spark_xxhash64(s, [a, ...])`` is ``F.xxhash64(s, F.lit(a), ...)``."""
+    import duckdb
+    from duckdb.typing import BIGINT, INTEGER, VARCHAR
+
+    from sissaschool_xmlschema_spark.functions.xxh64 import spark_xxhash64
+
+    con.create_function(
+        "spark_xxhash64",
+        lambda s, ints: spark_xxhash64([s, *ints]),
+        [VARCHAR, duckdb.list_type(INTEGER)],
+        BIGINT,
+    )
+
+
 def normalize(df):
     """Pandas frame → sorted list of tuples with columns sorted by name."""
     import pandas as pd
@@ -118,6 +134,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
+    register_udfs(con)
     for t in TABLES:
         path = f"{args.sf}/{t}.parquet"
         if os.path.exists(path):
