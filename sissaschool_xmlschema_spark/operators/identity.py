@@ -16,7 +16,11 @@ Spark lowering:
 * unique/key → ``groupBy(scope, *fields).count()`` — Catalyst already performs
   map-side partial aggregation (the salted two-phase shape) and AQE splits skewed
   reduce partitions; because the grouping key includes the high-cardinality field
-  tuple, hot ``conv_id`` values do not concentrate on one reducer.
+  tuple, hot ``conv_id`` values do not concentrate on one reducer.  ``validate``
+  counts a tuple that is exactly the ordered pass's sort key in that pass
+  instead (``operators/sequence.py``).
+* key missing field → a compiled row check (``plans/compiler.py``) that
+  ``validate`` evaluates inside stage A's bitmask.
 * keyref → ``left_anti`` join, broadcasting the distinct key side when the spec says
   it is small; otherwise a shuffled hash join on the field tuple.
 
@@ -31,6 +35,7 @@ from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
+from sissaschool_xmlschema_spark.plans.compiler import key_missing_field_check
 
 
 def _tuple_repr(fields) -> F.Column:
@@ -81,48 +86,50 @@ def unique_dups(df: DataFrame, c: S.Unique) -> DataFrame:
     )
 
 
+def duplicate_id(c: S.Unique) -> str:
+    return f"{'key' if isinstance(c, S.Key) else 'unique'}:{c.name}"
+
+
+def duplicate_reason(c: S.Unique, n: F.Column) -> F.Column:
+    """Reason text of a duplicated field tuple seen ``n`` times."""
+    return F.concat(
+        F.lit("duplicated value ("),
+        _tuple_repr(c.fields),
+        F.lit(f") for identity constraint '{c.name}' ("),
+        n.cast("string"),
+        F.lit(" times)"),
+    )
+
+
 def unique_violations(df: DataFrame, c: S.Unique, table: str,
                       order_col: str | None = None) -> DataFrame:
     """Duplicate field tuples for xs:unique / xs:key (identities.py:385-389)."""
-    cid = f"{'key' if isinstance(c, S.Key) else 'unique'}:{c.name}"
-    path = f"{table}"
     dups = unique_dups(df, c)
-    reason = F.concat(
-        F.lit(f"duplicated value ("),
-        _tuple_repr(c.fields),
-        F.lit(f") for identity constraint '{c.name}' ("),
-        F.col("_n").cast("string"),
-        F.lit(" times)"),
+    reason = duplicate_reason(c, F.col("_n"))
+    return _violation_select(
+        dups, c.scope, order_col, c.fields, table, duplicate_id(c), reason
     )
-    return _violation_select(dups, c.scope, order_col, c.fields, path, cid, reason)
 
 
 def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
                                  order_col: str | None = None) -> DataFrame:
-    """xs:key rows with a missing field (identities.py:523-531)."""
-    cid = f"key:{c.name}:missing-field"
-    selected = df.filter(F.expr(c.selector)) if c.selector else df
-    any_null = F.lit(False)
-    for f in c.fields:
-        any_null = any_null | F.col(f).isNull()
-    missing = selected.filter(any_null)
+    """xs:key rows with a missing field (identities.py:523-531), on their own;
+    ``validate`` runs the same compiled row check inside stage A."""
+    chk = key_missing_field_check(c, table)
     scope_col = (
-        F.col(c.scope).cast("string") if c.scope else F.lit(None).cast("string")
+        F.col(chk.scope).cast("string") if chk.scope
+        else F.lit(None).cast("string")
     )
     order_expr = (
         F.col(order_col).try_cast("long") if order_col else F.lit(None).cast("long")
     )
-    reason = F.lit(
-        f"missing key field for identity constraint '{c.name}' "
-        f"(fields {list(c.fields)})"
-    )
-    return missing.select(
+    return df.filter(~chk.ok).select(
         scope_col.alias("conv_id"),
         order_expr.alias("turn_idx"),
-        F.lit(table).alias("path"),
-        F.lit(cid).alias("constraint_id"),
-        _tuple_repr(c.fields).alias("offending_value"),
-        reason.alias("reason"),
+        F.lit(chk.path).alias("path"),
+        F.lit(chk.constraint_id).alias("constraint_id"),
+        truncate_value(chk.value).alias("offending_value"),
+        F.lit(chk.reason).alias("reason"),
     )
 
 

@@ -1,4 +1,4 @@
-"""Content-model checks as window functions + fused occurrence aggregation.
+"""Content-model checks as window functions + occurrence aggregation.
 
 The reference validates child order and occurrence bounds with the ``ModelVisitor``
 automaton (xmlschema/validators/models.py:177-366) and ``ParticleMixin`` bounds
@@ -8,19 +8,26 @@ failing child index (exceptions.py:438-533).
 Flat-table lowering: document order is ``Window.partitionBy(scope).orderBy(order)``.
 All window-based checks for a spec are fused into ONE window pass (one shuffle on the
 scope key, one sort) — at 100 TB this matters: k checks cost one exchange, not k.
-All Occurs bounds are likewise fused into ONE groupBy with conditional sums
-(map-side partial aggregation makes this a single shuffle of tiny partial rows).
+Occurs bounds and the duplicate count of a Unique/Key whose fields are the sort
+key ride that same pass as running aggregates over the same window spec.
+:func:`occurs_violations` is the standalone form of the Occurs bounds: ONE
+groupBy with conditional sums (map-side partial aggregation makes this a single
+shuffle of tiny partial rows), used where no ordered pass runs over the full input.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
+from sissaschool_xmlschema_spark.operators.identity import (
+    duplicate_id,
+    duplicate_reason,
+)
 
 VIOLATION_COLS = (
     "conv_id",
@@ -32,6 +39,19 @@ VIOLATION_COLS = (
 )
 
 
+def rides_window(c: object, scope: str, order: str,
+                 tiebreakers: Sequence[str] = ()) -> bool:
+    """True for a Unique/Key the ordered pass can count: no selector, the
+    pass's scope, and the field tuple is exactly the sort key, so one peer
+    run of the window is one field tuple."""
+    return (
+        isinstance(c, S.Unique)
+        and c.selector is None
+        and c.scope == scope
+        and tuple(c.fields) == (order, *tiebreakers)
+    )
+
+
 def model_window_violations(
     df: DataFrame,
     checks: Sequence[object],
@@ -39,29 +59,34 @@ def model_window_violations(
     scope: str,
     order: str,
     tiebreakers: Sequence[str] = (),
-    fuse_occurs: bool = False,
 ) -> DataFrame | None:
-    """All Contiguity / Monotone / FirstTurn / LastTurn / Transition checks in a
-    single window pass.
+    """All Contiguity / Monotone / FirstTurn / LastTurn / Transition checks,
+    Occurs bounds and window-riding Unique/Key duplicates (see
+    :func:`rides_window`) in a single window pass.
 
     Window expressions cannot appear inside the higher-order
     ``explode(filter(array(...)))`` projection, so this runs as two selects over
-    the SAME window partitioning: pass 1 materializes lag/row_number/count columns
-    (one exchange + sort), pass 2 is a plain projection Catalyst fuses into it.
+    the SAME window partitioning: pass 1 materializes the helper columns (one
+    exchange + sort), pass 2 is a plain projection Catalyst fuses into it.
 
-    ``fuse_occurs=True`` additionally evaluates every Occurs bound as a
-    whole-partition window aggregate emitted on the group's first row — the
-    occurrence stage then costs ZERO extra scans/shuffles because it rides the
-    same exchange+sort this pass already pays for (validate() uses this
-    whenever both stage kinds are present).
+    Every helper is over the ONE ordered window spec, so all of them share a
+    single WindowExec: an Occurs count is a running conditional sum read on
+    the group's last row, a duplicate count is ``row_number - rank + 1`` read
+    on the last row of each peer run.
     """
     w = Window.partitionBy(scope).orderBy(order, *tiebreakers)
-    wp = Window.partitionBy(scope)
+    sort_key = (order, *tiebreakers)
 
-    occurs = [c for c in checks if isinstance(c, S.Occurs)] if fuse_occurs else []
+    occurs = [c for c in checks if isinstance(c, S.Occurs)]
+    uniques = [c for c in checks if isinstance(c, S.Unique)]
+    for c in uniques:
+        if not rides_window(c, scope, order, tiebreakers):
+            raise ValueError(
+                f"{c!r} is not counted by the ordered pass over {sort_key}"
+            )
     lag_cols = {order}
-    needs_first = bool(occurs)
-    needs_last = False
+    needs_first = False
+    needs_last = bool(occurs or uniques)
     for chk in checks:
         if isinstance(chk, (S.Monotone, S.Transition)):
             lag_cols.add(chk.column)
@@ -70,7 +95,6 @@ def model_window_violations(
         if isinstance(chk, S.LastTurn):
             needs_last = True
 
-    # Every helper is an OFFSET function over the ONE ordered window spec:
     # first/last-row detection uses lag/lead of a literal (NULL exactly at
     # the partition edge, robust to NULL data values) instead of
     # row_number/count-over-partition — a whole-partition frame would force
@@ -81,9 +105,16 @@ def model_window_violations(
         helpers.append(F.lag(F.lit(1)).over(w).alias("_lag1"))
     if needs_last:
         helpers.append(F.lead(F.lit(1)).over(w).alias("_lead1"))
+    if uniques:
+        helpers += [
+            F.lead(F.col(c)).over(w).alias(f"_next_{c}") for c in sort_key
+        ]
+        helpers.append(
+            (F.row_number().over(w) - F.rank().over(w) + 1).alias("_run")
+        )
     for i, c in enumerate(occurs):
         helpers.append(
-            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).over(wp).alias(f"_occ_{i}")
+            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).over(w).alias(f"_occ_{i}")
         )
     staged = df.select("*", *helpers)
 
@@ -93,7 +124,7 @@ def model_window_violations(
 
     structs = []
 
-    def emit(ok, cid: str, value, reason: str, tix=None) -> None:
+    def emit(ok, cid: str, value, reason, tix=None) -> None:
         structs.append(
             F.when(
                 ~ok,
@@ -101,7 +132,9 @@ def model_window_violations(
                     F.lit(f"{table}").alias("path"),
                     F.lit(cid).alias("constraint_id"),
                     truncate_value(value).alias("offending_value"),
-                    F.lit(reason).alias("reason"),
+                    (
+                        reason if isinstance(reason, Column) else F.lit(reason)
+                    ).alias("reason"),
                     (
                         tix if tix is not None
                         else F.col(order).try_cast("long")
@@ -178,28 +211,31 @@ def model_window_violations(
                 f"illegal transition on '{chk.column}'",
             )
         elif isinstance(chk, S.Occurs):
-            continue  # fused below (or handled by occurs_violations)
+            n = F.col(f"_occ_{occurs.index(chk)}")
+            # once per scope group, on its last row (the running count is
+            # complete there); turn_idx stays NULL like occurs_violations
+            emit(
+                ~is_last | _occurs_ok(chk, n),
+                f"occurs:{chk.name}",
+                n,
+                _occurs_reason(chk),
+                tix=F.lit(None).cast("long"),
+            )
+        elif isinstance(chk, S.Unique):
+            # once per duplicated tuple, on the last row of its peer run;
+            # tuples with a NULL field are skipped (elements.py:912)
+            run_end, repeated = is_last, F.col("_run") > 1
+            for c in sort_key:
+                run_end = run_end | ~F.col(f"_next_{c}").eqNullSafe(F.col(c))
+                repeated = repeated & F.col(c).isNotNull()
+            emit(
+                ~(run_end & repeated),
+                duplicate_id(chk),
+                F.concat_ws("|", *[F.col(c).cast("string") for c in sort_key]),
+                duplicate_reason(chk, F.col("_run")),
+            )
         else:
             raise ValueError(f"unknown model check {chk!r}")
-
-    for i, c in enumerate(occurs):
-        n = F.col(f"_occ_{i}")
-        ok = n >= c.min_occurs
-        if c.max_occurs is not None:
-            ok = ok & (n <= c.max_occurs)
-        bound = (
-            f"[{c.min_occurs}, "
-            f"{'unbounded' if c.max_occurs is None else c.max_occurs}]"
-        )
-        # emit once per scope group (on its first row); turn_idx stays NULL
-        # to match the standalone groupBy formulation's output
-        emit(
-            ~is_first | ok,
-            f"occurs:{c.name}",
-            n,
-            f"occurrences of rows where ({c.where}) must be in {bound}",
-            tix=F.lit(None).cast("long"),
-        )
 
     if not structs:
         return None
@@ -219,6 +255,21 @@ def model_window_violations(
             "_v.reason",
         )
     )
+
+
+def _occurs_ok(c: S.Occurs, n: Column) -> Column:
+    ok = n >= c.min_occurs
+    if c.max_occurs is not None:
+        ok = ok & (n <= c.max_occurs)
+    return ok
+
+
+def _occurs_reason(c: S.Occurs) -> str:
+    bound = (
+        f"[{c.min_occurs}, "
+        f"{'unbounded' if c.max_occurs is None else c.max_occurs}]"
+    )
+    return f"occurrences of rows where ({c.where}) must be in {bound}"
 
 
 def occurs_violations(
@@ -277,23 +328,14 @@ def occurs_violations_from_counts(
     structs = []
     for i, c in enumerate(occurs):
         n = F.col(f"_n_{i}")
-        ok = n >= c.min_occurs
-        if c.max_occurs is not None:
-            ok = ok & (n <= c.max_occurs)
-        bound = (
-            f"[{c.min_occurs}, "
-            f"{'unbounded' if c.max_occurs is None else c.max_occurs}]"
-        )
         structs.append(
             F.when(
-                ~ok,
+                ~_occurs_ok(c, n),
                 F.struct(
                     F.lit(table).alias("path"),
                     F.lit(f"occurs:{c.name}").alias("constraint_id"),
                     n.cast("string").alias("offending_value"),
-                    F.lit(
-                        f"occurrences of rows where ({c.where}) must be in {bound}"
-                    ).alias("reason"),
+                    F.lit(_occurs_reason(c)).alias("reason"),
                 ),
             )
         )

@@ -12,7 +12,7 @@ specialization (facets bind ``validate`` at parse time, facets.py:129-140).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import List, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as Fn
@@ -25,15 +25,16 @@ from sissaschool_xmlschema_spark.functions.facets import facet_id, lower_facet
 class RowCheck:
     """A compiled row-local check: one Column predicate + violation metadata.
 
-    ``value_col`` names the column shown as offending_value (None → NULL,
-    e.g. for whole-row assertions)."""
+    ``value`` is the offending_value expression (None → NULL, e.g. for
+    whole-row assertions); ``scope`` names the column whose value labels the
+    violation's conv_id (None → NULL, a document-wide check)."""
 
     constraint_id: str
     path: str
-    column: str
     ok: Column
     reason: str
-    value_col: str = None
+    scope: Optional[str]
+    value: Optional[Column] = None
 
 
 @dataclass
@@ -53,6 +54,27 @@ class CompiledPlan:
             prefix = "occurs" if isinstance(c, S.Occurs) else "model"
             ids.append(f"{prefix}:{getattr(c, 'name', type(c).__name__)}")
         return ids
+
+
+def key_missing_field_check(c: S.Key, table: str) -> RowCheck:
+    """xs:key's missing-field rule (identities.py:523-531) as a row check:
+    a selected row with any NULL field fails; the offending value is the
+    ``|``-joined field tuple.  A NULL selector selects nothing."""
+    any_null = Fn.lit(False)
+    for f in c.fields:
+        any_null = any_null | Fn.col(f).isNull()
+    selected = Fn.expr(c.selector) if c.selector else Fn.lit(True)
+    return RowCheck(
+        constraint_id=f"key:{c.name}:missing-field",
+        path=table,
+        ok=~(selected & any_null),
+        reason=(
+            f"missing key field for identity constraint '{c.name}' "
+            f"(fields {list(c.fields)})"
+        ),
+        scope=c.scope,
+        value=Fn.concat_ws("|", *[Fn.col(f).cast("string") for f in c.fields]),
+    )
 
 
 def compile_plan(spec: S.TableSpec) -> CompiledPlan:
@@ -77,10 +99,10 @@ def compile_plan(spec: S.TableSpec) -> CompiledPlan:
             RowCheck(
                 constraint_id=cid,
                 path=f"{spec.name}/{col.name}",
-                column=col.name,
                 ok=ok,
                 reason=reason,
-                value_col=col.name,
+                scope=spec.scope_col,
+                value=Fn.col(col.name),
             )
         )
 
@@ -118,12 +140,14 @@ def compile_plan(spec: S.TableSpec) -> CompiledPlan:
             RowCheck(
                 constraint_id=f"assert:{ra.name}",
                 path=spec.name,
-                column=spec.order_col,
                 ok=Fn.expr(ra.expr),
                 reason=ra.reason or f"row assertion failed: {ra.expr}",
-                value_col=None,
+                scope=spec.scope_col,
             )
         )
+    for c in spec.identities:
+        if isinstance(c, S.Key):
+            row_checks.append(key_missing_field_check(c, spec.name))
     return CompiledPlan(
         spec=spec,
         row_checks=row_checks,

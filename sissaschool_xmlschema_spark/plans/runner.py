@@ -3,16 +3,21 @@
 One logical job, four stages (SURVEY.md §3.2), all declared via the DataFrame API so
 Catalyst fuses/pushes/prunes:
 
-* **stage A** — every row-local facet check in ONE projection pass compiled to a
-  violation *bitmask* (zero allocation on clean rows); violation structs are built
-  and exploded only for flagged rows.  The scan reads only the columns the checks
-  reference (column pruning) and whole-stage codegen evaluates all predicates in
-  one pass.
+* **stage A** — every row-local facet check, row assertion and xs:key
+  missing-field check in ONE projection pass compiled to a violation *bitmask*
+  (zero allocation on clean rows); violation structs are built and exploded
+  only for flagged rows.  The scan reads only the columns the checks reference
+  (column pruning) and whole-stage codegen evaluates all predicates in one pass.
 * **stage B** — all window/model checks in one window pass (one exchange+sort on
-  the scope key); occurrence bounds are fused into the same pass as
-  whole-partition window aggregates, so stage C costs no extra scan or shuffle.
-* **stage D** — identity constraints: unique/key groupBys and keyref anti-joins
-  (broadcast where the spec says the key side is small).
+  the scope key).  Occurrence bounds (stage C) and the duplicate count of every
+  Unique/Key whose fields are the sort key ride the same WindowExec as running
+  aggregates, so they cost no extra scan or shuffle.  Without an ordered check,
+  or with ``max_scope_rows`` set, they run as their own groupBys instead.
+* **stage D** — the remaining identity constraints: unique/key groupBys and
+  keyref anti-joins (broadcast where the spec says the key side is small).
+
+The transcript suite thus reads its input three times: stage A, the window
+pass and the same-table keyref groupBy.
 
 Violations union into the canonical lax-mode error collection
 (ValidationContext.errors, validation.py:216-236); ``strict`` raises on the first
@@ -32,13 +37,13 @@ from pyspark.sql import functions as F
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
 from sissaschool_xmlschema_spark.operators.identity import (
-    key_missing_field_violations,
     keyref_violations,
     unique_violations,
 )
 from sissaschool_xmlschema_spark.operators.sequence import (
     model_window_violations,
     occurs_violations,
+    rides_window,
 )
 from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
 
@@ -65,7 +70,7 @@ class SparkSchemaValidationError(Exception):
 
 
 def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFrame]:
-    """Stage A: all facet checks in one projection (scan-fused, codegen'd).
+    """Stage A: all row checks in one projection (scan-fused, codegen'd).
 
     Two-phase shape for allocation economy: phase 1 evaluates every predicate
     into one LONG bitmask — pure arithmetic, zero object allocation for the
@@ -98,25 +103,22 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
     for ci in range(1, len(chunks)):
         any_flag = any_flag | (F.col(f"_m{ci}") > 0)
 
-    value_cols = sorted(
-        {chk.value_col for chk in plan.row_checks if chk.value_col}
-    )
-    flagged = df.select(
-        F.col(spec.scope_col).cast("string").alias("conv_id"),
-        F.col(spec.order_col).try_cast("long").alias("turn_idx"),
-        *masks,
-        *[F.col(c).alias(f"_val_{c}") for c in value_cols],
-    ).filter(any_flag)
+    flagged = df.select("*", *masks).filter(any_flag)
+
+    def conv_id(chk):
+        if chk.scope is None:
+            return F.lit(None).cast("string")
+        return F.col(chk.scope).cast("string")
 
     structs = [
         F.when(
             F.shiftright(F.col(f"_m{ci}"), i).bitwiseAND(F.lit(1)) == 1,
             F.struct(
+                conv_id(chk).alias("conv_id"),
                 F.lit(chk.path).alias("path"),
                 F.lit(chk.constraint_id).alias("constraint_id"),
                 truncate_value(
-                    F.col(f"_val_{chk.value_col}")
-                    if chk.value_col
+                    chk.value if chk.value is not None
                     else F.lit(None).cast("string")
                 ).alias("offending_value"),
                 F.lit(chk.reason).alias("reason"),
@@ -128,12 +130,11 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
     return (
         flagged.select(
-            "conv_id",
-            "turn_idx",
+            F.col(spec.order_col).try_cast("long").alias("turn_idx"),
             F.explode(arr).alias("_v"),
         )
         .select(
-            "conv_id",
+            "_v.conv_id",
             "turn_idx",
             "_v.path",
             "_v.constraint_id",
@@ -347,42 +348,33 @@ def validate(
     parts: List[Optional[DataFrame]] = [row_local_violations(df, plan)]
     if guard_violations is not None:
         parts.append(guard_violations)
-    has_window = any(
-        not isinstance(c, S.Occurs) for c in plan.model
-    ) and bool(plan.model)
-    has_occurs = any(isinstance(c, S.Occurs) for c in plan.model)
-    if has_window:
-        # Occurs bounds run as their own groupBy rather than riding the
-        # window pass: a whole-partition window frame needs a SECOND
-        # WindowExec (different window spec → +40% on the window stage,
-        # measured at 80M rows), while the standalone groupBy is
-        # exchange-free on a scope-bucketed layout and one map-side-combined
-        # shuffle of tiny partials otherwise.  This also keeps occurrence
-        # bounds (a groupBy check) over the FULL input when the scope-size
-        # guard excludes oversized groups from the ordered pass.
+    ordered = [c for c in plan.model if not isinstance(c, S.Occurs)]
+    occurs = [c for c in plan.model if isinstance(c, S.Occurs)]
+    tiebreakers = tuple(spec.tiebreakers)
+    # occurrence bounds and sort-key duplicates ride the ordered pass; with
+    # the scope-size guard they stay groupBys over the FULL input, because
+    # the window input drops the oversized groups
+    fused = bool(ordered) and not cap
+    riders = occurs + [
+        c for c in plan.identities
+        if rides_window(c, spec.scope_col, spec.order_col, tiebreakers)
+    ] if fused else []
+    if ordered:
         parts.append(
             model_window_violations(
-                window_input, plan.model, spec.name, spec.scope_col,
-                spec.order_col, tuple(spec.tiebreakers),
-                fuse_occurs=False,
+                window_input, ordered + riders, spec.name, spec.scope_col,
+                spec.order_col, tiebreakers,
             )
         )
-        if has_occurs:
-            parts.append(
-                occurs_violations(df, plan.model, spec.name, spec.scope_col)
-            )
-    elif has_occurs:
-        parts.append(
-            occurs_violations(df, plan.model, spec.name, spec.scope_col)
-        )
+    if occurs and not fused:
+        parts.append(occurs_violations(df, occurs, spec.name, spec.scope_col))
     for c in plan.identities:
-        if isinstance(c, S.Key):
-            parts.append(unique_violations(df, c, spec.name, spec.order_col))
-            parts.append(
-                key_missing_field_violations(df, c, spec.name, spec.order_col)
-            )
-        elif isinstance(c, S.Unique):
-            parts.append(unique_violations(df, c, spec.name, spec.order_col))
+        # a Key's missing-field check is a row check in stage A
+        if isinstance(c, S.Unique):
+            if c not in riders:
+                parts.append(
+                    unique_violations(df, c, spec.name, spec.order_col)
+                )
         elif isinstance(c, S.Keyref):
             parts.append(keyref_violations(df, c, spec.name))
         else:

@@ -6,8 +6,9 @@ iteration with identity counters kept across subtrees and merged at the end
 validators/schemas.py:1386-1389; end-of-document reference checks
 schemas.py:1391-1405).  The Spark lowering:
 
-* **row-local facet checks** are stateless projections — they run unchanged on
-  a streaming DataFrame (one micro-batch = one lazy subtree).
+* **row-local checks** (facets, row assertions, xs:key missing fields) are
+  stateless projections — they run unchanged on a streaming DataFrame (one
+  micro-batch = one lazy subtree).
 * **identity constraints** need cross-batch state: each micro-batch's partial
   key counts merge into a persistent key-count store (parquet), exactly the
   ``counter.update(counter.counter)`` merge; duplicates are whatever exceeds 1
@@ -248,7 +249,7 @@ def run_incremental(
     the foreachBatch body and the idempotent ``batch=<id>`` sinks don't
     depend on the trigger (pinned by test_checkpoint_streaming).
 
-    Per micro-batch: facet violations, per-constraint partial key counts
+    Per micro-batch: row-local violations, per-constraint partial key counts
     (map-side shrunk), and per-keyref referencing-counts + key-tuple sets
     each land under ``<sink>/<name>/batch=<batch_id>`` with OVERWRITE
     semantics — foreachBatch is at-least-once, so a retried batch rewrites

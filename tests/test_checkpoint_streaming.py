@@ -10,6 +10,7 @@ from sissaschool_xmlschema_spark.plans.checkpoint import (
     run_checkpointed,
     spec_hash,
 )
+from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.sources.transcripts import (
     corrupt_transcripts,
     synthetic_transcripts,
@@ -378,6 +379,39 @@ def test_incremental_verdicts_count_identity_and_facets(spark, tmp_path):
     assert verd["c1"][1] == "invalid"
     # c2: bad role enum (batch 1) → invalid even though occurs is satisfied
     assert verd["c2"][1] == "invalid"
+
+
+def test_incremental_reports_key_missing_field(spark, tmp_path):
+    """A NULL key field is a compiled row check, so the incremental runner
+    reports it like batch validate does — it used to drop it and call the
+    conversation valid."""
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp"
+    )
+    sp = S.TableSpec(
+        name="transcripts",
+        identities=(S.Key("turn-key", fields=("turn_idx",), scope="conv_id"),),
+    )
+    df = spark.createDataFrame([("c1", None, "user", "a", None, TS)], schema)
+    src = str(tmp_path / "src")
+    df.repartition(1).write.parquet(src + "/f1.parquet")
+
+    def counts(v):
+        return {
+            r["constraint_id"]: r["n"]
+            for r in v.groupBy("constraint_id").agg(F.count("*").alias("n"))
+            .collect()
+        }
+
+    batch = counts(validate(df, sp).violations)
+    res = run_incremental(
+        spark, src + "/*", sp, str(tmp_path / "work"), schema=schema
+    )
+    assert batch == {"key:turn-key:missing-field": 1}
+    assert counts(res.violations(spark)) == batch
+    verd = [tuple(r) for r in res.verdicts(spark, sp).collect()]
+    assert verd == [("c1", 1, "invalid")]
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):

@@ -12,11 +12,39 @@ the anti-patterns the engine promises to avoid (PLANS.md, SCALE.md):
 
 One sweep over the whole registry keeps every future operator honest — a
 new query that sneaks in a cartesian join or a Python UDF fails here, not
-in a 100 TB run."""
+in a 100 TB run.
+
+The transcript suite's own shape is pinned too: three scans, one Window,
+and the same violation rows as its checks run one branch each."""
+
+import dataclasses
+import datetime as dt
+import re
+from collections import Counter
 
 import pytest
 
 import __spark_entry__ as entry
+from sissaschool_xmlschema_spark import spec as S
+from sissaschool_xmlschema_spark.operators.identity import (
+    key_missing_field_violations,
+    keyref_violations,
+    unique_violations,
+)
+from sissaschool_xmlschema_spark.operators.sequence import (
+    model_window_violations,
+    occurs_violations,
+)
+from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+from sissaschool_xmlschema_spark.plans.runner import (
+    row_local_violations,
+    validate,
+)
+from sissaschool_xmlschema_spark.sources.transcripts import (
+    corrupt_transcripts,
+    synthetic_transcripts,
+)
+from sissaschool_xmlschema_spark.spec import transcript_spec
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,3 +74,137 @@ def test_no_antipatterns_in_plan(spark, name):
             assert marker not in plan, (
                 f"{name}: unsanctioned Python stage {marker}"
             )
+
+
+# --- the transcript suite: one ordered pass ---------------------------------
+
+
+def _nodes(df) -> Counter:
+    """Physical operator names of ``df``'s executed plan, one per node."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    return Counter(
+        m.group(1)
+        for m in re.finditer(r"^[\s:+\-*()\d]*([A-Za-z]\w*)", tree, re.M)
+    )
+
+
+def _small_transcripts(spark):
+    return corrupt_transcripts(
+        synthetic_transcripts(spark, n_convs=60, hot_convs=1, hot_turns=50),
+        every=7,
+    )
+
+
+def test_suite_plan_shape_plain_parquet(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _small_transcripts(spark).write.parquet(path)
+    t = spark.read.parquet(path)
+    nodes = _nodes(validate(t, compile_plan(transcript_spec())).violations)
+    # stage A, the window pass and the same-table keyref groupBy
+    assert nodes["FileScan"] <= 3, nodes
+    assert nodes["Exchange"] <= 2, nodes
+    assert nodes["Window"] == 1, nodes
+
+
+def test_suite_plan_shape_bucketed(spark, tmp_path):
+    name = "plan_shape_bucketed"
+    (
+        _small_transcripts(spark).repartition(4, "conv_id")
+        .write.bucketBy(4, "conv_id").sortBy("conv_id", "turn_idx")
+        .option("path", str(tmp_path / "b")).saveAsTable(name)
+    )
+    try:
+        t = spark.table(name)
+        nodes = _nodes(
+            validate(t, compile_plan(transcript_spec())).violations
+        )
+        assert nodes["FileScan"] <= 3, nodes
+        assert nodes["Exchange"] == 0, nodes
+        assert nodes["Window"] == 1, nodes
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _standalone_branches(df, spec):
+    """One branch per check family, each over its own scan: the suite's
+    shape before occurrence bounds, sort-key duplicates and key
+    missing-field checks joined the passes it already makes."""
+    facets_only = compile_plan(dataclasses.replace(spec, identities=()))
+    parts = [
+        row_local_violations(df, facets_only),
+        model_window_violations(
+            df, [c for c in spec.model if not isinstance(c, S.Occurs)],
+            spec.name, spec.scope_col, spec.order_col, tuple(spec.tiebreakers),
+        ),
+        occurs_violations(df, spec.model, spec.name, spec.scope_col),
+    ]
+    for c in spec.identities:
+        if isinstance(c, S.Keyref):
+            parts.append(keyref_violations(df, c, spec.name))
+            continue
+        parts.append(unique_violations(df, c, spec.name, spec.order_col))
+        if isinstance(c, S.Key):
+            parts.append(
+                key_missing_field_violations(df, c, spec.name, spec.order_col)
+            )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def test_fused_suite_rows_equal_standalone_branches(spark):
+    ts = dt.datetime(2024, 1, 1)
+    planted = spark.createDataFrame(
+        [
+            # duplicate turn_idx (three times) in an otherwise valid conv
+            ("conv-90000001", 0, "user", "hi", None, ts),
+            ("conv-90000001", 1, "assistant", "a", None, ts),
+            ("conv-90000001", 1, "assistant", "b", None, ts),
+            ("conv-90000001", 1, "user", "c", None, ts),
+            # NULL turn_idx
+            ("conv-90000002", None, "user", "hi", None, ts),
+            ("conv-90000002", 0, "user", "hi", None, ts),
+            # NULL conv_id, with a duplicate inside the NULL scope
+            (None, 0, "user", "x", None, ts),
+            (None, 0, "user", "y", None, ts),
+            # no user turn at all
+            ("conv-90000003", 0, "system", "s", None, ts),
+            ("conv-90000003", 1, "assistant", "a", None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    df = _small_transcripts(spark).unionByName(planted)
+    base = transcript_spec()
+    # a scope-less Key: NULL conv_id on its rows, counted by its own groupBy
+    spec = dataclasses.replace(
+        base,
+        identities=(
+            *base.identities,
+            S.Key("global-turn", fields=("conv_id", "turn_idx")),
+        ),
+    )
+    fused = Counter(
+        tuple(r) for r in validate(df, compile_plan(spec)).violations.collect()
+    )
+    want = Counter(tuple(r) for r in _standalone_branches(df, spec).collect())
+    assert fused == want
+    ids = {k[3] for k in fused}
+    for cid in (
+        "key:turn-key", "key:turn-key:missing-field",
+        "key:global-turn:missing-field", "occurs:min-one-user",
+        "model:turn-contiguity", "keyref:tool-ref",
+    ):
+        assert cid in ids, cid
+    assert (
+        "conv-90000001", 1, "transcripts", "key:turn-key", "1",
+        "duplicated value (1) for identity constraint 'turn-key' (3 times)",
+    ) in fused
+    assert (None, 0, "transcripts", "key:turn-key", "0",
+            "duplicated value (0) for identity constraint 'turn-key' "
+            "(2 times)") in fused
+    assert any(
+        k[0] is None and k[3] == "key:global-turn:missing-field"
+        for k in fused
+    )

@@ -2,6 +2,7 @@
 pandas re-implementation on hypothesis-generated corrupted tables (SURVEY §5:
 oracle cross-check + property-based corruption testing)."""
 
+import dataclasses
 import datetime as dt
 
 import pandas as pd
@@ -32,6 +33,9 @@ SPEC = S.TableSpec(
     ),
     identities=(
         S.Key("turn-key", fields=("turn_idx",), scope="conv_id"),
+        # the whole sort key: counted inside the ordered window pass
+        S.Unique("turn-row", fields=("turn_idx", "role", "text"),
+                 scope="conv_id"),
         S.Keyref(
             "tool-ref",
             fields=("tool",),
@@ -55,6 +59,21 @@ SPEC = S.TableSpec(
     ),
 )
 
+# Without tiebreakers the rows that share a turn_idx have no defined order,
+# so this variant keeps only the model checks that do not depend on it; its
+# turn-key duplicates are counted in the ordered pass, while SPEC counts
+# them in a groupBy.
+SPEC_NO_TIEBREAKERS = dataclasses.replace(
+    SPEC,
+    tiebreakers=(),
+    identities=tuple(
+        c for c in SPEC.identities if c.name != "turn-row"
+    ),
+    model=tuple(
+        c for c in SPEC.model if isinstance(c, (S.Contiguity, S.Occurs))
+    ),
+)
+
 row_strategy = st.tuples(
     st.sampled_from(["c0", "c1", "c2"]),                       # conv_id
     st.one_of(st.integers(-1, 6), st.just(None)),              # turn_idx
@@ -65,13 +84,27 @@ row_strategy = st.tuples(
 )
 
 
-@settings(
+_settings = settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(rows=st.lists(row_strategy, min_size=1, max_size=25))
+_rows = given(rows=st.lists(row_strategy, min_size=1, max_size=25))
+
+
+@_settings
+@_rows
 def test_engine_matches_pandas_oracle(spark, rows):
+    _check(spark, SPEC, rows)
+
+
+@_settings
+@_rows
+def test_engine_matches_pandas_oracle_without_tiebreakers(spark, rows):
+    _check(spark, SPEC_NO_TIEBREAKERS, rows)
+
+
+def _check(spark, spec, rows):
     data = [
         (c, i, r, t, tool, BASE_TS + dt.timedelta(minutes=off))
         for (c, i, r, t, tool, off) in rows
@@ -83,12 +116,12 @@ def test_engine_matches_pandas_oracle(spark, rows):
     )
     got = {
         r["constraint_id"]: r["n_violations"]
-        for r in validate(sdf, SPEC).by_constraint().collect()
+        for r in validate(sdf, spec).by_constraint().collect()
     }
     pdf = pd.DataFrame(
         data, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     )
     # pandas None → NaN for ints; keep object dtype for exact None handling
     pdf["turn_idx"] = pdf["turn_idx"].astype("object")
-    want = {k: v for k, v in count_violations(pdf, SPEC).items() if v}
+    want = {k: v for k, v in count_violations(pdf, spec).items() if v}
     assert got == want, f"engine={got} oracle={want} rows={data}"

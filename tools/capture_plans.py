@@ -30,9 +30,13 @@ def main() -> None:
     from sissaschool_xmlschema_spark.operators.identity import keyref_misses
     from sissaschool_xmlschema_spark.operators.sequence import (
         model_window_violations,
+        occurs_violations,
     )
     from sissaschool_xmlschema_spark.plans.compiler import compile_plan
-    from sissaschool_xmlschema_spark.plans.runner import row_local_violations
+    from sissaschool_xmlschema_spark.plans.runner import (
+        row_local_violations,
+        validate,
+    )
     from sissaschool_xmlschema_spark.spec import transcript_spec
 
     def show(title, df):
@@ -55,15 +59,13 @@ def main() -> None:
     bucketed = spark.table("bench_bucketed_400000")
 
     show("rowlocal-bitmask (plain parquet)", row_local_violations(plain, plan))
+    key = [c for c in sp.identities if isinstance(c, S.Key)][0]
     show(
-        "window single-WindowExec (bucketed)",
+        "window single-WindowExec + occurs + turn-key duplicates (bucketed)",
         model_window_violations(
-            bucketed, plan.model, sp.name, sp.scope_col, sp.order_col, (),
-            fuse_occurs=False,
+            bucketed, [*plan.model, key], sp.name, sp.scope_col,
+            sp.order_col, (),
         ),
-    )
-    from sissaschool_xmlschema_spark.operators.sequence import (
-        occurs_violations,
     )
     show(
         "occurs groupBy (bucketed)",
@@ -71,6 +73,7 @@ def main() -> None:
     )
     kr = [c for c in sp.identities if isinstance(c, S.Keyref)][0]
     show("keyref fused same-table (bucketed)", keyref_misses(bucketed, kr))
+    show("transcript suite (plain parquet)", validate(plain, plan).violations)
     show(
         "filter pushdown",
         plain.filter("role = 'tool'").select("conv_id", "tool"),
