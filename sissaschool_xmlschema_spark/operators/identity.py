@@ -26,9 +26,15 @@ Spark lowering:
 
 All violations land in the engine's canonical violation schema
 ``(conv_id, turn_idx, path, constraint_id, offending_value, reason)``.
+
+Each check is built as a program of prebuilt Columns (:class:`UniqueProgram`,
+:class:`KeyrefProgram`): ``validate`` keeps them per compiled plan and binds
+them to each input; the standalone functions build and bind them per call.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,8 +51,8 @@ def _tuple_repr(fields) -> F.Column:
     )
 
 
-def _violation_select(df: DataFrame, scope: str | None, order: str | None,
-                      fields, path: str, cid: str, reason: F.Column) -> DataFrame:
+def _violation_cols(scope: str | None, order: str | None, fields, path: str,
+                    cid: str, reason: F.Column) -> list:
     scope_col = (
         F.col(scope).cast("string") if scope else F.lit(None).cast("string")
     )
@@ -55,35 +61,69 @@ def _violation_select(df: DataFrame, scope: str | None, order: str | None,
         if order and order in fields
         else F.lit(None).cast("long")
     )
-    return df.select(
+    return [
         scope_col.alias("conv_id"),
         order_col.alias("turn_idx"),
         F.lit(path).alias("path"),
         F.lit(cid).alias("constraint_id"),
         _tuple_repr(fields).alias("offending_value"),
         reason.alias("reason"),
+    ]
+
+
+def _filters(df: DataFrame, filters) -> DataFrame:
+    for f in filters:
+        df = df.filter(f)
+    return df
+
+
+@dataclass
+class UniqueProgram:
+    """One xs:unique / xs:key duplicate count as Columns built once
+    (:func:`unique_program`)."""
+
+    filters: list
+    keys: list
+    count: F.Column
+    having: F.Column
+    select: list
+
+    def dups(self, df: DataFrame) -> DataFrame:
+        return (
+            _filters(df, self.filters).groupBy(*self.keys).agg(self.count)
+            .filter(self.having)
+        )
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        return self.dups(df).select(*self.select)
+
+
+def unique_program(c: S.Unique, table: str,
+                   order_col: str | None = None) -> UniqueProgram:
+    """The counting core of xs:unique (IdentityCounter.increase errors when a
+    tuple's count hits 2, identities.py:385-389) as a single groupBy —
+    Catalyst's partial (map-side) aggregation gives the salted two-phase
+    shape for free because the grouping key includes the high-cardinality
+    field tuple — then one violation row per duplicated tuple."""
+    filters = [F.expr(c.selector)] if c.selector else []
+    # null-tuple skip rule (elements.py:912): any null field → tuple not counted
+    filters += [F.col(f).isNotNull() for f in c.fields]
+    keys = ([c.scope] if c.scope else []) + list(c.fields)
+    return UniqueProgram(
+        filters=filters,
+        keys=[F.col(k) for k in keys],
+        count=F.count(F.lit(1)).alias("_n"),
+        having=F.col("_n") > 1,
+        select=_violation_cols(
+            c.scope, order_col, c.fields, table, duplicate_id(c),
+            duplicate_reason(c, F.col("_n")),
+        ),
     )
 
 
 def unique_dups(df: DataFrame, c: S.Unique) -> DataFrame:
-    """Raw duplicate tuples: ``(scope?, *fields, _n)`` with ``_n > 1``.
-
-    The counting core of xs:unique (IdentityCounter.increase errors when a tuple's
-    count hits 2, identities.py:385-389) as a single groupBy — Catalyst's partial
-    (map-side) aggregation gives the salted two-phase shape for free because the
-    grouping key includes the high-cardinality field tuple.
-    """
-    selected = df.filter(F.expr(c.selector)) if c.selector else df
-    # null-tuple skip rule (elements.py:912): any null field → tuple not counted
-    non_null = selected
-    for f in c.fields:
-        non_null = non_null.filter(F.col(f).isNotNull())
-    keys = ([c.scope] if c.scope else []) + list(c.fields)
-    return (
-        non_null.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-    )
+    """Raw duplicate tuples: ``(scope?, *fields, _n)`` with ``_n > 1``."""
+    return unique_program(c, "").dups(df)
 
 
 def duplicate_id(c: S.Unique) -> str:
@@ -104,11 +144,7 @@ def duplicate_reason(c: S.Unique, n: F.Column) -> F.Column:
 def unique_violations(df: DataFrame, c: S.Unique, table: str,
                       order_col: str | None = None) -> DataFrame:
     """Duplicate field tuples for xs:unique / xs:key (identities.py:385-389)."""
-    dups = unique_dups(df, c)
-    reason = duplicate_reason(c, F.col("_n"))
-    return _violation_select(
-        dups, c.scope, order_col, c.fields, table, duplicate_id(c), reason
-    )
+    return unique_program(c, table, order_col).bind(df)
 
 
 def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
@@ -133,15 +169,61 @@ def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
     )
 
 
-def keyref_misses(df: DataFrame, c: S.Keyref,
-                  keys_df: DataFrame | None = None) -> DataFrame:
-    """Raw missing referents: ``(scope?, *fields, _n)`` — each absent tuple once
-    with its multiplicity, the counting core of ``KeyrefCounter.iter_errors``
-    (identities.py:403-418, anti-membership filter :410).
+@dataclass
+class KeyrefProgram:
+    """One xs:keyref check as Columns built once (:func:`keyref_program`).
 
-    ``keys_df`` lets a keyref refer to a key on a *different* table (the
-    cross-table analogue of refer_path scope propagation, identities.py:317-334);
-    by default keys come from the same DataFrame.
+    ``fused`` is the same-table shape: one groupBy with a referencing and a
+    key count per tuple.  Otherwise the referencing rows anti-join the
+    distinct key tuples of ``keys_df`` (default: the same DataFrame)."""
+
+    fused: bool
+    filters: list
+    keys: list
+    aggs: list
+    having: F.Column | None
+    select: list
+    key_filters: list = ()
+    key_cols: list = ()
+    broadcast: bool = False
+    cond: F.Column | None = None
+
+    def misses(self, df: DataFrame,
+               keys_df: DataFrame | None = None) -> DataFrame:
+        refs = _filters(df, self.filters)
+        if self.fused:
+            return (
+                refs.groupBy(*self.keys).agg(*self.aggs).filter(self.having)
+                .drop("_n_key")
+            )
+        key_src = keys_df if keys_df is not None else df
+        keys = (
+            _filters(key_src, self.key_filters).select(*self.key_cols)
+            .dropDuplicates()
+        )
+        if self.broadcast:
+            keys = F.broadcast(keys)
+        return (
+            refs.join(keys, self.cond, "left_anti").groupBy(*self.keys)
+            .agg(*self.aggs)
+        )
+
+    def bind(self, df: DataFrame,
+             keys_df: DataFrame | None = None) -> DataFrame:
+        return self.misses(df, keys_df).select(*self.select)
+
+
+def keyref_program(c: S.Keyref, table: str,
+                   cross: bool = False) -> KeyrefProgram:
+    """Raw missing referents ``(scope?, *fields, _n)`` — each absent tuple
+    once with its multiplicity, the counting core of
+    ``KeyrefCounter.iter_errors`` (identities.py:403-418, anti-membership
+    filter :410) — then one violation row per missing tuple.
+
+    ``cross`` marks a keyref whose key lives on a *different* table (the
+    cross-table analogue of refer_path scope propagation,
+    identities.py:317-334), passed as ``keys_df`` when binding; by default
+    keys come from the same DataFrame.
 
     ``c.refer_scope`` resolves cross-domain keyrefs (refer_path,
     identities.py:317-334): ``None`` makes the key side document-wide (a key
@@ -159,62 +241,11 @@ def keyref_misses(df: DataFrame, c: S.Keyref,
     """
     same_scope = c.refer_scope == S.SAME_SCOPE
     ref_scope = c.scope if same_scope else c.refer_scope
-    if (
-        keys_df is None
-        and tuple(c.fields) == tuple(c.refer_fields)
-        and ref_scope == c.scope
-    ):
-        group_keys = ([c.scope] if c.scope else []) + list(c.fields)
-        sel = F.expr(c.selector) if c.selector else F.lit(True)
-        ref_sel = F.expr(c.refer_selector) if c.refer_selector else F.lit(True)
-        non_null = df
-        for f in c.fields:
-            non_null = non_null.filter(F.col(f).isNotNull())
-        return (
-            non_null.groupBy(*group_keys)
-            .agg(
-                F.sum(F.when(sel, 1).otherwise(0)).alias("_n"),
-                F.sum(F.when(ref_sel, 1).otherwise(0)).alias("_n_key"),
-            )
-            .filter((F.col("_n") > 0) & (F.col("_n_key") == 0))
-            .drop("_n_key")
-        )
-
-    refs = df.filter(F.expr(c.selector)) if c.selector else df
+    group_keys = [
+        F.col(k) for k in ([c.scope] if c.scope else []) + list(c.fields)
+    ]
     # skip tuples with null fields — they are reported by Required/Key checks
-    for f in c.fields:
-        refs = refs.filter(F.col(f).isNotNull())
-
-    key_src = keys_df if keys_df is not None else df
-    keys = (
-        key_src.filter(F.expr(c.refer_selector)) if c.refer_selector else key_src
-    )
-    # scope joins only when both domains have one; otherwise the broader
-    # side's absence of a scope means fields-only matching (refer_path)
-    join_scope = c.scope is not None and ref_scope is not None
-    key_cols = ([ref_scope] if join_scope else []) + list(c.refer_fields)
-    keys = keys.select(
-        *[F.col(k).alias(f"_k_{i}") for i, k in enumerate(key_cols)]
-    ).dropDuplicates()
-    if c.broadcast_keys:
-        keys = F.broadcast(keys)
-
-    ref_cols = ([c.scope] if join_scope else []) + list(c.fields)
-    cond = None
-    for i, r in enumerate(ref_cols):
-        e = F.col(r) == F.col(f"_k_{i}")
-        cond = e if cond is None else cond & e
-    misses = refs.join(keys, cond, "left_anti")
-
-    group_keys = ([c.scope] if c.scope else []) + list(c.fields)
-    return misses.groupBy(*group_keys).agg(F.count(F.lit(1)).alias("_n"))
-
-
-def keyref_violations(df: DataFrame, c: S.Keyref, table: str,
-                      keys_df: DataFrame | None = None) -> DataFrame:
-    """Anti-join referential check with multiplicity (identities.py:403-418)."""
-    cid = f"keyref:{c.name}"
-    counted = keyref_misses(df, c, keys_df)
+    not_null = [F.col(f).isNotNull() for f in c.fields]
     reason = F.concat(
         F.lit("value ("),
         _tuple_repr(c.fields),
@@ -222,4 +253,59 @@ def keyref_violations(df: DataFrame, c: S.Keyref, table: str,
         F.col("_n").cast("string"),
         F.lit(" times)"),
     )
-    return _violation_select(counted, c.scope, None, c.fields, table, cid, reason)
+    select = _violation_cols(
+        c.scope, None, c.fields, table, f"keyref:{c.name}", reason
+    )
+    if (
+        not cross
+        and tuple(c.fields) == tuple(c.refer_fields)
+        and ref_scope == c.scope
+    ):
+        sel = F.expr(c.selector) if c.selector else F.lit(True)
+        ref_sel = F.expr(c.refer_selector) if c.refer_selector else F.lit(True)
+        return KeyrefProgram(
+            fused=True,
+            filters=not_null,
+            keys=group_keys,
+            aggs=[
+                F.sum(F.when(sel, 1).otherwise(0)).alias("_n"),
+                F.sum(F.when(ref_sel, 1).otherwise(0)).alias("_n_key"),
+            ],
+            having=(F.col("_n") > 0) & (F.col("_n_key") == 0),
+            select=select,
+        )
+
+    # scope joins only when both domains have one; otherwise the broader
+    # side's absence of a scope means fields-only matching (refer_path)
+    join_scope = c.scope is not None and ref_scope is not None
+    key_cols = ([ref_scope] if join_scope else []) + list(c.refer_fields)
+    ref_cols = ([c.scope] if join_scope else []) + list(c.fields)
+    cond = None
+    for i, r in enumerate(ref_cols):
+        e = F.col(r) == F.col(f"_k_{i}")
+        cond = e if cond is None else cond & e
+    return KeyrefProgram(
+        fused=False,
+        filters=([F.expr(c.selector)] if c.selector else []) + not_null,
+        keys=group_keys,
+        aggs=[F.count(F.lit(1)).alias("_n")],
+        having=None,
+        select=select,
+        key_filters=[F.expr(c.refer_selector)] if c.refer_selector else [],
+        key_cols=[F.col(k).alias(f"_k_{i}") for i, k in enumerate(key_cols)],
+        broadcast=c.broadcast_keys,
+        cond=cond,
+    )
+
+
+def keyref_misses(df: DataFrame, c: S.Keyref,
+                  keys_df: DataFrame | None = None) -> DataFrame:
+    """Raw missing referents of :func:`keyref_program`: ``(scope?, *fields,
+    _n)``."""
+    return keyref_program(c, "", keys_df is not None).misses(df, keys_df)
+
+
+def keyref_violations(df: DataFrame, c: S.Keyref, table: str,
+                      keys_df: DataFrame | None = None) -> DataFrame:
+    """Anti-join referential check with multiplicity (identities.py:403-418)."""
+    return keyref_program(c, table, keys_df is not None).bind(df, keys_df)

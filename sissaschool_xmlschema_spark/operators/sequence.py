@@ -13,11 +13,16 @@ key ride that same pass as running aggregates over the same window spec.
 :func:`occurs_violations` is the standalone form of the Occurs bounds: ONE
 groupBy with conditional sums (map-side partial aggregation makes this a single
 shuffle of tiny partial rows), used where no ordered pass runs over the full input.
+
+Both passes are built as programs of prebuilt Columns (:class:`PassProgram`,
+:class:`OccursProgram`): ``validate`` keeps them per compiled plan and binds
+them to each input; the standalone functions build and bind them per call.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from dataclasses import dataclass
+from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -52,22 +57,44 @@ def rides_window(c: object, scope: str, order: str,
     )
 
 
-def model_window_violations(
-    df: DataFrame,
+@dataclass
+class PassProgram:
+    """One pass over the input as Columns built once — stage A
+    (``plans/runner.row_local_program``) or the ordered pass
+    (:func:`window_program`): ``head`` is selected next to every input
+    column (the violation bitmask, the window helpers), rows where ``flag``
+    holds are kept (``None``: all rows), ``explode`` turns the failed checks
+    into one row each and ``flatten`` gives them the violation schema."""
+
+    head: List[Column]
+    flag: Optional[Column]
+    explode: List[Column]
+    flatten: List[Column]
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        staged = df.select(*self.head)
+        if self.flag is not None:
+            staged = staged.filter(self.flag)
+        return staged.select(*self.explode).select(*self.flatten)
+
+
+def window_program(
     checks: Sequence[object],
     table: str,
     scope: str,
     order: str,
     tiebreakers: Sequence[str] = (),
-) -> DataFrame | None:
+) -> PassProgram | None:
     """All Contiguity / Monotone / FirstTurn / LastTurn / Transition checks,
     Occurs bounds and window-riding Unique/Key duplicates (see
-    :func:`rides_window`) in a single window pass.
+    :func:`rides_window`) as the Columns of a single window pass; ``None``
+    without checks.
 
     Window expressions cannot appear inside the higher-order
-    ``explode(filter(array(...)))`` projection, so this runs as two selects over
-    the SAME window partitioning: pass 1 materializes the helper columns (one
-    exchange + sort), pass 2 is a plain projection Catalyst fuses into it.
+    ``explode(filter(array(...)))`` projection, so the pass is two selects
+    over the SAME window partitioning: the first materializes the helper
+    columns (one exchange + sort), the second is a plain projection Catalyst
+    fuses into it.
 
     Every helper is over the ONE ordered window spec, so all of them share a
     single WindowExec: an Occurs count is a running conditional sum read on
@@ -100,7 +127,10 @@ def model_window_violations(
     # row_number/count-over-partition — a whole-partition frame would force
     # a SECOND WindowExec pass (different window spec), measured +40% on the
     # window stage at 80M rows.
-    helpers = [F.lag(F.col(c)).over(w).alias(f"_prev_{c}") for c in sorted(lag_cols)]
+    helpers = [F.col("*")]
+    helpers += [
+        F.lag(F.col(c)).over(w).alias(f"_prev_{c}") for c in sorted(lag_cols)
+    ]
     if needs_first:
         helpers.append(F.lag(F.lit(1)).over(w).alias("_lag1"))
     if needs_last:
@@ -116,7 +146,6 @@ def model_window_violations(
         helpers.append(
             F.sum(F.when(F.expr(c.where), 1).otherwise(0)).over(w).alias(f"_occ_{i}")
         )
-    staged = df.select("*", *helpers)
 
     prev_order = F.col(f"_prev_{order}")
     is_first = F.col("_lag1").isNull() if needs_first else None
@@ -241,20 +270,33 @@ def model_window_violations(
         return None
 
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (
-        staged.select(
+    return PassProgram(
+        head=helpers,
+        flag=None,
+        explode=[
             F.col(scope).cast("string").alias("conv_id"),
             F.explode(arr).alias("_v"),
-        )
-        .select(
-            "conv_id",
+        ],
+        flatten=[
+            F.col("conv_id"),
             F.col("_v.tix").alias("turn_idx"),
-            "_v.path",
-            "_v.constraint_id",
-            "_v.offending_value",
-            "_v.reason",
-        )
+            *[F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]],
+        ],
     )
+
+
+def model_window_violations(
+    df: DataFrame,
+    checks: Sequence[object],
+    table: str,
+    scope: str,
+    order: str,
+    tiebreakers: Sequence[str] = (),
+) -> DataFrame | None:
+    """The checks of :func:`window_program` in a single window pass over
+    ``df``."""
+    prog = window_program(checks, table, scope, order, tiebreakers)
+    return None if prog is None else prog.bind(df)
 
 
 def _occurs_ok(c: S.Occurs, n: Column) -> Column:
@@ -272,14 +314,38 @@ def _occurs_reason(c: S.Occurs) -> str:
     return f"occurrences of rows where ({c.where}) must be in {bound}"
 
 
-def occurs_violations(
-    df: DataFrame,
+@dataclass
+class OccursProgram:
+    """The standalone Occurs bounds as Columns built once
+    (:func:`occurs_program`): per-scope conditional counts (salted partials
+    first when ``salt_key`` is set), then :func:`occurs_report`."""
+
+    scope: Column
+    counts: List[Column]
+    report: List[Column]
+    flatten: List[Column]
+    salt_key: Optional[Column]
+    merge: List[Column]
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        if self.salt_key is not None:
+            counts = (
+                df.groupBy(self.salt_key, self.scope).agg(*self.counts)
+                .groupBy(self.scope).agg(*self.merge)
+            )
+        else:
+            counts = df.groupBy(self.scope).agg(*self.counts)
+        return counts.select(*self.report).select(*self.flatten)
+
+
+def occurs_program(
     checks: Sequence[S.Occurs],
     table: str,
     scope: str,
     salt: int = 0,
-) -> DataFrame | None:
-    """All min/maxOccurs bounds in one groupBy(scope) with conditional sums.
+) -> OccursProgram | None:
+    """All min/maxOccurs bounds in one groupBy(scope) with conditional sums;
+    ``None`` without an Occurs check.
 
     particles.py:109-126 semantics: count of rows matching the particle predicate
     per scope group, compared to [min_occurs, max_occurs].  Catalyst's partial
@@ -293,38 +359,46 @@ def occurs_violations(
     occurs = [c for c in checks if isinstance(c, S.Occurs)]
     if not occurs:
         return None
-    aggs = [
-        F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
-        for i, c in enumerate(occurs)
-    ]
-    if salt > 0:
-        salt_key = F.pmod(
+    report, flatten = occurs_report(occurs, table, scope)
+    return OccursProgram(
+        scope=F.col(scope),
+        counts=[
+            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
+            for i, c in enumerate(occurs)
+        ],
+        report=report,
+        flatten=flatten,
+        salt_key=F.pmod(
             F.xxhash64(F.col(scope), F.monotonically_increasing_id()),
             F.lit(salt),
-        ).alias("_salt")
-        partial = df.groupBy(salt_key, F.col(scope)).agg(*aggs)
-        counts = partial.groupBy(scope).agg(
-            *[F.sum(f"_n_{i}").alias(f"_n_{i}") for i in range(len(occurs))]
-        )
-    else:
-        counts = df.groupBy(scope).agg(*aggs)
-    return occurs_violations_from_counts(counts, occurs, table, scope)
+        ).alias("_salt") if salt > 0 else None,
+        merge=[
+            F.sum(F.col(f"_n_{i}")).alias(f"_n_{i}")
+            for i in range(len(occurs))
+        ] if salt > 0 else [],
+    )
 
 
-def occurs_violations_from_counts(
-    counts: DataFrame,
+def occurs_violations(
+    df: DataFrame,
+    checks: Sequence[S.Occurs],
+    table: str,
+    scope: str,
+    salt: int = 0,
+) -> DataFrame | None:
+    """The bounds of :func:`occurs_program` over ``df``."""
+    prog = occurs_program(checks, table, scope, salt)
+    return None if prog is None else prog.bind(df)
+
+
+def occurs_report(
     occurs: Sequence[S.Occurs],
     table: str,
     scope: str,
-) -> DataFrame:
-    """Bounds check + violation rows over pre-aggregated per-scope counts
-    (``scope`` + one ``_n_<i>`` column per constraint, in ``occurs`` order).
-
-    Split out so the incremental runner can MERGE per-batch partial counts
-    (a sum — conditional counts are distributive) and reuse the exact same
-    reporting: the cross-batch analogue of the reference's identity-counter
-    merge applied to particle occurrence bounds (particles.py:109-126 +
-    schemas.py:1386-1389)."""
+) -> tuple:
+    """``(report, flatten)`` select lists: bounds check + violation rows over
+    pre-aggregated per-scope counts (``scope`` + one ``_n_<i>`` column per
+    constraint, in ``occurs`` order)."""
     structs = []
     for i, c in enumerate(occurs):
         n = F.col(f"_n_{i}")
@@ -340,18 +414,29 @@ def occurs_violations_from_counts(
             )
         )
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (
-        counts.select(
-            F.col(scope).cast("string").alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.explode(arr).alias("_v"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "_v.path",
-            "_v.constraint_id",
-            "_v.offending_value",
-            "_v.reason",
-        )
-    )
+    report = [
+        F.col(scope).cast("string").alias("conv_id"),
+        F.lit(None).cast("long").alias("turn_idx"),
+        F.explode(arr).alias("_v"),
+    ]
+    flatten = [F.col(c) for c in VIOLATION_COLS[:2]] + [
+        F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]
+    ]
+    return report, flatten
+
+
+def occurs_violations_from_counts(
+    counts: DataFrame,
+    occurs: Sequence[S.Occurs],
+    table: str,
+    scope: str,
+) -> DataFrame:
+    """:func:`occurs_report` over ``counts``.
+
+    Split out so the incremental runner can MERGE per-batch partial counts
+    (a sum — conditional counts are distributive) and reuse the exact same
+    reporting: the cross-batch analogue of the reference's identity-counter
+    merge applied to particle occurrence bounds (particles.py:109-126 +
+    schemas.py:1386-1389)."""
+    report, flatten = occurs_report(occurs, table, scope)
+    return counts.select(*report).select(*flatten)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
+from sissaschool_xmlschema_spark.plans.compiler import compile_plan
 from sissaschool_xmlschema_spark.plans.runner import validate
 
 ENGINE_VERSION = "0.1"
@@ -133,6 +134,9 @@ def run_checkpointed(
     parts = [r["_part"] for r in keyed.select("_part").distinct().collect()]
     parts.sort(key=lambda v: (v is None, str(v)))
 
+    # one plan for every partition: its Columns are built on the first
+    # validate and only bound to each partition's filter after that
+    plan = compile_plan(spec)
     results: List[PartitionResult] = []
     for part in parts:
         part_key = "__null__" if part is None else str(part)
@@ -147,7 +151,7 @@ def run_checkpointed(
         pdf = keyed.filter(
             F.col("_part").eqNullSafe(F.lit(part))
         ).drop("_part")
-        res = validate(pdf, spec)
+        res = validate(pdf, plan)
         # persist → count once → write from cache (no re-read of our own
         # output, no second suite execution)
         viol = res.violations.persist()

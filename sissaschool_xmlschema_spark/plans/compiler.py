@@ -2,16 +2,32 @@
 
 The reference compiles an XSD once into a component graph with bound validator
 closures under a build lock (xmlschema/validators/xsd_globals.py:537-578).  Here the
-"build" happens once on the driver: every facet becomes a Column expression; every
-identity / model check becomes a DataFrame-transform closure.  Nothing is interpreted
-per row at execution time — Catalyst compiles the Column predicates into whole-stage
-codegen, which is the engine's equivalent of the reference's validator-closure
-specialization (facets bind ``validate`` at parse time, facets.py:129-140).
+"build" happens once on the driver, in two steps:
+
+* :func:`compile_plan` lowers every facet, alternative arm, row assertion and
+  xs:key missing-field rule to a :class:`RowCheck` Column predicate;
+* :attr:`CompiledPlan.program`, on first use, builds every other
+  data-independent Column ``validate`` needs — stage A's masks and explode
+  list, the window pass's helpers and violation structs, the occurrence,
+  unique and keyref aggregate and select lists — and keeps them
+  (``plans/runner.py``).
+
+``validate`` then only binds that program to its input DataFrame.  Building
+the Columns is the expensive part on the driver: PySpark records a call site
+for each Column operation (``spark.python.sql.dataFrameDebugging.enabled``, on
+by default), several Py4J round trips each, so the transcript suite's build
+fell from about 6,000 round trips per call to about a hundred per bind.
+Nothing is interpreted per row at execution time — Catalyst compiles the Column
+predicates into whole-stage codegen, which is the engine's equivalent of the
+reference's validator-closure specialization (facets bind ``validate`` at parse
+time, facets.py:129-140).  A plan's Columns belong to the SparkContext that was
+active when they were built.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import List, Optional, Tuple
 
 from pyspark.sql import Column
@@ -54,6 +70,15 @@ class CompiledPlan:
             prefix = "occurs" if isinstance(c, S.Occurs) else "model"
             ids.append(f"{prefix}:{getattr(c, 'name', type(c).__name__)}")
         return ids
+
+    @cached_property
+    def program(self):
+        """The :class:`~sissaschool_xmlschema_spark.plans.runner.SuiteProgram`
+        ``validate`` binds to each input: built on first use, so
+        ``compile_plan`` itself stays cheap, and kept for every later call."""
+        from sissaschool_xmlschema_spark.plans.runner import build_program
+
+        return build_program(self)
 
 
 def key_missing_field_check(c: S.Key, table: str) -> RowCheck:

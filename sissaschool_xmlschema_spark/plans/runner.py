@@ -19,6 +19,18 @@ Catalyst fuses/pushes/prunes:
 The transcript suite thus reads its input three times: stage A, the window
 pass and the same-table keyref groupBy.
 
+Every Column those stages need is data-independent, so :func:`build_program`
+builds them once per :class:`CompiledPlan` (its cached ``program``): a
+:class:`SuiteProgram` of one small program per branch, each holding prebuilt
+select, filter, groupBy and aggregate lists.  :func:`validate` only *binds*
+the program to the input — the same DataFrame calls in the same order, so
+the executed plan is the one a per-call build gives — which costs about a
+hundred Py4J round trips instead of thousands.  Nothing in a program refers
+to a DataFrame (no ``df["col"]``), so one plan validates any number of
+inputs.  The standalone operators (``model_window_violations``,
+``occurs_violations``, ``unique_violations``, ``keyref_violations``) build
+and bind the same programs per call.
+
 Violations union into the canonical lax-mode error collection
 (ValidationContext.errors, validation.py:216-236); ``strict`` raises on the first
 violation like ``raise_or_collect``; verdict rollup mirrors the schema
@@ -31,19 +43,21 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
 from sissaschool_xmlschema_spark.operators.identity import (
-    keyref_violations,
-    unique_violations,
+    keyref_program,
+    unique_program,
 )
 from sissaschool_xmlschema_spark.operators.sequence import (
-    model_window_violations,
-    occurs_violations,
+    OccursProgram,
+    PassProgram,
+    occurs_program,
     rides_window,
+    window_program,
 )
 from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
 
@@ -69,7 +83,7 @@ class SparkSchemaValidationError(Exception):
         )
 
 
-def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFrame]:
+def row_local_program(plan: CompiledPlan) -> Optional[PassProgram]:
     """Stage A: all row checks in one projection (scan-fused, codegen'd).
 
     Two-phase shape for allocation economy: phase 1 evaluates every predicate
@@ -90,7 +104,7 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
         plan.row_checks[i: i + 63]
         for i in range(0, len(plan.row_checks), 63)
     ]
-    masks = []
+    masks = [F.col("*")]
     for ci, chunk in enumerate(chunks):
         mask = F.lit(0).cast("long")
         for i, chk in enumerate(chunk):
@@ -102,8 +116,6 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
     any_flag = F.col("_m0") > 0
     for ci in range(1, len(chunks)):
         any_flag = any_flag | (F.col(f"_m{ci}") > 0)
-
-    flagged = df.select("*", *masks).filter(any_flag)
 
     def conv_id(chk):
         if chk.scope is None:
@@ -128,20 +140,26 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
         for i, chk in enumerate(chunk)
     ]
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (
-        flagged.select(
+    return PassProgram(
+        head=masks,
+        flag=any_flag,
+        explode=[
             F.col(spec.order_col).try_cast("long").alias("turn_idx"),
             F.explode(arr).alias("_v"),
-        )
-        .select(
-            "_v.conv_id",
-            "turn_idx",
-            "_v.path",
-            "_v.constraint_id",
-            "_v.offending_value",
-            "_v.reason",
-        )
+        ],
+        flatten=[
+            F.col(c) for c in (
+                "_v.conv_id", "turn_idx", "_v.path", "_v.constraint_id",
+                "_v.offending_value", "_v.reason",
+            )
+        ],
     )
+
+
+def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFrame]:
+    """Stage A over ``df``: the plan's :func:`row_local_program`."""
+    prog = plan.program.stage_a
+    return None if prog is None else prog.bind(df)
 
 
 @dataclass
@@ -287,6 +305,111 @@ def _union(parts: List[Optional[DataFrame]]) -> Optional[DataFrame]:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
+@dataclass
+class GuardProgram:
+    """The ``max_scope_rows`` guard as Columns built once: the per-scope
+    row count, its violation rows and the oversized-scope key the window
+    input anti-joins."""
+
+    scope: str
+    count: Column
+    oversized: Column
+    report: List[Column]
+    big_scope: List[Column]
+
+    def bind(self, df: DataFrame) -> tuple:
+        """``(guard violations, window input without oversized groups)``."""
+        oversized = df.groupBy(self.scope).agg(self.count).filter(
+            self.oversized
+        )
+        keep = oversized.select(*self.big_scope)
+        window_input = df.join(
+            F.broadcast(keep),
+            df[self.scope] == F.col("_big_scope"),
+            "left_anti",
+        )
+        return oversized.select(*self.report), window_input
+
+
+def guard_program(spec: S.TableSpec, cap: int) -> GuardProgram:
+    """MAX_XML_ELEMENTS-style guard (limits.py:58-67): oversized scope
+    groups are excluded from the ordered window pass (one sort task per
+    group) and reported; counts come from one groupBy that the bucketed
+    layout runs shuffle-free."""
+    return GuardProgram(
+        scope=spec.scope_col,
+        count=F.count(F.lit(1)).alias("_n_rows"),
+        oversized=F.col("_n_rows") > cap,
+        report=[
+            F.col(spec.scope_col).cast("string").alias("conv_id"),
+            F.lit(None).cast("long").alias("turn_idx"),
+            F.lit(spec.name).alias("path"),
+            F.lit("limit:max-scope-rows").alias("constraint_id"),
+            F.col("_n_rows").cast("string").alias("offending_value"),
+            F.lit(
+                f"scope group exceeds max_scope_rows={cap}; ordered model "
+                "checks skipped for this group"
+            ).alias("reason"),
+        ],
+        big_scope=[F.col(spec.scope_col).alias("_big_scope")],
+    )
+
+
+@dataclass
+class SuiteProgram:
+    """Every data-independent Column of :func:`validate`, in branch order:
+    built once per :class:`CompiledPlan` (its ``program``), then bound to
+    each input."""
+
+    stage_a: Optional[PassProgram]
+    guard: Optional[GuardProgram]
+    window: Optional[PassProgram]
+    occurs: Optional[OccursProgram]
+    identities: List[object]
+
+
+def build_program(plan: CompiledPlan) -> SuiteProgram:
+    """Lower a compiled plan's checks to the Columns of its passes."""
+    spec = plan.spec
+    cap = getattr(spec, "max_scope_rows", None)
+    ordered = [c for c in plan.model if not isinstance(c, S.Occurs)]
+    occurs = [c for c in plan.model if isinstance(c, S.Occurs)]
+    tiebreakers = tuple(spec.tiebreakers)
+    # occurrence bounds and sort-key duplicates ride the ordered pass; with
+    # the scope-size guard they stay groupBys over the FULL input, because
+    # the window input drops the oversized groups
+    fused = bool(ordered) and not cap
+    riders = occurs + [
+        c for c in plan.identities
+        if rides_window(c, spec.scope_col, spec.order_col, tiebreakers)
+    ] if fused else []
+    identities: List[object] = []
+    for c in plan.identities:
+        # a Key's missing-field check is a row check in stage A
+        if isinstance(c, S.Unique):
+            if c not in riders:
+                identities.append(
+                    unique_program(c, spec.name, spec.order_col)
+                )
+        elif isinstance(c, S.Keyref):
+            identities.append(keyref_program(c, spec.name))
+        else:
+            raise ValueError(f"unknown identity constraint {c!r}")
+    return SuiteProgram(
+        stage_a=row_local_program(plan),
+        guard=guard_program(spec, cap) if cap else None,
+        window=window_program(
+            ordered + riders, spec.name, spec.scope_col, spec.order_col,
+            tiebreakers,
+        ) if ordered else None,
+        occurs=(
+            None if fused
+            else occurs_program(occurs, spec.name, spec.scope_col)
+        ),
+        identities=identities,
+    )
+
+
 def validate(
     df: DataFrame,
     spec_or_plan: S.TableSpec | CompiledPlan,
@@ -304,6 +427,11 @@ def validate(
     branch would otherwise recompute the derivation); leave False when the
     input is a plain table scan (columnar re-scans are cheaper than a cache
     at 100 TB).
+
+    A :class:`CompiledPlan` builds its program on first use and keeps it, so
+    validating many inputs against one plan only binds it to each
+    DataFrame; a bare TableSpec is compiled (and its program built) per
+    call.
     """
     if cache_input:
         df = df.persist()
@@ -314,71 +442,20 @@ def validate(
     )
     spec = plan.spec
     mode = mode or spec.mode
+    prog = plan.program
 
-    guard_violations = None
-    cap = getattr(spec, "max_scope_rows", None)
+    parts: List[Optional[DataFrame]] = [
+        prog.stage_a.bind(df) if prog.stage_a else None
+    ]
     window_input = df
-    if cap:
-        # MAX_XML_ELEMENTS-style guard (limits.py:58-67): oversized scope
-        # groups are excluded from the ordered window pass (one sort task per
-        # group) and reported; counts come from one groupBy that the bucketed
-        # layout runs shuffle-free
-        sizes = df.groupBy(spec.scope_col).agg(
-            F.count(F.lit(1)).alias("_n_rows")
-        )
-        oversized = sizes.filter(F.col("_n_rows") > cap)
-        guard_violations = oversized.select(
-            F.col(spec.scope_col).cast("string").alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.lit(spec.name).alias("path"),
-            F.lit("limit:max-scope-rows").alias("constraint_id"),
-            F.col("_n_rows").cast("string").alias("offending_value"),
-            F.lit(
-                f"scope group exceeds max_scope_rows={cap}; ordered model "
-                "checks skipped for this group"
-            ).alias("reason"),
-        )
-        keep = oversized.select(F.col(spec.scope_col).alias("_big_scope"))
-        window_input = df.join(
-            F.broadcast(keep),
-            df[spec.scope_col] == F.col("_big_scope"),
-            "left_anti",
-        )
-
-    parts: List[Optional[DataFrame]] = [row_local_violations(df, plan)]
-    if guard_violations is not None:
+    if prog.guard is not None:
+        guard_violations, window_input = prog.guard.bind(df)
         parts.append(guard_violations)
-    ordered = [c for c in plan.model if not isinstance(c, S.Occurs)]
-    occurs = [c for c in plan.model if isinstance(c, S.Occurs)]
-    tiebreakers = tuple(spec.tiebreakers)
-    # occurrence bounds and sort-key duplicates ride the ordered pass; with
-    # the scope-size guard they stay groupBys over the FULL input, because
-    # the window input drops the oversized groups
-    fused = bool(ordered) and not cap
-    riders = occurs + [
-        c for c in plan.identities
-        if rides_window(c, spec.scope_col, spec.order_col, tiebreakers)
-    ] if fused else []
-    if ordered:
-        parts.append(
-            model_window_violations(
-                window_input, ordered + riders, spec.name, spec.scope_col,
-                spec.order_col, tiebreakers,
-            )
-        )
-    if occurs and not fused:
-        parts.append(occurs_violations(df, occurs, spec.name, spec.scope_col))
-    for c in plan.identities:
-        # a Key's missing-field check is a row check in stage A
-        if isinstance(c, S.Unique):
-            if c not in riders:
-                parts.append(
-                    unique_violations(df, c, spec.name, spec.order_col)
-                )
-        elif isinstance(c, S.Keyref):
-            parts.append(keyref_violations(df, c, spec.name))
-        else:
-            raise ValueError(f"unknown identity constraint {c!r}")
+    if prog.window is not None:
+        parts.append(prog.window.bind(window_input))
+    if prog.occurs is not None:
+        parts.append(prog.occurs.bind(df))
+    parts += [p.bind(df) for p in prog.identities]
     for pc in getattr(spec, "pandas_checks", ()):
         parts.append(pandas_check_violations(df, pc, spec))
     for gc in getattr(spec, "group_checks", ()):

@@ -27,7 +27,12 @@ instance — this is the audit/discovery mode.  The reader is rooted at the
 row element's PARENT container (``CompiledXsd.parent_of``), so one
 DataFrame row = one container element; production corpora with enormous
 containers should land in parquet via ``rowTag=<row element>`` streaming
-(sources/xml_io.py) and validate tabularly.
+(sources/xml_io.py) and validate tabularly.  Tables that share a container
+share its read: each ``(rowTag, preserve_space)`` is inferred once per
+document, and the namespace sniffs run once per document (``_Document``).
+The compiled plans of the schema's tables and overlays, its cross-table
+keyrefs and the model-error collapse are built on the first document and
+kept in ``CompiledXsd.programs`` for every later one.
 
 Beyond the flat subset, the reader resolves (r5): wildcard markers
 (``xs:any``/``xs:anyAttribute``/``xs:openContent`` gate the undeclared
@@ -48,7 +53,7 @@ counts + 38 valid instances clean,
 /root/reference/tests/test_cases/testfiles); with the schema-document
 meta-validator (xsd_meta.py) all 49 ``--errors=N`` cases (instances +
 schema documents) reproduce exact counts.  The last two instance counts
-(model1, issue_029-2) are closed by ``_collapse_model_errors``: element
+(model1, issue_029-2) are closed by ``_CollapseProgram``: element
 content-model reports (occurs bounds, element-backed Required) collapse
 to one per container element instance, matching the reference
 ModelVisitor's stop-after-first-error granularity.
@@ -58,13 +63,15 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sissaschool_xmlschema_spark.operators.identity import keyref_violations
+from sissaschool_xmlschema_spark.operators.identity import keyref_program
+from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
 from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import CompiledXsd, compile_xsd
@@ -194,17 +201,55 @@ def _elem_required_paths(compiled) -> list:
     return out
 
 
-def _collapse_model_errors(out: DataFrame, compiled) -> DataFrame:
+def _model_ranks(compiled, elem_req) -> dict:
+    """Content-model violation path -> compile-time particle position inside
+    its container: an element-backed Required column's position in its row
+    element's content model, a row table's position among its container's
+    children (bare ``table`` paths of the occurs rows and the
+    ``container/table`` path of an absent row element)."""
+    ranks: dict = {}
+    for tname, pos in getattr(compiled, "particle_rank", {}).items():
+        ranks[tname] = pos
+        parent = compiled.parent_of.get(tname)
+        if parent is not None and parent != tname:
+            ranks[f"{parent}/{tname}"] = pos
+    for tname, spec in compiled.specs.items():
+        for i, col in enumerate(spec.columns):
+            if f"{tname}/{col.name}" in elem_req:
+                ranks[f"{tname}/{col.name}"] = i
+    return ranks
+
+
+@dataclass
+class _CollapseProgram:
     """Reference error granularity for element content models: after the
     first content-model error inside one container element instance the
     reference's ModelVisitor stops reporting (one ``content is not
     complete`` / unexpected-child error per container — testfiles
     ``features/models/model1.xml --errors=1``, ``issue_029-2.xml
-    --errors=1``).  Collapse the flat engine's per-particle reports
-    (``occurs:*`` bounds, element-backed ``:Required``) to ONE violation
-    per (document, container element, row instance); attribute, value,
-    identity, assertion and structural violations pass through untouched.
-    """
+    --errors=1``).  :meth:`bind` collapses the flat engine's per-particle
+    reports (``occurs:*`` bounds, element-backed ``:Required``) to ONE
+    violation per (document, container element, row instance) — the first
+    in schema model order; attribute, value, identity, assertion and
+    structural violations pass through untouched."""
+
+    is_model: Column
+    other: Column
+    row_number: Column
+    first: Column
+
+    def bind(self, out: DataFrame) -> DataFrame:
+        kept = (
+            out.filter(self.is_model)
+            .withColumn("_rn", self.row_number)
+            .filter(self.first)
+            .drop("_rn")
+        )
+        return out.filter(self.other).unionByName(kept)
+
+
+def _collapse_program(compiled) -> _CollapseProgram:
+    """The Columns of :class:`_CollapseProgram` for one schema."""
     from pyspark.sql import Window
 
     elem_req = _elem_required_paths(compiled)
@@ -229,16 +274,23 @@ def _collapse_model_errors(out: DataFrame, compiled) -> DataFrame:
         F.col("path").contains("/"),
         F.regexp_replace(F.col("path"), "/[^/]*$", ""),
     ).otherwise(bare)
+    # the first error in schema model order; paths without a rank (and
+    # ties) fall back to path order
+    ranks = _model_ranks(compiled, set(elem_req))
+    rank = (
+        F.create_map(*[F.lit(x) for kv in ranks.items() for x in kv])[
+            F.col("path")
+        ] if ranks else F.lit(None)
+    )
     w = Window.partitionBy(
         "conv_id", container, F.coalesce("turn_idx", F.lit(-1))
-    ).orderBy("path", "constraint_id")
-    kept = (
-        out.filter(is_model)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    ).orderBy(rank.asc_nulls_last(), "path", "constraint_id")
+    return _CollapseProgram(
+        is_model=is_model,
+        other=~is_model,
+        row_number=F.row_number().over(w),
+        first=F.col("_rn") == 1,
     )
-    return out.filter(~is_model).unionByName(kept)
 
 
 def _viol(name, parent, cid, value, reason):
@@ -417,6 +469,56 @@ def _read_container(
 _XSI_URI = "http://www.w3.org/2001/XMLSchema-instance"
 
 
+class _Document:
+    """One instance document as one validate/decode call reads it: each
+    ``(rowTag, preserve_space)`` container is read (one schema-inference
+    job) and each namespace sniff runs once, however many tables share
+    them."""
+
+    def __init__(self, spark: SparkSession, path: str,
+                 prefix: Optional[str]) -> None:
+        self.spark, self.path, self.prefix = spark, path, prefix
+        self.label = os.path.basename(str(path))
+        self.containers: dict = {}  # (rowTag, preserve_space) -> DataFrame
+        self.prefixes: dict = {}  # container local name -> sniffed prefix
+        self._nsmap: Optional[dict] = None
+
+    def container(self, local: str, preserve_space: bool = False) -> DataFrame:
+        pfx = self.prefix
+        if pfx is None:
+            if local not in self.prefixes:
+                self.prefixes[local] = sniff_prefix(self.path, local)
+            pfx = self.prefixes[local]
+        key = (f"{pfx}{local}", preserve_space)
+        if key not in self.containers:
+            self.containers[key] = _read_container(
+                self.spark, self.path, *key
+            )
+        return self.containers[key]
+
+    @property
+    def nsmap(self) -> dict:
+        if self._nsmap is None:
+            self._nsmap = sniff_nsmap(self.path)
+        return self._nsmap
+
+
+def _program(spark: SparkSession, compiled: CompiledXsd, key, build):
+    """``build()`` once per schema: compiled plans and other Columns the
+    reader binds to every document are kept in ``compiled.programs``.
+    Columns live in the JVM of the SparkContext that built them, so a new
+    context builds them again."""
+    sc = spark.sparkContext
+    hit = compiled.programs.get(key)
+    if hit is None or hit[0] is not sc:
+        hit = compiled.programs[key] = (sc, build())
+    return hit[1]
+
+
+def _plan(src: _Document, compiled: CompiledXsd, key, spec) -> CompiledPlan:
+    return _program(src.spark, compiled, key, lambda: compile_plan(spec))
+
+
 def _field_by_local(dtype: T.StructType, step: str):
     for sf in dtype.fields:
         if sf.name.startswith("_"):
@@ -442,7 +544,7 @@ def _xsi_local(col):
     return F.element_at(F.split(col.cast("string"), ":"), -1)
 
 
-def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
+def _flatten_nested(src: _Document, compiled, name):
     """One NESTED table's (flat DataFrame | None, [violation parts]):
     repeated elements below a row element, exploded level by level with
     the composite ``doc#parentIndex...`` landing in the ordinary scope
@@ -451,7 +553,7 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     (elements.py:657-682)."""
     spec = compiled.specs[name]
     nested = compiled.nested_tables
-    nsmap = sniff_nsmap(xml_path)
+    doc, nsmap = src.label, src.nsmap
 
     # parent chain from the TOP row element down to this table
     chain = [name]
@@ -460,8 +562,7 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     top = nested[chain[0]].parent_table
 
     parent = compiled.parent_of.get(name, top)
-    pfx = prefix if prefix is not None else sniff_prefix(xml_path, parent)
-    container = _read_container(spark, xml_path, f"{pfx}{parent}")
+    container = src.container(parent)
     fields = {f.name: f for f in container.schema.fields}
 
     # level 0: the top row element's rows with their ordinal
@@ -600,7 +701,9 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
                     for c in ov["spec"].columns
                 ], scope_val.alias(spec.scope_col),
                     order_val.alias(spec.order_col))
-                parts.append(validate(flat_o, ov["spec"]).violations)
+                plan_o = _plan(src, compiled, ("xsi", name, tname),
+                               ov["spec"])
+                parts.append(validate(flat_o, plan_o).violations)
             parts.append(
                 rows.filter(
                     xcol.isNotNull() & ~xsi.isin(list(known))
@@ -643,15 +746,39 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     return flat, parts
 
 
-def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
+def _member_plan(head: "S.TableSpec", member: "S.TableSpec"):
+    """Compiled plan of a substitution member's OWN constraints (columns,
+    identities and assertions its head does not declare); ``None`` when it
+    adds none."""
+    from sissaschool_xmlschema_spark import spec as S
+
+    head_cols = {c.name for c in head.columns}
+    head_ids = {i.name for i in head.identities}
+    spec_extra = S.TableSpec(
+        name=member.name,
+        scope_col=head.scope_col,
+        order_col=head.order_col,
+        columns=tuple(c for c in member.columns if c.name not in head_cols),
+        identities=tuple(
+            i for i in member.identities if i.name not in head_ids
+        ),
+        row_assertions=member.row_assertions,
+    )
+    if (spec_extra.columns or spec_extra.identities
+            or spec_extra.row_assertions):
+        return compile_plan(spec_extra)
+    return None
+
+
+def _flatten_one(src: _Document, compiled, name):
     """One table's (flat DataFrame | None, [structural violation parts])."""
     if name in getattr(compiled, "nested_tables", {}):
-        return _flatten_nested(spark, xml_path, compiled, name, prefix, doc)
+        return _flatten_nested(src, compiled, name)
+    doc = src.label
     spec = compiled.specs[name]
     parent = compiled.parent_of.get(name, name)
-    pfx = prefix if prefix is not None else sniff_prefix(xml_path, parent)
-    container = _read_container(
-        spark, xml_path, f"{pfx}{parent}",
+    container = src.container(
+        parent,
         preserve_space=name in getattr(compiled, "preserve_space",
                                        frozenset()),
     )
@@ -698,7 +825,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
         # the head's table for occurrence/identity checks
         members = getattr(compiled, "subst_overlays", {}).get(name, {})
         if members:
-            nsmap_m = sniff_nsmap(xml_path)
+            nsmap_m = src.nsmap
             for mname, mo in members.items():
                 mfield = next(
                     (fn for fn in fields
@@ -747,27 +874,12 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                 # member-ONLY constraints validate here; base-type facets
                 # and shared identities run on the merged head table (no
                 # double counting)
-                from sissaschool_xmlschema_spark import spec as S
-
-                head_cols = {c.name for c in spec.columns}
-                head_ids = {i.name for i in spec.identities}
-                spec_extra = S.TableSpec(
-                    name=mo["spec"].name,
-                    scope_col=spec.scope_col,
-                    order_col=spec.order_col,
-                    columns=tuple(
-                        c for c in mo["spec"].columns
-                        if c.name not in head_cols
-                    ),
-                    identities=tuple(
-                        i for i in mo["spec"].identities
-                        if i.name not in head_ids
-                    ),
-                    row_assertions=mo["spec"].row_assertions,
+                plan_m = _program(
+                    src.spark, compiled, ("subst", name, mname),
+                    lambda: _member_plan(spec, mo["spec"]),
                 )
-                if (spec_extra.columns or spec_extra.identities
-                        or spec_extra.row_assertions):
-                    parts.append(validate(flat_m, spec_extra).violations)
+                if plan_m is not None:
+                    parts.append(validate(flat_m, plan_m).violations)
                 member_flats.append(flat_m)
 
         # locals may be qualified (elementFormDefault="qualified", vh:car)
@@ -867,7 +979,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
     # unknown xsi:type values are flagged and fall back to the base
     overlays = getattr(compiled, "xsi_overlays", {}).get(name, {})
     rtype0 = rows.schema["_row"].dataType
-    nsmap0 = sniff_nsmap(xml_path)
+    nsmap0 = src.nsmap
     if overlays and isinstance(rtype0, T.StructType):
         xf = _xsi_type_field(rtype0, nsmap0)
         if xf is not None:
@@ -903,7 +1015,9 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                     .withColumn(spec.order_col,
                                 F.monotonically_increasing_id())
                 )
-                parts.append(validate(flat_o, ov["spec"]).violations)
+                plan_o = _plan(src, compiled, ("xsi", name, tname),
+                               ov["spec"])
+                parts.append(validate(flat_o, plan_o).violations)
             parts.append(
                 rows.filter(
                     xcol.isNotNull() & ~xsi.isin(list(known))
@@ -927,7 +1041,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
     rtype_alt = rows.schema["_row"].dataType
     if alts and isinstance(rtype_alt, T.StructType):
         remaining = rows
-        for arm in alts:
+        for ai, arm in enumerate(alts):
             if arm["attr"] is not None:
                 fname = f"_{arm['attr']}"
                 if fname not in rtype_alt.fieldNames():
@@ -964,7 +1078,8 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                 .withColumn(spec.order_col,
                             F.monotonically_increasing_id())
             )
-            parts.append(validate(flat_a, arm["spec"]).violations)
+            plan_a = _plan(src, compiled, ("alt", name, ai), arm["spec"])
+            parts.append(validate(flat_a, plan_a).violations)
         rows = remaining
 
     rdr = _TableReader(
@@ -1022,6 +1137,24 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
     return flat, parts
 
 
+def _external_keyref_program(compiled, ext) -> tuple:
+    """``(keyref program, last-occurrence Columns or None)`` of one
+    cross-table keyref.  A key declared ON a single element propagates
+    upward last-sibling-override (collection3bis): only the final
+    occurrence per document scope is a visible key, picked by
+    ``(row_number over scope by order desc, == 1)``."""
+    last = None
+    if getattr(ext, "last_wins", False):
+        from pyspark.sql import Window
+
+        spec_k = compiled.specs[ext.key_table]
+        w = Window.partitionBy(spec_k.scope_col).orderBy(
+            F.col(spec_k.order_col).desc()
+        )
+        last = (F.row_number().over(w), F.col("_rn") == 1)
+    return keyref_program(ext.keyref, ext.table, cross=True), last
+
+
 def xml_instance_tables(
     spark: SparkSession,
     xml_path: str,
@@ -1040,12 +1173,10 @@ def xml_instance_tables(
         xsd_source if isinstance(xsd_source, CompiledXsd)
         else compile_xsd(xsd_source, base_dir=base_dir)
     )
-    doc = os.path.basename(str(xml_path))
+    src = _Document(spark, xml_path, prefix)
     out: dict = {}
     for name in sorted(compiled.specs):
-        flat, _parts = _flatten_one(
-            spark, xml_path, compiled, name, prefix, doc
-        )
+        flat, _parts = _flatten_one(src, compiled, name)
         if flat is not None:
             out[name] = flat
     return out
@@ -1116,44 +1247,33 @@ def validate_xml_instance(
             "constraint_id string, offending_value string, reason string",
         )
     tables = [table] if table else sorted(compiled.specs)
-    doc = os.path.basename(str(xml_path))
+    src = _Document(spark, xml_path, prefix)
     parts: list = []
     flats: dict = {}
     for name in tables:
-        flat, table_parts = _flatten_one(
-            spark, xml_path, compiled, name, prefix, doc
-        )
+        flat, table_parts = _flatten_one(src, compiled, name)
         parts.extend(table_parts)
         if flat is None:
             continue
         flats[name] = flat
-        parts.append(validate(flat, compiled.specs[name]).violations)
+        plan = _plan(src, compiled, ("table", name), compiled.specs[name])
+        parts.append(validate(flat, plan).violations)
 
     # cross-table keyrefs (identities.py:317-334 refer_path analogue)
-    for ext in compiled.external_keyrefs:
+    for i, ext in enumerate(compiled.external_keyrefs):
         if ext.table in flats and ext.key_table in flats:
+            prog, last = _program(
+                spark, compiled, ("keyref", i),
+                lambda: _external_keyref_program(compiled, ext),
+            )
             keys_df = flats[ext.key_table]
-            if getattr(ext, "last_wins", False):
-                # key declared ON a single element: upward propagation is
-                # last-sibling-override (collection3bis) — only the final
-                # occurrence per document scope is a visible key
-                from pyspark.sql import Window
-
-                spec_k = compiled.specs[ext.key_table]
-                w = Window.partitionBy(spec_k.scope_col).orderBy(
-                    F.col(spec_k.order_col).desc()
-                )
+            if last is not None:
                 keys_df = (
-                    keys_df.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
+                    keys_df.withColumn("_rn", last[0])
+                    .filter(last[1])
                     .drop("_rn")
                 )
-            parts.append(
-                keyref_violations(
-                    flats[ext.table], ext.keyref, ext.table,
-                    keys_df=keys_df,
-                )
-            )
+            parts.append(prog.bind(flats[ext.table], keys_df))
 
     if not parts:
         # a VALID document whose only row element is optional and absent:
@@ -1167,7 +1287,10 @@ def validate_xml_instance(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return _collapse_model_errors(out, compiled)
+    collapse = _program(
+        spark, compiled, "collapse", lambda: _collapse_program(compiled)
+    )
+    return collapse.bind(out)
 
 
 def count_errors(

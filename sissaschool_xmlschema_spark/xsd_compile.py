@@ -186,6 +186,15 @@ class CompiledXsd:
     # default arm) + the overlay view dict.  First matching arm wins;
     # non-matching rows fall back to the declared type.
     alt_overlays: dict = field(default_factory=dict)
+    # table -> position of its element particle in its container's content
+    # model (row elements among their global element's children, nested
+    # tables in discovery order): the instance reader reports the FIRST
+    # content-model error of a container in this order
+    particle_rank: dict = field(default_factory=dict)
+    # compiled plans and other Columns the instance reader builds on first
+    # use and binds to every document (sources/xml_instance.py), each with
+    # the SparkContext it was built under
+    programs: dict = field(default_factory=dict, repr=False, compare=False)
 
     def spec(self, name: Optional[str] = None) -> S.TableSpec:
         if name is None:
@@ -1229,6 +1238,9 @@ def compile_xsd(
     # repeated SIMPLE children of a global element (menù example shape):
     # name -> (decl element, facet tuple, parent global element)
     detected_simple: dict = {}
+    # row element -> its particle position under its global element
+    particle_rank: dict = {}
+    n_particles: dict = {}
     def _model_groups(ct):
         """Model groups of a complexType, following complexContent
         extension chains (the base's groups first)."""
@@ -1266,6 +1278,8 @@ def compile_xsd(
             is_choice = group.tag == _xs("choice")
             for el in group.findall(_xs("element")):
                 decl = _resolve_element(el, ctx)
+                position = n_particles.get(gname, 0)
+                n_particles[gname] = position + 1
                 max_occ = _max_occurs(el)
                 eff_max = (
                     None if (max_occ is None or gmax is None)
@@ -1278,6 +1292,7 @@ def compile_xsd(
                 if eff_max is not None and eff_max <= 1:
                     continue
                 kind, payload = _element_type(decl, ctx)
+                particle_rank[decl.get("name")] = position
                 if kind != "complex":
                     detected_simple[decl.get("name")] = (
                         el, payload, gel, eff_min, eff_max
@@ -1612,6 +1627,7 @@ def compile_xsd(
             parent_table=ent["parent"], rel_path=tuple(ent["path"]),
             xsi_type=ent.get("xsi_type"),
         )
+        particle_rank[nname] = qi
         # xsi:type overlays for the NESTED table's own derived types
         # (issue_314: <item b:type="Concrete..."> below a doc row): same
         # overlay shape as row elements, applied by _flatten_nested
@@ -1924,6 +1940,9 @@ def compile_xsd(
         },
         alt_overlays={
             n: tuple(o) for n, o in alt_overlays.items() if n in specs
+        },
+        particle_rank={
+            n: r for n, r in particle_rank.items() if n in specs
         },
     )
 

@@ -17,6 +17,7 @@ in a 100 TB run.
 The transcript suite's own shape is pinned too: three scans, one Window,
 and the same violation rows as its checks run one branch each."""
 
+import contextlib
 import dataclasses
 import datetime as dt
 import re
@@ -207,4 +208,237 @@ def test_fused_suite_rows_equal_standalone_branches(spark):
     assert any(
         k[0] is None and k[3] == "key:global-turn:missing-field"
         for k in fused
+    )
+
+
+# --- the validation program: built once per plan, bound per input ----------
+
+
+@contextlib.contextmanager
+def _round_trips(spark):
+    """Counts the Py4J commands the driver sends while the block runs.
+    Memory commands are left out: they release JVM objects whenever Python's
+    garbage collector frees earlier ones, whatever the block builds."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        del client.send_command
+
+
+#: two row tables (speaker, turn) under one container, a key and a
+#: cross-table keyref
+CHAT_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:element name="chat">
+    <xs:complexType>
+      <xs:sequence>
+        <xs:element name="speaker" maxOccurs="unbounded">
+          <xs:complexType>
+            <xs:attribute name="id" type="xs:string" use="required"/>
+          </xs:complexType>
+        </xs:element>
+        <xs:element name="turn" maxOccurs="unbounded">
+          <xs:complexType>
+            <xs:sequence>
+              <xs:element name="text">
+                <xs:simpleType>
+                  <xs:restriction base="xs:string">
+                    <xs:maxLength value="8"/>
+                  </xs:restriction>
+                </xs:simpleType>
+              </xs:element>
+            </xs:sequence>
+            <xs:attribute name="idx" type="xs:nonNegativeInteger"
+                          use="required"/>
+            <xs:attribute name="speaker" type="xs:string" use="required"/>
+          </xs:complexType>
+        </xs:element>
+      </xs:sequence>
+    </xs:complexType>
+    <xs:key name="speakerKey">
+      <xs:selector xpath="speaker"/>
+      <xs:field xpath="@id"/>
+    </xs:key>
+    <xs:keyref name="turnSpeaker" refer="speakerKey">
+      <xs:selector xpath="turn"/>
+      <xs:field xpath="@speaker"/>
+    </xs:keyref>
+  </xs:element>
+</xs:schema>"""
+
+
+def _chat_docs(tmp_path):
+    """Two documents with different planted errors: an over-long text, then
+    a duplicate speaker id, an unknown speaker and a negative index."""
+    a = tmp_path / "a.xml"
+    a.write_text(
+        '<chat><speaker id="u"/><speaker id="b"/>'
+        '<turn idx="0" speaker="u"><text>hi</text></turn>'
+        '<turn idx="1" speaker="b"><text>far too long</text></turn></chat>'
+    )
+    b = tmp_path / "b.xml"
+    b.write_text(
+        '<chat><speaker id="u"/><speaker id="u"/>'
+        '<turn idx="0" speaker="x"><text>hi</text></turn>'
+        '<turn idx="-1" speaker="u"><text>ok</text></turn></chat>'
+    )
+    return str(a), str(b)
+
+
+def test_warm_suite_build_round_trips(spark):
+    """A plan builds its Columns once: binding it to an input again costs
+    about a hundred Py4J round trips, not several per Column operation
+    (6,031 when every call rebuilt them)."""
+    df = _small_transcripts(spark)
+    plan = compile_plan(transcript_spec())
+    validate(df, plan)
+    with _round_trips(spark) as sent:
+        validate(df, plan)
+    assert sent[0] <= 600, sent[0]
+
+
+def test_warm_xml_build_round_trips(spark, tmp_path):
+    """A CompiledXsd keeps its tables' plans: a second document's build
+    only reads and walks the document.  The bound is a third of the 4,757
+    round trips this build made when each document recompiled every
+    plan."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    compiled = compile_xsd(CHAT_XSD)
+    a, b = _chat_docs(tmp_path)
+    validate_xml_instance(spark, a, compiled)
+    with _round_trips(spark) as sent:
+        validate_xml_instance(spark, b, compiled)
+    assert sent[0] <= 4_757 // 3, sent[0]
+
+
+def _jobs_in_group(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "xml container reads")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_shared_container_read_once_per_document(spark, tmp_path):
+    """speaker and turn share the chat container: building the document's
+    violations (or its tables) runs ONE schema-inference job, not one per
+    table."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+        xml_instance_tables,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    compiled = compile_xsd(CHAT_XSD)
+    a, _ = _chat_docs(tmp_path)
+    assert _jobs_in_group(
+        spark, "xml-validate-build",
+        lambda: validate_xml_instance(spark, a, compiled),
+    ) == 1
+    assert _jobs_in_group(
+        spark, "xml-tables-build",
+        lambda: xml_instance_tables(spark, a, compiled),
+    ) == 1
+
+
+def test_program_rebinds_to_each_input(spark, tmp_path):
+    """One CompiledPlan (and one CompiledXsd) validated against two inputs
+    in turn gives, for each, the rows of a freshly compiled one: nothing in
+    the program is bound to the first DataFrame."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    ts = dt.datetime(2024, 1, 1)
+    planted = spark.createDataFrame(
+        [
+            ("conv-90000001", 0, "user", "hi", None, ts),
+            ("conv-90000001", 1, "assistant", "a", None, ts),
+            ("conv-90000001", 1, "assistant", "b", None, ts),
+            ("conv-90000001", 1, "user", "c", None, ts),
+            ("conv-90000002", None, "user", "hi", None, ts),
+            ("conv-90000002", 0, "user", "hi", None, ts),
+            (None, 0, "user", "x", None, ts),
+            (None, 0, "user", "y", None, ts),
+            ("conv-90000003", 0, "system", "s", None, ts),
+            ("conv-90000003", 1, "assistant", "a", None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    clean = synthetic_transcripts(spark, n_convs=60, hot_convs=1,
+                                  hot_turns=50)
+    dirty = corrupt_transcripts(clean, every=7).unionByName(planted)
+    base = transcript_spec()
+    spec = dataclasses.replace(
+        base,
+        identities=(
+            *base.identities,
+            S.Key("global-turn", fields=("conv_id", "turn_idx")),
+        ),
+    )
+    plan = compile_plan(spec)
+    assert rows(validate(clean, plan).violations) == rows(
+        validate(clean, compile_plan(spec)).violations
+    )
+    got = rows(validate(dirty, plan).violations)
+    assert got == rows(validate(dirty, compile_plan(spec)).violations)
+    assert len({k[3] for k in got}) >= 6, got
+
+    compiled = compile_xsd(CHAT_XSD)
+    seen = []
+    for doc in _chat_docs(tmp_path):
+        got = rows(validate_xml_instance(spark, doc, compiled))
+        assert got == rows(
+            validate_xml_instance(spark, doc, compile_xsd(CHAT_XSD))
+        )
+        seen.append({k[3] for k in got})
+    assert seen[0] and seen[1] and seen[0] != seen[1], seen
+
+
+def test_schema_programs_follow_the_spark_context(spark, tmp_path):
+    """A CompiledXsd's kept programs hold Columns of the SparkContext that
+    built them: entries from another context are rebuilt, never bound."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    compiled = compile_xsd(CHAT_XSD)
+    a, _ = _chat_docs(tmp_path)
+    want = Counter(
+        tuple(r) for r in validate_xml_instance(spark, a, compiled).collect()
+    )
+    stale = object()  # stands in for a stopped SparkContext
+    for key in compiled.programs:
+        compiled.programs[key] = (stale, None)
+    got = Counter(
+        tuple(r) for r in validate_xml_instance(spark, a, compiled).collect()
+    )
+    assert got == want
+    assert all(
+        sc is spark.sparkContext for sc, _ in compiled.programs.values()
     )

@@ -426,6 +426,35 @@ def test_absent_required_row_element(spark, tmp_path):
     assert got == [("doc/comment", "occurs:occurs-comment")]
 
 
+def test_collapse_keeps_first_error_in_model_order(spark, tmp_path):
+    """The collapsed content-model error is the container's FIRST failing
+    particle in schema order, not the alphabetically first path: zeta
+    precedes alpha under doc, omega precedes beta inside item."""
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    xsd = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:element name="doc"><xs:complexType><xs:sequence>
+    <xs:element name="zeta" type="xs:string" minOccurs="2" maxOccurs="9"/>
+    <xs:element name="alpha" type="xs:string" minOccurs="2" maxOccurs="9"/>
+    <xs:element name="item" maxOccurs="unbounded"><xs:complexType>
+      <xs:sequence>
+        <xs:element name="omega" type="xs:string"/>
+        <xs:element name="beta" type="xs:string"/>
+      </xs:sequence>
+      <xs:attribute name="id" type="xs:string"/>
+    </xs:complexType></xs:element>
+  </xs:sequence></xs:complexType></xs:element>
+</xs:schema>"""
+    c = compile_xsd(xsd)
+    p = tmp_path / "order.xml"
+    p.write_text('<doc><item id="1"/></doc>')
+    got = sorted(
+        r["path"] for r in validate_xml_instance(spark, str(p), c).collect()
+    )
+    assert got == ["doc/zeta", "item/omega"]
+
+
 def test_valid_optional_absent_row_element(spark, tmp_path):
     """ADVICE r4: a VALID document whose only row element is optional and
     absent must report zero violations, not crash on an empty union."""
