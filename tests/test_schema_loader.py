@@ -1,0 +1,235 @@
+"""Schema-document graphs read by both the XSD compiler and the schema
+checker: each fixture under ``tests/fixtures/schema_graph`` pins the
+``compile_xsd`` result (or its ``XsdCompileError`` message) AND the
+``validate_schema_document`` error codes, so the one loader behind both
+keeps both readings.  Runs offline: no corpus, no Spark except the
+CP1252 instance."""
+
+import os
+
+import pytest
+
+from sissaschool_xmlschema_spark import spec as S
+from sissaschool_xmlschema_spark.xsd_compile import XsdCompileError, compile_xsd
+from sissaschool_xmlschema_spark.xsd_meta import validate_schema_document
+
+FX = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures",
+                  "schema_graph")
+XS = 'xmlns:xs="http://www.w3.org/2001/XMLSchema"'
+CUT = ("(cycle cut: subtree is schema-declared, validated one level deep)")
+
+
+def fx(name: str) -> str:
+    return os.path.join(FX, name)
+
+
+def codes(source, version="1.0", base_dir=None) -> list:
+    return [
+        (e.location, e.code)
+        for e in validate_schema_document(source, version=version,
+                                          base_dir=base_dir)
+    ]
+
+
+def columns(compiled, table) -> dict:
+    return {c.name: c.facets for c in compiled.specs[table].columns}
+
+
+def row_schema(attrs: str, extra: str = "", head: str = "") -> str:
+    return (
+        f"<xs:schema {XS}{head}>{extra}"
+        '<xs:element name="doc"><xs:complexType><xs:sequence>'
+        '<xs:element name="r" maxOccurs="unbounded"><xs:complexType>'
+        f"{attrs}</xs:complexType></xs:element>"
+        "</xs:sequence></xs:complexType></xs:element></xs:schema>"
+    )
+
+
+def test_chameleon_include_adopts_the_target_namespace():
+    c = compile_xsd(fx("chameleon.xsd"))
+    assert columns(c, "item") == {
+        "code": (S.Required(), S.Pattern(("[A-Z]{3}",))),
+    }
+    assert c.target_namespace == "urn:shop"
+    assert c.restrictions == ()
+    # unprefixed ItemType/Code resolve only through the adopted namespace
+    assert codes(fx("chameleon.xsd")) == []
+
+
+def test_include_namespace_mismatch():
+    c = compile_xsd(fx("mismatch.xsd"))
+    assert sorted(c.specs) == ["row"] and c.restrictions == ()
+    for v in ("1.0", "1.1"):
+        assert codes(fx("mismatch.xsd"), v) == [
+            ("mismatch-part.xsd", "include-namespace-mismatch"),
+        ]
+
+
+def test_import_before_include_first_definition_wins():
+    """The compiler resolves by local name: the included Code (followed
+    before the import placed above it) wins for both references."""
+    c = compile_xsd(fx("order.xsd"))
+    digits = (S.Pattern(("[0-9]+",)),)
+    assert columns(c, "row") == {"code": digits, "other": digits}
+    # the checker resolves each reference in its own namespace: clean
+    assert codes(fx("order.xsd")) == []
+
+
+def test_redefine_read_by_compiler_and_checker():
+    c = compile_xsd(fx("redefine.xsd"))
+    assert columns(c, "row") == {
+        "c": (S.Required(), S.Pattern(("[a-z]+",)), S.MaxLength(5)),
+    }
+    for v in ("1.0", "1.1"):
+        assert codes(fx("redefine.xsd"), v) == []
+
+
+def test_override_read_by_compiler_and_checker():
+    c = compile_xsd(fx("override.xsd"), version="1.1")
+    assert columns(c, "row") == {
+        "c": (S.Required(), S.Enumeration(("ok", "no"))),
+    }
+    assert codes(fx("override.xsd"), "1.0") == [
+        ("override.xsd", "xsd11-only"),
+    ]
+    assert codes(fx("override.xsd"), "1.1") == []
+
+
+def test_malformed_included_document():
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(fx("malformed.xsd"))
+    assert str(err.value) == (
+        f"{fx('malformed-part.xsd')}: not well-formed XML "
+        "(mismatched tag: line 4, column 2)"
+    )
+    assert codes(fx("malformed.xsd")) == [
+        ("malformed-part.xsd", "not-well-formed"),
+    ]
+
+
+def test_included_document_that_is_not_a_schema():
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(fx("notschema.xsd"))
+    assert str(err.value) == (
+        f"{fx('notschema-part.xsd')}: root element is 'notes', "
+        "not xs:schema"
+    )
+    assert codes(fx("notschema.xsd")) == [
+        ("notschema-part.xsd", "not-a-schema"),
+    ]
+
+
+STRING_REF = (
+    f'<xs:schema {XS}><xs:include schemaLocation="string-part.xsd"/>'
+    '<xs:element name="doc"><xs:complexType><xs:sequence>'
+    '<xs:element ref="row" maxOccurs="unbounded"/>'
+    "</xs:sequence></xs:complexType></xs:element></xs:schema>"
+)
+
+
+def test_string_source_include_with_and_without_base_dir():
+    # without base_dir the include cannot be anchored: the referenced
+    # global element never arrives
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(STRING_REF)
+    assert str(err.value) == "unresolved element ref 'row'"
+    assert codes(STRING_REF) == [("<string>", "unresolved-reference")]
+    c = compile_xsd(STRING_REF, base_dir=FX)
+    assert columns(c, "row") == {
+        "n": (S.Required(), S.BuiltinLexical("int"),
+              S.IntRange(-2147483648, 2147483647)),
+    }
+    assert c.restrictions == ()
+    assert codes(STRING_REF, base_dir=FX) == []
+    # an include nothing references: compiled, its skip noted loudly
+    src = row_schema('<xs:attribute name="n" type="xs:int"/>',
+                     extra='<xs:include schemaLocation="string-part.xsd"/>')
+    c = compile_xsd(src)
+    assert sorted(c.specs) == ["r"]
+    assert c.restrictions == (
+        "xs:include 'string-part.xsd': string source has no base "
+        "directory (pass base_dir=) — skipped",
+    )
+    assert codes(src) == []
+
+
+def test_duplicate_declaration_first_definition_wins():
+    c = compile_xsd(fx("duplicate.xsd"))
+    assert columns(c, "row") == {"a": ()}
+    assert codes(fx("duplicate.xsd")) == [
+        ("duplicate-part.xsd", "duplicate-declaration"),
+    ]
+
+
+def test_missing_import():
+    src = row_schema(
+        '<xs:attribute name="c" type="o:Code"/>',
+        extra='<xs:simpleType name="Code"><xs:restriction base="xs:string">'
+              '<xs:length value="2"/></xs:restriction></xs:simpleType>',
+        head=' xmlns:o="urn:other"',
+    )
+    # the compiler reads local names: o:Code is the local Code
+    assert columns(compile_xsd(src), "r") == {"c": (S.Length(2),)}
+    assert codes(src) == [("<string>", "missing-import")]
+
+
+def test_unresolved_reference():
+    src = row_schema('<xs:attribute name="c" type="NoSuch"/>')
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(src)
+    assert str(err.value) == "unresolved simpleType reference 'NoSuch'"
+    assert codes(src) == [("<string>", "unresolved-reference")]
+
+
+def test_self_recursive_type_is_cut_one_level_deep():
+    """issue_437's shape: NodeList -> Node -> NodeList."""
+    c = compile_xsd(fx("recursive-self.xsd"))
+    assert sorted(c.specs) == ["tree"] and c.doc_rows == {"tree"}
+    assert columns(c, "tree") == {"node_id": (),
+                                  "node_label": (S.Required(),)}
+    assert c.restrictions == (
+        f"tree: recursive type re-entered at node/children {CUT}",
+    )
+    assert c.skipped_paths == {"tree": {("node", "children")}}
+    assert codes(fx("recursive-self.xsd")) == []
+
+
+def test_mutually_recursive_globals_keep_zero_column_tables():
+    """import-case4's shape: rootA -> rootB -> rootA."""
+    c = compile_xsd(fx("recursive-mutual.xsd"))
+    assert c.doc_rows == {"rootA", "rootB"}
+    assert columns(c, "rootA") == {} and columns(c, "rootB") == {}
+    assert c.restrictions == (
+        f"rootA: recursive type re-entered at rootB/rootA {CUT}",
+        f"rootB: recursive type re-entered at rootA/rootB {CUT}",
+    )
+    assert c.skipped_paths == {
+        "rootA": {("rootB",), ("rootB", "rootA")},
+        "rootB": {("rootA",), ("rootA", "rootB")},
+    }
+    assert codes(fx("recursive-mutual.xsd")) == []
+
+
+def test_cp1252_schema_and_instance(spark):
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+
+    c = compile_xsd(fx("menu-cp1252.xsd"))
+    assert columns(c, "dish") == {
+        "price": (S.BuiltinLexical("decimal"),),
+        "name": (S.Required(), S.Enumeration(("menù", "café"))),
+    }
+    assert codes(fx("menu-cp1252.xsd")) == []
+    got = sorted(
+        (r.path, r.constraint_id, r.offending_value)
+        for r in validate_xml_instance(
+            spark, fx("menu-cp1252.xml"), c
+        ).collect()
+    )
+    # dish 3 alone is invalid: 'crème' is outside the enumeration and
+    # 'x' is no decimal; 'menù' and 'café' must decode to match
+    assert got == [
+        ("dish/name", "facet:name:Enumeration", "crème"),
+        ("dish/price", "facet:price:BuiltinLexical", "x"),
+    ]
