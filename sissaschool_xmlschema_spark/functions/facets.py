@@ -15,6 +15,7 @@ for passing rows, ``reason`` a human-readable message patterned on
 from __future__ import annotations
 
 import math
+import operator
 import re
 from decimal import Decimal
 from typing import Tuple
@@ -26,6 +27,19 @@ from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.xsd_regex import translate_and_anchor
 
 _REASON_MAX = 200  # error message value truncation, exceptions.py:328-329
+
+
+_LENGTHS = {
+    S.Length: (operator.eq, "length has to be"),
+    S.MinLength: (operator.ge, "value length cannot be lesser than"),
+    S.MaxLength: (operator.le, "value length cannot be greater than"),
+}
+_BOUNDS = {
+    S.MinInclusive: (operator.ge, "greater or equal than"),
+    S.MinExclusive: (operator.gt, "greater than"),
+    S.MaxInclusive: (operator.le, "lesser or equal than"),
+    S.MaxExclusive: (operator.lt, "lesser than"),
+}
 
 
 def _null_ok(col: Column, pred: Column) -> Column:
@@ -67,35 +81,26 @@ def _lower(facet: S.Facet, c: Column, column: str) -> Tuple[Column, str]:
             f"pattern mismatch: value doesn't match any of {list(facet.patterns)!r}"
         )
 
-    if isinstance(facet, S.Length):
-        return _null_ok(c, F.length(c) == facet.value), (
-            f"length has to be {facet.value}"
-        )
-    if isinstance(facet, S.MinLength):
-        return _null_ok(c, F.length(c) >= facet.value), (
-            f"value length cannot be lesser than {facet.value}"
-        )
-    if isinstance(facet, S.MaxLength):
-        return _null_ok(c, F.length(c) <= facet.value), (
-            f"value length cannot be greater than {facet.value}"
+    length = _LENGTHS.get(type(facet))
+    if length is not None:
+        op, says = length
+        return _null_ok(c, op(F.length(c), facet.value)), (
+            f"{says} {facet.value}"
         )
 
-    if isinstance(facet, S.MinInclusive):
-        return _null_ok(c, c >= F.lit(facet.value)), (
-            f"value has to be greater or equal than {facet.value}"
+    bound = _BOUNDS.get(type(facet))
+    if bound is not None:
+        op, says = bound
+        v = facet.value
+        # a numeric bound compares in the numeric value space through a
+        # tolerant cast: a non-numeric lexical is NULL and passes
+        # (BuiltinLexical reports it) where Spark's implicit cast of the
+        # string column would fail the whole job
+        x, lit = (
+            (c.try_cast("double"), float(v))
+            if isinstance(v, (int, float)) else (c, v)
         )
-    if isinstance(facet, S.MinExclusive):
-        return _null_ok(c, c > F.lit(facet.value)), (
-            f"value has to be greater than {facet.value}"
-        )
-    if isinstance(facet, S.MaxInclusive):
-        return _null_ok(c, c <= F.lit(facet.value)), (
-            f"value has to be lesser or equal than {facet.value}"
-        )
-    if isinstance(facet, S.MaxExclusive):
-        return _null_ok(c, c < F.lit(facet.value)), (
-            f"value has to be lesser than {facet.value}"
-        )
+        return _null_ok(c, op(x, F.lit(lit))), f"value has to be {says} {v}"
 
     if isinstance(facet, S.TotalDigits):
         # count_digits on the decimal string form (utils/decoding.py:32-52):
