@@ -8,6 +8,14 @@ driver-side, pure-Python compiler from the XSD document to
 :class:`~sissaschool_xmlschema_spark.spec.TableSpec` dataclasses — executors
 never see any of this; they only see the Column plans the spec compiles to.
 
+One loader reads the schema: :func:`load_schema_graph` parses each
+document once and follows its include/import/redefine/override locations
+(the reference's ``SchemaLoader``); the schema-document checker
+(:mod:`.xsd_meta`) reads the same graph.  :func:`compile_xsd` is a
+sequence of phases over one ``_Ctx``: load, register the global
+components, detect the tables, flatten them, overlays (xsi:type,
+alternatives, substitution members), nested tables, identities, assemble.
+
 Supported subset (everything a tabular corpus can express):
 
 * global/inline ``xs:simpleType`` with restriction chains — facets
@@ -230,9 +238,13 @@ class _Column:
 
 @dataclass
 class _Ctx:
-    """One parsed schema document."""
+    """One compilation: the registered global components of the schema
+    graph, what flattening records per table, and what each phase of
+    :func:`compile_xsd` adds for the later ones."""
 
     root: ET.Element
+    scope_col: str = "doc_id"
+    order_col: str = "row_idx"
     simple_types: dict = field(default_factory=dict)
     complex_types: dict = field(default_factory=dict)
     elements: dict = field(default_factory=dict)
@@ -264,6 +276,64 @@ class _Ctx:
     # yields NO columns but took a cut still becomes a (zero-column)
     # document table — its content is schema-declared, just recursive
     cycle_cuts: int = 0
+    # phase results.  detected: row element -> (particle, ctype, parent
+    # global element, eff_min, eff_max); detected_simple: the same for
+    # repeated SIMPLE children (menù example shape), facets for ctype
+    detected: dict = field(default_factory=dict)
+    detected_simple: dict = field(default_factory=dict)
+    particle_rank: dict = field(default_factory=dict)
+    # table -> [_Column] / identities / Occurs model
+    tables: dict = field(default_factory=dict)
+    identities: dict = field(default_factory=dict)
+    models: dict = field(default_factory=dict)
+    doc_rows: set = field(default_factory=set)
+    derived_of: dict = field(default_factory=dict)  # base -> derived types
+    declared_types: dict = field(default_factory=dict)
+    xsi_overlays: dict = field(default_factory=dict)
+    alt_overlays: dict = field(default_factory=dict)
+    subst_overlays: dict = field(default_factory=dict)
+    nested: dict = field(default_factory=dict)  # name -> NestedTable
+    external: list = field(default_factory=list)  # ExternalKeyrefs
+
+    def mark(self, table: str) -> tuple:
+        """What a flatten under ``table`` may record, taken before it:
+        :meth:`opened` tells whether the flatten left declared content
+        without columns, :meth:`rollback` undoes what it recorded."""
+        return (table, len(self.restrictions),
+                set(self.skipped.get(table, ())),
+                len(self.assertions.get(table, ())),
+                len(self.wildcards.get(table, ())),
+                set(self.mixed.get(table, ())), len(self.pending_nested),
+                self.cycle_cuts)
+
+    def opened(self, mark: tuple, counts=None) -> bool:
+        """Whether the flatten since ``mark`` took a recursion cut, met a
+        wildcard or mixed content, or queued a nested table (only those
+        ``counts`` accepts, when given)."""
+        table, _r, _s, _a, n_wild, mixed, n_pend, cuts = mark
+        queued = self.pending_nested[n_pend:]
+        return (
+            self.cycle_cuts > cuts
+            or len(self.wildcards.get(table, ())) > n_wild
+            or set(self.mixed.get(table, ())) != mixed
+            or (any(map(counts, queued)) if counts else bool(queued))
+        )
+
+    def rollback(self, mark: tuple) -> None:
+        table, n_restr, skipped, n_asserts, n_wild, mixed, n_pend, _c = mark
+        del self.pending_nested[n_pend:]
+        del self.restrictions[n_restr:]
+        for reg, before in ((self.skipped, skipped), (self.mixed, mixed)):
+            if before:
+                reg[table] = before
+            else:
+                reg.pop(table, None)
+        if table in self.assertions:
+            del self.assertions[table][n_asserts:]
+        if table in self.wildcards:
+            del self.wildcards[table][n_wild:]
+            if not self.wildcards[table]:
+                del self.wildcards[table]
 
 
 def _local(qname: Optional[str]) -> str:
@@ -276,6 +346,23 @@ def _local(qname: Optional[str]) -> str:
     return qname.split(":", 1)[-1]
 
 
+# builtins whose facets are no lexical regex (builtin_facets)
+_NON_LEXICAL = {
+    "string": (), "anySimpleType": (), "anyAtomicType": (), "anyType": (),
+    "anyURI": (),
+    "boolean": (S.BooleanLexical(),),
+    "hexBinary": (S.HexBinary(),),
+    "base64Binary": (S.Base64Binary(),),
+    "normalizedString": (S.WhiteSpace("replace"),),
+    "token": (S.WhiteSpace("collapse"),),
+}
+
+
+# every builtin type name: what builtin_facets compiles and the schema
+# checker accepts as an xs: reference
+BUILTIN_TYPES = frozenset(XSD_LEXICAL) | frozenset(_NON_LEXICAL)
+
+
 def _is_builtin(qname: str, ctx: _Ctx) -> bool:
     local = _local(qname)
     # a user type shadows nothing: builtins live in the XSD namespace, user
@@ -283,10 +370,16 @@ def _is_builtin(qname: str, ctx: _Ctx) -> bool:
     # prefer the user definition when one exists (reference resolution order)
     if local in ctx.simple_types or local in ctx.complex_types:
         return False
-    return local in XSD_LEXICAL or local in (
-        "string", "boolean", "hexBinary", "base64Binary", "anySimpleType",
-        "anyAtomicType", "anyType", "normalizedString", "token",
-    )
+    return local in BUILTIN_TYPES
+
+
+def _effective_mixed(ct: ET.Element) -> bool:
+    """A complexType's mixed="true" (complex_types.py:35), overridden by
+    its complexContent's own mixed attribute when that is present."""
+    cc = ct.find(_xs("complexContent"))
+    if cc is not None and cc.get("mixed") is not None:
+        return cc.get("mixed") == "true"
+    return ct.get("mixed") == "true"
 
 
 def builtin_facets(local: str, lexical: bool = True) -> tuple:
@@ -297,19 +390,8 @@ def builtin_facets(local: str, lexical: bool = True) -> tuple:
     needs no integer-lexical rlike), keeping value-space checks only.
     """
     facets: list = []
-    if local in ("string", "anySimpleType", "anyAtomicType", "anyType",
-                 "anyURI"):
-        return ()
-    if local == "boolean":
-        return (S.BooleanLexical(),)
-    if local == "hexBinary":
-        return (S.HexBinary(),)
-    if local == "base64Binary":
-        return (S.Base64Binary(),)
-    if local == "normalizedString":
-        return (S.WhiteSpace("replace"),)
-    if local == "token":
-        return (S.WhiteSpace("collapse"),)
+    if local in _NON_LEXICAL:
+        return _NON_LEXICAL[local]
     if local not in XSD_LEXICAL:
         raise XsdCompileError(f"unknown builtin type xs:{local}")
     if lexical and XSD_LEXICAL[local] is not None:
@@ -322,17 +404,22 @@ def builtin_facets(local: str, lexical: bool = True) -> tuple:
     return tuple(facets)
 
 
+def _binary(facets, codec: str) -> Optional[str]:
+    """``codec`` ('hex' | 'base64') when ``facets`` hold that binary
+    builtin's lexical check, else None."""
+    kind = S.HexBinary if codec == "hex" else S.Base64Binary
+    return codec if any(isinstance(f, kind) for f in facets) else None
+
+
 def _parse_bound(text: str):
     """Facet value → int/float when numeric, else the raw string (dates,
     durations compare lexicographically in their canonical forms)."""
-    try:
-        return int(text)
-    except ValueError:
-        pass
-    try:
-        return float(text)
-    except ValueError:
-        return text
+    for number in (int, float):
+        try:
+            return number(text)
+        except ValueError:
+            pass
+    return text
 
 
 _VALUE_FACETS = {
@@ -350,6 +437,22 @@ _BOUND_FACETS = {
 }
 
 
+def _length_bounds(facets: list, lo=None, hi=None) -> tuple:
+    """``(lo, hi, rest)``: the length/minLength/maxLength facets folded
+    into bounds over ``lo``/``hi``, and the other facets in order."""
+    rest: list = []
+    for f in facets:
+        if isinstance(f, S.Length):
+            lo = hi = f.value
+        elif isinstance(f, S.MinLength):
+            lo = f.value
+        elif isinstance(f, S.MaxLength):
+            hi = f.value
+        else:
+            rest.append(f)
+    return lo, hi, rest
+
+
 def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
     """Compile a simpleType (by reference name or inline element) to facets,
     following restriction chains (base facets first — the reference validates
@@ -365,13 +468,11 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
     st = node_or_ref
     restriction = st.find(_xs("restriction"))
     if restriction is not None:
-        facets: list = []
-        base = restriction.get("base")
-        inline_base = restriction.find(_xs("simpleType"))
-        if base:
-            facets.extend(_compile_simple(base, ctx, where))
-        elif inline_base is not None:
-            facets.extend(_compile_simple(inline_base, ctx, where))
+        base = (restriction.get("base")
+                or restriction.find(_xs("simpleType")))
+        facets = (
+            [] if base is None else list(_compile_simple(base, ctx, where))
+        )
         patterns = []
         enums = []
         for child in restriction:
@@ -403,69 +504,36 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
         if enums:
             # hexBinary base: membership compares in the VALUE space
             # (case-insensitive hex digits, issue_222)
-            canon = (
-                "hex" if any(isinstance(f, S.HexBinary) for f in facets)
-                else None
-            )
-            facets.append(S.Enumeration(tuple(enums), canon=canon))
+            facets.append(S.Enumeration(tuple(enums),
+                                        canon=_binary(facets, "hex")))
         lof = next((f for f in facets if isinstance(f, S.ListOf)), None)
         if lof is not None:
             # length facets restricting a LIST type bound the ITEM COUNT,
             # not the character count (facets.py XsdGroup list handling;
             # issue_311 'point' = 2-item decimal list)
-            lo, hi = lof.min_items, lof.max_items
-            rest: list = []
-            for f in facets:
-                if f is lof:
-                    continue
-                if isinstance(f, S.Length):
-                    lo = hi = f.value
-                elif isinstance(f, S.MinLength):
-                    lo = f.value
-                elif isinstance(f, S.MaxLength):
-                    hi = f.value
-                else:
-                    rest.append(f)
-            rest.append(S.ListOf(
+            lo, hi, facets = _length_bounds(
+                [f for f in facets if f is not lof],
+                lof.min_items, lof.max_items,
+            )
+            facets.append(S.ListOf(
                 item_facets=lof.item_facets, separator=lof.separator,
                 min_items=lo, max_items=hi,
             ))
-            facets = rest
-        codec = (
-            "hex" if any(isinstance(f, S.HexBinary) for f in facets)
-            else "base64"
-            if any(isinstance(f, S.Base64Binary) for f in facets)
-            else None
-        )
+        codec = _binary(facets, "hex") or _binary(facets, "base64")
         if codec is not None:
             # length facets on BINARY types count decoded octets, not
             # lexical characters (decoder hexCode length=4 admits
             # 'AABBCCDD'); runs after the list fold, so list-item
             # counting wins when both apply
-            lo = hi = None
-            rest2: list = []
-            for f in facets:
-                if isinstance(f, S.Length):
-                    lo = hi = f.value
-                elif isinstance(f, S.MinLength):
-                    lo = f.value
-                elif isinstance(f, S.MaxLength):
-                    hi = f.value
-                else:
-                    rest2.append(f)
+            lo, hi, facets = _length_bounds(facets)
             if lo is not None or hi is not None:
-                rest2.append(S.BinaryLength(lo, hi, codec=codec))
-            facets = rest2
+                facets.append(S.BinaryLength(lo, hi, codec=codec))
         return tuple(facets)
 
     lst = st.find(_xs("list"))
     if lst is not None:
-        item_ref = lst.get("itemType")
-        inline = lst.find(_xs("simpleType"))
-        items = (
-            _compile_simple(item_ref, ctx, where)
-            if item_ref
-            else _compile_simple(inline, ctx, where)
+        items = _compile_simple(
+            lst.get("itemType") or lst.find(_xs("simpleType")), ctx, where
         )
         # keep only value-space item facets (row-context facets like Required
         # are meaningless per list item)
@@ -475,12 +543,9 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
 
     union = st.find(_xs("union"))
     if union is not None:
-        alts = []
-        member_types = (union.get("memberTypes") or "").split()
-        for m in member_types:
-            alts.append(_compile_simple(m, ctx, where))
-        for inline in union.findall(_xs("simpleType")):
-            alts.append(_compile_simple(inline, ctx, where))
+        members = (union.get("memberTypes") or "").split()
+        members += union.findall(_xs("simpleType"))
+        alts = [_compile_simple(m, ctx, where) for m in members]
         return (S.UnionOf(alternatives=tuple(alts)),)
 
     raise XsdCompileError(f"{where}: simpleType without restriction/list/union")
@@ -525,8 +590,8 @@ def _max_occurs(el: ET.Element) -> Optional[int]:
 
 
 def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
-                        cols: list, uniques: list, scope_col: str,
-                        steps: tuple = (), table: str = "") -> None:
+                        cols: list, uniques: list, steps: tuple = (),
+                        table: str = "") -> None:
     # named attribute groups (attributes.py XsdAttributeGroup): inline the
     # referenced group's attributes (which may nest further group refs)
     for agref in ct.findall(_xs("attributeGroup")):
@@ -534,16 +599,12 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
         ag = ctx.attr_groups.get(_local(ref)) if ref else agref
         if ag is None:
             raise XsdCompileError(f"unresolved attributeGroup ref {ref!r}")
-        _flatten_attributes(ag, ctx, prefix, cols, uniques, scope_col, steps,
-                            table)
+        _flatten_attributes(ag, ctx, prefix, cols, uniques, steps, table)
     # xs:anyAttribute (wildcards.py:33-164): open attribute content at this
     # level — recorded as a marker so the instance reader can gate its
     # undeclared-attribute flags (never silently dropped)
     for aw in ct.findall(_xs("anyAttribute")):
-        ctx.wildcards.setdefault(table, []).append(
-            Wildcard(steps, "attribute", aw.get("namespace", "##any"),
-                     aw.get("processContents", "strict"))
-        )
+        _wildcard(ctx, table, steps, "attribute", aw, "strict")
     for attr in ct.findall(_xs("attribute")):
         aname = attr.get("name") or _local(attr.get("ref"))
         name = prefix + aname
@@ -563,7 +624,7 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
             inline = attr.find(_xs("simpleType"))
             if inline is not None:
                 facets.extend(_compile_simple(inline, ctx, name))
-        if any(isinstance(f, S.HexBinary) for f in facets):
+        if _binary(facets, "hex"):
             # hexBinary fixed values compare in the value space (issue_222)
             facets = [
                 S.FixedValue(f.value, canon="hex")
@@ -574,14 +635,54 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
         if type_local == "ID":
             # xs:ID uniqueness: IDs are unique per document
             # (identities via ID map, attributes ID handling)
-            uniques.append(
-                S.Unique(f"{name}-id-unique", fields=(name,), scope=scope_col)
-            )
+            uniques.append(S.Unique(f"{name}-id-unique", fields=(name,),
+                                    scope=ctx.scope_col))
+
+
+def _wildcard(ctx: _Ctx, table: str, steps: tuple, kind: str,
+              node: Optional[ET.Element], process: str) -> None:
+    """Record one xs:any / xs:anyAttribute / xs:openContent marker of
+    ``table`` (``node`` None = an openContent without its xs:any)."""
+    ctx.wildcards.setdefault(table, []).append(Wildcard(
+        steps, kind,
+        "##any" if node is None else node.get("namespace", "##any"),
+        process if node is None else node.get("processContents", process),
+    ))
+
+
+def _derived_wins(cols: list) -> None:
+    """A derivation that redeclares a base column replaces it in place:
+    the later (derived) declaration wins, at the base's position."""
+    seen: dict = {}
+    for i, c in enumerate(cols):
+        if c.name in seen:
+            cols[seen[c.name]] = c
+            cols[i] = None
+        else:
+            seen[c.name] = i
+    cols[:] = [c for c in cols if c is not None]
+
+
+_MODEL_GROUPS = (_xs("sequence"), _xs("all"), _xs("choice"))
+
+
+def _inline_group(gref: ET.Element, ctx: _Ctx) -> ET.Element:
+    """A complexType holding the model groups of the named xs:group that
+    ``gref`` refers to (or of ``gref`` itself), to flatten in place
+    (groups.py XsdGroup)."""
+    ref = gref.get("ref")
+    g = ctx.groups.get(_local(ref)) if ref else gref
+    if g is None:
+        raise XsdCompileError(f"unresolved group ref {ref!r}")
+    fake = ET.Element(_xs("complexType"))
+    fake.extend(sub for sub in g if sub.tag in _MODEL_GROUPS)
+    return fake
+
 
 
 def _flatten_type(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
-                  uniques: list, scope_col: str, in_choice: bool,
-                  table: str, steps: tuple = (), path_min: int = 1) -> None:
+                  uniques: list, in_choice: bool, table: str,
+                  steps: tuple = (), path_min: int = 1) -> None:
     """Flatten one complexType's attributes + content into columns.
 
     Recursion guard: a recursive element reference (mutually recursive
@@ -606,199 +707,131 @@ def _flatten_type(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
         return
     ctx.flatten_stack.append(key)
     try:
-        _flatten_type_guarded(ct, ctx, prefix, cols, uniques, scope_col,
-                              in_choice, table, steps, path_min)
-    finally:
-        ctx.flatten_stack.pop()
-
-
-def _flatten_type_guarded(ct: ET.Element, ctx: _Ctx, prefix: str,
-                          cols: list, uniques: list, scope_col: str,
-                          in_choice: bool, table: str, steps: tuple = (),
-                          path_min: int = 1) -> None:
-    # mixed="true" (complex_types.py:35): char data admitted among the
-    # element children — recorded per path so the instance reader gates its
-    # char-data check (on the complexType, or overriding on complexContent)
-    cc_node = ct.find(_xs("complexContent"))
-    mixed_attr = (
-        cc_node.get("mixed") if cc_node is not None
-        and cc_node.get("mixed") is not None else ct.get("mixed")
-    )
-    if mixed_attr == "true":
-        ctx.mixed.setdefault(table, set()).add(steps)
-    # complexContent extension/restriction (complex_types.py derivation):
-    # extension = base's content + attributes FOLLOWED BY the derived
-    # additions; restriction = the restricted content REPLACES the base's
-    # (the restriction repeats what it keeps), base attributes still apply
-    cc = ct.find(_xs("complexContent"))
-    if cc is not None:
-        for deriv_tag in ("extension", "restriction"):
-            deriv = cc.find(_xs(deriv_tag))
-            if deriv is None:
-                continue
-            base_local = _local(deriv.get("base"))
-            base_ct = ctx.complex_types.get(base_local)
-            if base_ct is None:
-                raise XsdCompileError(
-                    f"complexContent {deriv_tag} of unresolved base "
-                    f"{deriv.get('base')!r}"
-                )
-            if deriv_tag == "extension":
-                _flatten_type(base_ct, ctx, prefix, cols, uniques,
-                              scope_col, in_choice, table, steps, path_min)
-            else:
-                # restriction: content comes from the derived node only;
-                # the base contributes attributes (they are inherited)
-                _flatten_attributes(base_ct, ctx, prefix, cols, uniques,
-                                    scope_col, steps, table)
-            _flatten_type_body(deriv, ctx, prefix, cols, uniques, scope_col,
-                               in_choice, table, steps, path_min)
-            # a restriction (or malformed extension) redeclares base
-            # attributes/children it constrains: the DERIVED declaration
-            # wins, at the base's position
-            seen: dict = {}
-            for i, c in enumerate(cols):
-                if c.name in seen:
-                    cols[seen[c.name]] = c
-                    cols[i] = None
+        # mixed="true" (complex_types.py:35): char data admitted among the
+        # element children — recorded per path so the instance reader gates
+        # its char-data check
+        if _effective_mixed(ct):
+            ctx.mixed.setdefault(table, set()).add(steps)
+        # complexContent extension/restriction (complex_types.py derivation):
+        # extension = base's content + attributes FOLLOWED BY the derived
+        # additions; restriction = the restricted content REPLACES the base's
+        # (the restriction repeats what it keeps), base attributes still apply
+        cc = ct.find(_xs("complexContent"))
+        if cc is not None:
+            for deriv in _derivations(cc):
+                deriv_tag = deriv.tag.split("}")[-1]
+                base_ct = ctx.complex_types.get(_local(deriv.get("base")))
+                if base_ct is None:
+                    raise XsdCompileError(
+                        f"complexContent {deriv_tag} of unresolved base "
+                        f"{deriv.get('base')!r}"
+                    )
+                if deriv_tag == "extension":
+                    _flatten_type(base_ct, ctx, prefix, cols, uniques,
+                                  in_choice, table, steps, path_min)
                 else:
-                    seen[c.name] = i
-            cols[:] = [c for c in cols if c is not None]
-            useen: set = set()
-            uniques[:] = [
-                u for u in uniques
-                if not (u.name in useen or useen.add(u.name))
-            ]
-        return
-    sc = ct.find(_xs("simpleContent"))
-    if sc is not None:
-        # simpleContent extension: the element's TEXT is a simple-typed
-        # value and it carries attributes (complex_types.py simple-content
-        # derivation).  Nested form flattens to <elem> (text, at the
-        # element's own path) + <elem>_<attr> columns.
-        ext = sc.find(_xs("extension"))
-        if ext is None:
-            # simpleContent RESTRICTION (complex_types.py simple-content
-            # derivation; issue_013): the base complexType contributes the
-            # text column + attributes, the restriction's facet children
-            # narrow the text, its attribute declarations override
-            restr = sc.find(_xs("restriction"))
-            if restr is None:
+                    # restriction: content comes from the derived node only;
+                    # the base contributes attributes (they are inherited)
+                    _flatten_attributes(base_ct, ctx, prefix, cols, uniques,
+                                        steps, table)
+                _flatten_type_body(deriv, ctx, prefix, cols, uniques,
+                                   in_choice, table, steps, path_min)
+                # a restriction (or malformed extension) redeclares base
+                # attributes/children it constrains
+                _derived_wins(cols)
+                useen: set = set()
+                uniques[:] = [
+                    u for u in uniques
+                    if not (u.name in useen or useen.add(u.name))
+                ]
+            return
+        sc = ct.find(_xs("simpleContent"))
+        if sc is not None:
+            # simpleContent (complex_types.py simple-content derivation): the
+            # element's TEXT is a simple-typed value and it carries attributes.
+            # Nested form flattens to <elem> (text, at the element's own path)
+            # + <elem>_<attr> columns; at the ROW element itself the text is
+            # the 'value' column (path () = the row's own text).  An extension
+            # takes the facets of a simple base; a RESTRICTION (issue_013)
+            # takes a complex base's text column + attributes, narrows the
+            # text by its facet children and overrides redeclared attributes.
+            derivs = _derivations(sc)
+            if not derivs:
                 ctx.restrictions.append(
                     f"{table}: simpleContent without extension/restriction "
                     f"under {prefix or 'row'} (skipped)"
                 )
                 return
-            base = restr.get("base")
+            deriv = derivs[0]
+            restricts = deriv.tag == _xs("restriction")
+            base = deriv.get("base")
             base_local = _local(base) if base else ""
             vname = prefix[:-1] if prefix else "value"
-            if base_local in ctx.complex_types:
-                _flatten_type(ctx.complex_types[base_local], ctx, prefix,
-                              cols, uniques, scope_col, in_choice, table,
-                              steps, path_min)
+            if restricts and base_local in ctx.complex_types:
+                _flatten_type(ctx.complex_types[base_local], ctx, prefix, cols,
+                              uniques, in_choice, table, steps, path_min)
             elif base and (
                 _is_builtin(base, ctx) or base_local in ctx.simple_types
             ):
-                cols.append(
-                    _Column(vname, list(_compile_simple(base, ctx, prefix)),
-                            path=steps)
-                )
+                cols.append(_Column(
+                    vname, list(_compile_simple(base, ctx, prefix)), path=steps
+                ))
+            elif not restricts:
+                cols.append(_Column(vname, [], path=steps))
             else:
                 ctx.restrictions.append(
                     f"{table}: simpleContent restriction of unresolved "
                     f"base {base!r} (skipped)"
                 )
                 return
-            # the restriction step's facet children narrow the TEXT column
-            fake = ET.Element(_xs("simpleType"))
-            fr = ET.SubElement(fake, _xs("restriction"))
-            for child in restr:
-                tag = child.tag.split("}")[-1]
-                if tag not in ("attribute", "attributeGroup",
-                               "anyAttribute", "annotation", "assert",
-                               "simpleType"):
-                    fr.append(child)
-            extra = _compile_simple(fake, ctx, prefix)
-            vcol = next((c for c in cols if c.name == vname), None)
-            if vcol is not None:
-                vcol.facets.extend(extra)
-            else:
-                cols.append(_Column(vname, list(extra), path=steps))
-            _flatten_attributes(restr, ctx, prefix, cols, uniques,
-                                scope_col, steps, table)
-            # a redeclared attribute narrows the base's: derived wins
-            seen: dict = {}
-            for i, c in enumerate(cols):
-                if c.name in seen:
-                    cols[seen[c.name]] = c
-                    cols[i] = None
+            if restricts:
+                # the restriction step's facet children narrow the TEXT column
+                fake = ET.Element(_xs("simpleType"))
+                ET.SubElement(fake, _xs("restriction")).extend(
+                    child for child in deriv
+                    if child.tag.split("}")[-1] not in (
+                        "attribute", "attributeGroup", "anyAttribute",
+                        "annotation", "assert", "simpleType")
+                )
+                extra = _compile_simple(fake, ctx, prefix)
+                vcol = next((c for c in cols if c.name == vname), None)
+                if vcol is not None:
+                    vcol.facets.extend(extra)
                 else:
-                    seen[c.name] = i
-            cols[:] = [c for c in cols if c is not None]
+                    cols.append(_Column(vname, list(extra), path=steps))
+            _flatten_attributes(deriv, ctx, prefix, cols, uniques, steps,
+                                table)
+            if restricts:
+                _derived_wins(cols)
             return
-        base = ext.get("base")
-        facets: list = []
-        if base and (
-            _is_builtin(base, ctx) or _local(base) in ctx.simple_types
-        ):
-            facets = list(_compile_simple(base, ctx, prefix))
-        # nested: <elem> column; at the ROW element itself: the text is the
-        # 'value' column (path () = the row's own text)
-        cols.append(
-            _Column(prefix[:-1] if prefix else "value", facets, path=steps)
-        )
-        _flatten_attributes(ext, ctx, prefix, cols, uniques, scope_col,
-                            steps, table)
-        return
-    _flatten_type_body(ct, ctx, prefix, cols, uniques, scope_col,
-                       in_choice, table, steps, path_min)
+        _flatten_type_body(ct, ctx, prefix, cols, uniques, in_choice, table,
+                           steps, path_min)
+    finally:
+        ctx.flatten_stack.pop()
 
 
 def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
-                       uniques: list, scope_col: str, in_choice: bool,
-                       table: str, steps: tuple = (),
-                       path_min: int = 1) -> None:
+                       uniques: list, in_choice: bool, table: str,
+                       steps: tuple = (), path_min: int = 1) -> None:
     """Attributes + model groups of one complexType/derivation node."""
-    _flatten_attributes(ct, ctx, prefix, cols, uniques, scope_col, steps,
-                        table)
+    _flatten_attributes(ct, ctx, prefix, cols, uniques, steps, table)
     # XSD 1.1 xs:openContent (groups.py:425-431): interleave/suffix admit
     # wildcard content anywhere in this level's model — same marker as
     # xs:any; mode="none" disables inherited open content (no marker)
     for oc in ct.findall(_xs("openContent")):
-        if oc.get("mode", "interleave") == "none":
-            continue
-        oc_any = oc.find(_xs("any"))
-        ctx.wildcards.setdefault(table, []).append(
-            Wildcard(
-                steps, "element",
-                oc_any.get("namespace", "##any") if oc_any is not None
-                else "##any",
-                oc_any.get("processContents", "lax") if oc_any is not None
-                else "lax",
-            )
-        )
+        if oc.get("mode", "interleave") != "none":
+            _wildcard(ctx, table, steps, "element", oc.find(_xs("any")),
+                      "lax")
     # named model groups (xs:group ref, groups.py XsdGroup): inline the
     # referenced group's own sequence/all/choice as if declared in place
     for gref in ct.findall(_xs("group")):
-        ref = gref.get("ref")
-        g = ctx.groups.get(_local(ref)) if ref else gref
-        if g is None:
-            raise XsdCompileError(f"unresolved group ref {ref!r}")
-        fake = ET.Element(_xs("complexType"))
-        for sub in g:
-            if sub.tag in (_xs("sequence"), _xs("all"), _xs("choice")):
-                fake.append(sub)
-        _flatten_type(fake, ctx, prefix, cols, uniques, scope_col,
+        _flatten_type(_inline_group(gref, ctx), ctx, prefix, cols, uniques,
                       in_choice, table, steps, path_min)
     for group_tag in ("sequence", "all", "choice"):
         for group in ct.findall(_xs(group_tag)):
             child_in_choice = in_choice or group_tag == "choice"
             # xs:choice branches are mutually exclusive: collect each
-            # branch's columns and emit a RowAssertion (at most one branch
-            # may have any value present — XSD requires exactly one, but a
-            # branch whose members are all absent is indistinguishable
-            # from an unchosen one on a flat row, so only exclusivity is
-            # checkable; models.py ModelVisitor analogue)
+            # branch's columns for one RowAssertion (_choice_assertion)
             branches: list = []
             # a repeated model group repeats its children (issue_026):
             # they belong in their own tables, not in this row's columns
@@ -808,23 +841,12 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
             # xs:any (wildcards.py:33-164): open element content at this
             # level — marker for the instance reader, never silently dropped
             for anynode in group.findall(_xs("any")):
-                ctx.wildcards.setdefault(table, []).append(
-                    Wildcard(steps, "element",
-                             anynode.get("namespace", "##any"),
-                             anynode.get("processContents", "strict"))
-                )
-            # no-silent-drop sweep: any group child outside the handled set
-            # lands in restrictions (the module contract, never dropped)
-            for child in group:
-                ctag = child.tag.split("}")[-1]
-                if ctag not in ("element", "sequence", "choice", "all",
-                                "group", "any", "annotation"):
-                    ctx.restrictions.append(
-                        f"{table}: unsupported model-group child xs:{ctag} "
-                        f"under {prefix or 'row'} (skipped)"
-                    )
+                _wildcard(ctx, table, steps, "element", anynode, "strict")
+            _sweep(ctx, group, ("element", "sequence", "choice", "all",
+                                "group", "any", "annotation"),
+                   f"{table}: unsupported model-group child", prefix)
             for el in group.findall(_xs("element")):
-                _branch_start = len(cols)
+                branch_start = len(cols)
                 decl = _resolve_element(el, ctx)
                 name = decl.get("name")
                 max_occ = _max_occurs(el)
@@ -832,107 +854,48 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                     max_occ = None
                 min_occ = int(el.get("minOccurs", "1"))
                 kind, payload = _element_type(decl, ctx)
-                if kind == "simple":
-                    if max_occ is None or max_occ > 1:
-                        # repeated simple child below a row element:
-                        # its own nested value table, scoped per parent row
-                        ctx.pending_nested.append(dict(
-                            parent=table, name=name,
-                            path=steps + (name,), kind="simple",
-                            payload=payload,
-                            eff_min=0 if child_in_choice
-                            else path_min * min_occ
-                            * (gmin if g_repeat else 1),
-                            eff_max=max_occ,
-                        ))
-                        ctx.skipped.setdefault(table, set()).add(
-                            steps + (name,)
-                        )
-                        continue
-                    facets = list(payload)
-                    nillable = decl.get("nillable") == "true"
-                    nil_col = prefix + name + "__nil"
-                    if min_occ >= 1 and not child_in_choice:
-                        # a nilled element is PRESENT (xsi:nil='true'
-                        # satisfies the occurrence, elements.py:711-728,
-                        # issue_243): required only where not nilled
-                        facets.insert(0, S.Required(
-                            when=(
-                                f"coalesce(`{nil_col}`, 'false') "
-                                "NOT IN ('true','1')"
-                            ) if nillable else None
-                        ))
-                    if decl.get("fixed") is not None:
-                        facets.append(S.FixedValue(
-                            decl.get("fixed"),
-                            canon="hex" if any(
-                                isinstance(f, S.HexBinary) for f in facets
-                            ) else None,
-                        ))
-                    if nillable:
-                        facets.append(S.Nillable(
-                            nil_col=nil_col, fixed=decl.get("fixed")
-                        ))
-                        cols.append(_Column(
-                            nil_col, [S.BooleanLexical()],
-                            path=steps + (name, "@xsi:nil"),
-                        ))
-                    cols.append(
-                        _Column(prefix + name, facets, path=steps + (name,))
+                if max_occ is None or max_occ > 1:
+                    # a repeated child below a row element: queued for its
+                    # own nested table, scoped per parent row; its path is
+                    # schema-declared content of this table
+                    ctx.pending_nested.append(dict(
+                        parent=table, name=name, path=steps + (name,),
+                        kind=kind, payload=payload, eff_max=max_occ,
+                        eff_min=0 if child_in_choice
+                        else path_min * min_occ * (gmin if g_repeat else 1),
+                        # declared type NAME: xsi:type overlays on nested
+                        # tables resolve derived types from it (issue_314)
+                        type_name=_local(decl.get("type") or "")
+                        if kind == "complex" else "",
+                    ))
+                    ctx.skipped.setdefault(table, set()).add(steps + (name,))
+                elif kind == "simple":
+                    cols += _simple_columns(
+                        decl, payload, prefix + name, steps + (name,),
+                        required=min_occ >= 1 and not child_in_choice,
                     )
                 else:
-                    if max_occ is None or max_occ > 1:
-                        # repeated complex child below a row element:
-                        # its own nested table, scoped per parent row
-                        ctx.pending_nested.append(dict(
-                            parent=table, name=name,
-                            path=steps + (name,), kind="complex",
-                            payload=payload,
-                            # declared type NAME: xsi:type overlays on
-                            # nested tables resolve derived types from it
-                            # (issue_314)
-                            type_name=_local(decl.get("type") or ""),
-                            eff_min=0 if child_in_choice
-                            else path_min * min_occ
-                            * (gmin if g_repeat else 1),
-                            eff_max=max_occ,
-                        ))
-                        ctx.skipped.setdefault(table, set()).add(
-                            steps + (name,)
-                        )
-                        continue
-                    n_cols0 = len(cols)
-                    n_wild0 = len(ctx.wildcards.get(table, ()))
-                    mixed0 = set(ctx.mixed.get(table, ()))
-                    cuts0 = ctx.cycle_cuts
-                    n_nest0 = len(ctx.pending_nested)
+                    mark, n_cols = ctx.mark(table), len(cols)
                     _flatten_type(payload, ctx, prefix + name + "_", cols,
-                                  uniques, scope_col, child_in_choice, table,
+                                  uniques, child_in_choice, table,
                                   steps + (name,), path_min * min_occ)
                     # a singleton complex child whose subtree produced no
                     # columns but IS open (wildcard/mixed/recursion-cut
                     # content, issue_298's Container->Freeform chain) is
                     # schema-declared: record it so the instance reader
                     # does not flag the subtree as undeclared
-                    if len(cols) == n_cols0 and (
-                        len(ctx.wildcards.get(table, ())) > n_wild0
-                        or set(ctx.mixed.get(table, ())) != mixed0
-                        or ctx.cycle_cuts > cuts0
-                        or len(ctx.pending_nested) > n_nest0
-                    ):
+                    if len(cols) == n_cols and ctx.opened(mark):
                         ctx.skipped.setdefault(table, set()).add(
                             steps + (name,)
                         )
-                if group_tag == "choice":
-                    names = [c.name for c in cols[_branch_start:]]
-                    if names:
-                        branches.append(names)
+                if group_tag == "choice" and len(cols) > branch_start:
+                    branches.append([c.name for c in cols[branch_start:]])
             for sub in (
                 group.findall(_xs("sequence"))
                 + group.findall(_xs("choice"))
                 + group.findall(_xs("all"))
             ):
-                _branch_start = len(cols)
+                branch_start = len(cols)
                 # nested model groups: treat children like the parent's
                 ctx.restrictions.append(
                     f"{table}: nested model group under {prefix or 'row'} "
@@ -940,58 +903,78 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                 )
                 fake = ET.Element(_xs("complexType"))
                 fake.append(sub)
-                _flatten_type(fake, ctx, prefix, cols, uniques, scope_col,
+                _flatten_type(fake, ctx, prefix, cols, uniques,
                               in_choice or sub.tag == _xs("choice"), table,
                               steps,
                               path_min * int(sub.get("minOccurs", "1")))
-                if group_tag == "choice":
-                    names = [c.name for c in cols[_branch_start:]]
-                    if names:
-                        branches.append(names)
+                if group_tag == "choice" and len(cols) > branch_start:
+                    branches.append([c.name for c in cols[branch_start:]])
             for gref in group.findall(_xs("group")):
                 # xs:group ref inside a model group: inline in place
-                ref = gref.get("ref")
-                g = ctx.groups.get(_local(ref)) if ref else gref
-                if g is None:
-                    raise XsdCompileError(f"unresolved group ref {ref!r}")
-                fake = ET.Element(_xs("complexType"))
-                for sub in g:
-                    if sub.tag in (_xs("sequence"), _xs("all"),
-                                   _xs("choice")):
-                        fake.append(sub)
-                _flatten_type(fake, ctx, prefix, cols, uniques, scope_col,
-                              child_in_choice, table, steps, path_min)
+                _flatten_type(_inline_group(gref, ctx), ctx, prefix, cols,
+                              uniques, child_in_choice, table, steps,
+                              path_min)
             if group_tag == "choice" and len(branches) >= 2:
-                present = [
-                    "(" + " OR ".join(f"{c} IS NOT NULL" for c in b) + ")"
+                # at most one branch has a value present: XSD requires
+                # exactly one, but a branch whose members are all absent
+                # is indistinguishable from an unchosen one on a flat row,
+                # so only exclusivity is checkable (models.py ModelVisitor)
+                present = " + ".join(
+                    "(CASE WHEN ("
+                    + " OR ".join(f"{c} IS NOT NULL" for c in b)
+                    + ") THEN 1 ELSE 0 END)"
                     for b in branches
-                ]
-                expr = (
-                    "("
-                    + " + ".join(
-                        f"(CASE WHEN {p} THEN 1 ELSE 0 END)"
-                        for p in present
-                    )
-                    + ") <= 1"
                 )
-                ctx.assertions.setdefault(table, []).append(
-                    S.RowAssertion(
-                        f"choice-{table}-{prefix or 'row'}-"
-                        f"{len(ctx.assertions.get(table, ()))}",
-                        expr,
-                    )
-                )
-    # no-silent-drop sweep over the complexType/derivation node itself:
-    # any direct child outside the handled set lands in restrictions
-    for child in ct:
+                ctx.assertions.setdefault(table, []).append(S.RowAssertion(
+                    f"choice-{table}-{prefix or 'row'}-"
+                    f"{len(ctx.assertions.get(table, ()))}",
+                    f"({present}) <= 1",
+                ))
+    _sweep(ctx, ct, ("annotation", "attribute", "attributeGroup",
+                     "anyAttribute", "openContent", "group", "sequence",
+                     "all", "choice", "simpleContent", "complexContent"),
+           f"{table}: unsupported complexType child", prefix)
+
+
+def _sweep(ctx: _Ctx, node: ET.Element, handled: tuple, what: str,
+           prefix: str) -> None:
+    """The no-silent-drop sweep (the module contract): each child of
+    ``node`` outside the ``handled`` set lands in restrictions."""
+    for child in node:
         ctag = child.tag.split("}")[-1]
-        if ctag not in ("annotation", "attribute", "attributeGroup",
-                        "anyAttribute", "openContent", "group", "sequence",
-                        "all", "choice", "simpleContent", "complexContent"):
+        if ctag not in handled:
             ctx.restrictions.append(
-                f"{table}: unsupported complexType child xs:{ctag} under "
-                f"{prefix or 'row'} (skipped)"
+                f"{what} xs:{ctag} under {prefix or 'row'} (skipped)"
             )
+
+
+def _simple_columns(decl: ET.Element, facets: tuple, name: str,
+                    path: tuple, required: bool) -> list:
+    """The column of one singleton simple-typed child element, preceded by
+    its ``__nil`` column when the element is nillable."""
+    facets = list(facets)
+    nillable = decl.get("nillable") == "true"
+    nil_col = name + "__nil"
+    if required:
+        # a nilled element is PRESENT (xsi:nil='true' satisfies the
+        # occurrence, elements.py:711-728, issue_243): required only where
+        # not nilled
+        facets.insert(0, S.Required(
+            when=(
+                f"coalesce(`{nil_col}`, 'false') NOT IN ('true','1')"
+            ) if nillable else None
+        ))
+    if decl.get("fixed") is not None:
+        facets.append(S.FixedValue(decl.get("fixed"),
+                                   canon=_binary(facets, "hex")))
+    cols: list = []
+    if nillable:
+        facets.append(S.Nillable(nil_col=nil_col, fixed=decl.get("fixed")))
+        cols.append(_Column(nil_col, [S.BooleanLexical()],
+                            path=path + ("@xsi:nil",)))
+    return cols + [_Column(name, facets, path=path)]
+
+
 
 
 # ---------------------------------------------------------------------------
@@ -1026,88 +1009,192 @@ def _xpath_tokens(xpath: str) -> list:
 
 
 def _flatten_field(selector_rest: list, field_tokens: list) -> str:
-    parts = [t.lstrip("@") for t in selector_rest] + [
-        t.lstrip("@") for t in field_tokens
-    ]
-    return "_".join(parts)
+    return "_".join(t.lstrip("@") for t in [*selector_rest, *field_tokens])
 
 
 # ---------------------------------------------------------------------------
-# the compiler
+# the schema loader
 # ---------------------------------------------------------------------------
 
-
-def _parse_schema_text(text: str, what: str) -> ET.Element:
-    try:
-        # fromstring parses the decoded text as text: a file-like source
-        # would re-apply the declared encoding to its UTF-8 re-encoding
-        root = ET.fromstring(text)
-    except ET.ParseError as err:
-        # a malformed schema DOCUMENT is a compile error with a clear
-        # source, not a raw parser traceback (resources/malformed.xsd)
-        raise XsdCompileError(
-            f"{what}: not well-formed XML ({err})"
-        ) from err
-    if root.tag != _xs("schema"):
-        raise XsdCompileError(
-            f"{what}: root element is {root.tag!r}, not xs:schema"
-        )
-    return root
+_INCLUSIONS = (_xs("include"), _xs("redefine"), _xs("override"))
 
 
-def _collect_schema_roots(
-    source: Union[str, os.PathLike], base_dir: Optional[str]
-) -> tuple:
-    """Parse ``source`` and transitively resolve ``xs:include`` (and
-    ``xs:import`` carrying a schemaLocation) against the including file's
-    directory — the filesystem subset of the reference's location-driven
-    loading (loaders.py:84-117, SchemaLoader.load_declared_schemas).
+@dataclass
+class SchemaDoc:
+    """One schema document of a :class:`SchemaGraph`."""
 
-    Returns ``(roots, notes)``: the including document first, then included
-    documents in discovery order (cycles — e.g. the vehicles example's
-    types.xsd↔cars.xsd — are cut by an absolute-path visited set); ``notes``
-    records includes that could not be resolved (string sources with no
-    ``base_dir``, missing files) — recorded loudly, never silently dropped.
-    """
-    notes: list = []
-    roots: list = []
-    redefines: list = []  # (kind, redefine/override node, target root|None)
+    root: ET.Element
+    nsmaps: dict  # id(element) -> {prefix: URI} in scope at it
+    where: str  # file name, or '<string>' for a literal source
+    tns: Optional[str]  # declared targetNamespace (None = absent)
+    effective_tns: str  # a chameleon include adopts its includer's
+    imports: set  # namespaces this document xs:imports
+    # the xs:include/import/redefine/override that reached this document
+    # and the document holding it (None for the source)
+    via: Optional[ET.Element] = None
+    parent: Optional["SchemaDoc"] = None
+
+    def uri_of(self, elem: ET.Element, qname: str) -> Optional[str]:
+        """Namespace URI of one QName reference at ``elem`` ('' = no
+        namespace, None = unresolvable prefix).  In a chameleon-included
+        document, no-namespace references are remapped to the adopted
+        targetNamespace (loaders.py chameleon inclusion)."""
+        nsmap = self.nsmaps.get(id(elem), {})
+        prefix, _, _name = qname.rpartition(":")
+        if prefix:
+            return nsmap.get(prefix)
+        uri = nsmap.get("", "")
+        if uri == "" and self.tns is None and self.effective_tns:
+            return self.effective_tns  # chameleon adoption
+        return uri
+
+
+@dataclass
+class SchemaGraph:
+    """What :func:`load_schema_graph` read.  ``docs``: the source first,
+    then each document the first time a reference reaches it.
+    ``unresolved``: ``(reference node, directory)`` per located reference
+    that could not be followed (directory None: a literal source without
+    ``base_dir``).  ``failures``: ``(path, code, detail)`` per document
+    that is not a schema — code ``not-well-formed`` (detail: the parser's
+    message) or ``not-a-schema`` (detail: the root tag); path None is the
+    literal source."""
+
+    docs: list = field(default_factory=list)
+    unresolved: list = field(default_factory=list)
+    failures: list = field(default_factory=list)
+
+
+def _parse_with_ns(text: str) -> tuple:
+    """``(root, nsmaps)``: the parsed text and, per element, the
+    prefix→URI map in scope at it (ElementTree drops xmlns declarations
+    from ``attrib``; references resolve in the map of their element)."""
+    parser = ET.XMLPullParser(events=("start-ns", "start", "end"))
+    parser.feed(text)
+    ns_stack: list = [{}]
+    pending: list = []
+    nsmaps: dict = {}
+    root = None
+    for event, obj in parser.read_events():
+        if event == "start-ns":
+            pending.append(obj)
+        elif event == "start":
+            ns_stack.append({**ns_stack[-1], **dict(pending)})
+            nsmaps[id(obj)] = ns_stack[-1]
+            pending = []
+            if root is None:
+                root = obj
+        else:
+            ns_stack.pop()
+    parser.close()
+    return root, nsmaps
+
+
+def load_schema_graph(
+    source: Union[str, os.PathLike], base_dir: Optional[str] = None
+) -> SchemaGraph:
+    """Read ``source`` (a path or a literal XSD string) and every document
+    its include/import/redefine/override locations reach, each resolved
+    against its referencing document's directory (``base_dir`` anchors a
+    literal source): the filesystem subset of the reference's SchemaLoader
+    (loaders.py:84-167).  Each path is read once, which cuts include
+    cycles (the vehicles example's types.xsd↔cars.xsd); a document's
+    includes are followed first, then imports, redefines, overrides."""
+    graph = SchemaGraph()
     visited: set = set()
 
-    def load(src, directory, what):
+    def load(src, here, via, parent) -> None:
+        path = None
         if isinstance(src, str) and src.lstrip().startswith("<"):
-            root, here = _parse_schema_text(src, what), directory
+            text = src
         else:
             path = os.path.abspath(os.fspath(src))
             if path in visited:
-                return None
+                return
             visited.add(path)
-            root = _parse_schema_text(read_xml_text(path), path)
-            here = os.path.dirname(path)
-        roots.append(root)
+            # decoded text, parsed as text: a file-like source would
+            # re-apply the declared encoding to its UTF-8 re-encoding
+            text, here = read_xml_text(path), os.path.dirname(path)
+        try:
+            root, nsmaps = _parse_with_ns(text)
+        except ET.ParseError as err:
+            graph.failures.append((path, "not-well-formed", str(err)))
+            return
+        if root.tag != _xs("schema"):
+            graph.failures.append((path, "not-a-schema", root.tag))
+            return
+        tns = root.get("targetNamespace")
+        chameleon = via is not None and via.tag in _INCLUSIONS
+        doc = SchemaDoc(
+            root, nsmaps, os.path.basename(path) if path else "<string>",
+            tns,
+            tns if tns is not None
+            else parent.effective_tns if chameleon else "",
+            {n.get("namespace") or "" for n in root.findall(_xs("import"))},
+            via, parent,
+        )
+        graph.docs.append(doc)
         for tag in ("include", "import", "redefine", "override"):
             for node in root.findall(_xs(tag)):
                 loc = node.get("schemaLocation")
                 if not loc:
                     continue  # location-less import: nothing to fetch
-                if here is None:
-                    notes.append(
-                        f"xs:{tag} {loc!r}: string source has no base "
-                        "directory (pass base_dir=) — skipped"
-                    )
-                    continue
-                target = os.path.join(here, loc)
-                if not os.path.exists(target):
-                    notes.append(f"xs:{tag} {loc!r}: not found under "
-                                 f"{here!r} — skipped")
-                    continue
-                troot = load(target, os.path.dirname(target), target)
-                if tag in ("redefine", "override"):
-                    redefines.append((tag, node, troot))
-        return root
+                target = None if here is None else os.path.join(here, loc)
+                if target is None or not os.path.exists(target):
+                    graph.unresolved.append((node, here))
+                else:
+                    load(target, None, node, doc)
 
-    load(source, base_dir, "source")
-    return roots, notes, redefines
+    load(source, base_dir, None, None)
+    return graph
+
+
+# ---------------------------------------------------------------------------
+# the compiler phases
+# ---------------------------------------------------------------------------
+
+
+def _load(source, base_dir: Optional[str]) -> tuple:
+    """``(graph, notes)``: the schema graph (a document that is not a
+    schema raises) and one restriction note per reference that could not
+    be followed (recorded loudly, never silently dropped)."""
+    graph = load_schema_graph(source, base_dir)
+    if graph.failures:
+        path, code, detail = graph.failures[0]
+        what = path or "source"
+        raise XsdCompileError(
+            f"{what}: not well-formed XML ({detail})"
+            if code == "not-well-formed"
+            else f"{what}: root element is {detail!r}, not xs:schema"
+        )
+    notes = [
+        f"xs:{node.tag.split('}')[-1]} {node.get('schemaLocation')!r}: "
+        + ("string source has no base directory (pass base_dir=)"
+           if here is None else f"not found under {here!r}")
+        + " — skipped"
+        for node, here in graph.unresolved
+    ]
+    return graph, notes
+
+
+def _version_gate(root: ET.Element, version: str) -> Optional[CompiledXsd]:
+    """The empty result of a schema this processor version must ignore
+    (schemas.py XSD_VERSION; issue_349): under 1.0, vc:minVersion > 1.0
+    means no declarations at all — every instance element is then
+    undeclared."""
+    min_v = root.get(
+        "{http://www.w3.org/2007/XMLSchema-versioning}minVersion"
+    )
+    try:
+        inapplicable = bool(min_v) and float(min_v) > float(version)
+    except ValueError:
+        inapplicable = False
+    if not inapplicable:
+        return None
+    return CompiledXsd(specs={}, external_keyrefs=(), restrictions=(
+        f"vc:minVersion {min_v} > processor version {version}: the "
+        "schema is inapplicable — no declarations are available",
+    ), target_namespace=root.get("targetNamespace") or "")
 
 
 def _rewire_self_base(node: ET.Element, name: str, alias: str) -> bool:
@@ -1134,144 +1221,94 @@ def _rewire_self_base(node: ET.Element, name: str, alias: str) -> bool:
     return hit
 
 
-def compile_xsd(
-    source: Union[str, os.PathLike],
-    scope_col: str = "doc_id",
-    order_col: str = "row_idx",
-    row_elements: Optional[Sequence[str]] = None,
-    lexical: bool = True,
-    emit_occurs: bool = True,
-    base_dir: Optional[str] = None,
-    version: str = "1.0",
-) -> CompiledXsd:
-    """Compile an XSD document to TableSpecs (one per row element).
+_REGISTRIES = {
+    _xs("simpleType"): "simple_types",
+    _xs("complexType"): "complex_types",
+    _xs("element"): "elements",
+    _xs("group"): "groups",
+    _xs("attributeGroup"): "attr_groups",
+}
 
-    ``source`` is a filesystem path or a literal XSD string.  ``scope_col``
-    / ``order_col`` name the document-id and document-order columns the flat
-    tables carry (the tabular stand-ins for the XML document identity and
-    child position).  ``row_elements`` overrides auto-detection (elements
-    with ``maxOccurs > 1`` and complex content directly under a global
-    element).  ``lexical=False`` compiles value-space checks only — for
-    tables whose columns are already decoded/typed.  ``xs:include`` /
-    located ``xs:import`` are followed relative to each including file
-    (``base_dir`` supplies the anchor for literal string sources).
-    """
-    roots, include_notes, redefines = _collect_schema_roots(source, base_dir)
-    root = roots[0]
 
-    # version-control gating (schemas.py XSD_VERSION; issue_349): a 1.0
-    # processor must treat a schema with vc:minVersion > 1.0 as having no
-    # declarations at all — every instance element is then undeclared
-    min_v = root.get(
-        "{http://www.w3.org/2007/XMLSchema-versioning}minVersion"
-    )
-    if min_v:
-        try:
-            inapplicable = float(min_v) > float(version)
-        except ValueError:
-            inapplicable = False
-        if inapplicable:
-            return CompiledXsd(
-                specs={},
-                external_keyrefs=(),
-                restrictions=(
-                    f"vc:minVersion {min_v} > processor version "
-                    f"{version}: the schema is inapplicable — no "
-                    "declarations are available",
-                ),
-                target_namespace=root.get("targetNamespace") or "",
-            )
-
-    ctx = _Ctx(root=root, lexical=lexical)
-    ctx.restrictions.extend(include_notes)
-    # xs:redefine / xs:override children REPLACE the target document's
-    # same-named globals (loaders.py redefine/override handling).  They
-    # register FIRST so the later setdefault sweep cannot shadow them; a
-    # redefine whose derivation references its own name (the canonical
-    # redefine pattern) gets the base rewired to the preserved original
-    # under '<name>__orig'.
-    _REG_TAGS = {
-        _xs("simpleType"): "simple_types",
-        _xs("complexType"): "complex_types",
-        _xs("group"): "groups",
-        _xs("attributeGroup"): "attr_groups",
-    }
+def _register(ctx: _Ctx, graph: SchemaGraph) -> None:
+    """Register the global components by local name.  xs:redefine /
+    xs:override children REPLACE the target document's same-named globals
+    (loaders.py redefine/override handling) and register first; a redefine
+    whose derivation references its own name (the canonical pattern) gets
+    the base rewired to the preserved original under '<name>__orig'.
+    Then the first definition wins across the graph (the source first),
+    matching the reference's maps-level registration (loaders.py:118-167:
+    a name is registered once per namespace)."""
+    reached = {id(d.via): d.root for d in graph.docs if d.via is not None}
+    unresolved = {id(node) for node, _here in graph.unresolved}
+    redefines = [
+        (kind, node, reached.get(id(node)))
+        for doc in graph.docs for kind in ("redefine", "override")
+        for node in doc.root.findall(_xs(kind))
+        if node.get("schemaLocation") and id(node) not in unresolved
+    ]
     for kind, node, troot in redefines:
         for child in list(node):
-            regname = _REG_TAGS.get(child.tag)
+            regname = _REGISTRIES.get(child.tag)
             name = child.get("name")
-            if regname is None or name is None:
+            if regname in (None, "elements") or name is None:
                 continue  # xs:annotation etc.
             reg = getattr(ctx, regname)
-            if kind == "redefine":
-                orig = None
-                if troot is not None:
-                    orig = next(
-                        (o for o in troot.findall(child.tag)
-                         if o.get("name") == name), None
+            if kind == "redefine" and _rewire_self_base(child, name,
+                                                        f"{name}__orig"):
+                orig = None if troot is None else next(
+                    (o for o in troot.findall(child.tag)
+                     if o.get("name") == name), None
+                )
+                if orig is None:
+                    raise XsdCompileError(
+                        f"xs:redefine of {name!r}: self-referential "
+                        "derivation but the original definition was not "
+                        "found in the redefined document"
                     )
-                rewired = _rewire_self_base(child, name, f"{name}__orig")
-                if rewired:
-                    if orig is None:
-                        raise XsdCompileError(
-                            f"xs:redefine of {name!r}: self-referential "
-                            "derivation but the original definition was "
-                            "not found in the redefined document"
-                        )
-                    reg[f"{name}__orig"] = orig
+                reg[f"{name}__orig"] = orig
             reg[name] = child
-    # first definition wins across the include graph (the including document
-    # is roots[0]), matching the reference's maps-level global registration
-    # (loaders.py:118-167: a name is registered once per namespace)
-    for r in roots:
-        for st in r.findall(_xs("simpleType")):
-            ctx.simple_types.setdefault(st.get("name"), st)
-        for ct in r.findall(_xs("complexType")):
-            ctx.complex_types.setdefault(ct.get("name"), ct)
-        for el in r.findall(_xs("element")):
-            ctx.elements.setdefault(el.get("name"), el)
-        for g in r.findall(_xs("group")):
-            ctx.groups.setdefault(g.get("name"), g)
-        for ag in r.findall(_xs("attributeGroup")):
-            ctx.attr_groups.setdefault(ag.get("name"), ag)
+    for doc in graph.docs:
+        for child in doc.root:
+            if child.tag in _REGISTRIES:
+                getattr(ctx, _REGISTRIES[child.tag]).setdefault(
+                    child.get("name"), child
+                )
 
-    # --- row-element detection -------------------------------------------
-    # a row element is a repeated complex child directly under a global
-    # element's complexType (the collection/object shape); its parent is the
-    # per-document singleton whose identity constraints scope to scope_col
-    detected: dict = {}  # name -> (decl element, ctype, parent global element)
-    # repeated SIMPLE children of a global element (menù example shape):
-    # name -> (decl element, facet tuple, parent global element)
-    detected_simple: dict = {}
-    # row element -> its particle position under its global element
-    particle_rank: dict = {}
-    n_particles: dict = {}
-    def _model_groups(ct):
-        """Model groups of a complexType, following complexContent
-        extension chains (the base's groups first)."""
-        cc = ct.find(_xs("complexContent"))
-        if cc is not None:
-            for deriv_tag in ("extension", "restriction"):
-                deriv = cc.find(_xs(deriv_tag))
-                if deriv is None:
-                    continue
-                if deriv_tag == "extension":
-                    base = ctx.complex_types.get(_local(deriv.get("base")))
-                    if base is not None:
-                        yield from _model_groups(base)
-                for group_tag in ("sequence", "all", "choice"):
-                    for group in deriv.findall(_xs(group_tag)):
-                        yield group
-            return
+
+def _derivations(content: Optional[ET.Element]) -> list:
+    """The xs:extension then xs:restriction children of a complexContent
+    or simpleContent node (none for None)."""
+    if content is None:
+        return []
+    found = (content.find(_xs(t)) for t in ("extension", "restriction"))
+    return [d for d in found if d is not None]
+
+
+def _model_groups(ctx: _Ctx, ct: ET.Element):
+    """Model groups of a complexType, following complexContent extension
+    chains (the base's groups first)."""
+    cc = ct.find(_xs("complexContent"))
+    for node in [ct] if cc is None else _derivations(cc):
+        if node.tag == _xs("extension"):
+            base = ctx.complex_types.get(_local(node.get("base")))
+            if base is not None:
+                yield from _model_groups(ctx, base)
         for group_tag in ("sequence", "all", "choice"):
-            for group in ct.findall(_xs(group_tag)):
-                yield group
+            yield from node.findall(_xs(group_tag))
 
+
+def _detect_tables(ctx: _Ctx) -> None:
+    """A row element is a repeated child directly under a global element's
+    complexType (the collection/object shape): complex ones become row
+    tables, simple ones one-column tables.  Its parent is the per-document
+    singleton whose identity constraints scope to scope_col."""
+    n_particles: dict = {}
     for gname, gel in ctx.elements.items():
         _, gpayload = _element_type(gel, ctx)
         if not isinstance(gpayload, ET.Element):
             continue
-        for group in _model_groups(gpayload):
+        for group in _model_groups(ctx, gpayload):
             # a repeated model GROUP repeats its children (issue_026's
             # <xs:sequence maxOccurs="unbounded">): effective occurrence
             # bounds multiply through the group's
@@ -1297,194 +1334,167 @@ def compile_xsd(
                 if eff_max is not None and eff_max <= 1:
                     continue
                 kind, payload = _element_type(decl, ctx)
-                particle_rank[decl.get("name")] = position
-                if kind != "complex":
-                    detected_simple[decl.get("name")] = (
-                        el, payload, gel, eff_min, eff_max
-                    )
-                    continue
-                detected[decl.get("name")] = (
-                    el, payload, gel, eff_min, eff_max
+                ctx.particle_rank[decl.get("name")] = position
+                found = (
+                    ctx.detected if kind == "complex"
+                    else ctx.detected_simple
                 )
+                found[decl.get("name")] = (el, payload, gel, eff_min,
+                                           eff_max)
 
-    # --- flatten each row element to columns ------------------------------
-    tables: dict = {}
-    table_uniques: dict = {}
-    table_model: dict = {}
-    for name, (el, ctype, _parent, eff_min, eff_max) in detected.items():
-        cols: list = []
-        uniques: list = []
-        _flatten_type(ctype, ctx, "", cols, uniques, scope_col,
-                      in_choice=False, table=name)
-        tables[name] = cols
-        table_uniques[name] = uniques
-        model: list = []
-        if emit_occurs and (eff_min > 0 or eff_max is not None):
-            model.append(
-                S.Occurs(
-                    f"occurs-{name}", where="TRUE",
-                    min_occurs=eff_min, max_occurs=eff_max,
-                )
-            )
-        table_model[name] = model
 
-    # --- document-singleton tables ------------------------------------------
-    # A global element that CONTAINS row elements may also carry singleton
-    # simple children / attributes of its own (features/decoder/data: config,
-    # duration, ... next to the repeated values).  Those flatten into a
-    # one-row-per-document table named after the global element; its
-    # repeated children stay in their own tables (recorded as skipped paths
-    # so the instance reader knows they're schema-declared).
-    doc_rows: set = set()
+def _flat(ctx: _Ctx, ctype: ET.Element, table: str) -> tuple:
+    """``(columns, identities)`` of ``ctype`` flattened as the row type of
+    ``table`` (the key its skipped paths, wildcards and assertions are
+    recorded under)."""
+    cols: list = []
+    uniques: list = []
+    _flatten_type(ctype, ctx, "", cols, uniques, in_choice=False,
+                  table=table)
+    return cols, uniques
+
+
+def _occurs(name: str, eff_min: int, eff_max: Optional[int]) -> tuple:
+    """Table ``name``'s occurrence bound per container (none when the
+    bounds are 0..unbounded)."""
+    if eff_min <= 0 and eff_max is None:
+        return ()
+    return (S.Occurs(f"occurs-{name}", where="TRUE", min_occurs=eff_min,
+                     max_occurs=eff_max),)
+
+
+def _spec(ctx: _Ctx, name: str, cols: list, identities=(), model=(),
+          assertions=()) -> S.TableSpec:
+    return S.TableSpec(
+        name=name,
+        scope_col=ctx.scope_col,
+        order_col=ctx.order_col,
+        columns=tuple(S.ColumnSpec(c.name, tuple(c.facets)) for c in cols),
+        identities=tuple(identities),
+        model=tuple(model),
+        row_assertions=tuple(assertions),
+    )
+
+
+def _flatten_tables(ctx: _Ctx) -> None:
+    """Columns of each row element, then the document-singleton tables.
+
+    A global element that CONTAINS row elements may also carry singleton
+    simple children / attributes of its own (features/decoder/data:
+    config, duration, ... next to the repeated values).  Those flatten
+    into a one-row-per-document table named after the global element; its
+    repeated children stay in their own tables (recorded as skipped paths
+    so the instance reader knows they're schema-declared)."""
+    for name, (_el, ctype, _parent, eff_min, eff_max) in \
+            ctx.detected.items():
+        ctx.tables[name], ctx.identities[name] = _flat(ctx, ctype, name)
+        ctx.models[name] = _occurs(name, eff_min, eff_max)
     parent_names = {
-        gel.get("name") for (_e, _p, gel, _mn, _mx) in detected.values()
-    } | {
-        gel.get("name")
-        for (_e, _p, gel, _mn, _mx) in detected_simple.values()
+        entry[2].get("name")
+        for found in (ctx.detected, ctx.detected_simple)
+        for entry in found.values()
     }
-    if not detected and not detected_simple:
+    if not ctx.detected and not ctx.detected_simple:
         # pure-singleton documents (issue_028's root): every global complex
         # element with flattenable fields becomes a document table
         parent_names = set(ctx.elements)
     for gname, gel in ctx.elements.items():
-        if gname in tables or gname in detected_simple \
+        if gname in ctx.tables or gname in ctx.detected_simple \
                 or gname not in parent_names:
             continue
         _, gpayload = _element_type(gel, ctx)
         if not isinstance(gpayload, ET.Element):
             continue
-        dcols: list = []
-        duniq: list = []
-        # speculative flatten: if no singleton column exists, roll back the
-        # restriction notes / skipped paths it recorded (the repeated
-        # children DO have their own tables — nothing is being skipped)
-        n_restr = len(ctx.restrictions)
-        prev_skipped = set(ctx.skipped.get(gname, ()))
-        n_asserts = len(ctx.assertions.get(gname, ()))
-        n_wild = len(ctx.wildcards.get(gname, ()))
-        prev_mixed = set(ctx.mixed.get(gname, ()))
-        n_pend = len(ctx.pending_nested)
-        n_cuts = ctx.cycle_cuts
-        _flatten_type(gpayload, ctx, "", dcols, duniq, scope_col,
-                      in_choice=False, table=gname)
-        # zero columns is still a table when the element's content is
-        # schema-declared but not column-izable: a recursion cut
-        # (import-case4), wildcard/mixed open content (issue_298's
-        # Freeform), or repeated descendants that queued NESTED tables
-        # below this document element (issue_190's root -> a -> choice*)
-        # — the instance reader needs the markers / child tables kept
-        new_nested = [
-            e for e in ctx.pending_nested[n_pend:]
-            if e["name"] not in tables and e["name"] not in detected_simple
-        ]
-        declared_open = (
-            ctx.cycle_cuts > n_cuts
-            or len(ctx.wildcards.get(gname, ())) > n_wild
-            or set(ctx.mixed.get(gname, ())) != prev_mixed
-            # repeated descendants needing NEW nested tables (issue_190);
-            # children that already ARE row tables (vehicles' cars/car)
-            # contribute nothing — the row path validates them
-            or bool(new_nested)
-        )
-        if not dcols and not declared_open:
-            del ctx.pending_nested[n_pend:]
-            del ctx.restrictions[n_restr:]
-            if prev_skipped:
-                ctx.skipped[gname] = prev_skipped
-            else:
-                ctx.skipped.pop(gname, None)
-            if gname in ctx.assertions:
-                del ctx.assertions[gname][n_asserts:]
-            if gname in ctx.wildcards:
-                del ctx.wildcards[gname][n_wild:]
-                if not ctx.wildcards[gname]:
-                    del ctx.wildcards[gname]
-            if prev_mixed:
-                ctx.mixed[gname] = prev_mixed
-            else:
-                ctx.mixed.pop(gname, None)
+        # speculative flatten: without a singleton column, roll back what
+        # it recorded (the repeated children DO have their own tables) —
+        # unless the element's content is schema-declared but not
+        # column-izable: a recursion cut (import-case4), wildcard/mixed
+        # open content (issue_298's Freeform), or repeated descendants
+        # that queued NEW nested tables below it (issue_190's root -> a
+        # -> choice*); children that already ARE row tables (vehicles'
+        # cars/car) contribute nothing — the row path validates them
+        mark = ctx.mark(gname)
+        cols, uniques = _flat(ctx, gpayload, gname)
+        if not cols and not ctx.opened(mark, counts=lambda e: (
+            e["name"] not in ctx.tables
+            and e["name"] not in ctx.detected_simple
+        )):
+            ctx.rollback(mark)
             continue
-        doc_rows.add(gname)
-        tables[gname] = dcols
-        table_uniques[gname] = duniq
-        table_model[gname] = []
+        ctx.doc_rows.add(gname)
+        ctx.tables[gname], ctx.identities[gname] = cols, uniques
+        ctx.models[gname] = ()
 
-    # --- xsi:type overlays ---------------------------------------------------
-    # dynamic type substitution on instances (reference elements.py:657-682):
-    # for each row element with a NAMED declared type, every global
-    # complexType DERIVING from it (complexContent base chains) compiles to
-    # an overlay column-set; the instance reader validates rows carrying
-    # xsi:type=T against T's overlay.  Nested repeated children discovered
-    # inside an overlay become nested tables gated on that xsi:type.
-    def _base_chain(tname: str, seen: tuple = ()) -> list:
-        ct = ctx.complex_types.get(tname)
-        if ct is None:
-            return []
-        node = ct.find(_xs("complexContent"))
-        if node is None:
-            node = ct.find(_xs("simpleContent"))
-        if node is None:
-            return []
-        for dt in ("extension", "restriction"):
-            d = node.find(_xs(dt))
-            if d is not None and d.get("base"):
-                b = _local(d.get("base"))
-                if b in seen:
-                    return []
-                return [b] + _base_chain(b, seen + (b,))
+
+def _overlay(ctx: _Ctx, ctype: ET.Element, key: str,
+             spec_name: str) -> tuple:
+    """``(overlay dict, n_pend)``: ``ctype`` flattened under ``key`` (see
+    :func:`_flat`) into the view the instance reader walks, its TableSpec
+    named ``spec_name`` (the violation path prefix).  The nested repeated
+    children it queued are ``ctx.pending_nested[n_pend:]``."""
+    n_pend = len(ctx.pending_nested)
+    cols, uniques = _flat(ctx, ctype, key)
+    return dict(
+        spec=_spec(ctx, spec_name, cols, uniques,
+                   assertions=ctx.assertions.get(key, ())),
+        column_paths={c.name: c.path for c in cols},
+        skipped=frozenset(ctx.skipped.get(key, ())),
+        wildcards=tuple(ctx.wildcards.get(key, ())),
+        mixed=frozenset(ctx.mixed.get(key, ())),
+    ), n_pend
+
+
+def _base_chain(ctx: _Ctx, tname: str, seen: tuple = ()) -> list:
+    """Names of the types ``tname`` derives from, nearest first."""
+    ct = ctx.complex_types.get(tname)
+    if ct is None:
         return []
+    node = ct.find(_xs("complexContent"))
+    if node is None:
+        node = ct.find(_xs("simpleContent"))
+    for d in _derivations(node):
+        if d.get("base"):
+            b = _local(d.get("base"))
+            if b in seen:
+                return []
+            return [b] + _base_chain(ctx, b, seen + (b,))
+    return []
 
-    derived_of: dict = {}
+
+def _xsi_overlays(ctx: _Ctx, name: str, d_local: str,
+                  nested: bool) -> None:
+    """Dynamic type substitution on instances (reference
+    elements.py:657-682): for table ``name`` of declared type ``d_local``,
+    every global complexType DERIVING from it compiles to an overlay the
+    instance reader validates rows carrying xsi:type=T against.  Nested
+    repeated children found inside a row table's overlay become nested
+    tables gated on that xsi:type; below a nested table's overlay they are
+    not supported."""
+    if d_local:
+        ctx.declared_types[name] = d_local
+    for T in ctx.derived_of.get(d_local, ()):
+        key = f"{name}@{T}"
+        ov, n_pend = _overlay(ctx, ctx.complex_types[T], key, key)
+        if nested:
+            del ctx.pending_nested[n_pend:]
+        for ent in ctx.pending_nested[n_pend:]:
+            if ent["parent"] == key:
+                ent["parent"] = name
+                ent["xsi_type"] = T
+        ctx.xsi_overlays.setdefault(name, {})[T] = ov
+
+
+def _overlays(ctx: _Ctx, version: str) -> None:
+    """The overlays of the row tables: xsi:type (:func:`_xsi_overlays`),
+    XSD 1.1 conditional type alternatives and substitution-group
+    members."""
     for tname in ctx.complex_types:
-        for b in _base_chain(tname):
-            derived_of.setdefault(b, []).append(tname)
-
-    def overlay(ctype: ET.Element, key: str, spec_name: str) -> tuple:
-        """``(overlay dict, n_pend)``: ``ctype`` flattened under the overlay
-        key ``key`` (the table name its assertions, skipped paths,
-        wildcards and mixed paths are recorded under) into the view the
-        instance reader walks, its TableSpec named ``spec_name`` (the
-        violation path prefix).  Nested repeated children it discovered
-        are ``ctx.pending_nested[n_pend:]``, parented on ``key``."""
-        cols: list = []
-        uniq: list = []
-        n_pend = len(ctx.pending_nested)
-        _flatten_type(ctype, ctx, "", cols, uniq, scope_col,
-                      in_choice=False, table=key)
-        return dict(
-            spec=S.TableSpec(
-                name=spec_name,
-                scope_col=scope_col,
-                order_col=order_col,
-                columns=tuple(
-                    S.ColumnSpec(c.name, tuple(c.facets)) for c in cols
-                ),
-                identities=tuple(uniq),
-                row_assertions=tuple(ctx.assertions.get(key, ())),
-            ),
-            column_paths={c.name: c.path for c in cols},
-            skipped=frozenset(ctx.skipped.get(key, ())),
-            wildcards=tuple(ctx.wildcards.get(key, ())),
-            mixed=frozenset(ctx.mixed.get(key, ())),
-        ), n_pend
-
-    xsi_overlays: dict = {}
-    declared_types: dict = {}
-    for name, (el, _ctype, _p, _mn, _mx) in detected.items():
+        for b in _base_chain(ctx, tname):
+            ctx.derived_of.setdefault(b, []).append(tname)
+    for name, (el, *_rest) in ctx.detected.items():
         decl = _resolve_element(el, ctx)
-        d_local = _local(decl.get("type") or "")
-        if d_local:
-            declared_types[name] = d_local
-        for T in derived_of.get(d_local, ()):
-            key = f"{name}@{T}"
-            ov, n_pend = overlay(ctx.complex_types[T], key, key)
-            for ent in ctx.pending_nested[n_pend:]:
-                if ent["parent"] == key:
-                    ent["parent"] = name
-                    ent["xsi_type"] = T
-            xsi_overlays.setdefault(name, {})[T] = ov
-
-    # --- XSD 1.1 conditional type alternatives -------------------------------
+        _xsi_overlays(ctx, name, _local(decl.get("type") or ""),
+                      nested=False)
     # <xs:alternative test="@mode='A'" type="T"/> children of an element
     # declaration (reference XsdAlternative elements.py:1450-1476,
     # conditional assignment elements.py:1345-1365): instance rows whose
@@ -1492,9 +1502,8 @@ def compile_xsd(
     # type.  Supported test subset: @attr='v' equality (and the
     # unconditional final arm); anything richer records a restriction and
     # the arm is not applied — never silently dropped.
-    alt_overlays: dict = {}
     if version != "1.0":
-        for name, (el, _ctype, _p, _mn, _mx) in detected.items():
+        for name, (el, *_rest) in ctx.detected.items():
             decl = _resolve_element(el, ctx)
             for arm in decl.findall(_xs("alternative")):
                 test = arm.get("test")
@@ -1518,22 +1527,19 @@ def compile_xsd(
                     )
                     continue
                 # violation paths read '<element>/<col>'
-                ov, n_pend = overlay(ctx.complex_types[tlocal],
-                                     f"{name}@alt@{tlocal}", name)
+                ov, n_pend = _overlay(ctx, ctx.complex_types[tlocal],
+                                      f"{name}@alt@{tlocal}", name)
                 del ctx.pending_nested[n_pend:]  # not supported below arms
-                alt_overlays.setdefault(name, []).append(
+                ctx.alt_overlays.setdefault(name, []).append(
                     dict(attr=attr, value=value, type=tlocal, **ov)
                 )
-
-    # --- substitution-group members as document structure --------------------
     # a global element with substitutionGroup=H may stand in for H in the
     # instance (elements.py:611-621): compile the member's type to an
     # overlay the reader validates member rows against, merging them into
     # the head's table for occurrence/identity checks
-    subst_overlays: dict = {}
     for gname, gel in ctx.elements.items():
         head = _local(gel.get("substitutionGroup") or "")
-        if not head or head not in detected or gname in detected:
+        if not head or head not in ctx.detected or gname in ctx.detected:
             continue
         mkind, mpayload = _element_type(gel, ctx)
         if mkind != "complex":
@@ -1545,7 +1551,7 @@ def compile_xsd(
             continue
         key = f"{head}@@{gname}"
         # violation paths read '<member>/<col>'
-        ov, n_pend = overlay(mpayload, key, gname)
+        ov, n_pend = _overlay(ctx, mpayload, key, gname)
         new = ctx.pending_nested[n_pend:]
         for ent in new:
             if ent["parent"] == key:  # not supported below members
@@ -1557,22 +1563,22 @@ def compile_xsd(
         ctx.pending_nested[n_pend:] = [
             e for e in new if e["parent"] != key
         ]
-        subst_overlays.setdefault(head, {})[gname] = ov
+        ctx.subst_overlays.setdefault(head, {})[gname] = ov
 
-    # --- nested repeated tables --------------------------------------------
-    # repeated children BELOW a row element become their own tables scoped
-    # per parent row (composite doc#parentIndex in the ordinary scope
-    # column), processed as a queue so nesting levels chain; an element
-    # already modelled as a table elsewhere keeps its skipped-path marker
-    # and is not duplicated
-    nested_meta: dict = {}  # name -> NestedTable
+
+def _nested_tables(ctx: _Ctx) -> None:
+    """Repeated children BELOW a row element become their own tables
+    scoped per parent row (composite doc#parentIndex in the ordinary scope
+    column), processed as a queue so nesting levels chain; an element
+    already modelled as a table elsewhere keeps its skipped-path marker
+    and is not duplicated."""
     qi = 0
     while qi < len(ctx.pending_nested):
         ent = ctx.pending_nested[qi]
         qi += 1
         nname = ent["name"]
-        if nname in tables or nname in detected_simple \
-                or nname in nested_meta:
+        if nname in ctx.tables or nname in ctx.detected_simple \
+                or nname in ctx.nested:
             continue
         if len(ent["path"]) > 6:
             ctx.restrictions.append(
@@ -1581,147 +1587,121 @@ def compile_xsd(
             )
             continue
         if ent["kind"] == "simple":
-            ncols = [_Column("value", list(ent["payload"]), path=())]
-            nuniq: list = []
+            ctx.tables[nname] = [_Column("value", list(ent["payload"]))]
+            ctx.identities[nname] = []
         else:
-            ncols, nuniq = [], []
-            _flatten_type(ent["payload"], ctx, "", ncols, nuniq, scope_col,
-                          in_choice=False, table=nname)
-        tables[nname] = ncols
-        table_uniques[nname] = nuniq
-        model: list = []
-        if emit_occurs and (
-            ent["eff_min"] > 0 or ent["eff_max"] is not None
-        ):
-            model.append(
-                S.Occurs(
-                    f"occurs-{nname}", where="TRUE",
-                    min_occurs=ent["eff_min"], max_occurs=ent["eff_max"],
-                )
+            ctx.tables[nname], ctx.identities[nname] = _flat(
+                ctx, ent["payload"], nname
             )
-        table_model[nname] = model
-        nested_meta[nname] = NestedTable(
+        ctx.models[nname] = _occurs(nname, ent["eff_min"], ent["eff_max"])
+        ctx.nested[nname] = NestedTable(
             parent_table=ent["parent"], rel_path=tuple(ent["path"]),
             xsi_type=ent.get("xsi_type"),
         )
-        particle_rank[nname] = qi
-        # xsi:type overlays for the NESTED table's own derived types
-        # (issue_314: <item b:type="Concrete..."> below a doc row): same
-        # overlay shape as row elements, applied by _flatten_nested
-        d_local = ent.get("type_name") or ""
-        if d_local:
-            declared_types[nname] = d_local
-        for T in derived_of.get(d_local, ()):
-            key = f"{nname}@{T}"
-            ov, n_pend = overlay(ctx.complex_types[T], key, key)
-            del ctx.pending_nested[n_pend:]  # not supported below overlays
-            xsi_overlays.setdefault(nname, {})[T] = ov
+        ctx.particle_rank[nname] = qi
+        # the nested table's own derived types (issue_314: <item
+        # b:type="Concrete..."> below a doc row)
+        _xsi_overlays(ctx, nname, ent["type_name"], nested=True)
 
-    # --- identity constraints ---------------------------------------------
-    # constraints may sit on ANY element declaration; resolve each selector
-    # to the row element it selects (identities.py:252-337)
-    keys_by_name: dict = {}  # key/unique name -> (table, field cols)
-    per_table_idents: dict = {n: list(table_uniques[n]) for n in tables}
-    pending_keyrefs: list = []
-    seen_constraints: set = set()
 
-    def walk_constraints(el: ET.Element, host: Optional[str] = None):
-        for tag, cls in (("unique", S.Unique), ("key", S.Key),
-                         ("keyref", S.Keyref)):
-            for node in el.findall(_xs(tag)):
-                # a named/ref'd type can be reached from several walks;
-                # constraint names are unique per schema — compile once
-                if node.get("name") in seen_constraints:
-                    continue
-                seen_constraints.add(node.get("name"))
-                sel = node.find(_xs("selector")).get("xpath")
-                fields = [
-                    f.get("xpath") for f in node.findall(_xs("field"))
-                ]
-                sel_tokens = _xpath_tokens(sel)
-                # locate the row element along the selector path
-                table = None
-                rest: list = []
-                last_wins = False
-                for i, t in enumerate(sel_tokens):
-                    if t in tables:
-                        table = t
-                        rest = sel_tokens[i + 1:]
-                        break
-                if table is None and host in tables and not sel_tokens:
-                    # constraint declared ON a row element itself with
-                    # selector '.' (collection3bis): each element is its
-                    # own scope; the reference propagates the key upward
-                    # with last-sibling-override, so only the LAST
-                    # occurrence per document is visible to outer keyrefs
-                    table = host
-                    rest = []
-                    last_wins = True
-                if table is None:
-                    ctx.restrictions.append(
-                        f"identity {node.get('name')!r}: selector {sel!r} "
-                        "does not reach a row element (skipped)"
-                    )
-                    continue
-                if table in nested_meta:
-                    # a nested table's scope column is doc#parentIndex —
-                    # correct exactly when the constraint is declared on
-                    # an ancestor in its parent chain (issue_245: key on
-                    # 'part' selecting './/circle')
-                    chain = {table}
-                    cur = table
-                    while cur in nested_meta:
-                        cur = nested_meta[cur].parent_table
-                        chain.add(cur)
-                    if host not in chain:
-                        ctx.restrictions.append(
-                            f"identity {node.get('name')!r}: selector "
-                            f"{sel!r} reaches nested table {table!r} from "
-                            f"outside its parent chain (host "
-                            f"{host!r}; skipped)"
-                        )
-                        continue
-                cols = tuple(
-                    _flatten_field(rest, _xpath_tokens(fx)) for fx in fields
+def _constraints(ctx: _Ctx, el: ET.Element, host: Optional[str]):
+    """``(xs:unique/key/keyref node, host element name)`` for every
+    identity constraint declared at or below ``el``."""
+    for tag in ("unique", "key", "keyref"):
+        for node in el.findall(_xs(tag)):
+            yield node, host
+    for child in el:
+        if child.tag == _xs("element"):
+            decl = child if child.get("name") else _resolve_element(
+                child, ctx
+            )
+            yield from _constraints(ctx, child, decl.get("name"))
+        elif child.tag in (_xs("complexType"),) + _MODEL_GROUPS:
+            yield from _constraints(ctx, child, host)
+
+
+_IDENTITY = {_xs("unique"): S.Unique, _xs("key"): S.Key,
+             _xs("keyref"): S.Keyref}
+
+
+def _identities(ctx: _Ctx) -> None:
+    """Identity constraints may sit on ANY element declaration: resolve
+    each selector to the table it selects (identities.py:252-337).  A
+    keyref whose key lives on another table is an ExternalKeyref."""
+    keys_by_name: dict = {}  # key/unique name -> (table, field cols, last)
+    keyrefs: list = []
+    seen: set = set()
+    walks = [(gel, gname) for gname, gel in ctx.elements.items()]
+    walks += [(ct, None) for ct in ctx.complex_types.values()]
+    for el, top in walks:
+        for node, host in _constraints(ctx, el, top):
+            name = node.get("name")
+            # a named/ref'd type can be reached from several walks;
+            # constraint names are unique per schema — compile once
+            if name in seen:
+                continue
+            seen.add(name)
+            sel = node.find(_xs("selector")).get("xpath")
+            fields = [f.get("xpath") for f in node.findall(_xs("field"))]
+            sel_tokens = _xpath_tokens(sel)
+            # locate the table along the selector path
+            table = None
+            rest: list = []
+            last_wins = False
+            for i, t in enumerate(sel_tokens):
+                if t in ctx.tables:
+                    table = t
+                    rest = sel_tokens[i + 1:]
+                    break
+            if table is None and host in ctx.tables and not sel_tokens:
+                # constraint declared ON a row element itself with
+                # selector '.' (collection3bis): each element is its own
+                # scope; the reference propagates the key upward with
+                # last-sibling-override, so only the LAST occurrence per
+                # document is visible to outer keyrefs
+                table = host
+                last_wins = True
+            if table is None:
+                ctx.restrictions.append(
+                    f"identity {name!r}: selector {sel!r} does not reach "
+                    "a row element (skipped)"
                 )
-                known = {c.name for c in tables[table]}
-                bad = [c for c in cols if c not in known]
-                if bad:
-                    ctx.restrictions.append(
-                        f"identity {node.get('name')!r}: fields {bad} not "
-                        f"columns of {table} (skipped)"
-                    )
-                    continue
-                if tag == "keyref":
-                    pending_keyrefs.append((node.get("name"), table, cols,
-                                            _local(node.get("refer"))))
-                elif last_wins:
-                    # single-element scope: per-document uniqueness does
-                    # NOT apply (duplicate sibling keys are legal — the
-                    # later one overrides); record for keyref resolution
-                    keys_by_name[node.get("name")] = (table, cols, True)
-                else:
-                    per_table_idents[table].append(
-                        cls(node.get("name"), fields=cols, scope=scope_col)
-                    )
-                    keys_by_name[node.get("name")] = (table, cols, False)
-        for child in el:
-            if child.tag == _xs("element"):
-                decl = child if child.get("name") else _resolve_element(
-                    child, ctx
+                continue
+            # a nested table's scope column is doc#parentIndex — correct
+            # exactly when the constraint is declared on an ancestor in
+            # its parent chain (issue_245: key on 'part' selecting
+            # './/circle')
+            if table in ctx.nested and host not in _chain(ctx.nested,
+                                                          table):
+                ctx.restrictions.append(
+                    f"identity {name!r}: selector {sel!r} reaches nested "
+                    f"table {table!r} from outside its parent chain (host "
+                    f"{host!r}; skipped)"
                 )
-                walk_constraints(child, host=decl.get("name"))
-            elif child.tag in (_xs("complexType"), _xs("sequence"),
-                               _xs("all"), _xs("choice")):
-                walk_constraints(child, host=host)
-
-    for gname, gel in ctx.elements.items():
-        walk_constraints(gel, host=gname)
-    for ct in ctx.complex_types.values():
-        walk_constraints(ct)
-
-    external: list = []
-    for name, table, cols, refer in pending_keyrefs:
+                continue
+            cols = tuple(
+                _flatten_field(rest, _xpath_tokens(fx)) for fx in fields
+            )
+            known = {c.name for c in ctx.tables[table]}
+            bad = [c for c in cols if c not in known]
+            if bad:
+                ctx.restrictions.append(
+                    f"identity {name!r}: fields {bad} not columns of "
+                    f"{table} (skipped)"
+                )
+            elif node.tag == _xs("keyref"):
+                keyrefs.append((name, table, cols, _local(node.get("refer"))))
+            elif last_wins:
+                # single-element scope: per-document uniqueness does NOT
+                # apply (duplicate sibling keys are legal — the later one
+                # overrides); record for keyref resolution
+                keys_by_name[name] = (table, cols, True)
+            else:
+                ctx.identities[table].append(_IDENTITY[node.tag](
+                    name, fields=cols, scope=ctx.scope_col
+                ))
+                keys_by_name[name] = (table, cols, False)
+    for name, table, cols, refer in keyrefs:
         if refer not in keys_by_name:
             ctx.restrictions.append(
                 f"keyref {name!r}: refers to unknown key {refer!r} (skipped)"
@@ -1729,92 +1709,82 @@ def compile_xsd(
             continue
         key_table, key_cols, last_wins = keys_by_name[refer]
         kr = S.Keyref(
-            name, fields=cols, refer_fields=key_cols, scope=scope_col
+            name, fields=cols, refer_fields=key_cols, scope=ctx.scope_col
         )
         if key_table == table and not last_wins:
-            per_table_idents[table].append(kr)
+            ctx.identities[table].append(kr)
         else:
-            external.append(
+            ctx.external.append(
                 ExternalKeyref(kr, table=table, key_table=key_table,
                                key_selector_cols=key_cols,
                                last_wins=last_wins)
             )
 
+
+def _chain(nested: dict, table: str) -> list:
+    """``table`` and the tables above it, its top row table last."""
+    chain = [table]
+    while chain[-1] in nested:
+        chain.append(nested[chain[-1]].parent_table)
+    return chain
+
+
+def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
+              ) -> CompiledXsd:
+    """The TableSpecs and reader maps of every table, restricted to
+    ``row_elements`` (and the nested tables below them) when given."""
     specs = {
-        name: S.TableSpec(
-            name=name,
-            scope_col=scope_col,
-            order_col=order_col,
-            columns=tuple(
-                S.ColumnSpec(c.name, tuple(c.facets)) for c in tables[name]
-            ),
-            identities=tuple(per_table_idents[name]),
-            model=tuple(table_model[name]),
-            row_assertions=tuple(ctx.assertions.get(name, ())),
-        )
-        for name in tables
+        name: _spec(ctx, name, ctx.tables[name], ctx.identities[name],
+                    ctx.models[name], ctx.assertions.get(name, ()))
+        for name in ctx.tables
     }
     parent_of = {
         name: parent.get("name")
-        for name, (_el, _ct, parent, _mn, _mx) in detected.items()
+        for name, (_el, _ct, parent, *_b) in ctx.detected.items()
     }
-    parent_of.update({name: name for name in doc_rows})
+    parent_of.update({name: name for name in ctx.doc_rows})
     # a nested table reads through its TOP row element's container
-    for nname, nt in nested_meta.items():
-        top = nt.parent_table
-        while top in nested_meta:
-            top = nested_meta[top].parent_table
+    for nname in ctx.nested:
+        top = _chain(ctx.nested, nname)[-1]
         parent_of[nname] = parent_of.get(top, top)
     column_paths = {
-        name: {c.name: c.path for c in tables[name]} for name in tables
+        name: {c.name: c.path for c in cols}
+        for name, cols in ctx.tables.items()
     }
+
+    def value_table(name, facets, parent, identities=(), model=()):
+        specs[name] = _spec(ctx, name, [_Column("value", facets)],
+                            identities, model)
+        parent_of[name] = parent
+        column_paths[name] = {"value": ()}
+
     # repeated SIMPLE children as one-column tables: one row per element
     # occurrence, 'value' = element text carrying the simple type's facets
-    for name, (el, facets, gel, eff_min, eff_max) in detected_simple.items():
-        model = (
-            (S.Occurs(f"occurs-{name}", where="TRUE",
-                      min_occurs=eff_min, max_occurs=eff_max),)
-            if emit_occurs and (eff_min > 0 or eff_max is not None) else ()
-        )
+    for name, (_el, facets, gel, eff_min, eff_max) in \
+            ctx.detected_simple.items():
         # element content deriving from xs:ID carries the document-wide ID
         # uniqueness rule (simple_types.py:758-780), same as ID attributes
-        idents = tuple(
+        idents = (
             (S.Unique(f"{name}-id-unique", fields=("value",),
-                      scope=scope_col),)
+                      scope=ctx.scope_col),)
             if any(isinstance(f, S.BuiltinLexical) and f.type_name == "ID"
                    for f in facets) else ()
         )
-        specs[name] = S.TableSpec(
-            name=name,
-            scope_col=scope_col,
-            order_col=order_col,
-            columns=(S.ColumnSpec("value", tuple(facets)),),
-            identities=idents,
-            model=model,
-        )
-        parent_of[name] = gel.get("name")
-        column_paths[name] = {"value": ()}
-
+        value_table(name, facets, gel.get("name"), idents,
+                    _occurs(name, eff_min, eff_max))
     # global SIMPLE-typed elements as document-value tables (issue_223's
     # shape: the root element IS one simple value).  Only when nothing else
     # was detected — a schema with real row tables keeps auxiliary global
     # simple declarations as declarations, not tables.
+    doc_rows = set(ctx.doc_rows)
     preserve_space: set = set()
     if not specs:
         for gname, gel in ctx.elements.items():
-            kind, payload = _element_type(gel, ctx)
+            kind, facets = _element_type(gel, ctx)
             if kind != "simple":
                 continue
-            facets = tuple(payload)
-            specs[gname] = S.TableSpec(
-                name=gname,
-                scope_col=scope_col,
-                order_col=order_col,
-                columns=(S.ColumnSpec("value", facets),),
-            )
+            value_table(gname, facets, gname)
             doc_rows.add(gname)
-            parent_of[gname] = gname
-            column_paths[gname] = {"value": ()}
             # whiteSpace preserve (no collapse/replace facet, no non-string
             # builtin): the instance reader must keep surrounding space so
             # facet checks see the raw lexical value (issue_223's trailing
@@ -1830,6 +1800,7 @@ def compile_xsd(
             "child under a global element and no flattenable document "
             "fields (pass row_elements= to override)"
         )
+    external = ctx.external
     if row_elements is not None:
         missing = [r for r in row_elements if r not in specs]
         if missing:
@@ -1838,11 +1809,9 @@ def compile_xsd(
                 f"children of a global element (detected: {sorted(specs)})"
             )
         keep = list(row_elements)
-        for nname, nt in nested_meta.items():
-            top = nt.parent_table
-            while top in nested_meta:
-                top = nested_meta[top].parent_table
-            if top in row_elements and nname not in keep:
+        for nname in ctx.nested:
+            if _chain(ctx.nested, nname)[-1] in row_elements \
+                    and nname not in keep:
                 keep.append(nname)  # nested tables follow their parent
         specs = {k: specs[k] for k in keep}
         external = [
@@ -1854,16 +1823,13 @@ def compile_xsd(
     # data among element children (gates the container _VALUE check)
     mixed_containers: set = set()
     for gname, gel in ctx.elements.items():
-        _k, gpayload = _element_type(gel, ctx)
-        if not isinstance(gpayload, ET.Element):
-            continue
-        gcc = gpayload.find(_xs("complexContent"))
-        m = (
-            gcc.get("mixed") if gcc is not None
-            and gcc.get("mixed") is not None else gpayload.get("mixed")
-        )
-        if m == "true":
+        gpayload = _element_type(gel, ctx)[1]
+        if isinstance(gpayload, ET.Element) and _effective_mixed(gpayload):
             mixed_containers.add(gname)
+
+    def kept(d: dict) -> dict:
+        return {n: v for n, v in d.items() if n in specs}
+
     return CompiledXsd(
         specs=specs,
         external_keyrefs=tuple(external),
@@ -1871,37 +1837,60 @@ def compile_xsd(
         parent_of=parent_of,
         column_paths=column_paths,
         skipped_paths={
-            name: frozenset(ctx.skipped.get(name, ())) for name in tables
+            name: frozenset(ctx.skipped.get(name, ())) for name in ctx.tables
         },
-        simple_rows=frozenset(detected_simple),
+        simple_rows=frozenset(ctx.detected_simple),
         doc_rows=frozenset(doc_rows),
-        wildcards={
-            name: tuple(ctx.wildcards.get(name, ())) for name in specs
-        },
-        mixed_paths={
-            name: frozenset(ctx.mixed.get(name, ())) for name in specs
-        },
+        wildcards={n: tuple(ctx.wildcards.get(n, ())) for n in specs},
+        mixed_paths={n: frozenset(ctx.mixed.get(n, ())) for n in specs},
         mixed_containers=frozenset(mixed_containers),
-        target_namespace=root.get("targetNamespace") or "",
+        target_namespace=ctx.root.get("targetNamespace") or "",
         global_elements=frozenset(ctx.elements),
         preserve_space=frozenset(preserve_space),
-        nested_tables={
-            n: nt for n, nt in nested_meta.items() if n in specs
-        },
-        xsi_overlays={
-            n: o for n, o in xsi_overlays.items() if n in specs
-        },
-        declared_types=declared_types,
-        subst_overlays={
-            n: o for n, o in subst_overlays.items() if n in specs
-        },
-        alt_overlays={
-            n: tuple(o) for n, o in alt_overlays.items() if n in specs
-        },
-        particle_rank={
-            n: r for n, r in particle_rank.items() if n in specs
-        },
+        nested_tables=kept(ctx.nested),
+        xsi_overlays=kept(ctx.xsi_overlays),
+        declared_types=ctx.declared_types,
+        subst_overlays=kept(ctx.subst_overlays),
+        alt_overlays={n: tuple(o) for n, o in kept(ctx.alt_overlays).items()},
+        particle_rank=kept(ctx.particle_rank),
     )
+
+
+def compile_xsd(
+    source: Union[str, os.PathLike],
+    scope_col: str = "doc_id",
+    order_col: str = "row_idx",
+    row_elements: Optional[Sequence[str]] = None,
+    lexical: bool = True,
+    base_dir: Optional[str] = None,
+    version: str = "1.0",
+) -> CompiledXsd:
+    """Compile an XSD document to TableSpecs (one per row element).
+
+    ``source`` is a filesystem path or a literal XSD string.  ``scope_col``
+    / ``order_col`` name the document-id and document-order columns the flat
+    tables carry (the tabular stand-ins for the XML document identity and
+    child position).  ``row_elements`` overrides auto-detection (elements
+    with ``maxOccurs > 1`` and complex content directly under a global
+    element).  ``lexical=False`` compiles value-space checks only — for
+    tables whose columns are already decoded/typed.  ``xs:include`` /
+    located ``xs:import`` are followed relative to each including file
+    (``base_dir`` supplies the anchor for literal string sources).
+    """
+    graph, notes = _load(source, base_dir)
+    root = graph.docs[0].root
+    gated = _version_gate(root, version)
+    if gated is not None:
+        return gated
+    ctx = _Ctx(root=root, scope_col=scope_col, order_col=order_col,
+               lexical=lexical, restrictions=notes)
+    _register(ctx, graph)
+    _detect_tables(ctx)
+    _flatten_tables(ctx)
+    _overlays(ctx, version)
+    _nested_tables(ctx)
+    _identities(ctx)
+    return _assemble(ctx, row_elements)
 
 
 def xsd_to_spec(

@@ -31,7 +31,9 @@ Implemented check families (each cites the reference machinery it mirrors):
   resolve in its own document's namespace context, chameleon includes adopt
   the including document's targetNamespace, a foreign-namespace reference
   requires a matching ``xs:import`` (loaders.py:84-167;
-  default_ns_invalid.xsd, import-case1/2, include-case4/6/7);
+  default_ns_invalid.xsd, import-case1/2, include-case4/6/7).  The
+  document graph comes from ``xsd_compile.load_schema_graph``, the loader
+  the compiler reads too;
 * **derivation checks** — enumeration restrictions must narrow the base's
   enumeration (issue #202), ``xs:list`` items must be atomic (list_types
   .xsd), complexContent extension of a mixed base must stay mixed
@@ -52,17 +54,19 @@ import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 from typing import Optional, Union
 
-from sissaschool_xmlschema_spark.functions.lexical import XSD_LEXICAL
-from sissaschool_xmlschema_spark.xml_text import read_xml_text
+from sissaschool_xmlschema_spark.xsd_compile import (
+    BUILTIN_TYPES,
+    XSD_NS,
+    SchemaDoc,
+    _derivations,
+    _effective_mixed,
+    _xs,
+    load_schema_graph,
+)
 
-XSD_NS = "http://www.w3.org/2001/XMLSchema"
 VC_NS = "http://www.w3.org/2007/XMLSchema-versioning"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 XSI_NS = "http://www.w3.org/2001/XMLSchema-instance"
-
-
-def _xs(tag: str) -> str:
-    return f"{{{XSD_NS}}}{tag}"
 
 
 def _localtag(elem: ET.Element) -> str:
@@ -78,72 +82,9 @@ class SchemaError:
     reason: str
 
 
-# ---------------------------------------------------------------------------
-# namespace-aware parsing and the document graph
-# ---------------------------------------------------------------------------
-
-
-def _parse_with_ns(text: str):
-    """Parse keeping a per-element prefix→URI map (ElementTree drops xmlns
-    declarations from ``attrib``; references must resolve in the nsmap in
-    scope at their declaring element)."""
-    parser = ET.XMLPullParser(events=("start-ns", "start", "end"))
-    parser.feed(text)
-    ns_stack: list = [{}]
-    pending: list = []
-    nsmaps: dict = {}
-    root = None
-    for event, obj in parser.read_events():
-        if event == "start-ns":
-            pending.append(obj)
-        elif event == "start":
-            cur = dict(ns_stack[-1])
-            for p, u in pending:
-                cur[p] = u
-            pending = []
-            ns_stack.append(cur)
-            nsmaps[id(obj)] = cur
-            if root is None:
-                root = obj
-        else:
-            ns_stack.pop()
-    parser.close()
-    return root, nsmaps
-
-
-@dataclass
-class _Doc:
-    root: ET.Element
-    nsmaps: dict
-    where: str  # path or '<string>'
-    tns: Optional[str]  # declared targetNamespace (None = absent)
-    effective_tns: str  # adopted tns for chameleon includes
-    imports: set = field(default_factory=set)  # imported namespace URIs
-
-    def uri_of(self, elem: ET.Element, qname: str) -> Optional[str]:
-        """Namespace URI of one QName reference at ``elem`` ('' = no
-        namespace, None = unresolvable prefix).  In a chameleon-included
-        document, no-namespace references are remapped to the adopted
-        targetNamespace (loaders.py chameleon inclusion)."""
-        nsmap = self.nsmaps.get(id(elem), {})
-        prefix, _, _local = qname.rpartition(":")
-        if prefix:
-            return nsmap.get(prefix)
-        uri = nsmap.get("", "")
-        if uri == "" and self.tns is None and self.effective_tns:
-            return self.effective_tns  # chameleon adoption
-        return uri
-
-
-_GLOBAL_KINDS = {
-    "simpleType": "type",
-    "complexType": "type",
-    "element": "element",
-    "attribute": "attribute",
-    "group": "group",
-    "attributeGroup": "attributeGroup",
-    "notation": "notation",
-}
+# the global component kinds, each registered once per namespace
+_GLOBAL_KINDS = {"simpleType", "complexType", "element", "attribute",
+                 "group", "attributeGroup", "notation"}
 
 
 @dataclass
@@ -160,70 +101,36 @@ class _Ctx:
         self.errors.append(SchemaError(where, code, reason))
 
 
-def _load_graph(ctx: _Ctx, source, base_dir: Optional[str]) -> None:
-    visited: set = set()
-
-    def load(src, directory, adopted_tns, via, via_where):
-        if isinstance(src, str) and src.lstrip().startswith("<"):
-            text, where, here = src, "<string>", directory
-        else:
-            path = os.path.abspath(os.fspath(src))
-            if path in visited:
-                return
-            visited.add(path)
-            text = read_xml_text(path)
-            where, here = os.path.basename(path), os.path.dirname(path)
-        try:
-            root, nsmaps = _parse_with_ns(text)
-        except ET.ParseError as e:
-            ctx.err(where, "not-well-formed", str(e))
-            return
-        if root is None or root.tag != _xs("schema"):
-            ctx.err(where, "not-a-schema",
-                    f"root element is not xs:schema in {where}")
-            return
-        tns = root.get("targetNamespace")
-        effective = tns if tns is not None else (
-            adopted_tns if via in ("include", "redefine", "override")
-            else ""
-        ) or ""
-        doc = _Doc(root=root, nsmaps=nsmaps, where=where, tns=tns,
-                   effective_tns=effective)
-        ctx.docs.append(doc)
-        if via in ("include", "redefine", "override") and tns is not None \
-                and tns != (adopted_tns or None):
+def _load(ctx: _Ctx, source, base_dir: Optional[str]) -> None:
+    """The schema graph and its documents' errors: one that is not a
+    schema, an included one (also redefined or overridden) whose
+    targetNamespace differs from its includer's (loaders.py include
+    rules).  Unreachable locations are hints, not errors."""
+    graph = load_schema_graph(source, base_dir)
+    ctx.docs = graph.docs
+    for path, code, detail in graph.failures:
+        where = os.path.basename(path) if path else "<string>"
+        ctx.err(where, code, detail if code == "not-well-formed"
+                else f"root element is not xs:schema in {where}")
+    for doc in ctx.docs:
+        if doc.via is None or _localtag(doc.via) == "import":
+            continue
+        adopted = doc.parent.effective_tns
+        if doc.tns is not None and doc.tns != (adopted or None):
             ctx.err(
-                where, "include-namespace-mismatch",
-                f"xs:{via} of a document with a different targetNamespace "
-                f"{tns!r} (including document: {adopted_tns!r}) — "
-                "loaders.py include rules",
+                doc.where, "include-namespace-mismatch",
+                f"xs:{_localtag(doc.via)} of a document with a different "
+                f"targetNamespace {doc.tns!r} (including document: "
+                f"{adopted!r}) — loaders.py include rules",
             )
-        for node in root:
-            tag = _localtag(node)
-            if tag not in ("include", "import", "redefine", "override"):
-                continue
-            if tag == "import":
-                doc.imports.add(node.get("namespace") or "")
-            loc = node.get("schemaLocation")
-            if not loc or here is None:
-                continue
-            target = os.path.join(here, loc)
-            if not os.path.exists(target):
-                continue  # unreachable locations are hints, not errors
-            load(target, os.path.dirname(target),
-                 doc.effective_tns if tag != "import" else None,
-                 tag, where)
-
-    load(source, base_dir, None, "root", "<root>")
 
 
 def _build_registry(ctx: _Ctx) -> None:
     for doc in ctx.docs:
         for child in doc.root:
             tag = _localtag(child)
-            kind = _GLOBAL_KINDS.get(tag)
             name = child.get("name")
-            if kind is None or name is None:
+            if tag not in _GLOBAL_KINDS or name is None:
                 continue
             key = (tag, doc.effective_tns, name)
             if key in ctx.registry:
@@ -346,16 +253,6 @@ _COMPLEXTYPE_CHILDREN = {
     "simpleContent", "complexContent",
 }
 
-_BUILTIN_EXTRA = {
-    "string", "boolean", "hexBinary", "base64Binary", "anySimpleType",
-    "anyAtomicType", "anyType", "normalizedString", "token", "anyURI",
-}
-
-
-def _is_builtin_name(local: str) -> bool:
-    return local in XSD_LEXICAL or local in _BUILTIN_EXTRA
-
-
 # ---------------------------------------------------------------------------
 # individual checks
 # ---------------------------------------------------------------------------
@@ -365,7 +262,7 @@ def _in_annotation(parents: list) -> bool:
     return any(_localtag(p) == "annotation" for p in parents)
 
 
-def _walk(doc: _Doc):
+def _walk(doc: SchemaDoc):
     """(element, parents) for every descendant, skipping annotations."""
     stack = [(doc.root, [])]
     while stack:
@@ -377,7 +274,7 @@ def _walk(doc: _Doc):
             stack.append((child, parents + [el]))
 
 
-def _check_syntax(ctx: _Ctx, doc: _Doc) -> None:
+def _check_syntax(ctx: _Ctx, doc: SchemaDoc) -> None:
     """Attribute/child legality + version gating (xsdbase.py:117-146)."""
     for el, parents in _walk(doc):
         if el.tag.startswith("{") and not el.tag.startswith(_xs("")):
@@ -447,7 +344,7 @@ def _check_syntax(ctx: _Ctx, doc: _Doc) -> None:
                 )
 
 
-def _check_occurs(ctx: _Ctx, doc: _Doc) -> None:
+def _check_occurs(ctx: _Ctx, doc: SchemaDoc) -> None:
     """minOccurs > maxOccurs (particles.py:77-108)."""
     for el, parents in _walk(doc):
         if not el.tag.startswith(_xs("")):
@@ -525,7 +422,23 @@ def _ns_admits(ns_set: str, uri: Optional[str], target_ns: str) -> bool:
     return False
 
 
-def _particle_names(ctx: _Ctx, doc: _Doc, el: ET.Element):
+def _name(el: ET.Element) -> str:
+    """Local name an element particle declares or refers to."""
+    return el.get("name") or (el.get("ref") or "").rpartition(":")[-1]
+
+
+def _abstract(ctx: _Ctx, uri: Optional[str], local: str) -> bool:
+    decl = _lookup(ctx, ("element",), uri, local)
+    return decl is not None and decl[1].get("abstract") == "true"
+
+
+def _repeats(el: ET.Element) -> bool:
+    """A particle that can occur more often than its minimum."""
+    mn, mx = int(el.get("minOccurs", "1")), el.get("maxOccurs", "1")
+    return mx == "unbounded" or int(mx) > mn
+
+
+def _particle_names(ctx: _Ctx, doc: SchemaDoc, el: ET.Element):
     """Name set {(uri, local)} of one element particle, substitution
     members included, abstract heads excluded (models.py distinguishable
     particles)."""
@@ -539,11 +452,7 @@ def _particle_names(ctx: _Ctx, doc: _Doc, el: ET.Element):
                                               "unqualified")
         uri = doc.effective_tns if form == "qualified" else ""
     names = set()
-    decl = _lookup(ctx, ("element",), uri, local)
-    abstract = (
-        decl is not None and decl[1].get("abstract") == "true"
-    )
-    if not abstract:
+    if not _abstract(ctx, uri, local):
         names.add((uri, local))
     stack = [(uri, local)]
     seen = set(stack)
@@ -557,7 +466,7 @@ def _particle_names(ctx: _Ctx, doc: _Doc, el: ET.Element):
     return names
 
 
-def _check_upa(ctx: _Ctx, doc: _Doc) -> None:
+def _check_upa(ctx: _Ctx, doc: SchemaDoc) -> None:
     """Unique Particle Attribution over direct element/wildcard particles
     of each model group (models.py check_model; invalid_models1/2.xsd):
     all/choice — any overlapping pair; sequence — an adjacent pair where
@@ -591,12 +500,6 @@ def _check_upa(ctx: _Ctx, doc: _Doc) -> None:
             names = s2 if k1 == "wild" else s1
             return any(_ns_admits(wild_ns, u, tns) for u, _n in names)
 
-        def repeats(p):
-            _k, e, _s = p
-            mn = int(e.get("minOccurs", "1"))
-            mx = e.get("maxOccurs", "1")
-            return mx == "unbounded" or int(mx) > mn
-
         tag = _localtag(el)
         if tag in ("choice", "all"):
             for i in range(len(particles)):
@@ -609,7 +512,7 @@ def _check_upa(ctx: _Ctx, doc: _Doc) -> None:
                         )
         else:  # sequence: ambiguity needs a repeatable prefix particle
             for i in range(len(particles) - 1):
-                if repeats(particles[i]) and overlap(particles[i],
+                if _repeats(particles[i][1]) and overlap(particles[i],
                                                      particles[i + 1]):
                     ctx.err(
                         doc.where, "upa-violation",
@@ -636,7 +539,7 @@ _REF_KIND_BY_TAG = {
 }
 
 
-def _check_references(ctx: _Ctx, doc: _Doc) -> None:
+def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
     """Namespace-aware QName resolution (loaders.py:118-167): the
     referenced component must exist under the resolved namespace, and a
     foreign namespace must be imported by THIS document (import-case2)."""
@@ -662,10 +565,8 @@ def _check_references(ctx: _Ctx, doc: _Doc) -> None:
             uri = doc.uri_of(el, qname)
             local = qname.rpartition(":")[-1]
             if uri == XSD_NS:
-                if not _is_builtin_name(local) and local not in (
-                    "ID", "IDREF", "IDREFS", "ENTITY", "ENTITIES",
-                    "NOTATION", "NMTOKEN", "NMTOKENS", "Name", "NCName",
-                    "QName", "language",
+                if local not in BUILTIN_TYPES and local not in (
+                    "IDREFS", "ENTITIES", "NMTOKENS",
                 ):
                     ctx.err(
                         doc.where, "unknown-builtin",
@@ -694,7 +595,7 @@ def _check_references(ctx: _Ctx, doc: _Doc) -> None:
 # --- derivation checks ----------------------------------------------------
 
 
-def _resolve_type_chain(ctx: _Ctx, doc: _Doc, el: ET.Element,
+def _resolve_type_chain(ctx: _Ctx, doc: SchemaDoc, el: ET.Element,
                         qname: str, limit: int = 20):
     """Follow simpleType restriction chains by base QName."""
     chain = []
@@ -718,7 +619,7 @@ def _resolve_type_chain(ctx: _Ctx, doc: _Doc, el: ET.Element,
     return chain
 
 
-def _check_derivations(ctx: _Ctx, doc: _Doc) -> None:
+def _check_derivations(ctx: _Ctx, doc: SchemaDoc) -> None:
     for el, parents in _walk(doc):
         if el.tag == _xs("list"):
             item = el.get("itemType")
@@ -766,13 +667,6 @@ def _check_derivations(ctx: _Ctx, doc: _Doc) -> None:
             _check_complex_content(ctx, doc, ct, el)
 
 
-def _effective_mixed(ct: ET.Element) -> bool:
-    cc = ct.find(_xs("complexContent"))
-    if cc is not None and cc.get("mixed") is not None:
-        return cc.get("mixed") == "true"
-    return ct.get("mixed") == "true"
-
-
 def _model_group_of(ct_or_deriv: ET.Element):
     for tag in ("sequence", "choice", "all"):
         g = ct_or_deriv.find(_xs(tag))
@@ -781,25 +675,18 @@ def _model_group_of(ct_or_deriv: ET.Element):
     # a derived base: the derivation node's OWN group (its additions) —
     # issue_265's FullStudentInfo declares studienliste inside its
     # complexContent extension
-    cc = ct_or_deriv.find(_xs("complexContent"))
-    if cc is not None:
-        for dt in ("extension", "restriction"):
-            d = cc.find(_xs(dt))
-            if d is not None:
-                return _model_group_of(d)
-    return None
+    derivs = _derivations(ct_or_deriv.find(_xs("complexContent")))
+    return _model_group_of(derivs[0]) if derivs else None
 
 
-def _check_complex_content(ctx: _Ctx, doc: _Doc, ct: ET.Element,
+def _check_complex_content(ctx: _Ctx, doc: SchemaDoc, ct: ET.Element,
                            cc: ET.Element) -> None:
     """complexContent derivation legality (complex_types.py derivation
     checks): mixed-content mismatch on extension (complex-extensions.xsd),
     1.0 base-order violation for choice restrictions (issue_203), dropped
     required particles in sequence restrictions (invalid-restrictions2)."""
-    for deriv_tag in ("extension", "restriction"):
-        deriv = cc.find(_xs(deriv_tag))
-        if deriv is None:
-            continue
+    for deriv in _derivations(cc):
+        deriv_tag = _localtag(deriv)
         base_q = deriv.get("base")
         if not base_q:
             continue
@@ -829,12 +716,10 @@ def _check_complex_content(ctx: _Ctx, doc: _Doc, ct: ET.Element,
         if base_group is None or deriv_group is None:
             continue
         base_names = [
-            (c.get("name") or (c.get("ref") or "").rpartition(":")[-1])
-            for c in base_group if c.tag == _xs("element")
+            _name(c) for c in base_group if c.tag == _xs("element")
         ]
         deriv_names = [
-            (c.get("name") or (c.get("ref") or "").rpartition(":")[-1])
-            for c in deriv_group if c.tag == _xs("element")
+            _name(c) for c in deriv_group if c.tag == _xs("element")
         ]
         if (
             ctx.version == "1.0"
@@ -858,20 +743,14 @@ def _check_complex_content(ctx: _Ctx, doc: _Doc, ct: ET.Element,
             # under 1.1 unless the member particle can repeat)
             deriv_particles: dict = {}
             for c in deriv_group.iter(_xs("element")):
-                nm = (
-                    c.get("name")
-                    or (c.get("ref") or "").rpartition(":")[-1]
-                )
-                deriv_particles.setdefault(nm, c)
+                deriv_particles.setdefault(_name(c), c)
             for c in base_group:
                 if c.tag != _xs("element"):
                     continue
                 if int(c.get("minOccurs", "1")) < 1:
                     continue
                 ref = c.get("ref")
-                nm = (
-                    c.get("name") or (ref or "").rpartition(":")[-1]
-                )
+                nm = _name(c)
                 if nm in deriv_particles:
                     continue
                 huri = (
@@ -883,18 +762,10 @@ def _check_complex_content(ctx: _Ctx, doc: _Doc, ct: ET.Element,
                 }
                 standing = sorted(members & set(deriv_particles))
                 if standing:
-                    decl = _lookup(ctx, ("element",), huri, nm)
-                    head_abstract = (
-                        decl is not None
-                        and decl[1].get("abstract") == "true"
-                    )
-                    if head_abstract:
+                    if _abstract(ctx, huri, nm):
                         continue  # head can't appear: no ambiguity
                     p = deriv_particles[standing[0]]
-                    mn = int(p.get("minOccurs", "1"))
-                    mx = p.get("maxOccurs", "1")
-                    repeats = mx == "unbounded" or int(mx) > mn
-                    if ctx.version == "1.0" or repeats:
+                    if ctx.version == "1.0" or _repeats(p):
                         ctx.err(
                             doc.where, "restriction-substituted-head",
                             f"restriction of {base_q!r} replaces head "
@@ -911,7 +782,7 @@ def _check_complex_content(ctx: _Ctx, doc: _Doc, ct: ET.Element,
                 )
 
 
-def _check_default_attributes(ctx: _Ctx, doc: _Doc) -> None:
+def _check_default_attributes(ctx: _Ctx, doc: SchemaDoc) -> None:
     """1.1 defaultAttributes must resolve to an attributeGroup
     (default_attributes-missing_group.xsd)."""
     if ctx.version == "1.0":
@@ -945,7 +816,7 @@ def validate_schema_document(
     for the implemented check families; ``version`` selects the 1.0/1.1
     legality rules the reference switches on ``--version``."""
     ctx = _Ctx(version=version)
-    _load_graph(ctx, source, base_dir)
+    _load(ctx, source, base_dir)
     _build_registry(ctx)
     for doc in ctx.docs:
         _check_syntax(ctx, doc)
