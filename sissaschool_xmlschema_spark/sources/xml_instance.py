@@ -524,6 +524,8 @@ class _Document:
         self.spark, self.path, self.prefix = spark, path, prefix
         self.label = os.path.basename(str(path))
         self.containers: dict = {}  # (rowTag, preserve_space) -> DataFrame
+        # container local name -> the one table reporting its stray text
+        self.char_data: dict = {}
         self.prefixes: dict = {}  # container local name -> sniffed prefix
         self._nsmap: Optional[dict] = None
 
@@ -920,9 +922,11 @@ def _flatten_one(src: _Document, compiled, name):
     }
 
     # container-level stray character data (legitimate when the container's
-    # type is mixed="true" — complex_types.py:35)
+    # type is mixed="true" — complex_types.py:35), flagged by one table per
+    # container (src.char_data)
     if "_VALUE" in fields and not has_own_text \
-            and parent not in compiled.mixed_containers:
+            and parent not in compiled.mixed_containers \
+            and src.char_data.setdefault(parent, name) == name:
         txt = F.trim(F.col("`_VALUE`").cast("string"))
         read.flag(
             container, txt.isNotNull() & (txt != ""), "structure:char-data",
@@ -1082,6 +1086,12 @@ def validate_xml_instance(
         )
     tables = [table] if table else sorted(compiled.specs)
     src = _Document(spark, xml_path, prefix)
+    # stray text in a container shared by several tables is one error (as
+    # the reference reports it): on the container's document row, else on
+    # its first table
+    src.char_data.update(
+        (compiled.parent_of[n], n) for n in tables if n in compiled.doc_rows
+    )
     parts: list = []
     flats: dict = {}
     for name in tables:

@@ -1026,3 +1026,27 @@ def test_declared_encoding_honored(spark):
     assert count_errors(
         spark, f"{d}/menù-cp1252.xml", f"{d}/menù-cp1252.xsd"
     ) == 0
+
+
+def test_stray_text_flagged_once_per_container(spark, tmp_path):
+    """Stray text inside <shop>, the container of four tables, is one
+    char-data violation (the reference reports one error), on the
+    document row that owns the container."""
+    p = tmp_path / "shop-stray.xml"
+    with open(SHOP_XML, encoding="utf-8") as f:
+        p.write_text(f.read().replace("<title>", " stray <title>"))
+    c = compile_xsd(SHOP_XSD, version="1.1")
+
+    def char_data(violations) -> Counter:
+        return Counter({
+            k: n for k, n in _triples(violations).items()
+            if k[1] == "structure:char-data"
+        })
+
+    assert char_data(validate_xml_instance(spark, str(p), c)) == Counter([
+        ("shop/shop", "structure:char-data", "stray"),
+    ])
+    # validating one table alone still sees its container's stray text
+    assert char_data(
+        validate_xml_instance(spark, str(p), c, table="rec")
+    ) == Counter([("shop/rec", "structure:char-data", "stray")])
