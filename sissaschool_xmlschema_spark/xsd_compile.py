@@ -1541,6 +1541,11 @@ def _overlays(ctx: _Ctx, version: str) -> None:
         head = _local(gel.get("substitutionGroup") or "")
         if not head or head not in ctx.detected or gname in ctx.detected:
             continue
+        # the member stands where its head does: declared content of the
+        # document row beside the head's table
+        container = ctx.detected[head][2].get("name")
+        if container in ctx.doc_rows:
+            ctx.skipped.setdefault(container, set()).add((gname,))
         mkind, mpayload = _element_type(gel, ctx)
         if mkind != "complex":
             ctx.restrictions.append(

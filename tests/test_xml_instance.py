@@ -1028,6 +1028,26 @@ def test_declared_encoding_honored(spark):
     ) == 0
 
 
+def test_shop_document_violations(spark):
+    """The shop document's full violation multiset under XSD 1.0 (the
+    gauge alternative arm is 1.1-only, so its @level is undeclared).  The
+    widget members standing in for product are declared content of the
+    shop document row, not undeclared elements."""
+    assert _triples(
+        validate_xml_instance(spark, SHOP_XML, compile_xsd(SHOP_XSD))
+    ) == Counter([
+        ("rec@Derived/b", "facet:b:BuiltinLexical", "x"),
+        ("shop/gauge", "structure:undeclared-attribute", "5"),
+        ("widget/gears", "facet:gears:Required", None),
+    ])
+    assert _triples(validate_xml_instance(
+        spark, SHOP_XML, compile_xsd(SHOP_XSD, version="1.1")
+    )) == Counter([
+        ("rec@Derived/b", "facet:b:BuiltinLexical", "x"),
+        ("widget/gears", "facet:gears:Required", None),
+    ])
+
+
 def test_stray_text_flagged_once_per_container(spark, tmp_path):
     """Stray text inside <shop>, the container of four tables, is one
     char-data violation (the reference reports one error), on the
