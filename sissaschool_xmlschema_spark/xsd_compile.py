@@ -831,7 +831,7 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
         for group in ct.findall(_xs(group_tag)):
             child_in_choice = in_choice or group_tag == "choice"
             # xs:choice branches are mutually exclusive: collect each
-            # branch's columns for one RowAssertion (_choice_assertion)
+            # branch's columns for the choice's RowAssertion
             branches: list = []
             # a repeated model group repeats its children (issue_026):
             # they belong in their own tables, not in this row's columns
