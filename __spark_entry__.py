@@ -119,13 +119,6 @@ def _validated(spark: SparkSession, sf_dir: str):
     return _VALIDATION_CACHE[key]
 
 
-def clear_validation_cache() -> None:
-    """Unpersist all memoized violation frames (bench hygiene)."""
-    for res in _VALIDATION_CACHE.values():
-        res.violations.unpersist()
-    _VALIDATION_CACHE.clear()
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 

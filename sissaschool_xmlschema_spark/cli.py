@@ -65,17 +65,19 @@ def cmd_validate(args: argparse.Namespace) -> int:
         }
     else:
         res = schema.run(df)
-        if args.output:
-            res.violations.write.mode("overwrite").parquet(
-                f"{args.output}/violations"
-            )
-            res.verdicts().write.mode("overwrite").parquet(
-                f"{args.output}/verdicts"
-            )
-        summary = {
-            "rows": df.count(),
-            "violations": res.violations.count(),
-        }
+        # one suite execution: the writes and the count read the cache
+        viol = res.violations.persist()
+        try:
+            if args.output:
+                viol.write.mode("overwrite").parquet(
+                    f"{args.output}/violations"
+                )
+                res.verdicts().write.mode("overwrite").parquet(
+                    f"{args.output}/verdicts"
+                )
+            summary = {"rows": df.count(), "violations": viol.count()}
+        finally:
+            viol.unpersist()
     print(json.dumps(summary))
     return 0 if args.exit_zero or summary["violations"] == 0 else 1
 

@@ -90,15 +90,6 @@ def lm_quality(
     )
 
 
-def lm_quality_gate(
-    scores: DataFrame, min_avg_logp: float
-) -> DataFrame:
-    """Keep-list gate on the LM score: documents whose mean token
-    log-probability clears the threshold (higher = more typical of the
-    corpus; heavy-OOV / boilerplate-free garbage scores low)."""
-    return scores.filter(F.col("avg_logp") >= min_avg_logp)
-
-
 # --- bigram extension --------------------------------------------------------
 #
 # Conditional scoring P(w | prev) with add-α smoothing over a closed top-K

@@ -30,6 +30,8 @@ All violations land in the engine's canonical violation schema
 Each check is built as a program of prebuilt Columns (:class:`UniqueProgram`,
 :class:`KeyrefProgram`): ``validate`` keeps them per compiled plan and binds
 them to each input; the standalone functions build and bind them per call.
+The incremental runner (``streaming/incremental.py``) writes each program's
+``partial`` aggregate per micro-batch and calls its ``merge`` at the end.
 """
 
 from __future__ import annotations
@@ -77,6 +79,10 @@ def _filters(df: DataFrame, filters) -> DataFrame:
     return df
 
 
+def _sum_by(partials: DataFrame, keys: list, names) -> DataFrame:
+    return partials.groupBy(*keys).agg(*[F.sum(n).alias(n) for n in names])
+
+
 @dataclass
 class UniqueProgram:
     """One xs:unique / xs:key duplicate count as Columns built once
@@ -88,11 +94,17 @@ class UniqueProgram:
     having: F.Column
     select: list
 
+    def partial(self, df: DataFrame) -> DataFrame:
+        """Per-tuple counts ``(scope?, *fields, _n)``, before the having."""
+        return _filters(df, self.filters).groupBy(*self.keys).agg(self.count)
+
     def dups(self, df: DataFrame) -> DataFrame:
-        return (
-            _filters(df, self.filters).groupBy(*self.keys).agg(self.count)
-            .filter(self.having)
-        )
+        return self.partial(df).filter(self.having)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        """:meth:`dups` from the :meth:`partial` counts of parts of the
+        input — the counter merge (schemas.py:1386-1389)."""
+        return _sum_by(partials, self.keys, ["_n"]).filter(self.having)
 
     def bind(self, df: DataFrame) -> DataFrame:
         return self.dups(df).select(*self.select)
@@ -188,25 +200,40 @@ class KeyrefProgram:
     broadcast: bool = False
     cond: F.Column | None = None
 
-    def misses(self, df: DataFrame,
-               keys_df: DataFrame | None = None) -> DataFrame:
-        refs = _filters(df, self.filters)
-        if self.fused:
-            return (
-                refs.groupBy(*self.keys).agg(*self.aggs).filter(self.having)
-                .drop("_n_key")
-            )
-        key_src = keys_df if keys_df is not None else df
-        keys = (
-            _filters(key_src, self.key_filters).select(*self.key_cols)
+    def partial(self, df: DataFrame) -> DataFrame:
+        """Referencing counts per tuple ``(scope?, *fields, _n)`` (fused:
+        and the key count ``_n_key``), before the having or anti-join."""
+        return _filters(df, self.filters).groupBy(*self.keys).agg(*self.aggs)
+
+    def key_set(self, df: DataFrame) -> DataFrame:
+        """The distinct key tuples ``(_k_0, ...)`` the anti-join matches."""
+        return (
+            _filters(df, self.key_filters).select(*self.key_cols)
             .dropDuplicates()
         )
+
+    def misses(self, df: DataFrame,
+               keys_df: DataFrame | None = None) -> DataFrame:
+        if self.fused:
+            return self.partial(df).filter(self.having).drop("_n_key")
+        keys = self.key_set(keys_df if keys_df is not None else df)
         if self.broadcast:
             keys = F.broadcast(keys)
         return (
-            refs.join(keys, self.cond, "left_anti").groupBy(*self.keys)
-            .agg(*self.aggs)
+            _filters(df, self.filters).join(keys, self.cond, "left_anti")
+            .groupBy(*self.keys).agg(*self.aggs)
         )
+
+    def merge(self, partials: DataFrame,
+              key_sets: DataFrame | None = None) -> DataFrame:
+        """:meth:`misses` from the :meth:`partial` counts and, unless
+        fused, the :meth:`key_set` tuples of parts of the input
+        (schemas.py:1391-1405); the anti-join reads only group keys."""
+        refs = _sum_by(partials, self.keys,
+                       ["_n", "_n_key"] if self.fused else ["_n"])
+        if self.fused:
+            return refs.filter(self.having).drop("_n_key")
+        return refs.join(key_sets.dropDuplicates(), self.cond, "left_anti")
 
     def bind(self, df: DataFrame,
              keys_df: DataFrame | None = None) -> DataFrame:

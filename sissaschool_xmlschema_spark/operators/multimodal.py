@@ -121,13 +121,3 @@ def extract_features(
         "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_payloads)
     )
     return media.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def media_metadata_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only profiling — never touches payload bytes, so the parquet
-    scan prunes the blob column entirely (check ReadSchema in .explain)."""
-    return media.groupBy("mime").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("width").alias("avg_width"),
-        F.avg("height").alias("avg_height"),
-    )

@@ -17,6 +17,9 @@ shuffle of tiny partial rows), used where no ordered pass runs over the full inp
 Both passes are built as programs of prebuilt Columns (:class:`PassProgram`,
 :class:`OccursProgram`): ``validate`` keeps them per compiled plan and binds
 them to each input; the standalone functions build and bind them per call.
+The incremental runner (``streaming/incremental.py``) writes the
+:class:`OccursProgram` counts per micro-batch and applies its ``merged``
+bounds at the end of the stream.
 """
 
 from __future__ import annotations
@@ -317,8 +320,9 @@ def _occurs_reason(c: S.Occurs) -> str:
 @dataclass
 class OccursProgram:
     """The standalone Occurs bounds as Columns built once
-    (:func:`occurs_program`): per-scope conditional counts (salted partials
-    first when ``salt_key`` is set), then :func:`occurs_report`."""
+    (:func:`occurs_program`): per-scope conditional counts (salted partials,
+    summed by ``merge``, first when ``salt_key`` is set), then the bounds
+    check and violation rows of ``report`` and ``flatten``."""
 
     scope: Column
     counts: List[Column]
@@ -329,12 +333,17 @@ class OccursProgram:
 
     def bind(self, df: DataFrame) -> DataFrame:
         if self.salt_key is not None:
-            counts = (
+            return self.merged(
                 df.groupBy(self.salt_key, self.scope).agg(*self.counts)
-                .groupBy(self.scope).agg(*self.merge)
             )
-        else:
-            counts = df.groupBy(self.scope).agg(*self.counts)
+        return self.reported(df.groupBy(self.scope).agg(*self.counts))
+
+    def merged(self, partials: DataFrame) -> DataFrame:
+        """The bounds over summed per-scope ``_n_<i>`` partial counts."""
+        return self.reported(partials.groupBy(self.scope).agg(*self.merge))
+
+    def reported(self, counts: DataFrame) -> DataFrame:
+        """Violation rows of per-scope counts."""
         return counts.select(*self.report).select(*self.flatten)
 
 
@@ -359,46 +368,6 @@ def occurs_program(
     occurs = [c for c in checks if isinstance(c, S.Occurs)]
     if not occurs:
         return None
-    report, flatten = occurs_report(occurs, table, scope)
-    return OccursProgram(
-        scope=F.col(scope),
-        counts=[
-            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
-            for i, c in enumerate(occurs)
-        ],
-        report=report,
-        flatten=flatten,
-        salt_key=F.pmod(
-            F.xxhash64(F.col(scope), F.monotonically_increasing_id()),
-            F.lit(salt),
-        ).alias("_salt") if salt > 0 else None,
-        merge=[
-            F.sum(F.col(f"_n_{i}")).alias(f"_n_{i}")
-            for i in range(len(occurs))
-        ] if salt > 0 else [],
-    )
-
-
-def occurs_violations(
-    df: DataFrame,
-    checks: Sequence[S.Occurs],
-    table: str,
-    scope: str,
-    salt: int = 0,
-) -> DataFrame | None:
-    """The bounds of :func:`occurs_program` over ``df``."""
-    prog = occurs_program(checks, table, scope, salt)
-    return None if prog is None else prog.bind(df)
-
-
-def occurs_report(
-    occurs: Sequence[S.Occurs],
-    table: str,
-    scope: str,
-) -> tuple:
-    """``(report, flatten)`` select lists: bounds check + violation rows over
-    pre-aggregated per-scope counts (``scope`` + one ``_n_<i>`` column per
-    constraint, in ``occurs`` order)."""
     structs = []
     for i, c in enumerate(occurs):
         n = F.col(f"_n_{i}")
@@ -414,29 +383,38 @@ def occurs_report(
             )
         )
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    report = [
-        F.col(scope).cast("string").alias("conv_id"),
-        F.lit(None).cast("long").alias("turn_idx"),
-        F.explode(arr).alias("_v"),
-    ]
-    flatten = [F.col(c) for c in VIOLATION_COLS[:2]] + [
-        F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]
-    ]
-    return report, flatten
+    return OccursProgram(
+        scope=F.col(scope),
+        counts=[
+            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
+            for i, c in enumerate(occurs)
+        ],
+        report=[
+            F.col(scope).cast("string").alias("conv_id"),
+            F.lit(None).cast("long").alias("turn_idx"),
+            F.explode(arr).alias("_v"),
+        ],
+        flatten=[F.col(c) for c in VIOLATION_COLS[:2]] + [
+            F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]
+        ],
+        salt_key=F.pmod(
+            F.xxhash64(F.col(scope), F.monotonically_increasing_id()),
+            F.lit(salt),
+        ).alias("_salt") if salt > 0 else None,
+        merge=[
+            F.sum(F.col(f"_n_{i}")).alias(f"_n_{i}")
+            for i in range(len(occurs))
+        ],
+    )
 
 
-def occurs_violations_from_counts(
-    counts: DataFrame,
-    occurs: Sequence[S.Occurs],
+def occurs_violations(
+    df: DataFrame,
+    checks: Sequence[S.Occurs],
     table: str,
     scope: str,
-) -> DataFrame:
-    """:func:`occurs_report` over ``counts``.
-
-    Split out so the incremental runner can MERGE per-batch partial counts
-    (a sum — conditional counts are distributive) and reuse the exact same
-    reporting: the cross-batch analogue of the reference's identity-counter
-    merge applied to particle occurrence bounds (particles.py:109-126 +
-    schemas.py:1386-1389)."""
-    report, flatten = occurs_report(occurs, table, scope)
-    return counts.select(*report).select(*flatten)
+    salt: int = 0,
+) -> DataFrame | None:
+    """The bounds of :func:`occurs_program` over ``df``."""
+    prog = occurs_program(checks, table, scope, salt)
+    return None if prog is None else prog.bind(df)

@@ -162,6 +162,21 @@ def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFram
     return None if prog is None else prog.bind(df)
 
 
+def verdict_rollup(scopes: DataFrame, violations: DataFrame) -> DataFrame:
+    """Per-scope pass/fail — the validity rollup (schemas.py:851-876): the
+    distinct ``conv_id`` values of ``scopes`` left-joined to the violation
+    count per ``conv_id``; a scope with any violation is 'invalid'."""
+    per_scope = violations.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_violations")
+    )
+    n = F.coalesce(F.col("n_violations"), F.lit(0))
+    return scopes.dropDuplicates().join(per_scope, "conv_id", "left").select(
+        "conv_id",
+        n.alias("n_violations"),
+        F.when(n > 0, "invalid").otherwise("valid").alias("validity"),
+    )
+
+
 @dataclass
 class ValidationResult:
     """Lax-mode result: the violations DataFrame plus rollups."""
@@ -171,28 +186,18 @@ class ValidationResult:
     spec: S.TableSpec
 
     def verdicts(self) -> DataFrame:
-        """Per-scope pass/fail — the validity rollup (schemas.py:851-876).
-
-        Left join of all scopes against the distinct violating scopes; a scope
-        with any violation is 'invalid', else 'valid'.
+        """:func:`verdict_rollup` over every scope of the input.
 
         Scope-less (document-wide) violations carry a NULL conv_id and are by
         design NOT attributed to any scope here — they still fail
         :meth:`is_valid` and appear in :meth:`by_constraint`; use the
         violations frame directly for table-level verdicts.
         """
-        scopes = self.source.select(
-            F.col(self.spec.scope_col).cast("string").alias("conv_id")
-        ).dropDuplicates()
-        per_scope = self.violations.groupBy("conv_id").agg(
-            F.count(F.lit(1)).alias("n_violations")
-        )
-        return scopes.join(per_scope, "conv_id", "left").select(
-            "conv_id",
-            F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
-            F.when(F.coalesce(F.col("n_violations"), F.lit(0)) > 0, "invalid")
-            .otherwise("valid")
-            .alias("validity"),
+        return verdict_rollup(
+            self.source.select(
+                F.col(self.spec.scope_col).cast("string").alias("conv_id")
+            ),
+            self.violations,
         )
 
     def by_constraint(self) -> DataFrame:

@@ -9,30 +9,29 @@ schemas.py:1391-1405).  The Spark lowering:
 * **row-local checks** (facets, row assertions, xs:key missing fields) are
   stateless projections — they run unchanged on a streaming DataFrame (one
   micro-batch = one lazy subtree).
-* **identity constraints** need cross-batch state: each micro-batch's partial
-  key counts merge into a persistent key-count store (parquet), exactly the
-  ``counter.update(counter.counter)`` merge; duplicates are whatever exceeds 1
-  after the merge.  Keyrefs accumulate per-batch referencing-tuple counts and
-  key-tuple sets the same way; :meth:`IncrementalResult.keyref_misses` runs
-  the end-of-stream anti-join — the ``_validate_references`` epilogue
-  (schemas.py:1391-1405: still-enabled keyrefs + unresolved IDREFs at
-  document end), so a reference seen in batch 1 whose key arrives in batch 5
-  resolves, and one that never resolves is reported.
-* **occurrence bounds & verdicts** need the same cross-batch treatment:
-  each micro-batch lands per-scope conditional-count partials under
-  ``occstate/batch=<id>`` (conditional counts are distributive, so the
-  merge is a sum); :meth:`IncrementalResult.occurs_violations` applies the
-  min/maxOccurs bounds AFTER the merge and :meth:`IncrementalResult.verdicts`
-  rolls merged facet + identity + occurrence violations into the
-  per-conversation validity verdict (schemas.py:851-876 analogue).
-* **idempotent sinks**: foreachBatch is at-least-once — every per-batch
-  write lands under a ``batch=<id>`` subdirectory with overwrite semantics,
-  so a micro-batch retry or crash-restart rewrites its own directory instead
-  of appending duplicate rows/counts (the standard idempotent-foreachBatch
-  pattern).
+* **unique/key, keyref and occurrence checks** use the batch programs of
+  ``operators/identity.py`` and ``operators/sequence.py``.  Each
+  micro-batch writes every program's partial aggregate (its filters, group
+  keys and aggregates); at the end of the stream :class:`IncrementalResult`
+  sums the partials and applies the program's own having or anti-join, so
+  a key arriving in batch 5 resolves a reference seen in batch 1.  Its
+  verdicts are the batch verdict rollup over the merged violations.
+* **idempotent sinks**: foreachBatch is at-least-once, so every per-batch
+  write overwrites its own ``batch=<id>`` directory.
 * **order/contiguity checks** across batches use a custom stateful operator
   (``applyInPandasWithState``): per-conversation state = last seen turn_idx —
   the streaming-only pandas path the SURVEY allows (§2.10).
+
+State under ``work_dir``, one ``batch=<id>`` directory per micro-batch:
+``violations/`` (row-local violation rows), ``keystate/<unique>/``
+(``UniqueProgram.partial``), ``refstate/<keyref>/refs/``
+(``KeyrefProgram.partial``: ``_n``, and ``_n_key`` for a same-table
+keyref), ``refstate/<keyref>/keys/`` (``KeyrefProgram.key_set``, other
+keyrefs only), ``occstate/`` (the ``OccursProgram`` counts beside a row
+count ``_rows``, which records every scope for the verdicts) and the
+stream's ``_stream_checkpoint/``.  A work directory written by an earlier
+layout (a same-table keyref kept reference counts and a key-tuple set)
+must not be resumed: start a new one.
 
 ``run_incremental`` drives a file-source stream with ``availableNow`` — the
 batch-incremental mode (one Iceberg snapshot range per run); the same
@@ -43,23 +42,24 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from sissaschool_xmlschema_spark import spec as S
+from sissaschool_xmlschema_spark.operators.identity import (
+    keyref_program,
+    unique_program,
+)
+from sissaschool_xmlschema_spark.operators.sequence import occurs_program
 from sissaschool_xmlschema_spark.plans.compiler import compile_plan
 from sissaschool_xmlschema_spark.plans.runner import (
     VIOLATION_SCHEMA,
     row_local_violations,
+    verdict_rollup,
 )
 
 
@@ -72,6 +72,14 @@ def stream_facet_violations(stream_df: DataFrame, spec: S.TableSpec) -> DataFram
     return row_local_violations(stream_df, compile_plan(spec))
 
 
+def _state(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """Every micro-batch's rows under ``path`` (``None`` if no batch wrote
+    there), without the ``batch=<id>`` partition column."""
+    if not os.path.exists(path):
+        return None
+    return spark.read.parquet(path).drop("batch")
+
+
 @dataclass
 class IncrementalResult:
     n_batches: int
@@ -81,150 +89,71 @@ class IncrementalResult:
     occstate_path: str = ""
 
     def violations(self, spark: SparkSession) -> DataFrame:
-        if not os.path.exists(self.violations_path):
-            return spark.createDataFrame([], VIOLATION_SCHEMA)
-        # drop the batch=<id> partition column the idempotent layout adds
-        return spark.read.parquet(self.violations_path).drop("batch")
+        v = _state(spark, self.violations_path)
+        return spark.createDataFrame([], VIOLATION_SCHEMA) if v is None else v
 
     def duplicate_keys(self, spark: SparkSession, c: S.Unique) -> DataFrame:
-        """Cross-batch duplicates after the counter merge
-        (schemas.py:1386-1389 analogue)."""
-        st = spark.read.parquet(os.path.join(self.keystate_path, c.name))
-        keys = ([c.scope] if c.scope else []) + list(c.fields)
-        return (
-            st.groupBy(*keys)
-            .agg(F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > 1)
+        """Cross-batch duplicates ``(scope?, *fields, _n)``: the program's
+        per-batch counts merged (schemas.py:1386-1389 analogue)."""
+        return unique_program(c, "").merge(
+            _state(spark, os.path.join(self.keystate_path, c.name))
         )
 
     def keyref_misses(self, spark: SparkSession, c: S.Keyref) -> DataFrame:
-        """End-of-stream referential epilogue — ``_validate_references``
-        (schemas.py:1391-1405): anti-join the accumulated referencing-tuple
-        counts against the accumulated key-tuple set.  Returns
-        ``(scope?, *fields, _n)`` like the batch ``keyref_misses`` operator;
-        a reference whose key arrived in ANY batch resolves, one that never
-        resolved is a miss with its total multiplicity.
-
-        Honors ``Keyref.refer_scope`` exactly like the batch operator: the
-        scope joins only when both domains have one (refer_path cross-domain
-        resolution, identities.py:317-334)."""
-        same_scope = c.refer_scope == S.SAME_SCOPE
-        ref_scope = c.scope if same_scope else c.refer_scope
-        join_scope = c.scope is not None and ref_scope is not None
-        group_keys = ([c.scope] if c.scope else []) + list(c.fields)
-        refs_path = os.path.join(self.refstate_path, c.name, "refs")
-        keys_path = os.path.join(self.refstate_path, c.name, "keys")
-        if not os.path.exists(refs_path):
+        """End-of-stream referential epilogue (``_validate_references``,
+        schemas.py:1391-1405): ``(scope?, *fields, _n)`` like the batch
+        ``keyref_misses``; a reference whose key arrived in ANY batch
+        resolves."""
+        refs = _state(spark, os.path.join(self.refstate_path, c.name, "refs"))
+        if refs is None:
             # no referencing rows ever arrived → nothing can be missing
-            schema = ", ".join(f"`{k}` string" for k in group_keys)
+            keys = ([c.scope] if c.scope else []) + list(c.fields)
+            schema = ", ".join(f"`{k}` string" for k in keys)
             return spark.createDataFrame([], schema + ", `_n` long")
-        refs = (
-            spark.read.parquet(refs_path)
-            .groupBy(*group_keys)
-            .agg(F.sum("_n").alias("_n"))
+        return keyref_program(c, "").merge(
+            refs,
+            _state(spark, os.path.join(self.refstate_path, c.name, "keys")),
         )
-        if os.path.exists(keys_path):
-            key_cols = ([ref_scope] if join_scope else []) + list(
-                c.refer_fields
-            )
-            keys = (
-                spark.read.parquet(keys_path)
-                .select(
-                    *[
-                        F.col(k).alias(f"_k_{i}")
-                        for i, k in enumerate(key_cols)
-                    ]
-                )
-                .dropDuplicates()
-            )
-            join_keys = ([c.scope] if join_scope else []) + list(c.fields)
-            cond = None
-            for i, r in enumerate(join_keys):
-                e = F.col(r) == F.col(f"_k_{i}")
-                cond = e if cond is None else cond & e
-            refs = refs.join(keys, cond, "left_anti")
-        return refs
 
     def occurs_violations(
         self, spark: SparkSession, spec: S.TableSpec
     ) -> DataFrame:
-        """min/maxOccurs over the WHOLE stream: per-batch conditional-count
-        partials merged by sum (distributive), then the shared bounds
-        reporter — a conversation that gets its required user turn only in a
-        later batch is NOT a violation after the merge, and one that never
-        does IS (the particle-bound analogue of the reference's end-of-run
-        counter merge, particles.py:109-126 + schemas.py:1386-1389)."""
-        from sissaschool_xmlschema_spark.operators.sequence import (
-            occurs_violations_from_counts,
-        )
-
-        occurs = [c for c in spec.model if isinstance(c, S.Occurs)]
-        if not occurs or not os.path.exists(self.occstate_path):
+        """min/maxOccurs over the WHOLE stream: the program's bounds over
+        its summed per-batch counts (particles.py:109-126 +
+        schemas.py:1386-1389)."""
+        prog = occurs_program(spec.model, spec.name, spec.scope_col)
+        counts = _state(spark, self.occstate_path)
+        if prog is None or counts is None:
             return spark.createDataFrame([], VIOLATION_SCHEMA)
-        st = spark.read.parquet(self.occstate_path)
-        merged = st.groupBy(spec.scope_col).agg(
-            *[
-                F.sum(f"_n_{i}").alias(f"_n_{i}")
-                for i in range(len(occurs))
-            ]
-        )
-        return occurs_violations_from_counts(
-            merged, occurs, spec.name, spec.scope_col
-        )
+        return prog.merged(counts)
 
     def verdicts(self, spark: SparkSession, spec: S.TableSpec) -> DataFrame:
         """Per-conversation ``(conv_id, n_violations, validity)`` over the
-        whole stream — merged row-local violations + cross-batch duplicate
-        keys + end-of-stream keyref misses + merged occurrence bounds; the
-        streaming twin of ``ValidationResult.verdicts`` (validity attribute,
-        schemas.py:851-876).  The scope universe comes from the occstate
-        partials, which record every scope each batch touched."""
-        if not os.path.exists(self.occstate_path):
+        whole stream: the batch :func:`verdict_rollup` of merged row-local
+        violations, occurrence bounds, duplicate keys and keyref misses.
+        The scope universe is every scope the occstate partials saw."""
+        counts = _state(spark, self.occstate_path)
+        if counts is None:
             return spark.createDataFrame(
                 [], "conv_id string, n_violations long, validity string"
             )
         scope = spec.scope_col
-        universe = (
-            spark.read.parquet(self.occstate_path)
-            .select(F.col(scope).cast("string").alias("conv_id"))
-            .distinct()
-        )
+
+        def conv_id(df: DataFrame, col: str = "conv_id") -> DataFrame:
+            return df.select(F.col(col).cast("string").alias("conv_id"))
+
         parts = [
-            self.violations(spark).select(F.col("conv_id").cast("string"))
+            conv_id(self.violations(spark)),
+            conv_id(self.occurs_violations(spark, spec)),
         ]
-        parts.append(
-            self.occurs_violations(spark, spec).select(
-                F.col("conv_id").cast("string")
-            )
-        )
         for c in spec.identities:
-            if isinstance(c, S.Unique) and c.scope == scope:
-                parts.append(
-                    self.duplicate_keys(spark, c).select(
-                        F.col(c.scope).cast("string").alias("conv_id")
-                    )
-                )
-            elif isinstance(c, S.Keyref) and c.scope == scope:
-                parts.append(
-                    self.keyref_misses(spark, c).select(
-                        F.col(c.scope).cast("string").alias("conv_id")
-                    )
-                )
-        viol = parts[0]
-        for p in parts[1:]:
-            viol = viol.unionByName(p)
-        counts = viol.groupBy("conv_id").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        return (
-            universe.join(counts, "conv_id", "left")
-            .select(
-                "conv_id",
-                F.coalesce("_n", F.lit(0)).alias("n_violations"),
-                F.when(F.coalesce("_n", F.lit(0)) > 0, "invalid")
-                .otherwise("valid")
-                .alias("validity"),
-            )
+            rows = (self.duplicate_keys if isinstance(c, S.Unique)
+                    else self.keyref_misses)
+            if c.scope == scope:
+                parts.append(conv_id(rows(spark, c), scope))
+        return verdict_rollup(
+            conv_id(counts, scope),
+            reduce(DataFrame.unionByName, parts),
         )
 
 
@@ -249,12 +178,10 @@ def run_incremental(
     the foreachBatch body and the idempotent ``batch=<id>`` sinks don't
     depend on the trigger (pinned by test_checkpoint_streaming).
 
-    Per micro-batch: row-local violations, per-constraint partial key counts
-    (map-side shrunk), and per-keyref referencing-counts + key-tuple sets
-    each land under ``<sink>/<name>/batch=<batch_id>`` with OVERWRITE
-    semantics — foreachBatch is at-least-once, so a retried batch rewrites
-    its own directory instead of double-counting (idempotent sink).  The
-    stream checkpoint makes re-runs resume from unprocessed files only — the
+    Per micro-batch, the row-local violations and the partial aggregate of
+    each unique, keyref and occurrence program overwrite their own
+    ``batch=<id>`` directory (layout in the module docstring).  The stream
+    checkpoint makes re-runs resume from unprocessed files only — the
     engine's lazy-iteration memory bound: state grows with *distinct keys*,
     never with rows.
     """
@@ -274,63 +201,40 @@ def run_incremental(
     )
 
     plan = compile_plan(spec)
-    uniques = [c for c in spec.identities if isinstance(c, S.Unique)]
-    keyrefs = [c for c in spec.identities if isinstance(c, S.Keyref)]
-    occurs = [c for c in spec.model if isinstance(c, S.Occurs)]
+    uniques = {
+        c.name: unique_program(c, spec.name)
+        for c in spec.identities if isinstance(c, S.Unique)
+    }
+    keyrefs = {
+        c.name: keyref_program(c, spec.name)
+        for c in spec.identities if isinstance(c, S.Keyref)
+    }
+    occurs = occurs_program(spec.model, spec.name, spec.scope_col)
+    # the occurrence partials keep a row count per scope: every scope a
+    # batch touched, the verdicts' universe
+    occ_aggs = [F.count(F.lit(1)).alias("_rows")] + (
+        occurs.counts if occurs else []
+    )
     n_batches = 0
 
     def process(batch: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
         bdir = f"batch={batch_id}"
+
+        def sink(df: DataFrame, *path: str) -> None:
+            df.write.mode("overwrite").parquet(os.path.join(*path, bdir))
+
         v = row_local_violations(batch, plan)
         if v is not None:
-            v.write.mode("overwrite").parquet(
-                os.path.join(violations_path, bdir)
-            )
-        for c in uniques:
-            keys = ([c.scope] if c.scope else []) + list(c.fields)
-            sel = batch.filter(F.expr(c.selector)) if c.selector else batch
-            for fcol in c.fields:
-                sel = sel.filter(F.col(fcol).isNotNull())
-            counts = sel.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-            counts.write.mode("overwrite").parquet(
-                os.path.join(keystate_path, c.name, bdir)
-            )
-        for c in keyrefs:
-            # referencing side: partial counts per tuple (counter merge)
-            refs = batch.filter(F.expr(c.selector)) if c.selector else batch
-            for fcol in c.fields:
-                refs = refs.filter(F.col(fcol).isNotNull())
-            rkeys = ([c.scope] if c.scope else []) + list(c.fields)
-            refs.groupBy(*rkeys).agg(
-                F.count(F.lit(1)).alias("_n")
-            ).write.mode("overwrite").parquet(
-                os.path.join(refstate_path, c.name, "refs", bdir)
-            )
-            # key side: the distinct key-tuple set this batch contributes
-            # (scoped by refer_scope when it differs — cross-domain keyrefs)
-            ks = (
-                batch.filter(F.expr(c.refer_selector))
-                if c.refer_selector else batch
-            )
-            same = c.refer_scope == S.SAME_SCOPE
-            kscope = c.scope if same else c.refer_scope
-            join_scope = c.scope is not None and kscope is not None
-            kcols = ([kscope] if join_scope else []) + list(c.refer_fields)
-            ks.select(*kcols).dropDuplicates().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(refstate_path, c.name, "keys", bdir))
-        # occurrence partials: per-scope conditional counts (+ the row count,
-        # which doubles as the scope universe for verdicts) — sums merge
-        # across batches because conditional counts are distributive
-        occ_aggs = [F.count(F.lit(1)).alias("_rows")] + [
-            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
-            for i, c in enumerate(occurs)
-        ]
-        batch.groupBy(spec.scope_col).agg(*occ_aggs).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(occstate_path, bdir))
+            sink(v, violations_path)
+        for name, prog in uniques.items():
+            sink(prog.partial(batch), keystate_path, name)
+        for name, prog in keyrefs.items():
+            sink(prog.partial(batch), refstate_path, name, "refs")
+            if not prog.fused:
+                sink(prog.key_set(batch), refstate_path, name, "keys")
+        sink(batch.groupBy(spec.scope_col).agg(*occ_aggs), occstate_path)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", ckpt
@@ -374,15 +278,10 @@ def run_incremental(
 # custom stateful operator: cross-batch contiguity
 # ---------------------------------------------------------------------------
 
-_CONTIG_OUT = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", LongType()),
-        StructField("constraint_id", StringType()),
-        StructField("reason", StringType()),
-    ]
+_CONTIG_COLS = ["conv_id", "turn_idx", "constraint_id", "reason"]
+_CONTIG_OUT = (
+    "conv_id string, turn_idx long, constraint_id string, reason string"
 )
-_CONTIG_STATE = StructType([StructField("last_idx", LongType())])
 
 
 def stateful_contiguity_stream(
@@ -427,14 +326,14 @@ def stateful_contiguity_stream(
                     )
                 last = idx
         state.update((last if last is not None else -1,))
-        yield pd.DataFrame(out, columns=[f.name for f in _CONTIG_OUT.fields])
+        yield pd.DataFrame(out, columns=_CONTIG_COLS)
 
     return (
         stream_df.groupBy(F.col(scope))
         .applyInPandasWithState(
             fn,
             outputStructType=_CONTIG_OUT,
-            stateStructType=_CONTIG_STATE,
+            stateStructType="last_idx long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

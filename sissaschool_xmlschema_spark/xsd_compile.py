@@ -272,6 +272,9 @@ class _Ctx:
     # recursive subtree is recorded in skipped (schema-declared, not
     # deep-validated) and in restrictions, never looped on
     flatten_stack: list = field(default_factory=list)
+    # names of the xs:group definitions being inlined: each reference
+    # inlines a new node, so a group cycle needs its own guard
+    group_stack: list = field(default_factory=list)
     # number of cycle cuts taken so far: a global element whose flatten
     # yields NO columns but took a cut still becomes a (zero-column)
     # document table — its content is schema-declared, just recursive
@@ -666,18 +669,28 @@ def _derived_wins(cols: list) -> None:
 _MODEL_GROUPS = (_xs("sequence"), _xs("all"), _xs("choice"))
 
 
-def _inline_group(gref: ET.Element, ctx: _Ctx) -> ET.Element:
-    """A complexType holding the model groups of the named xs:group that
-    ``gref`` refers to (or of ``gref`` itself), to flatten in place
-    (groups.py XsdGroup)."""
+def _flatten_group(gref: ET.Element, ctx: _Ctx, *args) -> None:
+    """Flatten in place the model groups of the xs:group ``gref`` refers
+    to (groups.py XsdGroup); ``args`` as for :func:`_flatten_type`.  A
+    group reached again while inlined is circular: the error names the
+    cycle as the schema checker does, from its member registered first."""
     ref = gref.get("ref")
-    g = ctx.groups.get(_local(ref)) if ref else gref
+    name = _local(ref) if ref else None
+    g = ctx.groups.get(name) if ref else gref
     if g is None:
         raise XsdCompileError(f"unresolved group ref {ref!r}")
+    if ref and name in ctx.group_stack:
+        cycle = ctx.group_stack[ctx.group_stack.index(name):]
+        k = cycle.index(min(cycle, key=list(ctx.groups).index))
+        cycle = cycle[k:] + cycle[:k]
+        raise XsdCompileError(
+            "circular xs:group reference: " + " -> ".join(cycle + cycle[:1])
+        )
     fake = ET.Element(_xs("complexType"))
     fake.extend(sub for sub in g if sub.tag in _MODEL_GROUPS)
-    return fake
-
+    ctx.group_stack.append(name)
+    _flatten_type(fake, ctx, *args)
+    ctx.group_stack.pop()
 
 
 def _flatten_type(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
@@ -825,8 +838,8 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
     # named model groups (xs:group ref, groups.py XsdGroup): inline the
     # referenced group's own sequence/all/choice as if declared in place
     for gref in ct.findall(_xs("group")):
-        _flatten_type(_inline_group(gref, ctx), ctx, prefix, cols, uniques,
-                      in_choice, table, steps, path_min)
+        _flatten_group(gref, ctx, prefix, cols, uniques, in_choice, table,
+                       steps, path_min)
     for group_tag in ("sequence", "all", "choice"):
         for group in ct.findall(_xs(group_tag)):
             child_in_choice = in_choice or group_tag == "choice"
@@ -876,9 +889,13 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                     )
                 else:
                     mark, n_cols = ctx.mark(table), len(cols)
+                    # a group reached again below an element is recursion
+                    # the type guard cuts, not a circular group
+                    outer, ctx.group_stack = ctx.group_stack, []
                     _flatten_type(payload, ctx, prefix + name + "_", cols,
                                   uniques, child_in_choice, table,
                                   steps + (name,), path_min * min_occ)
+                    ctx.group_stack = outer
                     # a singleton complex child whose subtree produced no
                     # columns but IS open (wildcard/mixed/recursion-cut
                     # content, issue_298's Container->Freeform chain) is
@@ -911,9 +928,8 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                     branches.append([c.name for c in cols[branch_start:]])
             for gref in group.findall(_xs("group")):
                 # xs:group ref inside a model group: inline in place
-                _flatten_type(_inline_group(gref, ctx), ctx, prefix, cols,
-                              uniques, child_in_choice, table, steps,
-                              path_min)
+                _flatten_group(gref, ctx, prefix, cols, uniques,
+                               child_in_choice, table, steps, path_min)
             if group_tag == "choice" and len(branches) >= 2:
                 # at most one branch has a value present: XSD requires
                 # exactly one, but a branch whose members are all absent

@@ -105,16 +105,6 @@ def test_multimodal_feature_plumbing(spark):
     assert all(0.0 <= v <= 1.0 for v in by_id["m-1"]["feature"])
 
 
-def test_multimodal_metadata_only_prunes_payload(spark):
-    docs = spark.createDataFrame([(1, "abc")], "doc_id int, text string")
-    media = multimodal.synthetic_media(spark, docs)
-    stats = multimodal.media_metadata_stats(media)
-    assert stats.first()["n"] == 1
-    # payload must not appear in the optimized plan's required columns
-    plan = stats._jdf.queryExecution().optimizedPlan().toString()
-    assert "payload" not in plan
-
-
 def test_decode_filler_and_value_hook(spark):
     """Decode-side hooks (DecodeContext options, validation.py:95-104):
     `fill` substitutes a placeholder for FAILED decodes while the failure

@@ -5,7 +5,6 @@ import pytest
 
 from sissaschool_xmlschema_spark.functions.lm_score import (
     lm_quality,
-    lm_quality_gate,
     train_unigram_lm,
 )
 
@@ -47,13 +46,6 @@ def test_scores_and_gate(spark):
     d4 = math.log(0.5 / denom)  # all OOV
     assert scores[4]["avg_logp"] == pytest.approx(round(d4, 6))
     assert scores[1]["n_tokens"] == 3
-    # gate: doc 4 (garbage) scores strictly lowest and is dropped
-    kept = lm_quality_gate(
-        lm_quality(df, "doc_id", "text", vocab, oov),
-        min_avg_logp=(d3 + d4) / 2,
-    )
-    ids = {r["doc_id"] for r in kept.collect()}
-    assert 4 not in ids and 3 in ids
 
 
 def test_vocab_tiebreak_deterministic(spark):

@@ -119,7 +119,11 @@ def test_schema_from_json_file(spark, tmp_path):
     assert schema.is_valid(synthetic_transcripts(spark, n_convs=5))
 
 
-def test_cli_validate(spark, tmp_path):
+def test_cli_validate(spark, tmp_path, monkeypatch, capsys):
+    from pyspark.sql import functions as F
+
+    from sissaschool_xmlschema_spark import cli
+    from sissaschool_xmlschema_spark.plans.runner import validate
     from sissaschool_xmlschema_spark.sources.transcripts import (
         corrupt_transcripts,
         synthetic_transcripts,
@@ -147,6 +151,39 @@ def test_cli_validate(spark, tmp_path):
     assert viol.count() == summary["violations"]
     verd = spark.read.parquet(str(tmp_path / "out" / "verdicts"))
     assert verd.count() == 10
+
+    # in-process: count the input rows every scan reads, to see how often
+    # the command executes the suite
+    read = spark.sparkContext.accumulator(0)
+    counted = F.udf(lambda _: read.add(1) or True, "boolean") \
+        .asNondeterministic()
+    df = spark.read.parquet(inp)
+    df = df.filter(counted("conv_id"))
+    n_rows = spark.read.parquet(inp).count()
+
+    def scans(action):
+        before = read.value
+        action()
+        return (read.value - before) / n_rows
+
+    suite = scans(
+        lambda: validate(df, transcript_spec()).violations.write
+        .parquet(str(tmp_path / "once"))
+    )
+    cached = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(cli, "_session", lambda app: spark)
+    monkeypatch.setattr(cli, "_read", lambda spark, path, fmt: df)
+    capsys.readouterr()
+    out2 = str(tmp_path / "out2")
+    assert scans(lambda: cli.main([
+        "validate", "--spec", spec_path, "--input", inp,
+        "--output", out2, "--exit-zero",
+    ])) == suite + 2  # + the verdicts' scope list + the row count
+    summary = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert summary["violations"] == \
+        spark.read.parquet(out2 + "/violations").count()
+    # ... and leaves nothing cached
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached
 
 
 def test_py_files_package_builds(tmp_path):

@@ -233,3 +233,39 @@ def test_cp1252_schema_and_instance(spark):
         ("dish/name", "facet:name:Enumeration", "crème"),
         ("dish/price", "facet:price:BuiltinLexical", "x"),
     ]
+
+
+@pytest.mark.parametrize("name, cycle", [
+    ("circular-group-self.xsd", "g -> g"),
+    ("circular-group-pair.xsd", "g1 -> g2 -> g1"),
+])
+def test_circular_group_is_a_compile_error(name, cycle):
+    """A named xs:group that reaches itself through group references
+    alone is an XsdCompileError naming the cycle as the checker does (the
+    pair's element enters the cycle at g2)."""
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(fx(name))
+    assert str(err.value) == f"circular xs:group reference: {cycle}"
+    assert [(e.code, e.reason) for e in validate_schema_document(fx(name))] \
+        == [("circular-group", str(err.value))]
+
+
+def test_group_reached_again_below_an_element_is_cut():
+    """A group referenced again inside the content of an element it
+    declares is recursion through that element: the type guard cuts it one
+    level deep, as for recursive types."""
+    src = (
+        f"<xs:schema {XS}>"
+        '<xs:element name="doc"><xs:complexType><xs:group ref="g"/>'
+        "</xs:complexType></xs:element>"
+        '<xs:group name="g"><xs:sequence>'
+        '<xs:element name="a" type="xs:string"/>'
+        '<xs:element name="item" minOccurs="0"><xs:complexType>'
+        '<xs:group ref="g"/></xs:complexType></xs:element>'
+        "</xs:sequence></xs:group></xs:schema>"
+    )
+    c = compile_xsd(src)
+    assert set(columns(c, "doc")) == {"a", "item_a"}
+    assert c.restrictions == (
+        f"doc: recursive type re-entered at item/item {CUT}",
+    )
