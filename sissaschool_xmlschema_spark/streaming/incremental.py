@@ -151,10 +151,8 @@ class IncrementalResult:
                     else self.keyref_misses)
             if c.scope == scope:
                 parts.append(conv_id(rows(spark, c), scope))
-        return verdict_rollup(
-            conv_id(counts, scope),
-            reduce(DataFrame.unionByName, parts),
-        )
+        viol = reduce(DataFrame.unionByName, parts)
+        return verdict_rollup(conv_id(counts, scope), viol)
 
 
 def run_incremental(
