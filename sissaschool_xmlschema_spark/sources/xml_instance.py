@@ -34,6 +34,18 @@ The compiled plans of the schema's tables and overlays, its cross-table
 keyrefs and the model-error collapse are built on the first document and
 kept in ``CompiledXsd.programs`` for every later one.
 
+One document is ONE partition.  Spark's XML source reads a file as a
+single split however small ``spark.sql.files.maxPartitionBytes`` is, and
+``_Document.container`` says so to the planner with ``coalesce(1)``: no
+data moves and no parallelism is lost, but the read's partitioning becomes
+``SinglePartition``.  Every row set derives from a container read, so every
+scope-, key- and window-keyed aggregate of the per-table programs, the
+cross-table keyrefs and the model-error collapse finds its distribution
+already satisfied: a document's plan has no shuffle Exchange, and
+validating it runs the schema inference, the broadcast of a cross-table
+keyref's keys and one result job.  Parallelism comes from validating
+several documents, never from splitting one.
+
 Every row set of a document — a row table, a document row, a nested
 table, a substitution member, an xsi:type or alternative overlay — goes
 through ONE reader (``_TableRead.read``): a ``_TableReader`` walks the
@@ -247,21 +259,23 @@ class _CollapseProgram:
     reports (``occurs:*`` bounds, element-backed ``:Required``) to ONE
     violation per (document, container element, row instance) — the first
     in schema model order; attribute, value, identity, assertion and
-    structural violations pass through untouched."""
+    structural violations pass through untouched.
 
-    is_model: Column
-    other: Column
+    One ``row_number`` over a window that also partitions by "is a model
+    error" ranks the model rows apart from the others, and :meth:`bind`
+    keeps every other row and the first model row of each partition: the
+    union of the parts is planned and read once, and over a document's
+    single partition the window needs no shuffle."""
+
     row_number: Column
-    first: Column
+    keep: Column
 
     def bind(self, out: DataFrame) -> DataFrame:
-        kept = (
-            out.filter(self.is_model)
-            .withColumn("_rn", self.row_number)
-            .filter(self.first)
+        return (
+            out.withColumn("_rn", self.row_number)
+            .filter(self.keep)
             .drop("_rn")
         )
-        return out.filter(self.other).unionByName(kept)
 
 
 def _collapse_program(compiled) -> _CollapseProgram:
@@ -298,14 +312,14 @@ def _collapse_program(compiled) -> _CollapseProgram:
             F.col("path")
         ] if ranks else F.lit(None)
     )
+    # model and other rows rank apart in one window; a NULL is_model
+    # (NULL constraint_id) keeps no row
     w = Window.partitionBy(
-        "conv_id", container, F.coalesce("turn_idx", F.lit(-1))
+        is_model, "conv_id", container, F.coalesce("turn_idx", F.lit(-1))
     ).orderBy(rank.asc_nulls_last(), "path", "constraint_id")
     return _CollapseProgram(
-        is_model=is_model,
-        other=~is_model,
         row_number=F.row_number().over(w),
-        first=F.col("_rn") == 1,
+        keep=~is_model | (is_model & (F.col("_rn") == 1)),
     )
 
 
@@ -537,9 +551,11 @@ class _Document:
             pfx = self.prefixes[local]
         key = (f"{pfx}{local}", preserve_space)
         if key not in self.containers:
+            # the XML source reads a file as one split: coalesce(1) moves
+            # no data, it declares the single partition to the planner
             self.containers[key] = _read_container(
                 self.spark, self.path, *key
-            )
+            ).coalesce(1)
         return self.containers[key]
 
     @property

@@ -80,6 +80,13 @@ def _state(spark: SparkSession, path: str) -> Optional[DataFrame]:
     return spark.read.parquet(path).drop("batch")
 
 
+def _no_counts(spark: SparkSession, c) -> DataFrame:
+    """The empty ``(scope?, *fields, _n)`` frame of a unique or keyref."""
+    keys = ([c.scope] if c.scope else []) + list(c.fields)
+    schema = ", ".join(f"`{k}` string" for k in keys)
+    return spark.createDataFrame([], schema + ", `_n` long")
+
+
 @dataclass
 class IncrementalResult:
     n_batches: int
@@ -95,9 +102,10 @@ class IncrementalResult:
     def duplicate_keys(self, spark: SparkSession, c: S.Unique) -> DataFrame:
         """Cross-batch duplicates ``(scope?, *fields, _n)``: the program's
         per-batch counts merged (schemas.py:1386-1389 analogue)."""
-        return unique_program(c, "").merge(
-            _state(spark, os.path.join(self.keystate_path, c.name))
-        )
+        counts = _state(spark, os.path.join(self.keystate_path, c.name))
+        if counts is None:
+            return _no_counts(spark, c)  # no batch ran: nothing repeats
+        return unique_program(c, "").merge(counts)
 
     def keyref_misses(self, spark: SparkSession, c: S.Keyref) -> DataFrame:
         """End-of-stream referential epilogue (``_validate_references``,
@@ -107,9 +115,7 @@ class IncrementalResult:
         refs = _state(spark, os.path.join(self.refstate_path, c.name, "refs"))
         if refs is None:
             # no referencing rows ever arrived → nothing can be missing
-            keys = ([c.scope] if c.scope else []) + list(c.fields)
-            schema = ", ".join(f"`{k}` string" for k in keys)
-            return spark.createDataFrame([], schema + ", `_n` long")
+            return _no_counts(spark, c)
         return keyref_program(c, "").merge(
             refs,
             _state(spark, os.path.join(self.refstate_path, c.name, "keys")),

@@ -58,6 +58,7 @@ from sissaschool_xmlschema_spark.xsd_compile import (
     BUILTIN_TYPES,
     XSD_NS,
     SchemaDoc,
+    _MODEL_GROUPS,
     _derivations,
     _effective_mixed,
     _xs,
@@ -365,9 +366,22 @@ def _check_occurs(ctx: _Ctx, doc: SchemaDoc) -> None:
                     f"non-numeric occurs bounds ({mn}, {mx})")
 
 
+def _particle_group_refs(node: ET.Element):
+    """Local names of the xs:group references among ``node``'s model-group
+    particles.  An element declaration's content is not followed: a group
+    reached again below an element is recursion through that element, not
+    a circular group."""
+    for sub in node:
+        if sub.tag == _xs("group") and sub.get("ref"):
+            yield sub.get("ref").rpartition(":")[-1]
+        elif sub.tag in _MODEL_GROUPS:
+            yield from _particle_group_refs(sub)
+
+
 def _check_group_cycles(ctx: _Ctx) -> None:
-    """Named-group reference cycles (groups.py circularity;
-    circular_model.xsd, recursive-groups.xsd): one error per cycle."""
+    """Named-group reference cycles among model-group particles
+    (groups.py circularity; circular_model.xsd, recursive-groups.xsd): one
+    error per cycle."""
     graph: dict = {}
     homes: dict = {}
     for doc in ctx.docs:
@@ -375,12 +389,7 @@ def _check_group_cycles(ctx: _Ctx) -> None:
             name = g.get("name")
             if not name:
                 continue
-            refs = set()
-            for el in g.iter(_xs("group")):
-                r = el.get("ref")
-                if r:
-                    refs.add(r.rpartition(":")[-1])
-            graph[name] = refs
+            graph[name] = set(_particle_group_refs(g))
             homes[name] = doc.where
     # one error per distinct cycle (set of participating groups)
     seen_cycles: set = set()

@@ -414,6 +414,35 @@ def test_incremental_reports_key_missing_field(spark, tmp_path):
     assert verd == [("c1", 1, "invalid")]
 
 
+def test_incremental_over_empty_input(spark, tmp_path):
+    """No micro-batch ran: every accessor returns an empty frame, the
+    identity ones with their ``(scope?, *fields, _n)`` columns."""
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp"
+    )
+    src = tmp_path / "empty"
+    src.mkdir()
+    key = S.Key("turn-key", fields=("turn_idx",), scope="conv_id")
+    ref = keyref_spec().identities[0]
+    sp = S.TableSpec(
+        name="transcripts",
+        identities=(key, ref),
+        model=(S.Occurs("one-user", where="role = 'user'", min_occurs=1),),
+    )
+    res = run_incremental(
+        spark, str(src), sp, str(tmp_path / "work"), schema=schema
+    )
+    assert res.n_batches == 0
+    dups = res.duplicate_keys(spark, key)
+    misses = res.keyref_misses(spark, ref)
+    assert dups.columns == ["conv_id", "turn_idx", "_n"]
+    assert misses.columns == ["conv_id", "tool", "_n"]
+    for df in (res.violations(spark), dups, misses,
+               res.occurs_violations(spark, sp), res.verdicts(spark, sp)):
+        assert df.count() == 0
+
+
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """A turn re-delivered in a later micro-batch within the watermark is
     dropped; distinct keys all pass (at-least-once ingest guard)."""

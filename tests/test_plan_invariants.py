@@ -360,6 +360,60 @@ def test_shared_container_read_once_per_document(spark, tmp_path):
     ) == 1
 
 
+def test_one_document_is_one_partition(spark, tmp_path):
+    """Spark's XML source reads a file as one split however small the
+    split size, so a document's container read declares one partition
+    without moving data.  A Spark that splits XML files fails here rather
+    than quietly running each document's validation in one task."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        _Document,
+        _read_container,
+    )
+
+    doc = tmp_path / "long.xml"
+    doc.write_text(
+        "<chat>" + '<speaker id="u"/>' * 2_000 + "".join(
+            f'<turn idx="{i}" speaker="u"><text>hi</text></turn>'
+            for i in range(2_000)
+        ) + "</chat>"
+    )
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "4096")
+    spark.conf.set(keys[1], "1024")
+    try:
+        # control: the same file read as text does split at this size
+        assert spark.read.text(str(doc)).rdd.getNumPartitions() > 1
+        assert _read_container(
+            spark, str(doc), "chat"
+        ).rdd.getNumPartitions() == 1
+        container = _Document(spark, str(doc), None).container("chat")
+        assert container.rdd.getNumPartitions() == 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_xml_document_plan_is_shuffle_free(spark, tmp_path):
+    """A document's two tables, key, cross-table keyref and model-error
+    collapse all run over its one partition: no shuffle, and its action
+    runs the keyref's broadcast and the result, no more."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    compiled = compile_xsd(CHAT_XSD)
+    for i, doc in enumerate(_chat_docs(tmp_path)):
+        v = validate_xml_instance(spark, doc, compiled)
+        jobs = _jobs_in_group(spark, f"xml-validate-run-{i}", v.collect)
+        nodes = _nodes(v)
+        assert nodes["Exchange"] == 0, nodes
+        assert nodes["BroadcastExchange"] >= 1, nodes
+        assert jobs <= 2, jobs
+
+
 def test_program_rebinds_to_each_input(spark, tmp_path):
     """One CompiledPlan (and one CompiledXsd) validated against two inputs
     in turn gives, for each, the rows of a freshly compiled one: nothing in

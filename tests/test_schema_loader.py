@@ -269,3 +269,16 @@ def test_group_reached_again_below_an_element_is_cut():
     assert c.restrictions == (
         f"doc: recursive type re-entered at item/item {CUT}",
     )
+    # the schema checker follows model-group particles only, not the
+    # content of an element the group declares
+    assert codes(src) == []
+
+
+def test_only_the_circular_fixtures_report_circular_group():
+    """Of the schema-graph fixtures, the two circular groups and no other
+    report ``circular-group``."""
+    circular = {"circular-group-self.xsd", "circular-group-pair.xsd"}
+    for name in sorted(os.listdir(FX)):
+        if name.endswith(".xsd"):
+            got = {code for _, code in codes(fx(name))}
+            assert ("circular-group" in got) == (name in circular), name

@@ -462,7 +462,8 @@ def test_collapse_keeps_first_error_in_model_order(spark, tmp_path):
   <xs:element name="doc"><xs:complexType><xs:sequence>
     <xs:element name="zeta" type="xs:string" minOccurs="2" maxOccurs="9"/>
     <xs:element name="alpha" type="xs:string" minOccurs="2" maxOccurs="9"/>
-    <xs:element name="item" maxOccurs="unbounded"><xs:complexType>
+    <xs:element name="item" minOccurs="3" maxOccurs="unbounded">
+      <xs:complexType>
       <xs:sequence>
         <xs:element name="omega" type="xs:string"/>
         <xs:element name="beta" type="xs:string"/>
@@ -478,6 +479,49 @@ def test_collapse_keeps_first_error_in_model_order(spark, tmp_path):
         r["path"] for r in validate_xml_instance(spark, str(p), c).collect()
     )
     assert got == ["doc/zeta", "item/omega"]
+
+
+def test_collapse_on_mixed_rows(spark, tmp_path):
+    """One item with two content-model errors (omega and beta absent), an
+    attribute facet error and a duplicated key: the model errors collapse
+    to the first in model order, every other row stays as it is.  Under
+    doc, the too-few-items error ranks and sorts after the duplicate key
+    on the same path: a non-model row never displaces a model row."""
+    xsd = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:element name="doc"><xs:complexType><xs:sequence>
+    <xs:element name="item" minOccurs="3" maxOccurs="unbounded">
+      <xs:complexType>
+        <xs:sequence>
+          <xs:element name="omega" type="xs:string"/>
+          <xs:element name="beta" type="xs:string"/>
+        </xs:sequence>
+        <xs:attribute name="id" type="xs:string" use="required"/>
+        <xs:attribute name="code">
+          <xs:simpleType><xs:restriction base="xs:string">
+            <xs:pattern value="[A-Z]{3}"/>
+          </xs:restriction></xs:simpleType>
+        </xs:attribute>
+      </xs:complexType>
+    </xs:element>
+  </xs:sequence></xs:complexType>
+  <xs:key name="itemKey">
+    <xs:selector xpath="item"/><xs:field xpath="@id"/>
+  </xs:key>
+  </xs:element>
+</xs:schema>"""
+    p = tmp_path / "mixed.xml"
+    p.write_text(
+        '<doc><item id="k" code="abc"/>'
+        '<item id="k" code="XYZ"><omega>o</omega><beta>b</beta></item></doc>'
+    )
+    got = _triples(validate_xml_instance(spark, str(p), compile_xsd(xsd)))
+    assert got == Counter({
+        ("item/omega", "facet:omega:Required", None): 1,
+        ("item/code", "facet:code:Pattern", "abc"): 1,
+        ("item", "key:itemKey", "k"): 1,
+        ("item", "occurs:occurs-item", "2"): 1,
+    })
 
 
 def test_valid_optional_absent_row_element(spark, tmp_path):
