@@ -14,7 +14,9 @@ semantics:
 * character-class subtraction ``[a-z-[aeiou]]`` lowered to Java's intersection
   ``[a-z&&[^aeiou]]``;
 * XSD has no non-capturing-group/backreference/lookaround extensions — anything
-  unsupported raises so specs fail at compile time on the driver, never on executors.
+  unsupported raises so specs fail at compile time on the driver, never on executors;
+  so does a translation Java's regex engine rejects (an unclosed class or group, a
+  reversed repetition range).
 """
 
 from __future__ import annotations
@@ -156,4 +158,24 @@ def anchor(java_pattern: str) -> str:
 
 
 def translate_and_anchor(pattern: str) -> str:
-    return anchor(translate_pattern(pattern))
+    """``pattern`` translated and anchored for ``rlike``.  Under an active
+    SparkContext a translation Java's regex engine rejects (``[a-``,
+    ``a{3,1}``) raises here, on the driver, instead of failing the job."""
+    java = anchor(translate_pattern(pattern))
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import IllegalArgumentException
+
+        try:
+            sc._jvm.java.util.regex.Pattern.compile(java)
+        # PatternSyntaxException, converted when a SparkSession installed
+        # pyspark's exception handler
+        except (Py4JJavaError, IllegalArgumentException):
+            raise XsdRegexError(
+                f"pattern {pattern!r}: Java's regex engine rejects its "
+                f"translation {java!r}"
+            ) from None
+    return java

@@ -197,71 +197,3 @@ def union_decode(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return typed, failures
-
-
-def decode_transcripts(df: DataFrame) -> Tuple[DataFrame, DataFrame]:
-    """Canonical transcript decode: string-typed ingest → typed table.
-
-    ``text`` is passed through UNTOUCHED (whiteSpace=preserve,
-    builtins.py:79-84): the per-turn text-equality invariant.
-    """
-    return decode(
-        df,
-        fields=(
-            FieldDecode("turn_idx", "int"),
-            FieldDecode("ts", "timestamp"),
-        ),
-        keep_columns=("conv_id", "role", "text", "tool"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# XSD 1.1 duration value spaces (builtins.py:479-491)
-# ---------------------------------------------------------------------------
-#
-# xs:duration itself is only PARTIALLY ordered (months and seconds don't
-# commute), which is exactly why XSD 1.1 defines the two totally-ordered
-# subtypes; the engine decodes those to comparable numerics so range facets
-# and sorts stay pure Column work.  Invalid lexicals decode to NULL — the
-# same try_cast failure-channel convention as every other decode.
-
-
-def _num(col: Column, pattern: str, group: int = 1) -> Column:
-    ex = F.regexp_extract(col, pattern, group)
-    return F.when(ex == "", F.lit(0.0)).otherwise(ex.cast("double"))
-
-
-def duration_to_months(col: Column) -> Column:
-    """xs:yearMonthDuration → total months (long): sign·(12·Y + M).
-
-    NULL for lexicals outside the yearMonthDuration space — guard first,
-    arithmetic second, all in one row-local projection.
-    """
-    from sissaschool_xmlschema_spark.functions.lexical import lexical_java_regex
-
-    sign = F.when(col.startswith("-"), F.lit(-1)).otherwise(F.lit(1))
-    months = (
-        _num(col, "([0-9]+)Y") * 12 + _num(col, "([0-9]+)M")
-    ).cast("long") * sign
-    return F.when(
-        col.rlike(lexical_java_regex("yearMonthDuration")), months
-    )
-
-
-def duration_to_seconds(col: Column) -> Column:
-    """xs:dayTimeDuration → total seconds (double): sign·(86400·D + 3600·H +
-    60·Min + S).  Minutes are anchored past the 'T' so a date-part 'M'
-    (months — illegal in this subtype anyway) can never be misread.
-    """
-    from sissaschool_xmlschema_spark.functions.lexical import lexical_java_regex
-
-    sign = F.when(col.startswith("-"), F.lit(-1.0)).otherwise(F.lit(1.0))
-    secs = (
-        _num(col, "([0-9]+)D") * 86400
-        + _num(col, "T([0-9]+)H") * 3600
-        + _num(col, "T([0-9]+H)?([0-9]+)M", 2) * 60
-        + _num(col, "([0-9]+(\\.[0-9]+)?)S")
-    ) * sign
-    return F.when(
-        col.rlike(lexical_java_regex("dayTimeDuration")), secs
-    )

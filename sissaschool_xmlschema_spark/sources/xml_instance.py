@@ -102,7 +102,11 @@ from sissaschool_xmlschema_spark.operators.identity import keyref_program
 from sissaschool_xmlschema_spark.plans.compiler import compile_plan
 from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
-from sissaschool_xmlschema_spark.xsd_compile import CompiledXsd, compile_xsd
+from sissaschool_xmlschema_spark.xsd_compile import (
+    CompiledXsd,
+    _ns_admits,
+    compile_xsd,
+)
 
 
 def sniff_prefix(path: str, local_root: str) -> str:
@@ -182,29 +186,6 @@ def _is_xsi_machinery(field_name: str, nsmap: dict) -> bool:
     if not is_attr or not pfx:
         return False
     return pfx == "xsi" or nsmap.get(pfx) == _XSI_URI
-
-
-def _ns_admits(ns_set: str, uri, target_ns: str) -> bool:
-    """One wildcard namespace-set test (wildcards.py:95-164).
-
-    ``uri`` is the instance node's namespace URI ('' = no namespace,
-    None = unresolvable prefix, treated as a foreign namespace)."""
-    if ns_set == "##any":
-        return True
-    if ns_set == "##other":
-        # any namespace other than target, and not absent
-        return uri != "" and uri != target_ns
-    admitted = ns_set.split()
-    if uri is None:
-        return False
-    for tok in admitted:
-        want = (
-            target_ns if tok == "##targetNamespace"
-            else "" if tok == "##local" else tok
-        )
-        if uri == want:
-            return True
-    return False
 
 
 def _elem_required_paths(compiled) -> list:

@@ -344,43 +344,6 @@ def stateful_contiguity_stream(
     )
 
 
-def session_turn_counts(
-    stream_df: DataFrame,
-    spec: S.TableSpec,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-conversation session windows over event time (SURVEY §2.9).
-
-    Sessions close after ``gap`` of inactivity; the watermark bounds state and
-    admits late turns up to ``watermark`` behind the stream's max event time
-    (late-data handling the reference never needed — documents arrive whole).
-    Works identically on a batch DataFrame (no watermark applied there).
-    """
-    src = stream_df
-    if stream_df.isStreaming:
-        src = stream_df.withWatermark("ts", watermark)
-    return (
-        src.groupBy(
-            F.col(spec.scope_col),
-            F.session_window(F.col("ts"), gap),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(
-                F.when(F.col("role") == "user", 1).otherwise(0)
-            ).alias("n_user"),
-        )
-        .select(
-            spec.scope_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_turns",
-            "n_user",
-        )
-    )
-
-
 def stream_dedup(
     stream_df: DataFrame,
     keys: Sequence[str] = ("conv_id", "turn_idx"),

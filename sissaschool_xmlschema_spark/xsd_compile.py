@@ -10,11 +10,15 @@ never see any of this; they only see the Column plans the spec compiles to.
 
 One loader reads the schema: :func:`load_schema_graph` parses each
 document once and follows its include/import/redefine/override locations
-(the reference's ``SchemaLoader``); the schema-document checker
-(:mod:`.xsd_meta`) reads the same graph.  :func:`compile_xsd` is a
-sequence of phases over one ``_Ctx``: load, register the global
-components, detect the tables, flatten them, overlays (xsi:type,
-alternatives, substitution members), nested tables, identities, assemble.
+(the reference's ``SchemaLoader``).  One registry holds its global
+components: :func:`schema_components` keys each by kind, namespace URI and
+local name (the reference's ``XsdGlobals``), and every QName reference
+resolves in the namespace its own document binds the prefix to.  The
+schema-document checker (:mod:`.xsd_meta`) reads the same graph and
+registry.  :func:`compile_xsd` is a sequence of phases over one ``_Ctx``:
+load, register the global components, detect the tables, flatten them,
+overlays (xsi:type, alternatives, substitution members), nested tables,
+identities, assemble.
 
 Supported subset (everything a tabular corpus can express):
 
@@ -49,13 +53,14 @@ Supported subset (everything a tabular corpus can express):
   identities/occurs machinery applies unchanged;
 * ``xsi:type`` dynamic type substitution (elements.py:657-682): every
   global complexType deriving from a row element's declared type compiles
-  to an overlay column-set the instance reader validates against.
+  to an overlay column-set the instance reader validates against;
+* substitution-group members (elements.py:611-621): a global element
+  standing in for a row element compiles to an overlay of its own type.
 
 Deliberately out of scope (recorded in ``CompiledXsd.restrictions``, never
-silently dropped): substitution groups in the document structure (the
-engine models them as enumerations — operators/substitution.py), and
-identity constraints selecting a nested table from outside its parent
-chain.
+silently dropped): identity constraints selecting a nested table from
+outside its parent chain.  Table, column, overlay and identity-constraint
+names are local names.
 """
 
 from __future__ import annotations
@@ -74,6 +79,8 @@ from sissaschool_xmlschema_spark.functions.lexical import (
 from sissaschool_xmlschema_spark.xml_text import read_xml_text
 
 XSD_NS = "http://www.w3.org/2001/XMLSchema"
+XML_NS = "http://www.w3.org/XML/1998/namespace"
+XSI_NS = "http://www.w3.org/2001/XMLSchema-instance"
 
 
 def _xs(tag: str) -> str:
@@ -98,6 +105,25 @@ class Wildcard:
     kind: str  # 'element' | 'attribute'
     ns: str
     process: str
+
+
+def _ns_admits(ns_set: str, uri: Optional[str], target_ns: str) -> bool:
+    """Whether a wildcard namespace set admits namespace ``uri``
+    (wildcards.py:95-164): '' is no namespace, None an unresolvable
+    prefix, a foreign namespace that only ``##any`` and ``##other``
+    admit."""
+    if ns_set == "##any":
+        return True
+    if ns_set == "##other":
+        return uri != "" and uri != target_ns
+    for tok in ns_set.split():
+        want = (
+            target_ns if tok == "##targetNamespace"
+            else "" if tok == "##local" else tok
+        )
+        if uri == want:
+            return True
+    return False
 
 
 @dataclass(frozen=True)
@@ -238,18 +264,14 @@ class _Column:
 
 @dataclass
 class _Ctx:
-    """One compilation: the registered global components of the schema
-    graph, what flattening records per table, and what each phase of
+    """One compilation: the global components of the schema graph, what
+    flattening records per table, and what each phase of
     :func:`compile_xsd` adds for the later ones."""
 
     root: ET.Element
+    reg: Components
     scope_col: str = "doc_id"
     order_col: str = "row_idx"
-    simple_types: dict = field(default_factory=dict)
-    complex_types: dict = field(default_factory=dict)
-    elements: dict = field(default_factory=dict)
-    groups: dict = field(default_factory=dict)  # named xs:group
-    attr_groups: dict = field(default_factory=dict)  # named xs:attributeGroup
     restrictions: list = field(default_factory=list)
     lexical: bool = True
     # table -> set of path tuples whose subtrees are OUTSIDE the compiled
@@ -290,7 +312,9 @@ class _Ctx:
     identities: dict = field(default_factory=dict)
     models: dict = field(default_factory=dict)
     doc_rows: set = field(default_factory=set)
-    derived_of: dict = field(default_factory=dict)  # base -> derived types
+    # global complexType -> [(name, complexType)] of the types deriving
+    # from it
+    derived_of: dict = field(default_factory=dict)
     declared_types: dict = field(default_factory=dict)
     xsi_overlays: dict = field(default_factory=dict)
     alt_overlays: dict = field(default_factory=dict)
@@ -340,10 +364,9 @@ class _Ctx:
 
 
 def _local(qname: Optional[str]) -> str:
-    """Strip any namespace prefix from a QName reference ('xs:string' →
-    'string', 'p:name' → 'name').  The compiler treats all non-XSD types as
-    belonging to the schema's own target namespace — the single-namespace
-    flat-table case."""
+    """The local part of a QName ('xs:string' → 'string', 'p:name' →
+    'name'): the name a table, column or overlay takes.  References
+    resolve through the registry (:func:`_ref`), never by local name."""
     if qname is None:
         return ""
     return qname.split(":", 1)[-1]
@@ -366,14 +389,35 @@ _NON_LEXICAL = {
 BUILTIN_TYPES = frozenset(XSD_LEXICAL) | frozenset(_NON_LEXICAL)
 
 
-def _is_builtin(qname: str, ctx: _Ctx) -> bool:
+def _builtin(ctx: _Ctx, node: ET.Element, qname: Optional[str]
+             ) -> Optional[str]:
+    """The builtin type ``qname`` names at ``node``, by local name: an xs:
+    QName naming one, and nothing else, is a builtin."""
     local = _local(qname)
-    # a user type shadows nothing: builtins live in the XSD namespace, user
-    # types in the target namespace; prefixes differ but locals may collide —
-    # prefer the user definition when one exists (reference resolution order)
-    if local in ctx.simple_types or local in ctx.complex_types:
-        return False
-    return local in BUILTIN_TYPES
+    if qname and local in BUILTIN_TYPES \
+            and ctx.reg.uri(node, qname) == XSD_NS:
+        return local
+    return None
+
+
+def _ref(ctx: _Ctx, kinds: tuple, node: ET.Element, qname: Optional[str],
+         missing: Optional[str] = None) -> Optional[ET.Element]:
+    """The global component of one of ``kinds`` that ``qname`` names at
+    ``node`` (None when there is none, or raise ``missing`` when given).
+    A namespace the referring document does not import raises."""
+    found = None
+    if qname:
+        doc = ctx.reg.homes[node]
+        uri = doc.uri_of(node, qname)
+        if not doc.may_reference(uri):
+            raise XsdCompileError(
+                f"{qname!r} references namespace {uri!r}, which "
+                f"{doc.where} does not import"
+            )
+        found = ctx.reg.resolve(kinds, node, qname)
+    if found is None and missing:
+        raise XsdCompileError(missing)
+    return found
 
 
 def _effective_mixed(ct: ET.Element) -> bool:
@@ -412,6 +456,23 @@ def _binary(facets, codec: str) -> Optional[str]:
     builtin's lexical check, else None."""
     kind = S.HexBinary if codec == "hex" else S.Base64Binary
     return codec if any(isinstance(f, kind) for f in facets) else None
+
+
+def _count(node: ET.Element, attr: str, default: Optional[str] = None
+           ) -> Optional[int]:
+    """The integer ``attr`` of ``node`` (an occurrence bound or a facet
+    value, ``default`` when absent); None for maxOccurs="unbounded".  A
+    malformed value raises, naming the attribute."""
+    text = node.get(attr, default)
+    if attr == "maxOccurs" and text == "unbounded":
+        return None
+    try:
+        return int(text)
+    except (TypeError, ValueError):
+        raise XsdCompileError(
+            f"{attr}={text!r} on xs:{node.tag.split('}')[-1]} is not an "
+            "integer"
+        ) from None
 
 
 def _parse_bound(text: str):
@@ -456,26 +517,35 @@ def _length_bounds(facets: list, lo=None, hi=None) -> tuple:
     return lo, hi, rest
 
 
-def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
-    """Compile a simpleType (by reference name or inline element) to facets,
-    following restriction chains (base facets first — the reference validates
-    base-to-derived, simple_types.py:488-503)."""
-    if isinstance(node_or_ref, str):
-        local = _local(node_or_ref)
-        if local in ctx.simple_types:
-            return _compile_simple(ctx.simple_types[local], ctx, where)
-        if _is_builtin(node_or_ref, ctx):
-            return builtin_facets(local, ctx.lexical)
-        raise XsdCompileError(f"unresolved simpleType reference {node_or_ref!r}")
+def _simple_ref(ctx: _Ctx, node: ET.Element, qname: str, where: str
+                ) -> tuple:
+    """Facets of the simple type ``qname`` names at ``node``: a builtin
+    for an xs: QName, else a global simpleType."""
+    local = _builtin(ctx, node, qname)
+    if local is not None:
+        return builtin_facets(local, ctx.lexical)
+    return _compile_simple(_ref(
+        ctx, ("simpleType",), node, qname,
+        f"unresolved simpleType reference {qname!r}",
+    ), ctx, where)
 
-    st = node_or_ref
+
+def _simple_of(ctx: _Ctx, node: ET.Element, attr: str, where: str) -> tuple:
+    """Facets of the simple type ``node`` names in ``attr``, else of its
+    inline xs:simpleType child (none for neither)."""
+    if node.get(attr):
+        return _simple_ref(ctx, node, node.get(attr), where)
+    inline = node.find(_xs("simpleType"))
+    return () if inline is None else _compile_simple(inline, ctx, where)
+
+
+def _compile_simple(st: ET.Element, ctx: _Ctx, where: str = "") -> tuple:
+    """Compile one xs:simpleType to facets, following restriction chains
+    (base facets first — the reference validates base-to-derived,
+    simple_types.py:488-503)."""
     restriction = st.find(_xs("restriction"))
     if restriction is not None:
-        base = (restriction.get("base")
-                or restriction.find(_xs("simpleType")))
-        facets = (
-            [] if base is None else list(_compile_simple(base, ctx, where))
-        )
+        facets = list(_simple_of(ctx, restriction, "base", where))
         patterns = []
         enums = []
         for child in restriction:
@@ -485,7 +555,7 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
             elif tag == "enumeration":
                 enums.append(child.get("value"))
             elif tag in _VALUE_FACETS:
-                facets.append(_VALUE_FACETS[tag](int(child.get("value"))))
+                facets.append(_VALUE_FACETS[tag](_count(child, "value")))
             elif tag in _BOUND_FACETS:
                 facets.append(_BOUND_FACETS[tag](_parse_bound(child.get("value"))))
             elif tag == "whiteSpace":
@@ -535,9 +605,7 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
 
     lst = st.find(_xs("list"))
     if lst is not None:
-        items = _compile_simple(
-            lst.get("itemType") or lst.find(_xs("simpleType")), ctx, where
-        )
+        items = _simple_of(ctx, lst, "itemType", where)
         # keep only value-space item facets (row-context facets like Required
         # are meaningless per list item)
         items = tuple(f for f in items if not isinstance(f, (S.Required,
@@ -546,9 +614,13 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
 
     union = st.find(_xs("union"))
     if union is not None:
-        members = (union.get("memberTypes") or "").split()
-        members += union.findall(_xs("simpleType"))
-        alts = [_compile_simple(m, ctx, where) for m in members]
+        alts = [
+            _simple_ref(ctx, union, m, where)
+            for m in (union.get("memberTypes") or "").split()
+        ] + [
+            _compile_simple(m, ctx, where)
+            for m in union.findall(_xs("simpleType"))
+        ]
         return (S.UnionOf(alternatives=tuple(alts)),)
 
     raise XsdCompileError(f"{where}: simpleType without restriction/list/union")
@@ -562,10 +634,8 @@ def _compile_simple(node_or_ref, ctx: _Ctx, where: str = "") -> tuple:
 def _resolve_element(el: ET.Element, ctx: _Ctx) -> ET.Element:
     ref = el.get("ref")
     if ref:
-        local = _local(ref)
-        if local not in ctx.elements:
-            raise XsdCompileError(f"unresolved element ref {ref!r}")
-        return ctx.elements[local]
+        return _ref(ctx, ("element",), el, ref,
+                    f"unresolved element ref {ref!r}")
     return el
 
 
@@ -573,10 +643,10 @@ def _element_type(el: ET.Element, ctx: _Ctx):
     """→ ('simple', facets) | ('complex', ctype_element) for one element."""
     t = el.get("type")
     if t:
-        local = _local(t)
-        if local in ctx.complex_types:
-            return "complex", ctx.complex_types[local]
-        return "simple", _compile_simple(t, ctx, el.get("name") or "")
+        ct = _ref(ctx, ("complexType",), el, t)
+        if ct is not None:
+            return "complex", ct
+        return "simple", _simple_ref(ctx, el, t, el.get("name") or "")
     inline_ct = el.find(_xs("complexType"))
     if inline_ct is not None:
         return "complex", inline_ct
@@ -587,11 +657,6 @@ def _element_type(el: ET.Element, ctx: _Ctx):
     return "simple", ()
 
 
-def _max_occurs(el: ET.Element) -> Optional[int]:
-    v = el.get("maxOccurs", "1")
-    return None if v == "unbounded" else int(v)
-
-
 def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
                         cols: list, uniques: list, steps: tuple = (),
                         table: str = "") -> None:
@@ -599,9 +664,8 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
     # referenced group's attributes (which may nest further group refs)
     for agref in ct.findall(_xs("attributeGroup")):
         ref = agref.get("ref")
-        ag = ctx.attr_groups.get(_local(ref)) if ref else agref
-        if ag is None:
-            raise XsdCompileError(f"unresolved attributeGroup ref {ref!r}")
+        ag = _ref(ctx, ("attributeGroup",), agref, ref,
+                  f"unresolved attributeGroup ref {ref!r}") if ref else agref
         _flatten_attributes(ag, ctx, prefix, cols, uniques, steps, table)
     # xs:anyAttribute (wildcards.py:33-164): open attribute content at this
     # level — recorded as a marker so the instance reader can gate its
@@ -619,14 +683,7 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
             facets.append(S.Prohibited())
         if attr.get("fixed") is not None:
             facets.append(S.FixedValue(attr.get("fixed")))
-        t = attr.get("type")
-        type_local = _local(t) if t else ""
-        if t:
-            facets.extend(_compile_simple(t, ctx, name))
-        else:
-            inline = attr.find(_xs("simpleType"))
-            if inline is not None:
-                facets.extend(_compile_simple(inline, ctx, name))
+        facets.extend(_simple_of(ctx, attr, "type", name))
         if _binary(facets, "hex"):
             # hexBinary fixed values compare in the value space (issue_222)
             facets = [
@@ -635,7 +692,7 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
                 for f in facets
             ]
         cols.append(_Column(name, facets, path=steps + ("@" + aname,)))
-        if type_local == "ID":
+        if _builtin(ctx, attr, attr.get("type")) == "ID":
             # xs:ID uniqueness: IDs are unique per document
             # (identities via ID map, attributes ID handling)
             uniques.append(S.Unique(f"{name}-id-unique", fields=(name,),
@@ -675,20 +732,20 @@ def _flatten_group(gref: ET.Element, ctx: _Ctx, *args) -> None:
     group reached again while inlined is circular: the error names the
     cycle as the schema checker does, from its member registered first."""
     ref = gref.get("ref")
-    name = _local(ref) if ref else None
-    g = ctx.groups.get(name) if ref else gref
-    if g is None:
-        raise XsdCompileError(f"unresolved group ref {ref!r}")
-    if ref and name in ctx.group_stack:
-        cycle = ctx.group_stack[ctx.group_stack.index(name):]
-        k = cycle.index(min(cycle, key=list(ctx.groups).index))
-        cycle = cycle[k:] + cycle[:k]
+    g = _ref(ctx, ("group",), gref, ref,
+             f"unresolved group ref {ref!r}") if ref else gref
+    if ref and g in ctx.group_stack:
+        cycle = ctx.group_stack[ctx.group_stack.index(g):]
+        order = [el for _name, el in ctx.reg.named("group")]
+        k = cycle.index(min((el for el in cycle if el in order),
+                            key=order.index))
+        names = [el.get("name") for el in cycle[k:] + cycle[:k]]
         raise XsdCompileError(
-            "circular xs:group reference: " + " -> ".join(cycle + cycle[:1])
+            "circular xs:group reference: " + " -> ".join(names + names[:1])
         )
     fake = ET.Element(_xs("complexType"))
     fake.extend(sub for sub in g if sub.tag in _MODEL_GROUPS)
-    ctx.group_stack.append(name)
+    ctx.group_stack.append(g)
     _flatten_type(fake, ctx, *args)
     ctx.group_stack.pop()
 
@@ -733,12 +790,11 @@ def _flatten_type(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
         if cc is not None:
             for deriv in _derivations(cc):
                 deriv_tag = deriv.tag.split("}")[-1]
-                base_ct = ctx.complex_types.get(_local(deriv.get("base")))
-                if base_ct is None:
-                    raise XsdCompileError(
-                        f"complexContent {deriv_tag} of unresolved base "
-                        f"{deriv.get('base')!r}"
-                    )
+                base_ct = _ref(
+                    ctx, ("complexType",), deriv, deriv.get("base"),
+                    f"complexContent {deriv_tag} of unresolved base "
+                    f"{deriv.get('base')!r}",
+                )
                 if deriv_tag == "extension":
                     _flatten_type(base_ct, ctx, prefix, cols, uniques,
                                   in_choice, table, steps, path_min)
@@ -778,16 +834,18 @@ def _flatten_type(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
             deriv = derivs[0]
             restricts = deriv.tag == _xs("restriction")
             base = deriv.get("base")
-            base_local = _local(base) if base else ""
+            found = _ref(ctx, ("complexType", "simpleType"), deriv, base)
             vname = prefix[:-1] if prefix else "value"
-            if restricts and base_local in ctx.complex_types:
-                _flatten_type(ctx.complex_types[base_local], ctx, prefix, cols,
-                              uniques, in_choice, table, steps, path_min)
-            elif base and (
-                _is_builtin(base, ctx) or base_local in ctx.simple_types
+            if restricts and found is not None \
+                    and found.tag == _xs("complexType"):
+                _flatten_type(found, ctx, prefix, cols, uniques, in_choice,
+                              table, steps, path_min)
+            elif _builtin(ctx, deriv, base) or (
+                found is not None and found.tag == _xs("simpleType")
             ):
                 cols.append(_Column(
-                    vname, list(_compile_simple(base, ctx, prefix)), path=steps
+                    vname, list(_simple_ref(ctx, deriv, base, prefix)),
+                    path=steps,
                 ))
             elif not restricts:
                 cols.append(_Column(vname, [], path=steps))
@@ -848,9 +906,9 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
             branches: list = []
             # a repeated model group repeats its children (issue_026):
             # they belong in their own tables, not in this row's columns
-            gmax_attr = group.get("maxOccurs", "1")
-            g_repeat = gmax_attr == "unbounded" or int(gmax_attr) > 1
-            gmin = int(group.get("minOccurs", "1"))
+            gmax = _count(group, "maxOccurs", "1")
+            g_repeat = gmax is None or gmax > 1
+            gmin = _count(group, "minOccurs", "1")
             # xs:any (wildcards.py:33-164): open element content at this
             # level — marker for the instance reader, never silently dropped
             for anynode in group.findall(_xs("any")):
@@ -862,10 +920,10 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                 branch_start = len(cols)
                 decl = _resolve_element(el, ctx)
                 name = decl.get("name")
-                max_occ = _max_occurs(el)
+                max_occ = _count(el, "maxOccurs", "1")
                 if g_repeat:
                     max_occ = None
-                min_occ = int(el.get("minOccurs", "1"))
+                min_occ = _count(el, "minOccurs", "1")
                 kind, payload = _element_type(decl, ctx)
                 if max_occ is None or max_occ > 1:
                     # a repeated child below a row element: queued for its
@@ -923,7 +981,7 @@ def _flatten_type_body(ct: ET.Element, ctx: _Ctx, prefix: str, cols: list,
                 _flatten_type(fake, ctx, prefix, cols, uniques,
                               in_choice or sub.tag == _xs("choice"), table,
                               steps,
-                              path_min * int(sub.get("minOccurs", "1")))
+                              path_min * _count(sub, "minOccurs", "1"))
                 if group_tag == "choice" and len(cols) > branch_start:
                     branches.append([c.name for c in cols[branch_start:]])
             for gref in group.findall(_xs("group")):
@@ -1064,6 +1122,15 @@ class SchemaDoc:
             return self.effective_tns  # chameleon adoption
         return uri
 
+    def may_reference(self, uri: Optional[str]) -> bool:
+        """Whether a reference in this document may name namespace
+        ``uri``: no namespace, its own, the XSD, xml and xsi namespaces,
+        or one it imports (loaders.py import rules).  None, an unbound
+        prefix, is left to resolution."""
+        return uri is None or uri in self.imports or uri in (
+            "", self.effective_tns, XSD_NS, XML_NS, XSI_NS,
+        )
+
 
 @dataclass
 class SchemaGraph:
@@ -1165,6 +1232,119 @@ def load_schema_graph(
     return graph
 
 
+# the kinds of global components, each registered once per namespace
+_KINDS = {_xs(k): k for k in ("simpleType", "complexType", "element",
+                              "attribute", "group", "attributeGroup",
+                              "notation")}
+# the kinds an xs:redefine / xs:override child replaces
+_REDEFINABLE = ("simpleType", "complexType", "group", "attributeGroup")
+
+
+@dataclass
+class Components:
+    """The global components of a :class:`SchemaGraph` (the reference's
+    XsdGlobals, xsd_globals.py:51), keyed by ``(kind, namespace URI, local
+    name)``: the first declaration of a key wins, the source document
+    first (loaders.py:118-167); an xs:redefine / xs:override child
+    replaces the component it names and registers before the others.
+
+    ``homes``: each element of the graph -> the :class:`SchemaDoc` holding
+    it.  ``duplicates``: ``(doc, kind, name)`` per declaration of a key
+    already declared.  ``members``: substitution head ``(uri, name)`` ->
+    its members' ``(uri, name)``.  ``originals``: a reference inside an
+    xs:redefine child to the name it redefines -> the original definition
+    it means (None: the redefined document holds none)."""
+
+    homes: dict
+    table: dict = field(default_factory=dict)
+    duplicates: list = field(default_factory=list)
+    members: dict = field(default_factory=dict)
+    originals: dict = field(default_factory=dict)
+
+    def named(self, kind: str) -> list:
+        """``(local name, element)`` of each global ``kind``, in
+        registration order."""
+        return [(k[2], el) for k, el in self.table.items() if k[0] == kind]
+
+    def uri(self, node: ET.Element, qname: str) -> Optional[str]:
+        """Namespace URI of ``qname`` read at ``node``
+        (:meth:`SchemaDoc.uri_of`)."""
+        return self.homes[node].uri_of(node, qname)
+
+    def lookup(self, kinds: tuple, uri: Optional[str], name: str):
+        """The global of one of ``kinds`` named ``name`` in namespace
+        ``uri`` (None: an unbound prefix, read as no namespace)."""
+        for kind in kinds:
+            found = self.table.get((kind, uri or "", name))
+            if found is not None:
+                return found
+        return None
+
+    def resolve(self, kinds: tuple, node: ET.Element, qname: str):
+        """The global of one of ``kinds`` that ``qname`` names at
+        ``node``."""
+        original = self.originals.get(node)
+        if original is not None and _KINDS[original.tag] in kinds:
+            return original
+        return self.lookup(kinds, self.uri(node, qname),
+                           qname.rpartition(":")[-1])
+
+
+def schema_components(graph: SchemaGraph) -> Components:
+    """The :class:`Components` of ``graph``."""
+    reg = Components({el: doc for doc in graph.docs
+                      for el in doc.root.iter()})
+    reached = {id(d.via): d for d in graph.docs if d.via is not None}
+    unresolved = {id(node) for node, _here in graph.unresolved}
+    for doc in graph.docs:
+        for how in ("redefine", "override"):
+            for node in doc.root.findall(_xs(how)):
+                if not node.get("schemaLocation") or id(node) in unresolved:
+                    continue
+                target = reached.get(id(node))
+                for child in node:
+                    kind, name = _KINDS.get(child.tag), child.get("name")
+                    if kind not in _REDEFINABLE or name is None:
+                        continue  # xs:annotation etc.
+                    if how == "redefine":
+                        # the canonical pattern derives from its own name:
+                        # that reference means the original definition
+                        original = None if target is None else next(
+                            (o for o in target.root.findall(child.tag)
+                             if o.get("name") == name), None)
+                        for el in child.iter():
+                            if el.tag in (_xs("restriction"),
+                                          _xs("extension")):
+                                q = el.get("base")
+                            elif el.tag in (_xs("group"),
+                                            _xs("attributeGroup")) \
+                                    and el is not child:
+                                q = el.get("ref")
+                            else:
+                                continue
+                            if q is not None and _local(q) == name:
+                                reg.originals[el] = original
+                    reg.table[(kind, doc.effective_tns, name)] = child
+    declared: set = set()
+    for doc in graph.docs:
+        for child in doc.root:
+            kind, name = _KINDS.get(child.tag), child.get("name")
+            if kind is None or name is None:
+                continue
+            key = (kind, doc.effective_tns, name)
+            if key in declared:
+                reg.duplicates.append((doc, kind, name))
+                continue
+            declared.add(key)
+            reg.table.setdefault(key, child)
+            head = child.get("substitutionGroup")
+            if kind == "element" and head:
+                reg.members.setdefault(
+                    (doc.uri_of(child, head), _local(head)), []
+                ).append((doc.effective_tns, name))
+    return reg
+
+
 # ---------------------------------------------------------------------------
 # the compiler phases
 # ---------------------------------------------------------------------------
@@ -1213,85 +1393,6 @@ def _version_gate(root: ET.Element, version: str) -> Optional[CompiledXsd]:
     ), target_namespace=root.get("targetNamespace") or "")
 
 
-def _rewire_self_base(node: ET.Element, name: str, alias: str) -> bool:
-    """Point any self-referential derivation/ref inside a redefine child at
-    ``alias`` (the preserved original definition).  Returns True if anything
-    was rewired — the canonical xs:redefine pattern derives from itself
-    (e.g. ``<xs:restriction base="X">`` inside the redefinition of X)."""
-    hit = False
-    for el in node.iter():
-        base = el.get("base")
-        if base is not None and _local(base) == name and el.tag in (
-            _xs("restriction"), _xs("extension")
-        ):
-            el.set("base", alias)
-            hit = True
-        ref = el.get("ref")
-        if (
-            ref is not None and _local(ref) == name
-            and el.tag in (_xs("group"), _xs("attributeGroup"))
-            and el is not node
-        ):
-            el.set("ref", alias)
-            hit = True
-    return hit
-
-
-_REGISTRIES = {
-    _xs("simpleType"): "simple_types",
-    _xs("complexType"): "complex_types",
-    _xs("element"): "elements",
-    _xs("group"): "groups",
-    _xs("attributeGroup"): "attr_groups",
-}
-
-
-def _register(ctx: _Ctx, graph: SchemaGraph) -> None:
-    """Register the global components by local name.  xs:redefine /
-    xs:override children REPLACE the target document's same-named globals
-    (loaders.py redefine/override handling) and register first; a redefine
-    whose derivation references its own name (the canonical pattern) gets
-    the base rewired to the preserved original under '<name>__orig'.
-    Then the first definition wins across the graph (the source first),
-    matching the reference's maps-level registration (loaders.py:118-167:
-    a name is registered once per namespace)."""
-    reached = {id(d.via): d.root for d in graph.docs if d.via is not None}
-    unresolved = {id(node) for node, _here in graph.unresolved}
-    redefines = [
-        (kind, node, reached.get(id(node)))
-        for doc in graph.docs for kind in ("redefine", "override")
-        for node in doc.root.findall(_xs(kind))
-        if node.get("schemaLocation") and id(node) not in unresolved
-    ]
-    for kind, node, troot in redefines:
-        for child in list(node):
-            regname = _REGISTRIES.get(child.tag)
-            name = child.get("name")
-            if regname in (None, "elements") or name is None:
-                continue  # xs:annotation etc.
-            reg = getattr(ctx, regname)
-            if kind == "redefine" and _rewire_self_base(child, name,
-                                                        f"{name}__orig"):
-                orig = None if troot is None else next(
-                    (o for o in troot.findall(child.tag)
-                     if o.get("name") == name), None
-                )
-                if orig is None:
-                    raise XsdCompileError(
-                        f"xs:redefine of {name!r}: self-referential "
-                        "derivation but the original definition was not "
-                        "found in the redefined document"
-                    )
-                reg[f"{name}__orig"] = orig
-            reg[name] = child
-    for doc in graph.docs:
-        for child in doc.root:
-            if child.tag in _REGISTRIES:
-                getattr(ctx, _REGISTRIES[child.tag]).setdefault(
-                    child.get("name"), child
-                )
-
-
 def _derivations(content: Optional[ET.Element]) -> list:
     """The xs:extension then xs:restriction children of a complexContent
     or simpleContent node (none for None)."""
@@ -1307,7 +1408,7 @@ def _model_groups(ctx: _Ctx, ct: ET.Element):
     cc = ct.find(_xs("complexContent"))
     for node in [ct] if cc is None else _derivations(cc):
         if node.tag == _xs("extension"):
-            base = ctx.complex_types.get(_local(node.get("base")))
+            base = _ref(ctx, ("complexType",), node, node.get("base"))
             if base is not None:
                 yield from _model_groups(ctx, base)
         for group_tag in ("sequence", "all", "choice"):
@@ -1320,7 +1421,7 @@ def _detect_tables(ctx: _Ctx) -> None:
     tables, simple ones one-column tables.  Its parent is the per-document
     singleton whose identity constraints scope to scope_col."""
     n_particles: dict = {}
-    for gname, gel in ctx.elements.items():
+    for gname, gel in ctx.reg.named("element"):
         _, gpayload = _element_type(gel, ctx)
         if not isinstance(gpayload, ET.Element):
             continue
@@ -1328,9 +1429,8 @@ def _detect_tables(ctx: _Ctx) -> None:
             # a repeated model GROUP repeats its children (issue_026's
             # <xs:sequence maxOccurs="unbounded">): effective occurrence
             # bounds multiply through the group's
-            gmax_attr = group.get("maxOccurs", "1")
-            gmax = None if gmax_attr == "unbounded" else int(gmax_attr)
-            gmin = int(group.get("minOccurs", "1"))
+            gmax = _count(group, "maxOccurs", "1")
+            gmin = _count(group, "minOccurs", "1")
             # a CHOICE picks one branch per repetition: each child's
             # effective minimum is 0 (models.py choice semantics)
             is_choice = group.tag == _xs("choice")
@@ -1338,14 +1438,14 @@ def _detect_tables(ctx: _Ctx) -> None:
                 decl = _resolve_element(el, ctx)
                 position = n_particles.get(gname, 0)
                 n_particles[gname] = position + 1
-                max_occ = _max_occurs(el)
+                max_occ = _count(el, "maxOccurs", "1")
                 eff_max = (
                     None if (max_occ is None or gmax is None)
                     else max_occ * gmax
                 )
                 eff_min = (
                     0 if is_choice
-                    else int(el.get("minOccurs", "1")) * gmin
+                    else _count(el, "minOccurs", "1") * gmin
                 )
                 if eff_max is not None and eff_max <= 1:
                     continue
@@ -1413,8 +1513,8 @@ def _flatten_tables(ctx: _Ctx) -> None:
     if not ctx.detected and not ctx.detected_simple:
         # pure-singleton documents (issue_028's root): every global complex
         # element with flattenable fields becomes a document table
-        parent_names = set(ctx.elements)
-    for gname, gel in ctx.elements.items():
+        parent_names = {gname for gname, _gel in ctx.reg.named("element")}
+    for gname, gel in ctx.reg.named("element"):
         if gname in ctx.tables or gname in ctx.detected_simple \
                 or gname not in parent_names:
             continue
@@ -1460,37 +1560,34 @@ def _overlay(ctx: _Ctx, ctype: ET.Element, key: str,
     ), n_pend
 
 
-def _base_chain(ctx: _Ctx, tname: str, seen: tuple = ()) -> list:
-    """Names of the types ``tname`` derives from, nearest first."""
-    ct = ctx.complex_types.get(tname)
-    if ct is None:
-        return []
+def _base_chain(ctx: _Ctx, ct: ET.Element, seen: tuple = ()) -> list:
+    """The global complexTypes ``ct`` derives from, nearest first."""
     node = ct.find(_xs("complexContent"))
     if node is None:
         node = ct.find(_xs("simpleContent"))
     for d in _derivations(node):
         if d.get("base"):
-            b = _local(d.get("base"))
-            if b in seen:
+            b = _ref(ctx, ("complexType",), d, d.get("base"))
+            if b is None or b in seen:
                 return []
             return [b] + _base_chain(ctx, b, seen + (b,))
     return []
 
 
-def _xsi_overlays(ctx: _Ctx, name: str, d_local: str,
+def _xsi_overlays(ctx: _Ctx, name: str, d_local: str, ctype,
                   nested: bool) -> None:
     """Dynamic type substitution on instances (reference
-    elements.py:657-682): for table ``name`` of declared type ``d_local``,
-    every global complexType DERIVING from it compiles to an overlay the
-    instance reader validates rows carrying xsi:type=T against.  Nested
-    repeated children found inside a row table's overlay become nested
-    tables gated on that xsi:type; below a nested table's overlay they are
-    not supported."""
+    elements.py:657-682): for table ``name`` of declared type ``d_local``
+    (the complexType ``ctype``), every global complexType DERIVING from it
+    compiles to an overlay the instance reader validates rows carrying
+    xsi:type=T against.  Nested repeated children found inside a row
+    table's overlay become nested tables gated on that xsi:type; below a
+    nested table's overlay they are not supported."""
     if d_local:
         ctx.declared_types[name] = d_local
-    for T in ctx.derived_of.get(d_local, ()):
+    for T, tct in ctx.derived_of.get(ctype, ()):
         key = f"{name}@{T}"
-        ov, n_pend = _overlay(ctx, ctx.complex_types[T], key, key)
+        ov, n_pend = _overlay(ctx, tct, key, key)
         if nested:
             del ctx.pending_nested[n_pend:]
         for ent in ctx.pending_nested[n_pend:]:
@@ -1504,12 +1601,12 @@ def _overlays(ctx: _Ctx, version: str) -> None:
     """The overlays of the row tables: xsi:type (:func:`_xsi_overlays`),
     XSD 1.1 conditional type alternatives and substitution-group
     members."""
-    for tname in ctx.complex_types:
-        for b in _base_chain(ctx, tname):
-            ctx.derived_of.setdefault(b, []).append(tname)
-    for name, (el, *_rest) in ctx.detected.items():
+    for tname, ct in ctx.reg.named("complexType"):
+        for b in _base_chain(ctx, ct):
+            ctx.derived_of.setdefault(b, []).append((tname, ct))
+    for name, (el, ctype, *_rest) in ctx.detected.items():
         decl = _resolve_element(el, ctx)
-        _xsi_overlays(ctx, name, _local(decl.get("type") or ""),
+        _xsi_overlays(ctx, name, _local(decl.get("type") or ""), ctype,
                       nested=False)
     # <xs:alternative test="@mode='A'" type="T"/> children of an element
     # declaration (reference XsdAlternative elements.py:1450-1476,
@@ -1536,15 +1633,15 @@ def _overlays(ctx: _Ctx, version: str) -> None:
                         )
                         continue
                     attr, value = m.group(1), m.group(3)
-                if tlocal not in ctx.complex_types:
+                tct = _ref(ctx, ("complexType",), arm, arm.get("type"))
+                if tct is None:
                     ctx.restrictions.append(
                         f"{name}: xs:alternative type {arm.get('type')!r} "
                         "is not a named complexType (arm not applied)"
                     )
                     continue
                 # violation paths read '<element>/<col>'
-                ov, n_pend = _overlay(ctx, ctx.complex_types[tlocal],
-                                      f"{name}@alt@{tlocal}", name)
+                ov, n_pend = _overlay(ctx, tct, f"{name}@alt@{tlocal}", name)
                 del ctx.pending_nested[n_pend:]  # not supported below arms
                 ctx.alt_overlays.setdefault(name, []).append(
                     dict(attr=attr, value=value, type=tlocal, **ov)
@@ -1553,8 +1650,9 @@ def _overlays(ctx: _Ctx, version: str) -> None:
     # instance (elements.py:611-621): compile the member's type to an
     # overlay the reader validates member rows against, merging them into
     # the head's table for occurrence/identity checks
-    for gname, gel in ctx.elements.items():
-        head = _local(gel.get("substitutionGroup") or "")
+    for gname, gel in ctx.reg.named("element"):
+        head_el = _ref(ctx, ("element",), gel, gel.get("substitutionGroup"))
+        head = "" if head_el is None else head_el.get("name")
         if not head or head not in ctx.detected or gname in ctx.detected:
             continue
         # the member stands where its head does: declared content of the
@@ -1622,7 +1720,9 @@ def _nested_tables(ctx: _Ctx) -> None:
         ctx.particle_rank[nname] = qi
         # the nested table's own derived types (issue_314: <item
         # b:type="Concrete..."> below a doc row)
-        _xsi_overlays(ctx, nname, ent["type_name"], nested=True)
+        _xsi_overlays(ctx, nname, ent["type_name"],
+                      ent["payload"] if ent["kind"] == "complex" else None,
+                      nested=True)
 
 
 def _constraints(ctx: _Ctx, el: ET.Element, host: Optional[str]):
@@ -1652,8 +1752,8 @@ def _identities(ctx: _Ctx) -> None:
     keys_by_name: dict = {}  # key/unique name -> (table, field cols, last)
     keyrefs: list = []
     seen: set = set()
-    walks = [(gel, gname) for gname, gel in ctx.elements.items()]
-    walks += [(ct, None) for ct in ctx.complex_types.values()]
+    walks = [(gel, gname) for gname, gel in ctx.reg.named("element")]
+    walks += [(ct, None) for _name, ct in ctx.reg.named("complexType")]
     for el, top in walks:
         for node, host in _constraints(ctx, el, top):
             name = node.get("name")
@@ -1800,7 +1900,7 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
     doc_rows = set(ctx.doc_rows)
     preserve_space: set = set()
     if not specs:
-        for gname, gel in ctx.elements.items():
+        for gname, gel in ctx.reg.named("element"):
             kind, facets = _element_type(gel, ctx)
             if kind != "simple":
                 continue
@@ -1843,7 +1943,7 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
     # container-level mixed: global elements whose own type admits char
     # data among element children (gates the container _VALUE check)
     mixed_containers: set = set()
-    for gname, gel in ctx.elements.items():
+    for gname, gel in ctx.reg.named("element"):
         gpayload = _element_type(gel, ctx)[1]
         if isinstance(gpayload, ET.Element) and _effective_mixed(gpayload):
             mixed_containers.add(gname)
@@ -1866,7 +1966,9 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
         mixed_paths={n: frozenset(ctx.mixed.get(n, ())) for n in specs},
         mixed_containers=frozenset(mixed_containers),
         target_namespace=ctx.root.get("targetNamespace") or "",
-        global_elements=frozenset(ctx.elements),
+        global_elements=frozenset(
+            gname for gname, _gel in ctx.reg.named("element")
+        ),
         preserve_space=frozenset(preserve_space),
         nested_tables=kept(ctx.nested),
         xsi_overlays=kept(ctx.xsi_overlays),
@@ -1903,9 +2005,17 @@ def compile_xsd(
     gated = _version_gate(root, version)
     if gated is not None:
         return gated
-    ctx = _Ctx(root=root, scope_col=scope_col, order_col=order_col,
+    reg = schema_components(graph)
+    for node, original in reg.originals.items():
+        if original is None:
+            name = _local(node.get("base") or node.get("ref"))
+            raise XsdCompileError(
+                f"xs:redefine of {name!r}: self-referential derivation but "
+                "the original definition was not found in the redefined "
+                "document"
+            )
+    ctx = _Ctx(root=root, reg=reg, scope_col=scope_col, order_col=order_col,
                lexical=lexical, restrictions=notes)
-    _register(ctx, graph)
     _detect_tables(ctx)
     _flatten_tables(ctx)
     _overlays(ctx, version)

@@ -19,8 +19,9 @@ Implemented check families (each cites the reference machinery it mirrors):
   schema-for-schemas (xsdbase.py:117-146 ``_parse`` attribute validation;
   features/models/illegal-attributes.xsd, illegal-declarations.xsd,
   issues/issue_009);
-* **occurrence sanity** — ``minOccurs > maxOccurs``
-  (particles.py:77-108; illegal-occurs.xsd);
+* **number sanity** — malformed or inverted occurrence bounds
+  (particles.py:77-108; illegal-occurs.xsd) and non-integer length/digit
+  facet values;
 * **circular model groups** — group reference cycles
   (groups.py circularity checks; circular_model.xsd, recursive-groups.xsd);
 * **Unique Particle Attribution** — overlapping element particles
@@ -30,10 +31,11 @@ Implemented check families (each cites the reference machinery it mirrors):
 * **namespace-aware reference resolution** — every QName reference must
   resolve in its own document's namespace context, chameleon includes adopt
   the including document's targetNamespace, a foreign-namespace reference
-  requires a matching ``xs:import`` (loaders.py:84-167;
-  default_ns_invalid.xsd, import-case1/2, include-case4/6/7).  The
-  document graph comes from ``xsd_compile.load_schema_graph``, the loader
-  the compiler reads too;
+  requires a matching ``xs:import``, a global is declared once per
+  namespace (loaders.py:84-167; default_ns_invalid.xsd, import-case1/2,
+  include-case4/6/7).  The document graph and its global components come
+  from ``xsd_compile.load_schema_graph`` and ``schema_components``, the
+  loader and registry the compiler reads too;
 * **derivation checks** — enumeration restrictions must narrow the base's
   enumeration (issue #202), ``xs:list`` items must be atomic (list_types
   .xsd), complexContent extension of a mixed base must stay mixed
@@ -55,19 +57,23 @@ from dataclasses import dataclass, field
 from typing import Optional, Union
 
 from sissaschool_xmlschema_spark.xsd_compile import (
+    _VALUE_FACETS,
     BUILTIN_TYPES,
     XSD_NS,
+    Components,
     SchemaDoc,
+    XsdCompileError,
     _MODEL_GROUPS,
+    _count,
     _derivations,
     _effective_mixed,
+    _ns_admits,
     _xs,
     load_schema_graph,
+    schema_components,
 )
 
 VC_NS = "http://www.w3.org/2007/XMLSchema-versioning"
-XML_NS = "http://www.w3.org/XML/1998/namespace"
-XSI_NS = "http://www.w3.org/2001/XMLSchema-instance"
 
 
 def _localtag(elem: ET.Element) -> str:
@@ -83,30 +89,23 @@ class SchemaError:
     reason: str
 
 
-# the global component kinds, each registered once per namespace
-_GLOBAL_KINDS = {"simpleType", "complexType", "element", "attribute",
-                 "group", "attributeGroup", "notation"}
-
-
 @dataclass
 class _Ctx:
     version: str
     docs: list = field(default_factory=list)
     errors: list = field(default_factory=list)
-    # (kind, uri, name) -> defining element
-    registry: dict = field(default_factory=dict)
-    # substitution heads: (uri, local) -> [(uri, local) members]
-    subst: dict = field(default_factory=dict)
+    reg: Optional[Components] = None
 
     def err(self, where: str, code: str, reason: str) -> None:
         self.errors.append(SchemaError(where, code, reason))
 
 
 def _load(ctx: _Ctx, source, base_dir: Optional[str]) -> None:
-    """The schema graph and its documents' errors: one that is not a
-    schema, an included one (also redefined or overridden) whose
-    targetNamespace differs from its includer's (loaders.py include
-    rules).  Unreachable locations are hints, not errors."""
+    """The schema graph, its global components and its documents' errors:
+    one that is not a schema, an included one (also redefined or
+    overridden) whose targetNamespace differs from its includer's
+    (loaders.py include rules), a global declared twice in one namespace.
+    Unreachable locations are hints, not errors."""
     graph = load_schema_graph(source, base_dir)
     ctx.docs = graph.docs
     for path, code, detail in graph.failures:
@@ -124,41 +123,14 @@ def _load(ctx: _Ctx, source, base_dir: Optional[str]) -> None:
                 f"targetNamespace {doc.tns!r} (including document: "
                 f"{adopted!r}) — loaders.py include rules",
             )
-
-
-def _build_registry(ctx: _Ctx) -> None:
-    for doc in ctx.docs:
-        for child in doc.root:
-            tag = _localtag(child)
-            name = child.get("name")
-            if tag not in _GLOBAL_KINDS or name is None:
-                continue
-            key = (tag, doc.effective_tns, name)
-            if key in ctx.registry:
-                ctx.err(
-                    doc.where, "duplicate-declaration",
-                    f"global xs:{tag} {name!r} already declared in the "
-                    "assembled schema (loaders.py: a name registers once "
-                    "per namespace)",
-                )
-                continue
-            ctx.registry[key] = (doc, child)
-            if tag == "element":
-                head = child.get("substitutionGroup")
-                if head:
-                    huri = doc.uri_of(child, head)
-                    hlocal = head.rpartition(":")[-1]
-                    ctx.subst.setdefault((huri, hlocal), []).append(
-                        (doc.effective_tns, name)
-                    )
-
-
-def _lookup(ctx: _Ctx, tags, uri: Optional[str], local: str):
-    for t in tags:
-        hit = ctx.registry.get((t, uri or "", local))
-        if hit is not None:
-            return hit
-    return None
+    ctx.reg = schema_components(graph)
+    for doc, kind, name in ctx.reg.duplicates:
+        ctx.err(
+            doc.where, "duplicate-declaration",
+            f"global xs:{kind} {name!r} already declared in the "
+            "assembled schema (loaders.py: a name registers once "
+            "per namespace)",
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -345,25 +317,42 @@ def _check_syntax(ctx: _Ctx, doc: SchemaDoc) -> None:
                 )
 
 
-def _check_occurs(ctx: _Ctx, doc: SchemaDoc) -> None:
-    """minOccurs > maxOccurs (particles.py:77-108)."""
+def _bounds(el: ET.Element) -> Optional[tuple]:
+    """``(minOccurs, maxOccurs)`` of a particle (maxOccurs None =
+    unbounded); None when either is malformed (:func:`_check_numbers`
+    reports that)."""
+    try:
+        return _count(el, "minOccurs", "1"), _count(el, "maxOccurs", "1")
+    except XsdCompileError:
+        return None
+
+
+def _check_numbers(ctx: _Ctx, doc: SchemaDoc) -> None:
+    """Malformed occurrence bounds, minOccurs > maxOccurs
+    (particles.py:77-108) and non-integer length/digit facet values."""
     for el, parents in _walk(doc):
         if not el.tag.startswith(_xs("")):
             continue
+        if _localtag(el) in _VALUE_FACETS:
+            try:
+                _count(el, "value")
+            except XsdCompileError as err:
+                ctx.err(doc.where, "illegal-facet-value", str(err))
         mn, mx = el.get("minOccurs"), el.get("maxOccurs")
-        if mn is None or mx in (None, "unbounded"):
+        if mn is None and mx is None:
             continue
-        try:
-            if int(mn) > int(mx):
-                ctx.err(
-                    doc.where, "illegal-occurs",
-                    f"minOccurs {mn} > maxOccurs {mx} on xs:"
-                    f"{_localtag(el)} "
-                    f"{el.get('name') or el.get('ref') or ''}".strip(),
-                )
-        except ValueError:
+        bounds = _bounds(el)
+        if bounds is None:
             ctx.err(doc.where, "illegal-occurs",
                     f"non-numeric occurs bounds ({mn}, {mx})")
+        elif mn is not None and mx is not None and bounds[1] is not None \
+                and bounds[0] > bounds[1]:
+            ctx.err(
+                doc.where, "illegal-occurs",
+                f"minOccurs {mn} > maxOccurs {mx} on xs:"
+                f"{_localtag(el)} "
+                f"{el.get('name') or el.get('ref') or ''}".strip(),
+            )
 
 
 def _particle_group_refs(node: ET.Element):
@@ -414,37 +403,21 @@ def _check_group_cycles(ctx: _Ctx) -> None:
 # --- UPA ---------------------------------------------------------------
 
 
-def _ns_admits(ns_set: str, uri: Optional[str], target_ns: str) -> bool:
-    if ns_set == "##any":
-        return True
-    if ns_set == "##other":
-        return uri not in ("", None) and uri != target_ns
-    if uri is None:
-        return False
-    for tok in ns_set.split():
-        want = (
-            target_ns if tok == "##targetNamespace"
-            else "" if tok == "##local" else tok
-        )
-        if uri == want:
-            return True
-    return False
-
-
 def _name(el: ET.Element) -> str:
     """Local name an element particle declares or refers to."""
     return el.get("name") or (el.get("ref") or "").rpartition(":")[-1]
 
 
 def _abstract(ctx: _Ctx, uri: Optional[str], local: str) -> bool:
-    decl = _lookup(ctx, ("element",), uri, local)
-    return decl is not None and decl[1].get("abstract") == "true"
+    decl = ctx.reg.lookup(("element",), uri, local)
+    return decl is not None and decl.get("abstract") == "true"
 
 
 def _repeats(el: ET.Element) -> bool:
     """A particle that can occur more often than its minimum."""
-    mn, mx = int(el.get("minOccurs", "1")), el.get("maxOccurs", "1")
-    return mx == "unbounded" or int(mx) > mn
+    bounds = _bounds(el)
+    return bounds is not None and (bounds[1] is None
+                                   or bounds[1] > bounds[0])
 
 
 def _particle_names(ctx: _Ctx, doc: SchemaDoc, el: ET.Element):
@@ -467,7 +440,7 @@ def _particle_names(ctx: _Ctx, doc: SchemaDoc, el: ET.Element):
     seen = set(stack)
     while stack:
         head = stack.pop()
-        for member in ctx.subst.get(head, ()):
+        for member in ctx.reg.members.get(head, ()):
             if member not in seen:
                 seen.add(member)
                 names.add(member)
@@ -507,7 +480,12 @@ def _check_upa(ctx: _Ctx, doc: SchemaDoc) -> None:
                 return False  # no reference case; stay conservative
             wild_ns = s1 if k1 == "wild" else s2
             names = s2 if k1 == "wild" else s1
-            return any(_ns_admits(wild_ns, u, tns) for u, _n in names)
+            # an unbound prefix (None) overlaps ##any alone
+            return any(
+                _ns_admits(wild_ns, u, tns) if u is not None
+                else wild_ns == "##any"
+                for u, _n in names
+            )
 
         tag = _localtag(el)
         if tag in ("choice", "all"):
@@ -552,8 +530,6 @@ def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
     """Namespace-aware QName resolution (loaders.py:118-167): the
     referenced component must exist under the resolved namespace, and a
     foreign namespace must be imported by THIS document (import-case2)."""
-    allowed_ns = {doc.effective_tns, "", XSD_NS, XML_NS, XSI_NS}
-    allowed_ns |= doc.imports
     for el, parents in _walk(doc):
         if not el.tag.startswith(_xs("")) or _in_annotation(parents):
             continue
@@ -583,7 +559,7 @@ def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
                         f"({attr} of xs:{tag})",
                     )
                 continue
-            if uri is not None and uri not in allowed_ns:
+            if not doc.may_reference(uri):
                 ctx.err(
                     doc.where, "missing-import",
                     f"{attr}={qname!r} references namespace {uri!r} "
@@ -593,7 +569,7 @@ def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
                 continue
             # same-document inline definitions satisfy a reference only
             # for GLOBAL components; the registry holds exactly those
-            if _lookup(ctx, tags, uri, local) is None:
+            if ctx.reg.resolve(tags, el, qname) is None:
                 ctx.err(
                     doc.where, "unresolved-reference",
                     f"{attr}={qname!r} on xs:{tag} does not resolve to a "
@@ -604,23 +580,20 @@ def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
 # --- derivation checks ----------------------------------------------------
 
 
-def _resolve_type_chain(ctx: _Ctx, doc: SchemaDoc, el: ET.Element,
-                        qname: str, limit: int = 20):
-    """Follow simpleType restriction chains by base QName."""
+def _resolve_type_chain(ctx: _Ctx, el: ET.Element, qname: str,
+                        limit: int = 20) -> list:
+    """The global simpleTypes a restriction chain passes, starting at
+    the one ``qname`` names at ``el``."""
     chain = []
-    cur_doc, cur = doc, el
-    cur_q = qname
+    cur, cur_q = el, qname
     while cur_q and limit:
         limit -= 1
-        uri = cur_doc.uri_of(cur, cur_q)
-        if uri == XSD_NS:
+        if ctx.reg.uri(cur, cur_q) == XSD_NS:
             break
-        hit = _lookup(ctx, ("simpleType",), uri,
-                      cur_q.rpartition(":")[-1])
-        if hit is None:
+        st = ctx.reg.resolve(("simpleType",), cur, cur_q)
+        if st is None:
             break
-        cur_doc, st = hit
-        chain.append((cur_doc, st))
+        chain.append(st)
         r = st.find(_xs("restriction"))
         if r is None:
             break
@@ -633,8 +606,8 @@ def _check_derivations(ctx: _Ctx, doc: SchemaDoc) -> None:
         if el.tag == _xs("list"):
             item = el.get("itemType")
             if item:
-                chain = _resolve_type_chain(ctx, doc, el, item)
-                if chain and chain[0][1].find(_xs("list")) is not None:
+                chain = _resolve_type_chain(ctx, el, item)
+                if chain and chain[0].find(_xs("list")) is not None:
                     ctx.err(
                         doc.where, "list-of-list",
                         f"xs:list itemType {item!r} is itself a list type "
@@ -653,7 +626,7 @@ def _check_derivations(ctx: _Ctx, doc: SchemaDoc) -> None:
             base = el.get("base")
             if not base:
                 continue
-            for cdoc, st in _resolve_type_chain(ctx, doc, el, base):
+            for st in _resolve_type_chain(ctx, el, base):
                 r = st.find(_xs("restriction"))
                 if r is None:
                     break
@@ -699,12 +672,9 @@ def _check_complex_content(ctx: _Ctx, doc: SchemaDoc, ct: ET.Element,
         base_q = deriv.get("base")
         if not base_q:
             continue
-        uri = doc.uri_of(deriv, base_q)
-        hit = _lookup(ctx, ("complexType",), uri,
-                      base_q.rpartition(":")[-1])
-        if hit is None:
+        base_ct = ctx.reg.resolve(("complexType",), deriv, base_q)
+        if base_ct is None:
             continue  # unresolved base is the reference checker's job
-        bdoc, base_ct = hit
         base_group = _model_group_of(base_ct)
         deriv_group = _model_group_of(deriv)
         if deriv_tag == "extension":
@@ -756,7 +726,8 @@ def _check_complex_content(ctx: _Ctx, doc: SchemaDoc, ct: ET.Element,
             for c in base_group:
                 if c.tag != _xs("element"):
                     continue
-                if int(c.get("minOccurs", "1")) < 1:
+                bounds = _bounds(c)
+                if bounds is None or bounds[0] < 1:
                     continue
                 ref = c.get("ref")
                 nm = _name(c)
@@ -767,7 +738,7 @@ def _check_complex_content(ctx: _Ctx, doc: SchemaDoc, ct: ET.Element,
                 )
                 members = {
                     m_local
-                    for m_uri, m_local in ctx.subst.get((huri, nm), ())
+                    for m_uri, m_local in ctx.reg.members.get((huri, nm), ())
                 }
                 standing = sorted(members & set(deriv_particles))
                 if standing:
@@ -799,9 +770,7 @@ def _check_default_attributes(ctx: _Ctx, doc: SchemaDoc) -> None:
     da = doc.root.get("defaultAttributes")
     if not da:
         return
-    uri = doc.uri_of(doc.root, da)
-    if _lookup(ctx, ("attributeGroup",), uri,
-               da.rpartition(":")[-1]) is None:
+    if ctx.reg.resolve(("attributeGroup",), doc.root, da) is None:
         ctx.err(
             doc.where, "unresolved-reference",
             f"defaultAttributes={da!r} does not resolve to a global "
@@ -826,10 +795,9 @@ def validate_schema_document(
     legality rules the reference switches on ``--version``."""
     ctx = _Ctx(version=version)
     _load(ctx, source, base_dir)
-    _build_registry(ctx)
     for doc in ctx.docs:
         _check_syntax(ctx, doc)
-        _check_occurs(ctx, doc)
+        _check_numbers(ctx, doc)
         _check_upa(ctx, doc)
         _check_references(ctx, doc)
         _check_derivations(ctx, doc)

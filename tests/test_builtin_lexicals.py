@@ -4,14 +4,9 @@ dateTimeStamp, names/QName/language, numerics — each checked through the
 real JVM rlike lowering, clean + dirty values interleaved."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import lower_facet
-from sissaschool_xmlschema_spark.plans.decode import (
-    duration_to_months,
-    duration_to_seconds,
-)
 
 
 def check(spark, type_name, values):
@@ -111,42 +106,3 @@ def test_typed_column_through_lexical(spark):
     rows = df.select(ok_int.alias("a"), ok_pos.alias("b")).collect()
     assert [r["a"] for r in rows] == [True, True]
     assert [r["b"] for r in rows] == [False, True]
-
-
-def test_duration_to_months(spark):
-    df = spark.createDataFrame(
-        [("P1Y",), ("P1Y2M",), ("-P2Y",), ("P5M",), ("P1D",), (None,)],
-        "v string",
-    )
-    got = [
-        r["m"] for r in df.select(duration_to_months(F.col("v")).alias("m"))
-        .collect()
-    ]
-    assert got == [12, 14, -24, 5, None, None]  # P1D: outside the subtype
-
-
-def test_duration_to_seconds(spark):
-    df = spark.createDataFrame(
-        [("P1D",), ("PT1H",), ("P1DT2H3M4.5S",), ("-PT0.5S",), ("P1Y",),
-         ("PT2M",), (None,)],
-        "v string",
-    )
-    got = [
-        r["s"] for r in df.select(duration_to_seconds(F.col("v")).alias("s"))
-        .collect()
-    ]
-    assert got == [86400.0, 3600.0, 86400 + 7200 + 180 + 4.5, -0.5, None,
-                   120.0, None]
-
-
-def test_duration_range_via_decode(spark):
-    """Range facet on a duration column = decode to the comparable numeric,
-    compare there (the reference compares Duration value objects,
-    facets.py:275-438 on the decoded value space)."""
-    df = spark.createDataFrame(
-        [("c", 0, "P30M"), ("c", 1, "P1Y"), ("c", 2, "P4Y")],
-        "conv_id string, turn_idx int, dur string",
-    )
-    months = duration_to_months(F.col("dur"))
-    bad = df.filter(~((months >= 12) & (months <= 36)))
-    assert [r["turn_idx"] for r in bad.collect()] == [2]

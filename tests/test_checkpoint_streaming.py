@@ -229,64 +229,6 @@ def test_stateful_contiguity_across_batches(spark, tmp_path):
     assert [(r["conv_id"], r["turn_idx"]) for r in rows] == [("c1", 3)]
 
 
-def test_session_windows_streaming(spark, tmp_path):
-    from sissaschool_xmlschema_spark.streaming.incremental import (
-        session_turn_counts,
-    )
-
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp"
-    )
-    # two sessions for c1 separated by > 30 min, one session for c2
-    rows = [
-        ("c1", 0, "user", "a", None, dt.datetime(2024, 1, 1, 10, 0)),
-        ("c1", 1, "assistant", "b", None, dt.datetime(2024, 1, 1, 10, 5)),
-        ("c1", 2, "user", "c", None, dt.datetime(2024, 1, 1, 12, 0)),
-        ("c2", 0, "user", "d", None, dt.datetime(2024, 1, 1, 10, 0)),
-    ]
-    src = str(tmp_path / "sess")
-    spark.createDataFrame(rows, schema).repartition(1).write.parquet(
-        src + "/f1.parquet"
-    )
-    stream = spark.readStream.schema(schema).parquet(src + "/*")
-    out = session_turn_counts(stream, small_spec())
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["conv_id"], r["session_start"].hour): (r["n_turns"], r["n_user"])
-        for r in spark.sql("select * from sessions_out").collect()
-    }
-    # append mode only emits sessions the watermark has passed: the 12:00
-    # session is still open when the stream ends (max event time 12:00,
-    # watermark 11:00) — correct late-data semantics, not a bug
-    assert got == {("c1", 10): (2, 1), ("c2", 10): (1, 1)}
-
-
-def test_session_windows_batch(spark):
-    from sissaschool_xmlschema_spark.streaming.incremental import (
-        session_turn_counts,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("c1", 0, "user", "a", None, dt.datetime(2024, 1, 1, 10, 0)),
-            ("c1", 1, "user", "b", None, dt.datetime(2024, 1, 1, 10, 10)),
-        ],
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp",
-    )
-    rows = session_turn_counts(df, small_spec()).collect()
-    assert len(rows) == 1 and rows[0]["n_turns"] == 2
-
-
 def occurs_spec():
     return S.TableSpec(
         name="transcripts",

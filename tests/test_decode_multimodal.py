@@ -6,7 +6,6 @@ from sissaschool_xmlschema_spark.operators import multimodal
 from sissaschool_xmlschema_spark.plans.decode import (
     FieldDecode,
     decode,
-    decode_transcripts,
 )
 
 
@@ -73,20 +72,6 @@ def test_union_decode_order_matters(spark):
     typed2, _ = union_decode(df, "u", ("string", "int"))
     r2 = typed2.first()["u"]
     assert r2["member"] == "string" and r2["as_string"] == "7"
-
-
-def test_decode_transcripts_preserves_text(spark):
-    raw = spark.createDataFrame(
-        [("c1", "0", "user", "keep\t\nwhitespace  intact", None,
-          "2024-01-01 00:00:00")],
-        "conv_id string, turn_idx string, role string, text string, "
-        "tool string, ts string",
-    )
-    typed, _ = decode_transcripts(raw)
-    row = typed.first()
-    assert row["text"] == "keep\t\nwhitespace  intact"  # byte-identical
-    assert row["turn_idx"] == 0
-    assert row["ts"] is not None
 
 
 def test_multimodal_feature_plumbing(spark):

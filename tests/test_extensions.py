@@ -173,37 +173,6 @@ def test_conditional_column_spec_roundtrip():
     assert spec_from_dict(spec_to_dict(sp)) == sp
 
 
-def test_substitution_groups(spark):
-    from sissaschool_xmlschema_spark.operators.substitution import (
-        apply_substitutions,
-    )
-
-    sp = S.TableSpec(
-        name="transcripts",
-        columns=(
-            S.ColumnSpec(
-                "role", (S.Enumeration(("system", "user", "assistant", "tool")),)
-            ),
-        ),
-    )
-    df = spark.createDataFrame(
-        [
-            ("c1", 0, "human", "hi", None, TS),      # alias of user
-            ("c1", 1, "bot", "hello", None, TS),     # alias of assistant
-            ("c1", 2, "alien", "??", None, TS),      # no alias → still invalid
-        ],
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp",
-    )
-    resolved = apply_substitutions(
-        df, "role", {"human": "user", "bot": "assistant"}
-    )
-    v = validate(resolved, sp).violations.collect()
-    assert [(r["turn_idx"], r["offending_value"]) for r in v] == [(2, "alien")]
-    # originals preserved for reporting
-    assert resolved.filter("role__orig = 'human'").count() == 1
-
-
 def test_group_pandas_check_whole_conversation_assert(spark):
     """xs:assert over the whole conversation subtree (assertions.py:36-147):
     every tool call must be balanced by a later tool result."""

@@ -2,6 +2,8 @@
 interleaved (mirrors the reference's tests/validators/test_facets.py and the
 F4 fixture in FIXTURES.md)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -212,6 +214,18 @@ def test_unsupported_constructs_fail_at_compile_time():
         translate_pattern("a\\q")
     with pytest.raises(XsdRegexError):
         translate_pattern("tail\\")
+
+
+@pytest.mark.parametrize("pattern", ["[a-", "(ab", "ab)", "a{3,1}"])
+def test_pattern_java_rejects_fails_on_the_driver(spark, pattern):
+    """A pattern the JVM's regex engine rejects raises XsdRegexError
+    naming it while the plan compiles, before any job runs."""
+    from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+
+    with pytest.raises(XsdRegexError, match=re.escape(repr(pattern))):
+        compile_plan(S.TableSpec(
+            name="t", columns=(S.ColumnSpec("x", (S.Pattern((pattern,)),)),),
+        ))
 
 
 def test_anchored_wrapper():

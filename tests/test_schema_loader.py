@@ -66,11 +66,13 @@ def test_include_namespace_mismatch():
 
 
 def test_import_before_include_first_definition_wins():
-    """The compiler resolves by local name: the included Code (followed
-    before the import placed above it) wins for both references."""
+    """Each reference resolves in its own namespace: Code is the included
+    no-namespace type, o:Code the imported urn:other one."""
     c = compile_xsd(fx("order.xsd"))
-    digits = (S.Pattern(("[0-9]+",)),)
-    assert columns(c, "row") == {"code": digits, "other": digits}
+    assert columns(c, "row") == {
+        "code": (S.Pattern(("[0-9]+",)),),
+        "other": (S.Enumeration(("X", "Y")),),
+    }
     # the checker resolves each reference in its own namespace: clean
     assert codes(fx("order.xsd")) == []
 
@@ -127,6 +129,12 @@ STRING_REF = (
 )
 
 
+UNREFERENCED_INCLUDE = row_schema(
+    '<xs:attribute name="n" type="xs:int"/>',
+    extra='<xs:include schemaLocation="string-part.xsd"/>',
+)
+
+
 def test_string_source_include_with_and_without_base_dir():
     # without base_dir the include cannot be anchored: the referenced
     # global element never arrives
@@ -142,15 +150,13 @@ def test_string_source_include_with_and_without_base_dir():
     assert c.restrictions == ()
     assert codes(STRING_REF, base_dir=FX) == []
     # an include nothing references: compiled, its skip noted loudly
-    src = row_schema('<xs:attribute name="n" type="xs:int"/>',
-                     extra='<xs:include schemaLocation="string-part.xsd"/>')
-    c = compile_xsd(src)
+    c = compile_xsd(UNREFERENCED_INCLUDE)
     assert sorted(c.specs) == ["r"]
     assert c.restrictions == (
         "xs:include 'string-part.xsd': string source has no base "
         "directory (pass base_dir=) — skipped",
     )
-    assert codes(src) == []
+    assert codes(UNREFERENCED_INCLUDE) == []
 
 
 def test_duplicate_declaration_first_definition_wins():
@@ -161,24 +167,32 @@ def test_duplicate_declaration_first_definition_wins():
     ]
 
 
+MISSING_IMPORT = row_schema(
+    '<xs:attribute name="c" type="o:Code"/>',
+    extra='<xs:simpleType name="Code"><xs:restriction base="xs:string">'
+          '<xs:length value="2"/></xs:restriction></xs:simpleType>',
+    head=' xmlns:o="urn:other"',
+)
+
+
 def test_missing_import():
-    src = row_schema(
-        '<xs:attribute name="c" type="o:Code"/>',
-        extra='<xs:simpleType name="Code"><xs:restriction base="xs:string">'
-              '<xs:length value="2"/></xs:restriction></xs:simpleType>',
-        head=' xmlns:o="urn:other"',
+    with pytest.raises(XsdCompileError) as err:
+        compile_xsd(MISSING_IMPORT)
+    assert str(err.value) == (
+        "'o:Code' references namespace 'urn:other', which <string> does "
+        "not import"
     )
-    # the compiler reads local names: o:Code is the local Code
-    assert columns(compile_xsd(src), "r") == {"c": (S.Length(2),)}
-    assert codes(src) == [("<string>", "missing-import")]
+    assert codes(MISSING_IMPORT) == [("<string>", "missing-import")]
+
+
+UNRESOLVED = row_schema('<xs:attribute name="c" type="NoSuch"/>')
 
 
 def test_unresolved_reference():
-    src = row_schema('<xs:attribute name="c" type="NoSuch"/>')
     with pytest.raises(XsdCompileError) as err:
-        compile_xsd(src)
+        compile_xsd(UNRESOLVED)
     assert str(err.value) == "unresolved simpleType reference 'NoSuch'"
-    assert codes(src) == [("<string>", "unresolved-reference")]
+    assert codes(UNRESOLVED) == [("<string>", "unresolved-reference")]
 
 
 def test_self_recursive_type_is_cut_one_level_deep():
@@ -250,28 +264,30 @@ def test_circular_group_is_a_compile_error(name, cycle):
         == [("circular-group", str(err.value))]
 
 
+GROUP_BELOW = (
+    f"<xs:schema {XS}>"
+    '<xs:element name="doc"><xs:complexType><xs:group ref="g"/>'
+    "</xs:complexType></xs:element>"
+    '<xs:group name="g"><xs:sequence>'
+    '<xs:element name="a" type="xs:string"/>'
+    '<xs:element name="item" minOccurs="0"><xs:complexType>'
+    '<xs:group ref="g"/></xs:complexType></xs:element>'
+    "</xs:sequence></xs:group></xs:schema>"
+)
+
+
 def test_group_reached_again_below_an_element_is_cut():
     """A group referenced again inside the content of an element it
     declares is recursion through that element: the type guard cuts it one
     level deep, as for recursive types."""
-    src = (
-        f"<xs:schema {XS}>"
-        '<xs:element name="doc"><xs:complexType><xs:group ref="g"/>'
-        "</xs:complexType></xs:element>"
-        '<xs:group name="g"><xs:sequence>'
-        '<xs:element name="a" type="xs:string"/>'
-        '<xs:element name="item" minOccurs="0"><xs:complexType>'
-        '<xs:group ref="g"/></xs:complexType></xs:element>'
-        "</xs:sequence></xs:group></xs:schema>"
-    )
-    c = compile_xsd(src)
+    c = compile_xsd(GROUP_BELOW)
     assert set(columns(c, "doc")) == {"a", "item_a"}
     assert c.restrictions == (
         f"doc: recursive type re-entered at item/item {CUT}",
     )
     # the schema checker follows model-group particles only, not the
     # content of an element the group declares
-    assert codes(src) == []
+    assert codes(GROUP_BELOW) == []
 
 
 def test_only_the_circular_fixtures_report_circular_group():
@@ -282,3 +298,104 @@ def test_only_the_circular_fixtures_report_circular_group():
         if name.endswith(".xsd"):
             got = {code for _, code in codes(fx(name))}
             assert ("circular-group" in got) == (name in circular), name
+
+
+def test_user_type_named_like_a_builtin():
+    """A user type named string is the unprefixed string; xs:string stays
+    the builtin, free of the user type's facets."""
+    c = compile_xsd(fx("user-string.xsd"))
+    assert columns(c, "row") == {
+        "plain": (),
+        "user": (S.WhiteSpace("collapse"), S.Length(2)),
+    }
+    assert codes(fx("user-string.xsd")) == []
+
+
+def test_components_resolve_across_two_namespaces():
+    """row refers to the urn:b element, group and attribute group, total
+    to the no-namespace ones of the same local names."""
+    c = compile_xsd(fx("crossns.xsd"))
+    date = (S.Required(), S.BuiltinLexical("date"))
+    assert columns(c, "row") == {
+        "flag": (S.BooleanLexical(),), "note": date, "day": date,
+    }
+    assert columns(c, "total") == {
+        "n": (S.BuiltinLexical("int"), S.IntRange(-2147483648, 2147483647)),
+        "note": (S.Required(),),
+        "count": (S.Required(), S.BuiltinLexical("int"),
+                  S.IntRange(-2147483648, 2147483647)),
+    }
+    for v in ("1.0", "1.1"):
+        assert codes(fx("crossns.xsd"), v) == []
+
+
+REFERENCE_CODES = {"unresolved-reference", "missing-import"}
+
+
+@pytest.mark.parametrize("source", [
+    pytest.param(fx(name), id=name)
+    for name in sorted(os.listdir(FX)) if name.endswith(".xsd")
+] + [
+    pytest.param(src, id=name) for name, src in (
+        ("STRING_REF", STRING_REF),
+        ("UNREFERENCED_INCLUDE", UNREFERENCED_INCLUDE),
+        ("MISSING_IMPORT", MISSING_IMPORT),
+        ("UNRESOLVED", UNRESOLVED),
+        ("GROUP_BELOW", GROUP_BELOW),
+    )
+])
+def test_compiler_and_checker_agree_on_references(source):
+    """``compile_xsd`` raises a reference error exactly when the checker
+    reports an unresolved reference or a missing import."""
+    reported = bool(REFERENCE_CODES & {code for _, code in codes(source)})
+    try:
+        compile_xsd(source)
+        raised = False
+    except XsdCompileError as err:
+        raised = "unresolved" in str(err) or "does not import" in str(err)
+    assert raised == reported
+
+
+PARTICLES = {
+    "element": '<xs:sequence><xs:element name="e" type="xs:string" {}/>'
+               "</xs:sequence>",
+    "sequence": '<xs:sequence {}><xs:element name="e" type="xs:string"/>'
+                "</xs:sequence>",
+    # the flat subset reads no occurrence bound of a wildcard
+    "any": "<xs:sequence><xs:any {}/></xs:sequence>",
+}
+FACET_BASES = {"length": "string", "minLength": "string",
+               "maxLength": "string", "totalDigits": "decimal",
+               "fractionDigits": "decimal"}
+
+
+@pytest.mark.parametrize("content, code, message", [
+    pytest.param(
+        PARTICLES[tag].format(f'{attr}="x"'), "illegal-occurs",
+        None if tag == "any" else f"{attr}='x' on xs:{tag} is not an integer",
+        id=f"{tag}-{attr}",
+    )
+    for tag in PARTICLES for attr in ("minOccurs", "maxOccurs")
+] + [
+    pytest.param(
+        f'<xs:attribute name="a"><xs:simpleType><xs:restriction '
+        f'base="xs:{base}"><xs:{facet} value="abc"/></xs:restriction>'
+        "</xs:simpleType></xs:attribute>",
+        "illegal-facet-value", f"value='abc' on xs:{facet} is not an integer",
+        id=facet,
+    )
+    for facet, base in FACET_BASES.items()
+])
+def test_malformed_number(content, code, message):
+    """A malformed occurrence bound or integer facet value is an
+    XsdCompileError naming the attribute wherever the compiler reads it,
+    and a checker error, never a raw ValueError."""
+    src = row_schema(content)
+    for v in ("1.0", "1.1"):
+        assert code in {c for _, c in codes(src, v)}
+        if message is None:
+            compile_xsd(src, version=v)
+        else:
+            with pytest.raises(XsdCompileError) as err:
+                compile_xsd(src, version=v)
+            assert str(err.value) == message

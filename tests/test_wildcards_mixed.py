@@ -209,3 +209,22 @@ def test_ns_admits(ns, uri, target, want):
     from sissaschool_xmlschema_spark.sources.xml_instance import _ns_admits
 
     assert _ns_admits(ns, uri, target) is want
+
+
+@pytest.mark.parametrize("ns, upa", [("##any", True), ("##other", False)])
+def test_unbound_prefix_overlaps_any_alone(ns, upa):
+    """The schema checker's reading of the one namespace-set rule: an
+    element reference whose prefix is unbound overlaps an ``##any``
+    wildcard but not an ``##other`` one, where the instance reader
+    (``("##other", None)`` above) admits such a node."""
+    from sissaschool_xmlschema_spark.xsd_meta import validate_schema_document
+
+    xsd = (
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">'
+        '<xs:element name="a" type="xs:string"/>'
+        '<xs:element name="doc"><xs:complexType><xs:choice>'
+        f'<xs:element ref="zz:a"/><xs:any namespace="{ns}"/>'
+        "</xs:choice></xs:complexType></xs:element></xs:schema>"
+    )
+    codes = {e.code for e in validate_schema_document(xsd)}
+    assert ("upa-violation" in codes) is upa
