@@ -30,9 +30,9 @@ containers should land in parquet via ``rowTag=<row element>`` streaming
 (sources/xml_io.py) and validate tabularly.  Tables that share a container
 share its read: each ``(rowTag, preserve_space)`` is inferred once per
 document, and the namespace sniffs run once per document (``_Document``).
-The compiled plans of the schema's tables and overlays, its cross-table
-keyrefs and the model-error collapse are built on the first document and
-kept in ``CompiledXsd.programs`` for every later one.
+The compiled plan of each of the schema's tables, its cross-table keyrefs
+and the model-error collapse are built on the first document and kept in
+``CompiledXsd.programs`` for every later one.
 
 One document is ONE partition.  Spark's XML source reads a file as a
 single split however small ``spark.sql.files.maxPartitionBytes`` is, and
@@ -51,16 +51,17 @@ table, a substitution member, an xsi:type or alternative overlay — goes
 through ONE reader (``_TableRead.read``): a ``_TableReader`` walks the
 rows' inferred struct against one VIEW (the declared type's paths, or an
 overlay's — the ``CompiledXsd.xsi_overlays`` comment gives the shape) and
-yields the string-typed flat rows plus the structural flags.  Each row
-element is read against one type, in the reference's order
-(``_TableRead.typed``): an ``xsi:type`` naming a type derived from the
-declared one (elements.py:657-682), else the first ``xs:alternative`` arm
-whose ``@attr='v'`` test matches (elements.py:1345-1365), else the
-declared type.  Substitution members standing in for their head
-(elements.py:611-621) are read against the member's type and merge into
-the head's table.  Violations are kept as descriptions (``_Flagged``,
-``_Checked``) that only :func:`validate_xml_instance` turns into
-DataFrames, so :func:`xml_instance_tables` builds and binds no validation.
+yields the string-typed flat rows plus the structural flags.  One loop
+(``_TableRead.typed``) reads a table's row sets, each element against the
+one type the reference gives it (an xsi:type, an xs:alternative arm, the
+member's type for a substitution member, else the declared type), tags
+each set with its row type and unions them: they are all rows of the
+table.  Its one plan (``_table_plan``) checks each row under its own type
+alone and counts every row in the declared occurrence bounds and
+identities; a table without overlays has neither tag nor union.
+Structural violations are descriptions (``_Flagged``, one pass per row
+set) that only :func:`validate_xml_instance` turns into DataFrames, so
+:func:`xml_instance_tables` builds and binds no validation.
 
 Beyond the flat subset, the reader resolves (r5): wildcard markers
 (``xs:any``/``xs:anyAttribute``/``xs:openContent`` gate the undeclared
@@ -90,16 +91,21 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import partial, reduce
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.operators.identity import keyref_program
-from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+from sissaschool_xmlschema_spark.plans.compiler import (
+    CompiledPlan,
+    compile_plan,
+    key_missing_field_check,
+)
 from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import (
@@ -188,25 +194,32 @@ def _is_xsi_machinery(field_name: str, nsmap: dict) -> bool:
     return pfx == "xsi" or nsmap.get(pfx) == _XSI_URI
 
 
-def _elem_required_paths(compiled) -> list:
-    """Full violation paths (``table/column``) of element-backed Required
-    facets — the 'missing required child element' class the reference's
-    ModelVisitor folds into one content-not-complete error per container
-    (groups.py model validation; testfiles issue_029-2).  Attribute-backed
-    Required columns ('@' step in column_paths) are excluded: the reference
-    reports missing required attributes individually (cvc-complex-type.4).
-    """
-    from sissaschool_xmlschema_spark.spec import Required
+def _views(compiled):
+    """``(TableSpec, column paths)`` of each table's declared type and of
+    each of its overlays."""
+    for name, spec in compiled.specs.items():
+        yield spec, compiled.column_paths.get(name, {})
+        for _tag, ov in _overlays(compiled, name):
+            yield ov["spec"], ov["column_paths"]
 
+
+def _elem_required_paths(compiled) -> list:
+    """Full violation paths (``table/column``, an overlay's own TableSpec
+    name for its rows) of element-backed Required facets — the 'missing
+    required child element' class the reference's ModelVisitor folds into
+    one content-not-complete error per container (groups.py model
+    validation; testfiles issue_029-2).  Attribute-backed Required columns
+    ('@' step in column_paths) are excluded: the reference reports missing
+    required attributes individually (cvc-complex-type.4).
+    """
     out = []
-    for tname, spec in compiled.specs.items():
-        paths = compiled.column_paths.get(tname, {})
+    for spec, paths in _views(compiled):
         for col in spec.columns:
             p = paths.get(col.name)
             if p is None or any(seg.startswith("@") for seg in p):
                 continue
-            if any(isinstance(f, Required) for f in col.facets):
-                out.append(f"{tname}/{col.name}")
+            if any(isinstance(f, S.Required) for f in col.facets):
+                out.append(f"{spec.name}/{col.name}")
     return out
 
 
@@ -222,10 +235,10 @@ def _model_ranks(compiled, elem_req) -> dict:
         parent = compiled.parent_of.get(tname)
         if parent is not None and parent != tname:
             ranks[f"{parent}/{tname}"] = pos
-    for tname, spec in compiled.specs.items():
+    for spec, _paths in _views(compiled):
         for i, col in enumerate(spec.columns):
-            if f"{tname}/{col.name}" in elem_req:
-                ranks[f"{tname}/{col.name}"] = i
+            if f"{spec.name}/{col.name}" in elem_req:
+                ranks.setdefault(f"{spec.name}/{col.name}", i)
     return ranks
 
 
@@ -306,43 +319,33 @@ def _collapse_program(compiled) -> _CollapseProgram:
 
 @dataclass(frozen=True)
 class _Flagged:
-    """Structural violations of one row set, as a description: its
-    ``rows`` where ``cond`` holds (all of them when ``cond`` is None), one
-    violation each at ``path`` with ``value``.  Only
+    """Structural violations of one row set, as a description: for each
+    ``(cond, constraint_id, value, reason)`` of ``flags``, one violation
+    at ``path`` per row of ``rows`` where ``cond`` holds (every row when
+    it is None).  One pass over the rows finds them all; only
     :func:`validate_xml_instance` turns it into a DataFrame."""
 
     rows: DataFrame
-    cond: Optional[Column]
     path: str
-    cid: str
-    value: Column
-    reason: str
+    flags: tuple
 
-    def violations(self, src: "_Document", compiled) -> DataFrame:
-        rows = self.rows if self.cond is None else self.rows.filter(self.cond)
-        return rows.select(
-            F.lit(src.label).alias("conv_id"),
+    def violations(self, label: str) -> DataFrame:
+        found = F.array(*[
+            F.when(F.lit(True) if cond is None else cond, F.struct(
+                F.lit(cid).alias("constraint_id"),
+                value.cast("string").alias("offending_value"),
+                F.lit(reason).alias("reason"),
+            ))
+            for cond, cid, value, reason in self.flags
+        ])
+        return self.rows.select(
+            F.explode(F.filter(found, lambda v: v.isNotNull())).alias("_v")
+        ).select(
+            F.lit(label).alias("conv_id"),
             F.lit(None).cast("long").alias("turn_idx"),
             F.lit(self.path).alias("path"),
-            F.lit(self.cid).alias("constraint_id"),
-            self.value.cast("string").alias("offending_value"),
-            F.lit(self.reason).alias("reason"),
+            "_v.constraint_id", "_v.offending_value", "_v.reason",
         )
-
-
-@dataclass(frozen=True)
-class _Checked:
-    """The violations of one flat row set under the compiled plan kept at
-    ``key`` in ``CompiledXsd.programs`` (``build()`` makes it; None = the
-    row set adds no constraint), as a description like :class:`_Flagged`."""
-
-    flat: DataFrame
-    key: tuple
-    build: Callable
-
-    def violations(self, src: "_Document", compiled) -> Optional[DataFrame]:
-        plan = _program(src.spark, compiled, self.key, self.build)
-        return None if plan is None else validate(self.flat, plan).violations
 
 
 class _TableReader:
@@ -618,41 +621,94 @@ def _declared_view(compiled: CompiledXsd, name: str) -> dict:
     )
 
 
-def _aligned(flat: DataFrame, spec) -> DataFrame:
-    """``flat`` with exactly ``spec``'s columns (NULL where it has no such
-    column) and scope/order columns: a member's rows as head-table rows."""
-    have = set(flat.columns)
-    return flat.select(
-        *[
-            (F.col(c.name) if c.name in have
-             else F.lit(None).cast("string")).alias(c.name)
-            for c in spec.columns
-        ],
-        F.col(spec.scope_col), F.col(spec.order_col),
-    )
+# the row type tag of a table with overlays (NULL: the declared type)
+_ROW_TYPE = "_row_type"
+
+
+def _overlays(compiled: CompiledXsd, name: str) -> list:
+    """``(tag, overlay)`` for each row type of table ``name`` other than
+    its declared one, in the reference's order: the types an xsi:type
+    names (elements.py:657-682), the xs:alternative arms, first match
+    wins (elements.py:1345-1365), then the substitution members standing
+    in for the element (elements.py:611-621).  The tag marks the
+    overlay's rows in the table's flat rows (``_ROW_TYPE``)."""
+    return [
+        *((f"xsi:{t}", ov)
+          for t, ov in compiled.xsi_overlays.get(name, {}).items()),
+        *((f"alt:{i}", arm)
+          for i, arm in enumerate(compiled.alt_overlays.get(name, ()))),
+        *((f"member:{m}", mo)
+          for m, mo in compiled.subst_overlays.get(name, {}).items()),
+    ]
+
+
+def _table_plan(compiled: CompiledXsd, name: str) -> CompiledPlan:
+    """The one compiled plan of table ``name``'s flat rows.  Each row's
+    own type checks it: the declared type's row checks hold on the
+    untagged rows, each overlay's (with the paths, constraint ids and
+    reasons of its own TableSpec) on the rows carrying its tag.  The
+    declared identities and occurrence bounds count every row; an
+    overlay's identities the declared type lacks (by name) select its
+    rows only."""
+    spec = compiled.specs[name]
+    overlays = _overlays(compiled, name)
+    if not overlays:
+        return compile_plan(spec)
+    tag = F.col(_ROW_TYPE)
+
+    def gated(ospec, gate) -> list:
+        return [replace(chk, ok=~gate | chk.ok)
+                for chk in compile_plan(ospec).row_checks]
+
+    checks = gated(replace(spec, identities=()), tag.isNull())
+    identities = list(spec.identities)
+    declared = {c.name for c in identities}
+    for t, ov in overlays:
+        mine = f"`{_ROW_TYPE}` = '{t}'"
+        own = tuple(
+            replace(c, **{
+                k: mine if getattr(c, k) is None
+                else f"({getattr(c, k)}) AND {mine}"
+                for k in ("selector", "refer_selector") if hasattr(c, k)
+            })
+            for c in ov["spec"].identities if c.name not in declared
+        )
+        checks += gated(replace(ov["spec"], identities=own),
+                        tag.eqNullSafe(t))
+        identities += own
+    checks += [key_missing_field_check(c, name)
+               for c in spec.identities if isinstance(c, S.Key)]
+    spec = replace(spec, identities=tuple(identities))
+    return CompiledPlan(spec=spec, row_checks=checks,
+                        identities=spec.identities, model=spec.model)
 
 
 class _TableRead:
-    """One table of one document: reads its row sets and collects their
-    violation parts (:class:`_Flagged` / :class:`_Checked`).  Every row
-    set's flat rows carry the same scope and order Columns ``keys``."""
+    """One table of one document: reads its row sets into its flat rows
+    and collects their structural violations (:class:`_Flagged`).  Every
+    row set has the table's columns (the declared type's, then each
+    overlay's own), the row type tag if the table has overlays, and the
+    scope and order Columns ``keys``."""
 
     def __init__(self, src: _Document, compiled: CompiledXsd, name: str,
                  parent: str, keys: list) -> None:
         self.src, self.compiled = src, compiled
         self.name, self.parent, self.keys = name, parent, keys
+        self.overlays = _overlays(compiled, name)
+        self.columns = list(dict.fromkeys(
+            c.name
+            for spec in [compiled.specs[name]]
+            + [ov["spec"] for _t, ov in self.overlays]
+            for c in spec.columns
+        ))
         self.parts: list = []
 
-    def flag(self, rows, cond, cid, value, reason) -> None:
-        self.parts.append(_Flagged(
-            rows, cond, f"{self.parent}/{self.name}", cid, value, reason
-        ))
-
-    def read(self, name, view, rows, rtype) -> DataFrame:
+    def read(self, name, view, rows, rtype, tag=None, flags=()) -> DataFrame:
         """The flat rows of one row set read against one view: ``rows``
         holds one ``name`` element per row in its ``_row`` column (of type
-        ``rtype``); the flat rows have the view's columns, string-typed,
-        and the table's keys.  The walk's structural violations join the
+        ``rtype``); the flat rows hold the strings at the view's paths
+        (NULL in the table's other columns), tagged ``tag``.  The walk's
+        structural violations and ``flags`` on the same rows join the
         parts."""
         rdr = _TableReader(name, view, self.compiled, self.src.nsmap)
         if isinstance(rtype, T.StructType):
@@ -661,102 +717,73 @@ class _TableRead:
             # structureless rows (empty elements / bare text): nothing to
             # walk; the element's own text maps to its ()-path column
             rdr.extract[rdr.paths[()]] = F.col("_row").cast("string")
-        path = f"{self.parent}/{name}"
-        self.parts += [
-            _Flagged(rows, cond, path, cid, value, reason)
-            for cond, cid, value, reason in rdr.flags
-        ]
+        if rdr.flags or flags:
+            self.parts.append(_Flagged(
+                rows, f"{self.parent}/{name}", (*rdr.flags, *flags)
+            ))
         return rows.select(*[
-            (rdr.extract[c.name] if c.name in rdr.extract
-             else F.lit(None).cast("string")).alias(c.name)
-            for c in view["spec"].columns
-        ], *self.keys)
+            rdr.extract.get(c, F.lit(None).cast("string")).alias(c)
+            for c in self.columns
+        ], *([F.lit(tag).cast("string").alias(_ROW_TYPE)]
+             if self.overlays else []), *self.keys)
 
-    def typed(self, rows, rtype) -> DataFrame:
-        """The declared type's flat rows of the table's row set.  Each row
-        is read against ONE type, in the reference's order: an xsi:type
-        naming a type derived from the declared one (elements.py:657-682),
-        else the first xs:alternative arm whose test it matches
-        (elements.py:1345-1365, XsdAlternative:1450-1476), else the
-        declared type.  Overlay rows validate against their own plan and
-        are not rows of the table."""
-        if isinstance(rtype, T.StructType):
-            rows = self._xsi_types(rows, rtype)
-            rows = self._alternatives(rows, rtype)
-        return self.read(
-            self.name, _declared_view(self.compiled, self.name), rows, rtype
-        )
-
-    def _xsi_types(self, rows, rtype) -> DataFrame:
-        """Reads the rows whose xsi:type names an overlay and flags an
-        xsi:type naming no compiled type; returns the other rows."""
+    def typed(self, rows, member_rows=None) -> Optional[DataFrame]:
+        """The table's flat rows (None: there are none): its row elements
+        ``rows`` (None: absent) and the substitution members
+        ``member_rows(name)`` standing in for them (elements.py:611-621),
+        read against the member's type.  A row element is read against
+        ONE type, in the reference's order: an xsi:type naming a type
+        derived from the declared one (elements.py:657-682), else the
+        first xs:alternative arm whose test it matches (elements.py:
+        1345-1365), else the declared type; an xsi:type naming no
+        compiled type is flagged."""
         name, compiled = self.name, self.compiled
-        overlays = compiled.xsi_overlays.get(name)
-        xf = overlays and _xsi_type_field(rtype, self.src.nsmap)
-        if not xf:
-            return rows
-        xcol = F.col(f"_row.`{xf}`")
-        xsi = _xsi_local(xcol)
-        declared = compiled.declared_types.get(name)
-        known = set(overlays) | ({declared} if declared else set())
-        for tname, ov in overlays.items():
-            flat = self.read(name, ov, rows.filter(xsi == tname), rtype)
-            self.parts.append(_Checked(
-                flat, ("xsi", name, tname), partial(compile_plan, ov["spec"])
-            ))
-        self.flag(
-            rows, xcol.isNotNull() & ~xsi.isin(sorted(known)),
-            "structure:unknown-xsi-type", xcol,
-            f"xsi:type on '{name}' does not resolve to a compiled type "
-            "(elements.py:657-682)",
-        )
-        return rows.filter(xcol.isNull() | ~xsi.isin(list(overlays)))
-
-    def _alternatives(self, rows, rtype) -> DataFrame:
-        """Reads the rows matching an xs:alternative arm's @attr='v' test
-        against that arm, first match wins; returns the rows matching
-        none."""
-        arms = self.compiled.alt_overlays.get(self.name, ())
-        for ai, arm in enumerate(arms):
-            if arm["attr"] is not None:
-                fname = f"_{arm['attr']}"
-                if fname not in rtype.fieldNames():
-                    continue  # attribute nowhere in the document: no match
-                tcol = F.col(f"_row.`{fname}`").cast("string")
-                cond = tcol.isNotNull() & (tcol == arm["value"])
+        rtype = None if rows is None else rows.schema["_row"].dataType
+        struct = isinstance(rtype, T.StructType)
+        xsi_types = compiled.xsi_overlays.get(name)
+        xf = struct and xsi_types and _xsi_type_field(rtype, self.src.nsmap)
+        unknown = ()
+        if xf:
+            xcol = F.col(f"_row.`{xf}`")
+            declared = compiled.declared_types.get(name)
+            known = sorted({*xsi_types, *([declared] if declared else [])})
+            unknown = ((
+                xcol.isNotNull() & ~_xsi_local(xcol).isin(known),
+                "structure:unknown-xsi-type", xcol,
+                f"xsi:type on '{name}' does not resolve to a compiled type "
+                "(elements.py:657-682)",
+            ),)
+        flats, rest = [], rows
+        for tag, ov in self.overlays:
+            kind, _, which = tag.partition(":")
+            if kind == "member":
+                mrows = member_rows and member_rows(which)
+                if mrows is not None and isinstance(
+                        mrows.schema["_row"].dataType, T.StructType):
+                    flats.append(self.read(
+                        which, ov, mrows, mrows.schema["_row"].dataType, tag
+                    ))
+                continue
+            if kind == "xsi" and xf:
+                cond = F.coalesce(_xsi_local(xcol) == which, F.lit(False))
+            elif kind == "alt" and struct and ov["attr"] is None:
+                cond = F.lit(True)  # the unconditional (default) arm
+            elif kind == "alt" and struct and f"_{ov['attr']}" in rtype.names:
+                tcol = F.col(f"_row.`_{ov['attr']}`").cast("string")
+                cond = tcol.isNotNull() & (tcol == ov["value"])
             else:
-                cond = F.lit(True)  # unconditional (default) arm
-            flat = self.read(self.name, arm, rows.filter(cond), rtype)
-            self.parts.append(_Checked(
-                flat, ("alt", self.name, ai),
-                partial(compile_plan, arm["spec"]),
+                continue  # no row of the document can match
+            flats.append(self.read(
+                name, ov, rest.filter(cond), rtype, tag,
+                () if kind == "xsi" else unknown,
             ))
-            rows = rows.filter(~cond)
-        return rows
-
-    def members(self, container, fields) -> list:
-        """The flat rows of each substitution member standing in for the
-        table's head element (elements.py:611-621), read against the
-        member's own type.  Their member-only constraints validate here;
-        base-type facets and shared identities run on the head table they
-        merge into (no double counting)."""
-        spec = self.compiled.specs[self.name]
-        overlays = self.compiled.subst_overlays.get(self.name, {})
-        flats = []
-        for mname, mo in overlays.items():
-            mrows = _rows_of(container, fields, mname)
-            if mrows is None:
-                continue
-            mrtype = mrows.schema["_row"].dataType
-            if not isinstance(mrtype, T.StructType):
-                continue
-            flat = self.read(mname, mo, mrows, mrtype)
-            self.parts.append(_Checked(
-                flat, ("subst", self.name, mname),
-                partial(_member_plan, spec, mo["spec"]),
+            rest = rest.filter(~cond)
+        if rows is not None:
+            flats.insert(0, self.read(
+                name, _declared_view(compiled, name), rest, rtype, None,
+                unknown,
             ))
-            flats.append(flat)
-        return flats
+        return reduce(DataFrame.unionByName, flats) if flats else None
 
 
 def _flatten_nested(src: _Document, compiled, name):
@@ -866,32 +893,7 @@ def _flatten_nested(src: _Document, compiled, name):
         return rows.select(val.cast("string").alias("value"), *keys), []
 
     read = _TableRead(src, compiled, name, parent, keys)
-    flat = read.typed(rows, rtype)
-    return flat, read.parts
-
-
-def _member_plan(head: "S.TableSpec", member: "S.TableSpec"):
-    """Compiled plan of a substitution member's OWN constraints (columns,
-    identities and assertions its head does not declare); ``None`` when it
-    adds none."""
-    from sissaschool_xmlschema_spark import spec as S
-
-    head_cols = {c.name for c in head.columns}
-    head_ids = {i.name for i in head.identities}
-    spec_extra = S.TableSpec(
-        name=member.name,
-        scope_col=head.scope_col,
-        order_col=head.order_col,
-        columns=tuple(c for c in member.columns if c.name not in head_cols),
-        identities=tuple(
-            i for i in member.identities if i.name not in head_ids
-        ),
-        row_assertions=member.row_assertions,
-    )
-    if (spec_extra.columns or spec_extra.identities
-            or spec_extra.row_assertions):
-        return compile_plan(spec_extra)
-    return None
+    return read.typed(rows), read.parts
 
 
 def _flatten_one(src: _Document, compiled, name):
@@ -921,17 +923,17 @@ def _flatten_one(src: _Document, compiled, name):
     # container-level stray character data (legitimate when the container's
     # type is mixed="true" — complex_types.py:35), flagged by one table per
     # container (src.char_data)
+    on_container = []
     if "_VALUE" in fields and not has_own_text \
             and parent not in compiled.mixed_containers \
             and src.char_data.setdefault(parent, name) == name:
         txt = F.trim(F.col("`_VALUE`").cast("string"))
-        read.flag(
-            container, txt.isNotNull() & (txt != ""), "structure:char-data",
-            txt, "character data not allowed in element-only content of "
+        on_container.append((
+            txt.isNotNull() & (txt != ""), "structure:char-data", txt,
+            "character data not allowed in element-only content of "
             f"'{parent}' (cvc-complex-type.2.3)",
-        )
+        ))
 
-    members: list = []
     if name in compiled.doc_rows:
         # document-singleton table: the container element IS the row; its
         # repeated children live in their own tables (suppressed via the
@@ -945,31 +947,25 @@ def _flatten_one(src: _Document, compiled, name):
             F.struct(*[F.col(f"`{fn}`") for fn in keep]).alias("_row")
         )
     else:
-        members = read.members(container, fields)
         rows = _rows_of(container, fields, name)
-        if rows is None and not members:
-            # no row elements anywhere in the document: a minOccurs>0 bound
-            # is still violated once per container occurrence
-            # (cvc-complex-type.2.4.b content-not-complete)
-            from sissaschool_xmlschema_spark import spec as S
-
-            for occ in spec.model:
-                if isinstance(occ, S.Occurs) and occ.min_occurs > 0:
-                    read.flag(
-                        container, None, f"occurs:{occ.name}", F.lit("0"),
-                        f"element '{name}' occurs 0 times, minOccurs is "
-                        f"{occ.min_occurs} (cvc-complex-type.2.4.b)",
-                    )
-            return None, read.parts
-
-    # substitution members merge into the head table (shared columns) so
-    # occurrence bounds and identities see head + member rows together; a
-    # head that never appears itself leaves a table of its members
-    flats = [] if rows is None else [
-        read.typed(rows, rows.schema["_row"].dataType)
-    ]
-    flats += [_aligned(fm, spec) for fm in members]
-    return reduce(DataFrame.unionByName, flats), read.parts
+    # a head that never appears itself leaves a table of its members
+    flat = read.typed(rows, partial(_rows_of, container, fields))
+    if flat is None:
+        # no row elements anywhere in the document: a minOccurs>0 bound
+        # is still violated once per container occurrence
+        # (cvc-complex-type.2.4.b content-not-complete)
+        on_container += [
+            (None, f"occurs:{occ.name}", F.lit("0"),
+             f"element '{name}' occurs 0 times, minOccurs is "
+             f"{occ.min_occurs} (cvc-complex-type.2.4.b)")
+            for occ in spec.model
+            if isinstance(occ, S.Occurs) and occ.min_occurs > 0
+        ]
+    if on_container:
+        read.parts.append(
+            _Flagged(container, f"{parent}/{name}", tuple(on_container))
+        )
+    return flat, read.parts
 
 
 def _external_keyref_program(compiled, ext) -> tuple:
@@ -1013,7 +1009,11 @@ def xml_instance_tables(
     for name in sorted(compiled.specs):
         flat, _parts = _flatten_one(src, compiled, name)  # never built
         if flat is not None:
-            out[name] = flat
+            spec = compiled.specs[name]
+            out[name] = flat.select(
+                *[c.name for c in spec.columns], spec.scope_col,
+                spec.order_col,
+            )
     return out
 
 
@@ -1092,17 +1092,13 @@ def validate_xml_instance(
     parts: list = []
     flats: dict = {}
     for name in tables:
-        flat, table_parts = _flatten_one(src, compiled, name)
+        flat, flagged = _flatten_one(src, compiled, name)
+        parts += [part.violations(src.label) for part in flagged]
         if flat is not None:
             flats[name] = flat
-            table_parts.append(_Checked(
-                flat, ("table", name),
-                partial(compile_plan, compiled.specs[name]),
-            ))
-        for part in table_parts:
-            v = part.violations(src, compiled)
-            if v is not None:
-                parts.append(v)
+            plan = _program(spark, compiled, ("table", name),
+                            partial(_table_plan, compiled, name))
+            parts.append(validate(flat, plan).violations)
 
     # cross-table keyrefs (identities.py:317-334 refer_path analogue)
     for i, ext in enumerate(compiled.external_keyrefs):

@@ -53,9 +53,14 @@ Supported subset (everything a tabular corpus can express):
   identities/occurs machinery applies unchanged;
 * ``xsi:type`` dynamic type substitution (elements.py:657-682): every
   global complexType deriving from a row element's declared type compiles
-  to an overlay column-set the instance reader validates against;
+  to an overlay column-set the instance reader validates that type's rows
+  against, as rows of the row element's table;
 * substitution-group members (elements.py:611-621): a global element
   standing in for a row element compiles to an overlay of its own type.
+
+Before the phases, every QName reference is resolved by the schema
+checker's walk (:func:`reference_problems`): one naming no component is
+a compile error even in a component no table uses.
 
 Deliberately out of scope (recorded in ``CompiledXsd.restrictions``, never
 silently dropped): identity constraints selecting a nested table from
@@ -207,6 +212,10 @@ class CompiledXsd:
     # frozenset of paths, "wildcards": tuple of Wildcard, "mixed":
     # frozenset of paths} — the one-type analogue of this class's
     # column_paths / skipped_paths / wildcards / mixed_paths entries.
+    # Overlay rows are rows of their table: the spec's row checks (its
+    # name is their violation path prefix) and its identities the
+    # table's spec lacks apply to them alone; the table's identities and
+    # occurrence bounds count them (sources/xml_instance.py _table_plan).
     # row element or nested table -> {xsi:type local name -> overlay}:
     # dynamic type substitution on instances (reference elements.py:657-682)
     xsi_overlays: dict = field(default_factory=dict)
@@ -215,9 +224,8 @@ class CompiledXsd:
     declared_types: dict = field(default_factory=dict)
     # head row element -> {substitution member name -> overlay}:
     # a member element standing in for its head in the document
-    # (reference elements.py:611-621); member rows are validated against
-    # the member's own type and merged into the head's table for
-    # occurrence/identity checks
+    # (reference elements.py:611-621), validated against the member's own
+    # type
     subst_overlays: dict = field(default_factory=dict)
     # row element -> ordered list of conditional-type arms (XSD 1.1
     # xs:alternative, reference elements.py:1450-1476): an overlay plus
@@ -404,17 +412,9 @@ def _ref(ctx: _Ctx, kinds: tuple, node: ET.Element, qname: Optional[str],
          missing: Optional[str] = None) -> Optional[ET.Element]:
     """The global component of one of ``kinds`` that ``qname`` names at
     ``node`` (None when there is none, or raise ``missing`` when given).
-    A namespace the referring document does not import raises."""
-    found = None
-    if qname:
-        doc = ctx.reg.homes[node]
-        uri = doc.uri_of(node, qname)
-        if not doc.may_reference(uri):
-            raise XsdCompileError(
-                f"{qname!r} references namespace {uri!r}, which "
-                f"{doc.where} does not import"
-            )
-        found = ctx.reg.resolve(kinds, node, qname)
+    :func:`compile_xsd` has checked every reference's namespace and that
+    it names some component (:func:`reference_problems`)."""
+    found = ctx.reg.resolve(kinds, node, qname) if qname else None
     if found is None and missing:
         raise XsdCompileError(missing)
     return found
@@ -634,8 +634,7 @@ def _compile_simple(st: ET.Element, ctx: _Ctx, where: str = "") -> tuple:
 def _resolve_element(el: ET.Element, ctx: _Ctx) -> ET.Element:
     ref = el.get("ref")
     if ref:
-        return _ref(ctx, ("element",), el, ref,
-                    f"unresolved element ref {ref!r}")
+        return _ref(ctx, ("element",), el, ref)
     return el
 
 
@@ -664,8 +663,7 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
     # referenced group's attributes (which may nest further group refs)
     for agref in ct.findall(_xs("attributeGroup")):
         ref = agref.get("ref")
-        ag = _ref(ctx, ("attributeGroup",), agref, ref,
-                  f"unresolved attributeGroup ref {ref!r}") if ref else agref
+        ag = _ref(ctx, ("attributeGroup",), agref, ref) if ref else agref
         _flatten_attributes(ag, ctx, prefix, cols, uniques, steps, table)
     # xs:anyAttribute (wildcards.py:33-164): open attribute content at this
     # level — recorded as a marker so the instance reader can gate its
@@ -673,7 +671,11 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
     for aw in ct.findall(_xs("anyAttribute")):
         _wildcard(ctx, table, steps, "attribute", aw, "strict")
     for attr in ct.findall(_xs("attribute")):
-        aname = attr.get("name") or _local(attr.get("ref"))
+        ref = attr.get("ref")
+        # a reference takes its type and fixed value from the global
+        # declaration and its use (and a fixed value of its own) from here
+        decl = _ref(ctx, ("attribute",), attr, ref) if ref else attr
+        aname = attr.get("name") or _local(ref)
         name = prefix + aname
         facets: list = []
         use = attr.get("use", "optional")
@@ -681,9 +683,10 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
             facets.append(S.Required())
         elif use == "prohibited":
             facets.append(S.Prohibited())
-        if attr.get("fixed") is not None:
-            facets.append(S.FixedValue(attr.get("fixed")))
-        facets.extend(_simple_of(ctx, attr, "type", name))
+        fixed = attr.get("fixed", decl.get("fixed"))
+        if fixed is not None:
+            facets.append(S.FixedValue(fixed))
+        facets.extend(_simple_of(ctx, decl, "type", name))
         if _binary(facets, "hex"):
             # hexBinary fixed values compare in the value space (issue_222)
             facets = [
@@ -692,7 +695,7 @@ def _flatten_attributes(ct: ET.Element, ctx: _Ctx, prefix: str,
                 for f in facets
             ]
         cols.append(_Column(name, facets, path=steps + ("@" + aname,)))
-        if _builtin(ctx, attr, attr.get("type")) == "ID":
+        if _builtin(ctx, decl, decl.get("type")) == "ID":
             # xs:ID uniqueness: IDs are unique per document
             # (identities via ID map, attributes ID handling)
             uniques.append(S.Unique(f"{name}-id-unique", fields=(name,),
@@ -732,8 +735,7 @@ def _flatten_group(gref: ET.Element, ctx: _Ctx, *args) -> None:
     group reached again while inlined is circular: the error names the
     cycle as the schema checker does, from its member registered first."""
     ref = gref.get("ref")
-    g = _ref(ctx, ("group",), gref, ref,
-             f"unresolved group ref {ref!r}") if ref else gref
+    g = _ref(ctx, ("group",), gref, ref) if ref else gref
     if ref and g in ctx.group_stack:
         cycle = ctx.group_stack[ctx.group_stack.index(g):]
         order = [el for _name, el in ctx.reg.named("group")]
@@ -1273,9 +1275,9 @@ class Components:
 
     def lookup(self, kinds: tuple, uri: Optional[str], name: str):
         """The global of one of ``kinds`` named ``name`` in namespace
-        ``uri`` (None: an unbound prefix, read as no namespace)."""
+        ``uri`` (None: an unbound prefix, which names no component)."""
         for kind in kinds:
-            found = self.table.get((kind, uri or "", name))
+            found = self.table.get((kind, uri, name))
             if found is not None:
                 return found
         return None
@@ -1343,6 +1345,65 @@ def schema_components(graph: SchemaGraph) -> Components:
                     (doc.uri_of(child, head), _local(head)), []
                 ).append((doc.effective_tns, name))
     return reg
+
+
+# attribute -> the kinds of global component a reference in it names (a
+# ``ref`` names its own element's kind: xs:group ref= a group)
+_REF_ATTRS = {"type": ("simpleType", "complexType"),
+              "base": ("simpleType", "complexType"),
+              "itemType": ("simpleType",), "ref": None,
+              "substitutionGroup": ("element",)}
+_REF_TAGS = ("element", "attribute", "group", "attributeGroup")
+
+
+def reference_problems(reg: Components, doc: SchemaDoc):
+    """``(code, reason)`` for each QName reference in ``doc`` (annotations
+    aside) that names no component (loaders.py:118-167): an unknown xs:
+    builtin (``unknown-builtin``), a foreign namespace ``doc`` does not
+    import (``missing-import``), no global of the referenced kind in the
+    reference's namespace, or a prefix bound to none
+    (``unresolved-reference``).  The schema checker reports every one;
+    :func:`compile_xsd` raises on the first reference error."""
+    stack = [doc.root]
+    while stack:
+        el = stack.pop()
+        if el.tag == _xs("annotation"):
+            continue
+        stack.extend(el)
+        if not el.tag.startswith(_xs("")):
+            continue
+        tag = el.tag[len(_xs("")):]
+        qnames = [
+            (attr, el.get(attr), kinds or (tag,))
+            for attr, kinds in _REF_ATTRS.items()
+            if el.get(attr) is not None and (kinds or tag in _REF_TAGS)
+        ] + [("memberTypes", m, ("simpleType",))
+             for m in (el.get("memberTypes") or "").split()]
+        for attr, qname, kinds in qnames:
+            uri = doc.uri_of(el, qname)
+            prefix, _, local = qname.rpartition(":")
+            if uri == XSD_NS:
+                if local not in BUILTIN_TYPES and local not in (
+                    "IDREFS", "ENTITIES", "NMTOKENS",
+                ):
+                    yield ("unknown-builtin",
+                           f"unknown builtin type xs:{local} "
+                           f"({attr} of xs:{tag})")
+            elif not doc.may_reference(uri):
+                yield ("missing-import",
+                       f"{attr}={qname!r} references namespace {uri!r} "
+                       f"which {doc.where} does not import "
+                       "(loaders.py import rules)")
+            elif uri is None:
+                yield ("unresolved-reference",
+                       f"{attr}={qname!r} on xs:{tag}: prefix {prefix!r} "
+                       "is bound to no namespace")
+            # same-document inline definitions satisfy a reference only
+            # for GLOBAL components; the registry holds exactly those
+            elif reg.resolve(kinds, el, qname) is None:
+                yield ("unresolved-reference",
+                       f"{attr}={qname!r} on xs:{tag} does not resolve to "
+                       f"a global {'/'.join(kinds)} in namespace {uri!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -2014,6 +2075,11 @@ def compile_xsd(
                 "the original definition was not found in the redefined "
                 "document"
             )
+    # every reference, also in components no table uses, before any phase
+    for doc in graph.docs:
+        for code, reason in reference_problems(reg, doc):
+            if code != "unknown-builtin":
+                raise XsdCompileError(f"{doc.where}: {code}: {reason}")
     ctx = _Ctx(root=root, reg=reg, scope_col=scope_col, order_col=order_col,
                lexical=lexical, restrictions=notes)
     _detect_tables(ctx)

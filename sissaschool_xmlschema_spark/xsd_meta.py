@@ -33,9 +33,10 @@ Implemented check families (each cites the reference machinery it mirrors):
   the including document's targetNamespace, a foreign-namespace reference
   requires a matching ``xs:import``, a global is declared once per
   namespace (loaders.py:84-167; default_ns_invalid.xsd, import-case1/2,
-  include-case4/6/7).  The document graph and its global components come
-  from ``xsd_compile.load_schema_graph`` and ``schema_components``, the
-  loader and registry the compiler reads too;
+  include-case4/6/7).  The document graph, its global components and the
+  reference walk come from ``xsd_compile.load_schema_graph``,
+  ``schema_components`` and ``reference_problems``, which the compiler
+  reads too;
 * **derivation checks** — enumeration restrictions must narrow the base's
   enumeration (issue #202), ``xs:list`` items must be atomic (list_types
   .xsd), complexContent extension of a mixed base must stay mixed
@@ -58,7 +59,6 @@ from typing import Optional, Union
 
 from sissaschool_xmlschema_spark.xsd_compile import (
     _VALUE_FACETS,
-    BUILTIN_TYPES,
     XSD_NS,
     Components,
     SchemaDoc,
@@ -70,6 +70,7 @@ from sissaschool_xmlschema_spark.xsd_compile import (
     _ns_admits,
     _xs,
     load_schema_graph,
+    reference_problems,
     schema_components,
 )
 
@@ -508,75 +509,6 @@ def _check_upa(ctx: _Ctx, doc: SchemaDoc) -> None:
                     )
 
 
-# --- reference resolution ------------------------------------------------
-
-_REF_ATTRS = {
-    # attr -> registry tags to search
-    "type": ("simpleType", "complexType"),
-    "base": ("simpleType", "complexType"),
-    "itemType": ("simpleType",),
-    "ref": None,  # kind depends on the referencing element
-    "substitutionGroup": ("element",),
-}
-_REF_KIND_BY_TAG = {
-    "element": ("element",),
-    "attribute": ("attribute",),
-    "group": ("group",),
-    "attributeGroup": ("attributeGroup",),
-}
-
-
-def _check_references(ctx: _Ctx, doc: SchemaDoc) -> None:
-    """Namespace-aware QName resolution (loaders.py:118-167): the
-    referenced component must exist under the resolved namespace, and a
-    foreign namespace must be imported by THIS document (import-case2)."""
-    for el, parents in _walk(doc):
-        if not el.tag.startswith(_xs("")) or _in_annotation(parents):
-            continue
-        tag = _localtag(el)
-        qnames: list = []
-        for attr, tags in _REF_ATTRS.items():
-            v = el.get(attr)
-            if v is None:
-                continue
-            if attr == "ref":
-                tags = _REF_KIND_BY_TAG.get(tag)
-                if tags is None:
-                    continue
-            qnames.append((attr, v, tags))
-        for m in (el.get("memberTypes") or "").split():
-            qnames.append(("memberTypes", m, ("simpleType",)))
-        for attr, qname, tags in qnames:
-            uri = doc.uri_of(el, qname)
-            local = qname.rpartition(":")[-1]
-            if uri == XSD_NS:
-                if local not in BUILTIN_TYPES and local not in (
-                    "IDREFS", "ENTITIES", "NMTOKENS",
-                ):
-                    ctx.err(
-                        doc.where, "unknown-builtin",
-                        f"unknown builtin type xs:{local} "
-                        f"({attr} of xs:{tag})",
-                    )
-                continue
-            if not doc.may_reference(uri):
-                ctx.err(
-                    doc.where, "missing-import",
-                    f"{attr}={qname!r} references namespace {uri!r} "
-                    f"which {doc.where} does not import "
-                    "(loaders.py import rules)",
-                )
-                continue
-            # same-document inline definitions satisfy a reference only
-            # for GLOBAL components; the registry holds exactly those
-            if ctx.reg.resolve(tags, el, qname) is None:
-                ctx.err(
-                    doc.where, "unresolved-reference",
-                    f"{attr}={qname!r} on xs:{tag} does not resolve to a "
-                    f"global {'/'.join(tags)} in namespace {uri!r}",
-                )
-
-
 # --- derivation checks ----------------------------------------------------
 
 
@@ -799,7 +731,8 @@ def validate_schema_document(
         _check_syntax(ctx, doc)
         _check_numbers(ctx, doc)
         _check_upa(ctx, doc)
-        _check_references(ctx, doc)
+        for code, reason in reference_problems(ctx.reg, doc):
+            ctx.err(doc.where, code, reason)
         _check_derivations(ctx, doc)
         _check_default_attributes(ctx, doc)
     _check_group_cycles(ctx)

@@ -20,6 +20,7 @@ and the same violation rows as its checks run one branch each."""
 import contextlib
 import dataclasses
 import datetime as dt
+import os
 import re
 from collections import Counter
 
@@ -412,6 +413,32 @@ def test_xml_document_plan_is_shuffle_free(spark, tmp_path):
         assert nodes["Exchange"] == 0, nodes
         assert nodes["BroadcastExchange"] >= 1, nodes
         assert jobs <= 2, jobs
+
+
+def test_overlay_document_plan_is_shuffle_free(spark):
+    """The shop document holds all three overlay kinds (an xsi:type row,
+    substitution members, an xs:alternative arm): each table's rows of
+    every type run through its one plan, with no shuffle.  Bounds, with
+    the schema's programs kept (the third document): jobs, FileScans and
+    HashAggregates no more than when each overlay had a plan of its own
+    (1, 26 and 12 nodes)."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+    from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
+
+    fx = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                      "fixtures")
+    compiled = compile_xsd(os.path.join(fx, "shop.xsd"), version="1.1")
+    for i in range(3):
+        v = validate_xml_instance(spark, os.path.join(fx, "shop.xml"),
+                                  compiled)
+        jobs = _jobs_in_group(spark, f"xml-overlay-run-{i}", v.collect)
+    nodes = _nodes(v)
+    assert nodes["Exchange"] == 0, nodes
+    assert jobs <= 1, jobs
+    assert nodes["FileScan"] <= 26, nodes
+    assert nodes["HashAggregate"] <= 12, nodes
 
 
 def test_program_rebinds_to_each_input(spark, tmp_path):

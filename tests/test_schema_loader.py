@@ -140,7 +140,10 @@ def test_string_source_include_with_and_without_base_dir():
     # global element never arrives
     with pytest.raises(XsdCompileError) as err:
         compile_xsd(STRING_REF)
-    assert str(err.value) == "unresolved element ref 'row'"
+    assert str(err.value) == (
+        "<string>: unresolved-reference: ref='row' on xs:element does not "
+        "resolve to a global element in namespace ''"
+    )
     assert codes(STRING_REF) == [("<string>", "unresolved-reference")]
     c = compile_xsd(STRING_REF, base_dir=FX)
     assert columns(c, "row") == {
@@ -179,8 +182,9 @@ def test_missing_import():
     with pytest.raises(XsdCompileError) as err:
         compile_xsd(MISSING_IMPORT)
     assert str(err.value) == (
-        "'o:Code' references namespace 'urn:other', which <string> does "
-        "not import"
+        "<string>: missing-import: type='o:Code' references namespace "
+        "'urn:other' which <string> does not import (loaders.py import "
+        "rules)"
     )
     assert codes(MISSING_IMPORT) == [("<string>", "missing-import")]
 
@@ -191,7 +195,10 @@ UNRESOLVED = row_schema('<xs:attribute name="c" type="NoSuch"/>')
 def test_unresolved_reference():
     with pytest.raises(XsdCompileError) as err:
         compile_xsd(UNRESOLVED)
-    assert str(err.value) == "unresolved simpleType reference 'NoSuch'"
+    assert str(err.value) == (
+        "<string>: unresolved-reference: type='NoSuch' on xs:attribute does "
+        "not resolve to a global simpleType/complexType in namespace ''"
+    )
     assert codes(UNRESOLVED) == [("<string>", "unresolved-reference")]
 
 
@@ -329,6 +336,77 @@ def test_components_resolve_across_two_namespaces():
         assert codes(fx("crossns.xsd"), v) == []
 
 
+ATTRIBUTE_REF = row_schema(
+    '<xs:attribute ref="a" use="required"/>',
+    extra='<xs:attribute name="a" type="xs:int" fixed="7"/>',
+)
+
+
+def test_attribute_ref_takes_the_global_declaration(spark, tmp_path):
+    """``<xs:attribute ref="a"/>`` takes the global declaration's type and
+    fixed value; ``use`` stays the ref site's."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+
+    c = compile_xsd(ATTRIBUTE_REF)
+    assert columns(c, "r") == {
+        "a": (S.Required(), S.FixedValue("7"), S.BuiltinLexical("int"),
+              S.IntRange(-2147483648, 2147483647)),
+    }
+    assert codes(ATTRIBUTE_REF) == []
+    doc = tmp_path / "attr-ref.xml"
+    doc.write_text('<doc><r a="x"/><r a="7"/></doc>')
+    got = sorted(
+        (r.path, r.constraint_id, r.offending_value)
+        for r in validate_xml_instance(spark, str(doc), c).collect()
+    )
+    assert ("r/a", "facet:a:BuiltinLexical", "x") in got, got
+    assert ("r/a", "facet:a:FixedValue", "x") in got, got
+    assert {v for _p, _c, v in got} == {"x"}
+
+
+# a global complexType nothing uses, with an unresolved attribute type
+UNUSED_TYPE = row_schema(
+    '<xs:attribute name="n" type="xs:int"/>',
+    extra='<xs:complexType name="Unused">'
+          '<xs:attribute name="c" type="NoSuch"/></xs:complexType>',
+)
+# a global element whose substitution head does not exist
+NO_HEAD = row_schema(
+    '<xs:attribute name="n" type="xs:int"/>',
+    extra='<xs:element name="m" type="xs:string" substitutionGroup="nohead"/>',
+)
+# the prefix zz is bound nowhere; a no-namespace Code exists
+UNBOUND_PREFIX = row_schema(
+    '<xs:attribute name="c" type="zz:Code"/>',
+    extra='<xs:simpleType name="Code"><xs:restriction base="xs:string">'
+          '<xs:length value="2"/></xs:restriction></xs:simpleType>',
+)
+
+
+@pytest.mark.parametrize("source", [
+    pytest.param(UNUSED_TYPE, id="UNUSED_TYPE"),
+    pytest.param(NO_HEAD, id="NO_HEAD"),
+])
+def test_references_outside_compiled_components_are_errors(source):
+    """The compiler walks every reference the checker walks, not only
+    those inside the components it compiles."""
+    assert codes(source) == [("<string>", "unresolved-reference")]
+    with pytest.raises(XsdCompileError, match="does not resolve"):
+        compile_xsd(source)
+
+
+def test_unbound_prefix_is_unresolved():
+    """A QName whose prefix is bound nowhere names no namespace at all:
+    it does not fall back to the no-namespace component."""
+    (err,) = validate_schema_document(UNBOUND_PREFIX)
+    assert err.code == "unresolved-reference"
+    assert "prefix 'zz'" in err.reason
+    with pytest.raises(XsdCompileError, match="unresolved"):
+        compile_xsd(UNBOUND_PREFIX)
+
+
 REFERENCE_CODES = {"unresolved-reference", "missing-import"}
 
 
@@ -342,6 +420,10 @@ REFERENCE_CODES = {"unresolved-reference", "missing-import"}
         ("MISSING_IMPORT", MISSING_IMPORT),
         ("UNRESOLVED", UNRESOLVED),
         ("GROUP_BELOW", GROUP_BELOW),
+        ("ATTRIBUTE_REF", ATTRIBUTE_REF),
+        ("UNUSED_TYPE", UNUSED_TYPE),
+        ("NO_HEAD", NO_HEAD),
+        ("UNBOUND_PREFIX", UNBOUND_PREFIX),
     )
 ])
 def test_compiler_and_checker_agree_on_references(source):

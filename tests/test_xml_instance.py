@@ -912,6 +912,121 @@ def test_substitution_members_in_document(spark, tmp_path):
     ])
 
 
+def _overlay_rec_xsd(derived: str, arm: str = "") -> str:
+    """rec of type Base, at most two per doc, @id unique across them;
+    ``derived`` is the body of the Derived complexType, ``arm`` an
+    xs:alternative child of the rec declaration."""
+    return f"""<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="Base">
+    <xs:attribute name="id" type="xs:string"/>
+    <xs:attribute name="kind" type="xs:string"/>
+  </xs:complexType>
+  <xs:complexType name="Derived">{derived}</xs:complexType>
+  <xs:element name="doc"><xs:complexType><xs:sequence>
+    <xs:element name="rec" type="Base" maxOccurs="2">{arm}</xs:element>
+  </xs:sequence></xs:complexType>
+  <xs:unique name="u"><xs:selector xpath="rec"/><xs:field xpath="@id"/>
+  </xs:unique></xs:element>
+</xs:schema>"""
+
+
+EXTENDS_BASE = """<xs:complexContent><xs:extension base="Base">
+    <xs:attribute name="b" type="xs:string"/>
+  </xs:extension></xs:complexContent>"""
+RESTRICTS_BASE = """<xs:complexContent><xs:restriction base="Base">
+    <xs:attribute name="id"><xs:simpleType>
+      <xs:restriction base="xs:string"><xs:maxLength value="1"/>
+      </xs:restriction></xs:simpleType></xs:attribute>
+    <xs:attribute name="kind" type="xs:string"/>
+  </xs:restriction></xs:complexContent>"""
+XSI_NS_DECL = 'xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance"'
+
+
+@pytest.mark.parametrize("derived, arm, version, marks", [
+    pytest.param(EXTENDS_BASE, "", "1.0",
+                 ('', 'xsi:type="Derived" '), id="xsi-extension"),
+    pytest.param(RESTRICTS_BASE, "", "1.0",
+                 ('', 'xsi:type="Derived" '), id="xsi-restriction"),
+    pytest.param(EXTENDS_BASE,
+                 '<xs:alternative test="@kind=\'d\'" type="Derived"/>', "1.1",
+                 ('kind="n" ', 'kind="d" '), id="alternative"),
+])
+def test_overlay_rows_count_in_their_table(spark, tmp_path, derived, arm,
+                                           version, marks):
+    """Rows validated under an xsi:type or an xs:alternative arm are still
+    rows of their element (elements.py:657-682, :1345-1365): three recs
+    break maxOccurs 2 and two share @id a, whatever type two of them
+    carry."""
+    c = compile_xsd(_overlay_rec_xsd(derived, arm), version=version)
+    got = []
+    for mark in marks:
+        p = tmp_path / f"doc{len(got)}.xml"
+        p.write_text(
+            f'<doc {XSI_NS_DECL}><rec id="a" {marks[0]}/>'
+            f'<rec id="a" {mark}/><rec id="b" {mark}/></doc>'
+        )
+        got.append(sorted(
+            (r["constraint_id"], r["offending_value"])
+            for r in validate_xml_instance(spark, str(p), c).collect()
+        ))
+    assert got[0] == [("occurs:occurs-rec", "3"), ("unique:u", "a")]
+    assert got[1] == got[0]
+
+
+def test_restricting_member_checks_inherited_column_once(spark, tmp_path):
+    """A substitution member whose type restricts its head's sku to at
+    most two characters: a member row is checked under the member's type
+    alone, so sku="toolong" is one MaxLength violation on the member's
+    path, and the head's own rows keep the head's facets."""
+    xsd = SUBST_XSD.replace(
+        """<xs:complexType name="WidgetType"><xs:complexContent>
+    <xs:extension base="ProductType">
+      <xs:attribute name="gears" type="xs:int" use="required"/>
+    </xs:extension></xs:complexContent>""",
+        """<xs:complexType name="WidgetType"><xs:complexContent>
+    <xs:restriction base="ProductType">
+      <xs:attribute name="sku" use="required"><xs:simpleType>
+        <xs:restriction base="xs:string"><xs:maxLength value="2"/>
+        </xs:restriction></xs:simpleType></xs:attribute>
+    </xs:restriction></xs:complexContent>""",
+    )
+    assert "restriction" in xsd
+    p = tmp_path / "r.xml"
+    p.write_text('<catalog><product sku="toolong"/><widget sku="toolong"/>'
+                 '<widget sku="ok"/></catalog>')
+    assert _triples(
+        validate_xml_instance(spark, str(p), compile_xsd(xsd))
+    ) == Counter([("widget/sku", "facet:sku:MaxLength", "toolong")])
+
+
+def test_overlay_rows_missing_children_are_one_model_error(spark, tmp_path):
+    """A member row and an xsi:type row missing both required children of
+    their type report one content-model error each, as a row of the
+    declared type does (the reference's ModelVisitor stops at the first)."""
+    xsd = SUBST_XSD.replace(
+        """<xs:complexType name="ProductType">
+    <xs:attribute name="sku" type="xs:string" use="required"/>""",
+        """<xs:complexType name="ProductType"><xs:sequence>
+    <xs:element name="x" type="xs:string"/>
+    <xs:element name="y" type="xs:string"/></xs:sequence>
+    <xs:attribute name="sku" type="xs:string"/>""",
+    ).replace('name="gears" type="xs:int" use="required"',
+              'name="gears" type="xs:int"')
+    assert "<xs:sequence>" in xsd and 'use="required"' not in xsd
+    c = compile_xsd(xsd)
+    p = tmp_path / "m.xml"
+    p.write_text(
+        f'<catalog {XSI_NS_DECL}><product sku="a"/><widget gears="1"/>'
+        '<product xsi:type="WidgetType" gears="2"/></catalog>'
+    )
+    assert _triples(validate_xml_instance(spark, str(p), c)) == Counter([
+        ("product/x", "facet:x:Required", None),
+        ("widget/x", "facet:x:Required", None),
+        ("product@WidgetType/x", "facet:x:Required", None),
+    ])
+
+
 LAST_WINS_XSD = """<?xml version="1.0"?>
 <xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
   <xs:element name="collection"><xs:complexType><xs:sequence>
@@ -962,9 +1077,8 @@ def test_xml_instance_tables_mixed_row_sets(spark):
     """Decode of one document holding every row-set kind: the shop
     document row, a rec table with one xsi:type row, a product table
     with substitution members and a gauge table with an xs:alternative
-    arm.  Member rows merge into their head's table (shared columns
-    only); rows that validate against an xsi:type overlay or an
-    alternative arm are not rows of the declared type's table."""
+    arm.  Rows read against an xsi:type, an alternative arm or a member's
+    type are rows of their element's table, with its declared columns."""
     from sissaschool_xmlschema_spark.sources.xml_instance import (
         xml_instance_tables,
     )
@@ -981,11 +1095,11 @@ def test_xml_instance_tables_mixed_row_sets(spark):
     }
     assert got == {
         "shop": [("Corner", "shop.xml")],
-        "rec": [("1", "shop.xml")],
+        "rec": [("1", "shop.xml"), ("2", "shop.xml")],
         "product": [
             ("p1", "shop.xml"), ("w1", "shop.xml"), ("w2", "shop.xml"),
         ],
-        "gauge": [("B", "shop.xml")],
+        "gauge": [("A", "shop.xml"), ("B", "shop.xml")],
     }
     assert {n: df.columns for n, df in tabs.items()} == {
         "shop": ["title", "doc_id", "row_idx"],
