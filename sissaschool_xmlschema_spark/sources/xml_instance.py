@@ -93,7 +93,7 @@ import os
 import re
 from dataclasses import dataclass, replace
 from functools import partial, reduce
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,7 +106,10 @@ from sissaschool_xmlschema_spark.plans.compiler import (
     compile_plan,
     key_missing_field_check,
 )
-from sissaschool_xmlschema_spark.plans.runner import validate
+from sissaschool_xmlschema_spark.plans.runner import (
+    VIOLATION_SCHEMA,
+    validate,
+)
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import (
     CompiledXsd,
@@ -199,8 +202,8 @@ def _views(compiled):
     each of its overlays."""
     for name, spec in compiled.specs.items():
         yield spec, compiled.column_paths.get(name, {})
-        for _tag, ov in _overlays(compiled, name):
-            yield ov["spec"], ov["column_paths"]
+        for rt in _overlays(compiled, name):
+            yield rt.view["spec"], rt.view["column_paths"]
 
 
 def _elem_required_paths(compiled) -> list:
@@ -403,7 +406,7 @@ class _TableReader:
 
     def walk(self, stype: T.StructType, base: str, path: tuple) -> None:
         for sf in stype.fields:
-            if sf.name.startswith("_xmlns") or sf.name.startswith("_xsi:") \
+            if sf.name.startswith("_xmlns") \
                     or _is_xsi_machinery(sf.name, self.nsmap):
                 continue  # namespace/schema-location machinery, not data
             col = F.col(f"{base}`{sf.name}`")
@@ -442,7 +445,6 @@ class _TableReader:
                     names = dt.fieldNames()
                     for inner in names:
                         if inner == "_VALUE" or inner.startswith("_xmlns") \
-                                or inner.startswith("_xsi:") \
                                 or _is_xsi_machinery(inner, self.nsmap):
                             # xsi:nil on a nillable declaration extracts to
                             # its compiled __nil column (issue_243); other
@@ -562,50 +564,33 @@ def _program(spark: SparkSession, compiled: CompiledXsd, key, build):
 
 
 def _field_by_local(dtype: T.StructType, step: str):
-    for sf in dtype.fields:
-        if sf.name.startswith("_"):
-            continue
-        if _local_of(sf.name)[0] == step:
-            return sf
-    return None
+    """The inferred child-element field named ``step``, if any.  Names may
+    be qualified (elementFormDefault="qualified", vh:car) or not
+    (collection's bare <object>): match by local name."""
+    return next((sf for sf in dtype.fields if not sf.name.startswith("_")
+                 and _local_of(sf.name)[0] == step), None)
 
 
 def _xsi_type_field(dtype: T.StructType, nsmap: dict):
     """The inferred field carrying xsi:type, if any ('_xsi:type' under the
     conventional prefix; any prefix bound to the XSI namespace counts)."""
-    for sf in dtype.fields:
-        local, is_attr, pfx = _local_of(sf.name)
-        if is_attr and local == "type" and (
-            pfx == "xsi" or nsmap.get(pfx) == _XSI_URI
-        ):
-            return sf.name
-    return None
+    return next((sf.name for sf in dtype.fields
+                 if _is_xsi_machinery(sf.name, nsmap)
+                 and _local_of(sf.name)[0] == "type"), None)
 
 
 def _xsi_local(col):
     return F.element_at(F.split(col.cast("string"), ":"), -1)
 
 
-def _row_field(fields: dict, local: str) -> Optional[str]:
-    """The container's inferred field holding its ``local`` children.
-    Locals may be qualified (elementFormDefault="qualified", vh:car) or not
-    (collection's bare <object>): match by local name."""
-    return next(
-        (fn for fn in fields
-         if fn != "_VALUE" and not fn.startswith("_xmlns")
-         and not fn.startswith("_xsi:") and _local_of(fn)[0] == local),
-        None,
-    )
-
-
-def _rows_of(container: DataFrame, fields: dict, local: str):
+def _rows_of(container: DataFrame, local: str):
     """One row per ``local`` child of the container, in ``_row``; None when
     the document has none."""
-    fn = _row_field(fields, local)
-    if fn is None:
+    sf = _field_by_local(container.schema, local)
+    if sf is None:
         return None
-    elem = F.col(f"`{fn}`")
-    if isinstance(fields[fn].dataType, T.ArrayType):
+    elem = F.col(f"`{sf.name}`")
+    if isinstance(sf.dataType, T.ArrayType):
         elem = F.explode(elem)
     return container.select(elem.alias("_row"))
 
@@ -625,21 +610,38 @@ def _declared_view(compiled: CompiledXsd, name: str) -> dict:
 _ROW_TYPE = "_row_type"
 
 
+class _RowType(NamedTuple):
+    """A row type of a table besides its declared one (:func:`_overlays`)."""
+
+    kind: str  # 'xsi', 'alt' or 'member'
+    which: object  # the xsi:type's name, the arm's position, the member
+    view: dict  # shaped as the CompiledXsd.xsi_overlays comment says
+
+    @property
+    def tag(self) -> str:  # marks its rows in _ROW_TYPE
+        return f"{self.kind}:{self.which}"
+
+
 def _overlays(compiled: CompiledXsd, name: str) -> list:
-    """``(tag, overlay)`` for each row type of table ``name`` other than
-    its declared one, in the reference's order: the types an xsi:type
-    names (elements.py:657-682), the xs:alternative arms, first match
-    wins (elements.py:1345-1365), then the substitution members standing
-    in for the element (elements.py:611-621).  The tag marks the
-    overlay's rows in the table's flat rows (``_ROW_TYPE``)."""
+    """The :class:`_RowType` of table ``name``, in the reference's order:
+    the types an xsi:type names (elements.py:657-682), the xs:alternative
+    arms, first match wins (elements.py:1345-1365), then the substitution
+    members standing in for the element (elements.py:611-621)."""
     return [
-        *((f"xsi:{t}", ov)
+        *(_RowType("xsi", t, ov)
           for t, ov in compiled.xsi_overlays.get(name, {}).items()),
-        *((f"alt:{i}", arm)
+        *(_RowType("alt", i, arm)
           for i, arm in enumerate(compiled.alt_overlays.get(name, ()))),
-        *((f"member:{m}", mo)
+        *(_RowType("member", m, mo)
           for m, mo in compiled.subst_overlays.get(name, {}).items()),
     ]
+
+
+def _only(selector: Optional[str], tag: str) -> str:
+    """The SQL predicate ``selector`` (None: every row) on the rows
+    tagged ``tag`` only."""
+    mine = f"`{_ROW_TYPE}` = '{tag}'"
+    return mine if selector is None else f"({selector}) AND {mine}"
 
 
 def _table_plan(compiled: CompiledXsd, name: str) -> CompiledPlan:
@@ -663,18 +665,16 @@ def _table_plan(compiled: CompiledXsd, name: str) -> CompiledPlan:
     checks = gated(replace(spec, identities=()), tag.isNull())
     identities = list(spec.identities)
     declared = {c.name for c in identities}
-    for t, ov in overlays:
-        mine = f"`{_ROW_TYPE}` = '{t}'"
+    for rt in overlays:
         own = tuple(
-            replace(c, **{
-                k: mine if getattr(c, k) is None
-                else f"({getattr(c, k)}) AND {mine}"
-                for k in ("selector", "refer_selector") if hasattr(c, k)
-            })
-            for c in ov["spec"].identities if c.name not in declared
+            replace(c, selector=_only(c.selector, rt.tag), **(
+                {"refer_selector": _only(c.refer_selector, rt.tag)}
+                if isinstance(c, S.Keyref) else {}
+            ))
+            for c in rt.view["spec"].identities if c.name not in declared
         )
-        checks += gated(replace(ov["spec"], identities=own),
-                        tag.eqNullSafe(t))
+        checks += gated(replace(rt.view["spec"], identities=own),
+                        tag.eqNullSafe(rt.tag))
         identities += own
     checks += [key_missing_field_check(c, name)
                for c in spec.identities if isinstance(c, S.Key)]
@@ -698,16 +698,18 @@ class _TableRead:
         self.columns = list(dict.fromkeys(
             c.name
             for spec in [compiled.specs[name]]
-            + [ov["spec"] for _t, ov in self.overlays]
+            + [rt.view["spec"] for rt in self.overlays]
             for c in spec.columns
         ))
         self.parts: list = []
 
-    def read(self, name, view, rows, rtype, tag=None, flags=()) -> DataFrame:
+    def read(self, name, view, rows, rtype, tag=None, flags=(),
+             keys=None) -> DataFrame:
         """The flat rows of one row set read against one view: ``rows``
         holds one ``name`` element per row in its ``_row`` column (of type
         ``rtype``); the flat rows hold the strings at the view's paths
-        (NULL in the table's other columns), tagged ``tag``.  The walk's
+        (NULL in the table's other columns), tagged ``tag``, and the
+        ``keys`` Columns (by default the table's).  The walk's
         structural violations and ``flags`` on the same rows join the
         parts."""
         rdr = _TableReader(name, view, self.compiled, self.src.nsmap)
@@ -725,7 +727,7 @@ class _TableRead:
             rdr.extract.get(c, F.lit(None).cast("string")).alias(c)
             for c in self.columns
         ], *([F.lit(tag).cast("string").alias(_ROW_TYPE)]
-             if self.overlays else []), *self.keys)
+             if self.overlays else []), *(keys or self.keys))
 
     def typed(self, rows, member_rows=None) -> Optional[DataFrame]:
         """The table's flat rows (None: there are none): its row elements
@@ -736,17 +738,26 @@ class _TableRead:
         derived from the declared one (elements.py:657-682), else the
         first xs:alternative arm whose test it matches (elements.py:
         1345-1365), else the declared type; an xsi:type naming no
-        compiled type is flagged."""
+        compiled type is flagged.  A table without overlays reads its row
+        elements as one row set, untagged, as they come."""
         name, compiled = self.name, self.compiled
         rtype = None if rows is None else rows.schema["_row"].dataType
+        order, named = compiled.specs[name].order_col, None
+        if self.overlays:
+            # the keys are evaluated on the row elements before they split
+            # into row sets, so row ids stay distinct and in document order;
+            # the ids of row type i (a member) start at i * 2**33, above
+            # every id of one partition (a document is one partition)
+            named = [F.col(compiled.specs[name].scope_col), F.col(order)]
+            rows = None if rows is None else rows.select("*", *self.keys)
         struct = isinstance(rtype, T.StructType)
         xsi_types = compiled.xsi_overlays.get(name)
         xf = struct and xsi_types and _xsi_type_field(rtype, self.src.nsmap)
         unknown = ()
         if xf:
             xcol = F.col(f"_row.`{xf}`")
-            declared = compiled.declared_types.get(name)
-            known = sorted({*xsi_types, *([declared] if declared else [])})
+            known = sorted({*xsi_types, compiled.declared_types.get(name)}
+                           - {None})
             unknown = ((
                 xcol.isNotNull() & ~_xsi_local(xcol).isin(known),
                 "structure:unknown-xsi-type", xcol,
@@ -754,34 +765,37 @@ class _TableRead:
                 "(elements.py:657-682)",
             ),)
         flats, rest = [], rows
-        for tag, ov in self.overlays:
-            kind, _, which = tag.partition(":")
-            if kind == "member":
-                mrows = member_rows and member_rows(which)
+        for i, rt in enumerate(self.overlays, 1):
+            if rt.kind == "member":
+                mrows = member_rows and member_rows(rt.which)
                 if mrows is not None and isinstance(
                         mrows.schema["_row"].dataType, T.StructType):
+                    mrows = mrows.select("*", *self.keys).withColumn(
+                        order, F.col(order) + (i << 33))
                     flats.append(self.read(
-                        which, ov, mrows, mrows.schema["_row"].dataType, tag
+                        rt.which, rt.view, mrows,
+                        mrows.schema["_row"].dataType, rt.tag, (), named,
                     ))
                 continue
-            if kind == "xsi" and xf:
-                cond = F.coalesce(_xsi_local(xcol) == which, F.lit(False))
-            elif kind == "alt" and struct and ov["attr"] is None:
+            if rt.kind == "xsi" and xf:
+                cond = F.coalesce(_xsi_local(xcol) == rt.which, F.lit(False))
+            elif rt.kind == "alt" and struct and rt.view["attr"] is None:
                 cond = F.lit(True)  # the unconditional (default) arm
-            elif kind == "alt" and struct and f"_{ov['attr']}" in rtype.names:
-                tcol = F.col(f"_row.`_{ov['attr']}`").cast("string")
-                cond = tcol.isNotNull() & (tcol == ov["value"])
+            elif rt.kind == "alt" and struct \
+                    and f"_{rt.view['attr']}" in rtype.names:
+                tcol = F.col(f"_row.`_{rt.view['attr']}`").cast("string")
+                cond = tcol.isNotNull() & (tcol == rt.view["value"])
             else:
                 continue  # no row of the document can match
             flats.append(self.read(
-                name, ov, rest.filter(cond), rtype, tag,
-                () if kind == "xsi" else unknown,
+                name, rt.view, rest.filter(cond), rtype, rt.tag,
+                () if rt.kind == "xsi" else unknown, named,
             ))
             rest = rest.filter(~cond)
         if rows is not None:
             flats.insert(0, self.read(
                 name, _declared_view(compiled, name), rest, rtype, None,
-                unknown,
+                unknown, named,
             ))
         return reduce(DataFrame.unionByName, flats) if flats else None
 
@@ -804,27 +818,25 @@ def _flatten_nested(src: _Document, compiled, name):
 
     parent = compiled.parent_of.get(name, top)
     container = src.container(parent)
-    fields = {f.name: f for f in container.schema.fields}
 
     # level 0: the top row element's rows with their ordinal
     if top in compiled.doc_rows:
-        keep = [fn for fn in fields if not fn.startswith("_")]
+        keep = [fn for fn in container.columns if not fn.startswith("_")]
         rows = container.select(
             F.lit(0).alias("_p0"),
             F.struct(*[F.col(f"`{fn}`") for fn in keep]).alias("_row"),
         )
     else:
-        row_field = _row_field(fields, top)
-        if row_field is None:
+        sf = _field_by_local(container.schema, top)
+        if sf is None:
             return None, []  # no parent rows: nothing to validate here
-        dtype = fields[row_field].dataType
-        if isinstance(dtype, T.ArrayType):
+        if isinstance(sf.dataType, T.ArrayType):
             rows = container.select(
-                F.posexplode(F.col(f"`{row_field}`")).alias("_p0", "_row")
+                F.posexplode(F.col(f"`{sf.name}`")).alias("_p0", "_row")
             )
         else:
             rows = container.select(
-                F.lit(0).alias("_p0"), F.col(f"`{row_field}`").alias("_row")
+                F.lit(0).alias("_p0"), F.col(f"`{sf.name}`").alias("_row")
             )
 
     pos_cols = ["_p0"]
@@ -947,9 +959,9 @@ def _flatten_one(src: _Document, compiled, name):
             F.struct(*[F.col(f"`{fn}`") for fn in keep]).alias("_row")
         )
     else:
-        rows = _rows_of(container, fields, name)
+        rows = _rows_of(container, name)
     # a head that never appears itself leaves a table of its members
-    flat = read.typed(rows, partial(_rows_of, container, fields))
+    flat = read.typed(rows, partial(_rows_of, container))
     if flat is None:
         # no row elements anywhere in the document: a minOccurs>0 bound
         # is still violated once per container occurrence
@@ -1033,13 +1045,9 @@ def land_xml_to_parquet(
     [name])`` — so every later pass is a scan-parallel parquet read with
     pushdown instead of re-parsing XML.  Cross-table keyrefs run against
     the landed key table (broadcast/hash join, identities.py:317-334)."""
-    compiled: CompiledXsd = (
-        xsd_source if isinstance(xsd_source, CompiledXsd)
-        else compile_xsd(xsd_source, base_dir=base_dir)
-    )
     paths: dict = {}
     for name, df in xml_instance_tables(
-        spark, xml_path, compiled, prefix=prefix
+        spark, xml_path, xsd_source, prefix=prefix, base_dir=base_dir
     ).items():
         p = os.path.join(out_dir, name)
         df.write.mode("overwrite").parquet(p)
@@ -1078,8 +1086,7 @@ def validate_xml_instance(
               f"no declaration available for document root "
               f"'{root_local}' (schema inapplicable: "
               f"{'; '.join(compiled.restrictions) or 'empty schema'})")],
-            "conv_id string, turn_idx bigint, path string, "
-            "constraint_id string, offending_value string, reason string",
+            VIOLATION_SCHEMA,
         )
     tables = [table] if table else sorted(compiled.specs)
     src = _Document(spark, xml_path, prefix)
@@ -1120,11 +1127,7 @@ def validate_xml_instance(
         # a VALID document whose only row element is optional and absent:
         # zero violations in the canonical schema (mirrors decode's
         # empty-fields branch)
-        return spark.createDataFrame(
-            [],
-            "conv_id string, turn_idx bigint, path string, "
-            "constraint_id string, offending_value string, reason string",
-        )
+        return spark.createDataFrame([], VIOLATION_SCHEMA)
     out = reduce(DataFrame.unionByName, parts)
     collapse = _program(
         spark, compiled, "collapse", lambda: _collapse_program(compiled)

@@ -1112,13 +1112,15 @@ class SchemaDoc:
 
     def uri_of(self, elem: ET.Element, qname: str) -> Optional[str]:
         """Namespace URI of one QName reference at ``elem`` ('' = no
-        namespace, None = unresolvable prefix).  In a chameleon-included
-        document, no-namespace references are remapped to the adopted
-        targetNamespace (loaders.py chameleon inclusion)."""
+        namespace, None = unresolvable prefix).  The ``xml`` prefix is
+        bound to the xml namespace everywhere (Namespaces in XML, 3).  In
+        a chameleon-included document, no-namespace references are
+        remapped to the adopted targetNamespace (loaders.py chameleon
+        inclusion)."""
         nsmap = self.nsmaps.get(id(elem), {})
         prefix, _, _name = qname.rpartition(":")
         if prefix:
-            return nsmap.get(prefix)
+            return nsmap.get(prefix, XML_NS if prefix == "xml" else None)
         uri = nsmap.get("", "")
         if uri == "" and self.tns is None and self.effective_tns:
             return self.effective_tns  # chameleon adoption
@@ -1344,6 +1346,11 @@ def schema_components(graph: SchemaGraph) -> Components:
                 reg.members.setdefault(
                     (doc.uri_of(child, head), _local(head)), []
                 ).append((doc.effective_tns, name))
+    # the xml namespace's attributes are predefined (untyped here) unless
+    # the schema imports a declaration of them
+    for name in ("lang", "space", "base", "id"):
+        reg.table.setdefault(("attribute", XML_NS, name),
+                             ET.Element(_xs("attribute"), name=name))
     return reg
 
 

@@ -74,9 +74,6 @@ from sissaschool_xmlschema_spark.xsd_compile import (
     schema_components,
 )
 
-VC_NS = "http://www.w3.org/2007/XMLSchema-versioning"
-
-
 def _localtag(elem: ET.Element) -> str:
     return elem.tag.split("}")[-1]
 
@@ -230,10 +227,6 @@ _COMPLEXTYPE_CHILDREN = {
 # ---------------------------------------------------------------------------
 # individual checks
 # ---------------------------------------------------------------------------
-
-
-def _in_annotation(parents: list) -> bool:
-    return any(_localtag(p) == "annotation" for p in parents)
 
 
 def _walk(doc: SchemaDoc):

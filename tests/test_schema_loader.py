@@ -366,6 +366,28 @@ def test_attribute_ref_takes_the_global_declaration(spark, tmp_path):
     assert {v for _p, _c, v in got} == {"x"}
 
 
+def test_xml_attribute_refs_resolve(spark, tmp_path):
+    """``ref="xml:lang"`` (and xml:space, xml:base) names a predefined
+    attribute of the always-bound xml prefix: both readers accept it and
+    the column keeps the local name and the ref site's ``use``."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        validate_xml_instance,
+    )
+
+    src = fx("xml-attributes.xsd")
+    assert codes(src) == []
+    c = compile_xsd(src)
+    assert columns(c, "note") == {
+        "value": (), "lang": (S.Required(),), "space": (), "base": (),
+    }
+    doc = tmp_path / "notes.xml"
+    doc.write_text('<doc><note xml:lang="en" xml:space="preserve">hi</note>'
+                   "<note>no lang</note></doc>")
+    got = [(r.path, r.constraint_id)
+           for r in validate_xml_instance(spark, str(doc), c).collect()]
+    assert got == [("note/lang", "facet:lang:Required")], got
+
+
 # a global complexType nothing uses, with an unresolved attribute type
 UNUSED_TYPE = row_schema(
     '<xs:attribute name="n" type="xs:int"/>',
@@ -406,6 +428,8 @@ def test_unbound_prefix_is_unresolved():
     with pytest.raises(XsdCompileError, match="unresolved"):
         compile_xsd(UNBOUND_PREFIX)
 
+# the xml namespace predefines attributes only: no attribute group
+XML_GROUP = row_schema('<xs:attributeGroup ref="xml:specialAttrs"/>')
 
 REFERENCE_CODES = {"unresolved-reference", "missing-import"}
 
@@ -424,6 +448,7 @@ REFERENCE_CODES = {"unresolved-reference", "missing-import"}
         ("UNUSED_TYPE", UNUSED_TYPE),
         ("NO_HEAD", NO_HEAD),
         ("UNBOUND_PREFIX", UNBOUND_PREFIX),
+        ("XML_GROUP", XML_GROUP),
     )
 ])
 def test_compiler_and_checker_agree_on_references(source):

@@ -1107,6 +1107,44 @@ def test_xml_instance_tables_mixed_row_sets(spark):
         "product": ["sku", "doc_id", "row_idx"],
         "gauge": ["mode", "doc_id", "row_idx"],
     }
+    # (doc_id, row_idx) is a key of every table; the rows of one element
+    # name keep document order, a member's rows follow the head's
+    for name, df in tabs.items():
+        keys = [r[1:] for r in df.collect()]
+        assert len(set(keys)) == len(keys), (name, keys)
+    assert {
+        name: [r[0] for r in df.orderBy("row_idx").collect()]
+        for name, df in tabs.items()
+    } == {
+        "shop": ["Corner"], "rec": ["1", "2"],
+        "product": ["p1", "w1", "w2"], "gauge": ["A", "B"],
+    }
+
+
+def test_container_attribute_named_like_its_row_element(spark, tmp_path):
+    """A container attribute with the row element's local name does not
+    stand in for the row elements: they are read and checked."""
+    from sissaschool_xmlschema_spark.sources.xml_instance import (
+        xml_instance_tables,
+    )
+
+    xsd = tmp_path / "clash.xsd"
+    xsd.write_text(
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">'
+        '<xs:element name="doc"><xs:complexType><xs:sequence>'
+        '<xs:element name="rec" maxOccurs="unbounded"><xs:complexType>'
+        '<xs:attribute name="a" type="xs:int"/></xs:complexType></xs:element>'
+        '</xs:sequence><xs:attribute name="rec" type="xs:string"/>'
+        "</xs:complexType></xs:element></xs:schema>"
+    )
+    doc = tmp_path / "clash.xml"
+    doc.write_text('<doc rec="x"><rec a="1"/><rec a="z"/></doc>')
+    c = compile_xsd(str(xsd))
+    got = [(r.path, r.constraint_id, r.offending_value)
+           for r in validate_xml_instance(spark, str(doc), c).collect()]
+    assert got == [("rec/a", "facet:a:BuiltinLexical", "z")]
+    rec = xml_instance_tables(spark, str(doc), c)["rec"]
+    assert sorted(r.a for r in rec.collect()) == ["1", "z"]
 
 
 def test_decode_builds_no_validation(spark, monkeypatch):
