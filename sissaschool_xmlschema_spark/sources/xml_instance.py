@@ -628,11 +628,11 @@ def _overlays(compiled: CompiledXsd, name: str) -> list:
     arms, first match wins (elements.py:1345-1365), then the substitution
     members standing in for the element (elements.py:611-621)."""
     return [
-        *(_RowType("xsi", t, ov)
+        *(_RowType(kind="xsi", which=t, view=ov)
           for t, ov in compiled.xsi_overlays.get(name, {}).items()),
-        *(_RowType("alt", i, arm)
+        *(_RowType(kind="alt", which=i, view=arm)
           for i, arm in enumerate(compiled.alt_overlays.get(name, ()))),
-        *(_RowType("member", m, mo)
+        *(_RowType(kind="member", which=m, view=mo)
           for m, mo in compiled.subst_overlays.get(name, {}).items()),
     ]
 
