@@ -4,7 +4,7 @@ Default mode (driver contract): runs the headline jobs at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
 
-    {"metric": "validated turns/sec", "value": N, "unit": "sec",
+    {"metric": "validated turns/sec", "value": N, "unit": "turns/s",
      "queries": {...}, "sf": ...}
 
 The headline metric is the north rule's: **validated turns/sec** for the full
@@ -262,7 +262,7 @@ def main() -> int:
             "validated turns/sec (full constraint suite, bucketed layout)"
         ),
         "value": round(n_rows / bdt, 1),
-        "unit": "sec",
+        "unit": "turns/s",
         "suite_sec": round(bdt, 3),
         "suite_unbucketed_sec": round(pdt, 3) if pdt is not None else None,
         "suite_cold_sec": round(cold, 3),

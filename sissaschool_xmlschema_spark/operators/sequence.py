@@ -9,7 +9,8 @@ Flat-table lowering: document order is ``Window.partitionBy(scope).orderBy(order
 All window-based checks for a spec are fused into ONE window pass (one shuffle on the
 scope key, one sort) — at 100 TB this matters: k checks cost one exchange, not k.
 Occurs bounds and the duplicate count of a Unique/Key whose fields are the sort
-key ride that same pass as running aggregates over the same window spec.
+key ride that same pass as running aggregates over the same window spec, and
+stage A's row checks ride it as a violation array selected below the sort.
 :func:`occurs_violations` is the standalone form of the Occurs bounds: ONE
 groupBy with conditional sums (map-side partial aggregation makes this a single
 shuffle of tiny partial rows), used where no ordered pass runs over the full input.
@@ -25,6 +26,7 @@ bounds at the end of the stream.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -60,25 +62,48 @@ def rides_window(c: object, scope: str, order: str,
     )
 
 
+def violation_struct(conv_id: Column, path: str, constraint_id: str,
+                     value: Column, reason, tix: Column) -> Column:
+    """One violation as the element type every pass explodes:
+    ``(conv_id, path, constraint_id, offending_value, reason, tix)``."""
+    return F.struct(
+        conv_id.alias("conv_id"),
+        F.lit(path).alias("path"),
+        F.lit(constraint_id).alias("constraint_id"),
+        truncate_value(value).alias("offending_value"),
+        (reason if isinstance(reason, Column) else F.lit(reason)).alias(
+            "reason"
+        ),
+        tix.alias("tix"),
+    )
+
+
 @dataclass
 class PassProgram:
     """One pass over the input as Columns built once — stage A
     (``plans/runner.row_local_program``) or the ordered pass
-    (:func:`window_program`): ``head`` is selected next to every input
-    column (the violation bitmask, the window helpers), rows where ``flag``
-    holds are kept (``None``: all rows), ``explode`` turns the failed checks
-    into one row each and ``flatten`` gives them the violation schema."""
+    (:func:`window_program`): each of ``selects`` in turn is selected next
+    to every input column (the violation bitmask, the window helpers), rows
+    where ``flag`` holds are kept, and their ``violations`` array of
+    :func:`violation_struct` s is exploded into one row each and flattened
+    to the violation schema."""
 
-    head: List[Column]
-    flag: Optional[Column]
-    explode: List[Column]
-    flatten: List[Column]
+    selects: List[List[Column]]
+    flag: Column
+    violations: Column
+
+    def __post_init__(self) -> None:
+        self.explode = F.explode(self.violations).alias("_v")
+        self.flatten = [
+            F.col("_v.conv_id"),
+            F.col("_v.tix").alias("turn_idx"),
+            *[F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]],
+        ]
 
     def bind(self, df: DataFrame) -> DataFrame:
-        staged = df.select(*self.head)
-        if self.flag is not None:
-            staged = staged.filter(self.flag)
-        return staged.select(*self.explode).select(*self.flatten)
+        for cols in self.selects:
+            df = df.select(*cols)
+        return df.filter(self.flag).select(self.explode).select(*self.flatten)
 
 
 def window_program(
@@ -87,6 +112,7 @@ def window_program(
     scope: str,
     order: str,
     tiebreakers: Sequence[str] = (),
+    stage_a: Optional[PassProgram] = None,
 ) -> PassProgram | None:
     """All Contiguity / Monotone / FirstTurn / LastTurn / Transition checks,
     Occurs bounds and window-riding Unique/Key duplicates (see
@@ -97,7 +123,16 @@ def window_program(
     ``explode(filter(array(...)))`` projection, so the pass is two selects
     over the SAME window partitioning: the first materializes the helper
     columns (one exchange + sort), the second is a plain projection Catalyst
-    fuses into it.
+    fuses into it.  The explode runs only on rows where some check fails:
+    ``flag`` is the OR of every check's ``~ok``, TRUE exactly where some
+    ``when(~ok, struct)`` emits (both are NULL-safe the same way).
+
+    ``stage_a`` (``plans/runner.row_local_program``) rides the same pass:
+    its bitmask and its violation array for flagged rows are selected below
+    the window, so the sort (and exchange) carries that mostly-NULL ``_rv``
+    column instead of the columns stage A reads, and the explode emits it
+    with the window's own violations.  Only for a window over the full
+    input: every row must reach it.
 
     Every helper is over the ONE ordered window spec, so all of them share a
     single WindowExec: an Occurs count is a running conditional sum read on
@@ -154,23 +189,17 @@ def window_program(
     is_first = F.col("_lag1").isNull() if needs_first else None
     is_last = F.col("_lead1").isNull() if needs_last else None
 
-    structs = []
+    structs, fails = [], []
 
     def emit(ok, cid: str, value, reason, tix=None) -> None:
+        fail = ~ok
+        fails.append(fail)
         structs.append(
             F.when(
-                ~ok,
-                F.struct(
-                    F.lit(f"{table}").alias("path"),
-                    F.lit(cid).alias("constraint_id"),
-                    truncate_value(value).alias("offending_value"),
-                    (
-                        reason if isinstance(reason, Column) else F.lit(reason)
-                    ).alias("reason"),
-                    (
-                        tix if tix is not None
-                        else F.col(order).try_cast("long")
-                    ).alias("tix"),
+                fail,
+                violation_struct(
+                    F.col(scope).cast("string"), table, cid, value, reason,
+                    tix if tix is not None else F.col(order).try_cast("long"),
                 ),
             )
         )
@@ -273,18 +302,19 @@ def window_program(
         return None
 
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
+    flag = reduce(lambda a, b: a | b, fails)
+    if stage_a is None:
+        return PassProgram(selects=[helpers], flag=flag, violations=arr)
+    carried = F.col("_rv")
     return PassProgram(
-        head=helpers,
-        flag=None,
-        explode=[
-            F.col(scope).cast("string").alias("conv_id"),
-            F.explode(arr).alias("_v"),
+        selects=[
+            *stage_a.selects,
+            [F.col("*"),
+             F.when(stage_a.flag, stage_a.violations).alias("_rv")],
+            helpers,
         ],
-        flatten=[
-            F.col("conv_id"),
-            F.col("_v.tix").alias("turn_idx"),
-            *[F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]],
-        ],
+        flag=carried.isNotNull() | flag,
+        violations=F.concat(F.coalesce(carried, F.array()), arr),
     )
 
 

@@ -9,15 +9,18 @@ Catalyst fuses/pushes/prunes:
   only for flagged rows.  The scan reads only the columns the checks reference
   (column pruning) and whole-stage codegen evaluates all predicates in one pass.
 * **stage B** — all window/model checks in one window pass (one exchange+sort on
-  the scope key).  Occurrence bounds (stage C) and the duplicate count of every
-  Unique/Key whose fields are the sort key ride the same WindowExec as running
-  aggregates, so they cost no extra scan or shuffle.  Without an ordered check,
-  or with ``max_scope_rows`` set, they run as their own groupBys instead.
+  the scope key), its explode gated on the rows where some check fails.
+  Stage A's checks, the occurrence bounds (stage C) and the duplicate count of
+  every Unique/Key whose fields are the sort key ride it: stage A's bitmask
+  and violation array are selected below the sort, the rest are running
+  aggregates of the same WindowExec, so none costs a scan or shuffle of its
+  own.  Without an ordered check, or with ``max_scope_rows`` set (the window
+  input drops oversized scopes), they run as passes of their own instead.
 * **stage D** — the remaining identity constraints: unique/key groupBys and
   keyref anti-joins (broadcast where the spec says the key side is small).
 
-The transcript suite thus reads its input three times: stage A, the window
-pass and the same-table keyref groupBy.
+The transcript suite thus reads its input twice: the window pass and the
+same-table keyref groupBy.
 
 Every Column those stages need is data-independent, so :func:`build_program`
 builds them once per :class:`CompiledPlan` (its cached ``program``): a
@@ -47,7 +50,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
-from sissaschool_xmlschema_spark.functions.facets import truncate_value
 from sissaschool_xmlschema_spark.operators.identity import (
     keyref_program,
     unique_program,
@@ -57,6 +59,7 @@ from sissaschool_xmlschema_spark.operators.sequence import (
     PassProgram,
     occurs_program,
     rides_window,
+    violation_struct,
     window_program,
 )
 from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
@@ -96,7 +99,6 @@ def row_local_program(plan: CompiledPlan) -> Optional[PassProgram]:
     """
     if not plan.row_checks:
         return None
-    spec = plan.spec
 
     # one 63-bit mask column per chunk of checks (a LONG holds 63 usable bits;
     # wider specs just get a second mask in the same projection)
@@ -122,37 +124,24 @@ def row_local_program(plan: CompiledPlan) -> Optional[PassProgram]:
             return F.lit(None).cast("string")
         return F.col(chk.scope).cast("string")
 
+    tix = F.col(plan.spec.order_col).try_cast("long")
     structs = [
         F.when(
             F.shiftright(F.col(f"_m{ci}"), i).bitwiseAND(F.lit(1)) == 1,
-            F.struct(
-                conv_id(chk).alias("conv_id"),
-                F.lit(chk.path).alias("path"),
-                F.lit(chk.constraint_id).alias("constraint_id"),
-                truncate_value(
-                    chk.value if chk.value is not None
-                    else F.lit(None).cast("string")
-                ).alias("offending_value"),
-                F.lit(chk.reason).alias("reason"),
+            violation_struct(
+                conv_id(chk), chk.path, chk.constraint_id,
+                chk.value if chk.value is not None
+                else F.lit(None).cast("string"),
+                chk.reason, tix,
             ),
         )
         for ci, chunk in enumerate(chunks)
         for i, chk in enumerate(chunk)
     ]
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
     return PassProgram(
-        head=masks,
+        selects=[masks],
         flag=any_flag,
-        explode=[
-            F.col(spec.order_col).try_cast("long").alias("turn_idx"),
-            F.explode(arr).alias("_v"),
-        ],
-        flatten=[
-            F.col(c) for c in (
-                "_v.conv_id", "turn_idx", "_v.path", "_v.constraint_id",
-                "_v.offending_value", "_v.reason",
-            )
-        ],
+        violations=F.filter(F.array(*structs), lambda x: x.isNotNull()),
     )
 
 
@@ -364,9 +353,12 @@ def guard_program(spec: S.TableSpec, cap: int) -> GuardProgram:
 class SuiteProgram:
     """Every data-independent Column of :func:`validate`, in branch order:
     built once per :class:`CompiledPlan` (its ``program``), then bound to
-    each input."""
+    each input.  ``stage_a`` is stage A on its own
+    (:func:`row_local_violations`); when ``fused``, ``window`` carries its
+    checks and ``validate`` runs no separate stage A pass."""
 
     stage_a: Optional[PassProgram]
+    fused: bool
     guard: Optional[GuardProgram]
     window: Optional[PassProgram]
     occurs: Optional[OccursProgram]
@@ -380,9 +372,10 @@ def build_program(plan: CompiledPlan) -> SuiteProgram:
     ordered = [c for c in plan.model if not isinstance(c, S.Occurs)]
     occurs = [c for c in plan.model if isinstance(c, S.Occurs)]
     tiebreakers = tuple(spec.tiebreakers)
-    # occurrence bounds and sort-key duplicates ride the ordered pass; with
-    # the scope-size guard they stay groupBys over the FULL input, because
-    # the window input drops the oversized groups
+    # stage A's row checks, occurrence bounds and sort-key duplicates ride
+    # the ordered pass; with the scope-size guard they stay passes of their
+    # own over the FULL input, because the window input drops the oversized
+    # groups
     fused = bool(ordered) and not cap
     riders = occurs + [
         c for c in plan.identities
@@ -400,12 +393,14 @@ def build_program(plan: CompiledPlan) -> SuiteProgram:
             identities.append(keyref_program(c, spec.name))
         else:
             raise ValueError(f"unknown identity constraint {c!r}")
+    stage_a = row_local_program(plan)
     return SuiteProgram(
-        stage_a=row_local_program(plan),
+        stage_a=stage_a,
+        fused=fused,
         guard=guard_program(spec, cap) if cap else None,
         window=window_program(
             ordered + riders, spec.name, spec.scope_col, spec.order_col,
-            tiebreakers,
+            tiebreakers, stage_a=stage_a if fused else None,
         ) if ordered else None,
         occurs=(
             None if fused
@@ -450,7 +445,7 @@ def validate(
     prog = plan.program
 
     parts: List[Optional[DataFrame]] = [
-        prog.stage_a.bind(df) if prog.stage_a else None
+        prog.stage_a.bind(df) if prog.stage_a and not prog.fused else None
     ]
     window_input = df
     if prog.guard is not None:

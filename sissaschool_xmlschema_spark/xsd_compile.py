@@ -1346,12 +1346,33 @@ def schema_components(graph: SchemaGraph) -> Components:
                 reg.members.setdefault(
                     (doc.uri_of(child, head), _local(head)), []
                 ).append((doc.effective_tns, name))
-    # the xml namespace's attributes are predefined (untyped here) unless
-    # the schema imports a declaration of them
-    for name in ("lang", "space", "base", "id"):
-        reg.table.setdefault(("attribute", XML_NS, name),
-                             ET.Element(_xs("attribute"), name=name))
+    # the xml namespace's attributes are predefined unless the schema
+    # imports a declaration of them
+    root, nsmaps = _parse_with_ns(_XML_XSD)
+    xml_doc = SchemaDoc(root, nsmaps, "xml.xsd", XML_NS, XML_NS, set())
+    for attr in root:
+        reg.table.setdefault(("attribute", XML_NS, attr.get("name")), attr)
+    reg.homes.update((el, xml_doc) for el in root.iter())
     return reg
+
+
+# the predefined xml attributes, typed as the reference's built-in xml.xsd
+# types them
+_XML_XSD = f"""<xs:schema xmlns:xs="{XSD_NS}" targetNamespace="{XML_NS}">
+  <xs:attribute name="lang"><xs:simpleType>
+    <xs:union memberTypes="xs:language"><xs:simpleType>
+      <xs:restriction base="xs:string"><xs:enumeration value=""/>
+      </xs:restriction>
+    </xs:simpleType></xs:union>
+  </xs:simpleType></xs:attribute>
+  <xs:attribute name="space"><xs:simpleType>
+    <xs:restriction base="xs:NCName">
+      <xs:enumeration value="default"/><xs:enumeration value="preserve"/>
+    </xs:restriction>
+  </xs:simpleType></xs:attribute>
+  <xs:attribute name="base" type="xs:anyURI"/>
+  <xs:attribute name="id" type="xs:ID"/>
+</xs:schema>"""
 
 
 # attribute -> the kinds of global component a reference in it names (a

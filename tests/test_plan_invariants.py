@@ -14,8 +14,9 @@ One sweep over the whole registry keeps every future operator honest — a
 new query that sneaks in a cartesian join or a Python UDF fails here, not
 in a 100 TB run.
 
-The transcript suite's own shape is pinned too: three scans, one Window,
-and the same violation rows as its checks run one branch each."""
+The transcript suite's own shape is pinned too: two scans, one Window
+whose explode runs only on the rows a Filter flags, and the same violation
+rows as its checks run one branch each."""
 
 import contextlib
 import dataclasses
@@ -81,13 +82,33 @@ def test_no_antipatterns_in_plan(spark, name):
 # --- the transcript suite: one ordered pass ---------------------------------
 
 
+def _tree(df) -> list:
+    """``(indent, operator name)`` per node of ``df``'s executed plan, in
+    tree order."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    return [
+        (len(m.group(1)), m.group(2))
+        for m in re.finditer(r"^([\s:+\-*()\d]*)([A-Za-z]\w*)", tree, re.M)
+    ]
+
+
 def _nodes(df) -> Counter:
     """Physical operator names of ``df``'s executed plan, one per node."""
-    tree = df._jdf.queryExecution().executedPlan().treeString()
-    return Counter(
-        m.group(1)
-        for m in re.finditer(r"^[\s:+\-*()\d]*([A-Za-z]\w*)", tree, re.M)
-    )
+    return Counter(name for _, name in _tree(df))
+
+
+def _path_below(df, top: str, bottom: str) -> list:
+    """Operator names from the first ``top`` node of ``df``'s executed plan
+    down to the first ``bottom`` node of its subtree."""
+    nodes = _tree(df)
+    start = next(i for i, (_, n) in enumerate(nodes) if n == top)
+    path = []
+    for depth, name in nodes[start + 1:]:
+        assert depth > nodes[start][0], (top, bottom, nodes)
+        if name == bottom:
+            return path
+        path.append(name)
+    raise AssertionError(f"no {bottom} below {top}: {nodes}")
 
 
 def _small_transcripts(spark):
@@ -101,11 +122,15 @@ def test_suite_plan_shape_plain_parquet(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     _small_transcripts(spark).write.parquet(path)
     t = spark.read.parquet(path)
-    nodes = _nodes(validate(t, compile_plan(transcript_spec())).violations)
-    # stage A, the window pass and the same-table keyref groupBy
-    assert nodes["FileScan"] <= 3, nodes
+    v = validate(t, compile_plan(transcript_spec())).violations
+    nodes = _nodes(v)
+    # the window pass (stage A's row checks ride it) and the same-table
+    # keyref groupBy
+    assert nodes["FileScan"] <= 2, nodes
     assert nodes["Exchange"] <= 2, nodes
     assert nodes["Window"] == 1, nodes
+    assert nodes["Generate"] <= 1, nodes
+    assert "Filter" in _path_below(v, "Generate", "Window")
 
 
 def test_suite_plan_shape_bucketed(spark, tmp_path):
@@ -117,12 +142,13 @@ def test_suite_plan_shape_bucketed(spark, tmp_path):
     )
     try:
         t = spark.table(name)
-        nodes = _nodes(
-            validate(t, compile_plan(transcript_spec())).violations
-        )
-        assert nodes["FileScan"] <= 3, nodes
+        v = validate(t, compile_plan(transcript_spec())).violations
+        nodes = _nodes(v)
+        assert nodes["FileScan"] <= 2, nodes
         assert nodes["Exchange"] == 0, nodes
         assert nodes["Window"] == 1, nodes
+        assert nodes["Generate"] <= 1, nodes
+        assert "Filter" in _path_below(v, "Generate", "Window")
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -210,6 +236,82 @@ def test_fused_suite_rows_equal_standalone_branches(spark):
         k[0] is None and k[3] == "key:global-turn:missing-field"
         for k in fused
     )
+
+
+def test_ordered_pass_carries_row_checks(spark):
+    """Stage A's row checks ride the ordered pass row for row: NULL role,
+    ts, turn_idx and conv_id, a row failing both a facet and a transition,
+    and a spec of more than 63 row checks (two mask words).  With the
+    scope-size guard stage A keeps its own pass and still checks the rows
+    of the oversized scope the window drops."""
+    ts = dt.datetime(2024, 1, 1)
+    planted = spark.createDataFrame(
+        [
+            ("conv-90000011", 0, "system", "s", None, ts),
+            ("conv-90000011", 1, "user", "hi", None, ts),
+            ("conv-90000011", 2, None, "x", None, ts),
+            # NULL ts after a non-NULL one
+            ("conv-90000011", 3, "assistant", "y", None, None),
+            ("conv-90000011", 4, "user", "z", None, ts),
+            ("conv-90000012", None, "user", "hi", None, ts),
+            ("conv-90000012", 0, "user", "hi", None, ts),
+            (None, 0, "user", "x", None, ts),
+            (None, 1, "assistant", "", None, ts),
+            # an enumeration facet and a transition on one row
+            ("conv-90000013", 0, "system", "s", None, ts),
+            ("conv-90000013", 1, "alien", "a", None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    df = corrupt_transcripts(
+        synthetic_transcripts(spark, n_convs=30, hot_convs=1, hot_turns=80),
+        every=7,
+    ).unionByName(planted)
+
+    def rows(frame):
+        return Counter(tuple(r) for r in frame.collect())
+
+    base = transcript_spec()
+    assert compile_plan(base).program.fused
+    fused = rows(validate(df, compile_plan(base)).violations)
+    assert fused == rows(_standalone_branches(df, base))
+    for k in (
+        ("conv-90000011", 2, "transcripts/role", "facet:role:Required"),
+        ("conv-90000012", None, "transcripts/turn_idx",
+         "facet:turn_idx:Required"),
+        (None, 1, "transcripts/text", "facet:text:MinLength"),
+        ("conv-90000013", 1, "transcripts/role", "facet:role:Enumeration"),
+        ("conv-90000013", 1, "transcripts", "model:role-transitions"),
+    ):
+        assert any(r[:4] == k for r in fused), k
+
+    # turn i % 70 fails assertion i: checks 63.. (assertions 50..) fill the
+    # second mask word, and only the 80-turn conversation reaches them
+    wide = dataclasses.replace(base, row_assertions=tuple(
+        S.RowAssertion(f"wide-{i}", f"turn_idx % 70 <> {i}")
+        for i in range(70)
+    ))
+    plan = compile_plan(wide)
+    assert len(plan.row_checks) > 63 and plan.program.fused
+    got = rows(validate(df, plan).violations)
+    assert got == rows(_standalone_branches(df, wide))
+    ids = {r[3] for r in got}
+    assert "assert:wide-3" in ids and "assert:wide-65" in ids
+
+    capped = compile_plan(dataclasses.replace(wide, max_scope_rows=60))
+    assert not capped.program.fused
+    got = rows(validate(df, capped).violations)
+    row_ids = {c.constraint_id for c in capped.row_checks}
+    assert Counter(
+        {r: n for r, n in got.items() if r[3] in row_ids}
+    ) == rows(row_local_violations(df, capped))
+    hot = "conv-00000000"
+    assert {r[3] for r in got if r[0] == hot} & {
+        f"assert:wide-{i}" for i in range(50, 70)
+    }
+    assert any(r[0] == hot and r[3] == "limit:max-scope-rows" for r in got)
+    assert not any(r[0] == hot and r[3].startswith("model:") for r in got)
 
 
 # --- the validation program: built once per plan, bound per input ----------

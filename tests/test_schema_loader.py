@@ -369,7 +369,10 @@ def test_attribute_ref_takes_the_global_declaration(spark, tmp_path):
 def test_xml_attribute_refs_resolve(spark, tmp_path):
     """``ref="xml:lang"`` (and xml:space, xml:base) names a predefined
     attribute of the always-bound xml prefix: both readers accept it and
-    the column keeps the local name and the ref site's ``use``."""
+    the column keeps the local name and the ref site's ``use``.  The
+    attributes are typed as the reference's xml.xsd types them: lang is an
+    xs:language or empty, space is default or preserve, base an
+    xs:anyURI."""
     from sissaschool_xmlschema_spark.sources.xml_instance import (
         validate_xml_instance,
     )
@@ -378,14 +381,47 @@ def test_xml_attribute_refs_resolve(spark, tmp_path):
     assert codes(src) == []
     c = compile_xsd(src)
     assert columns(c, "note") == {
-        "value": (), "lang": (S.Required(),), "space": (), "base": (),
+        "value": (),
+        "lang": (S.Required(), S.UnionOf(alternatives=(
+            (S.BuiltinLexical("language"),), (S.Enumeration(("",)),),
+        ))),
+        "space": (S.BuiltinLexical("NCName"),
+                  S.Enumeration(("default", "preserve"))),
+        "base": (),
     }
     doc = tmp_path / "notes.xml"
     doc.write_text('<doc><note xml:lang="en" xml:space="preserve">hi</note>'
+                   '<note xml:lang="" xml:space="bogus">x</note>'
+                   '<note xml:lang="e n">y</note>'
                    "<note>no lang</note></doc>")
-    got = [(r.path, r.constraint_id)
-           for r in validate_xml_instance(spark, str(doc), c).collect()]
-    assert got == [("note/lang", "facet:lang:Required")], got
+    got = sorted((r.path, r.constraint_id, r.offending_value)
+                 for r in validate_xml_instance(spark, str(doc), c).collect())
+    assert got == [
+        ("note/lang", "facet:lang:Required", None),
+        ("note/lang", "facet:lang:UnionOf", "e n"),
+        ("note/space", "facet:space:Enumeration", "bogus"),
+    ], got
+
+
+def test_xml_attribute_declaration_imported_wins(tmp_path):
+    """A schema that imports its own declaration of an xml attribute
+    compiles that declaration, not the predefined one; xml:id is an xs:ID,
+    unique per document."""
+    xml_xsd = (
+        f'<xs:schema {XS} targetNamespace="http://www.w3.org/XML/1998/'
+        'namespace"><xs:attribute name="space" type="xs:string"/>'
+        "</xs:schema>"
+    )
+    src = row_schema(
+        '<xs:attribute ref="xml:space"/><xs:attribute ref="xml:id"/>',
+        extra='<xs:import namespace="http://www.w3.org/XML/1998/namespace"'
+              ' schemaLocation="xml.xsd"/>',
+    )
+    (tmp_path / "xml.xsd").write_text(xml_xsd)
+    c = compile_xsd(src, base_dir=str(tmp_path))
+    assert columns(c, "r")["space"] == ()
+    assert columns(c, "r")["id"] == (S.BuiltinLexical("ID"),)
+    assert [u.name for u in c.specs["r"].identities] == ["id-id-unique"]
 
 
 # a global complexType nothing uses, with an unresolved attribute type
