@@ -24,8 +24,10 @@ Spark lowering:
 * keyref → ``left_anti`` join, broadcasting the distinct key side when the spec says
   it is small; otherwise a shuffled hash join on the field tuple.
 
-All violations land in the engine's canonical violation schema
-``(conv_id, turn_idx, path, constraint_id, offending_value, reason)``.
+All violations land in the engine's one violation row
+(``operators/sequence.VIOLATION_ROW``): each duplicate or missing tuple
+selects its :func:`~sissaschool_xmlschema_spark.operators.sequence.violation_cols`,
+and the key missing-field check is stage A's ``PassProgram``.
 
 Each check is built as a program of prebuilt Columns (:class:`UniqueProgram`,
 :class:`KeyrefProgram`): ``validate`` keeps them per compiled plan and binds
@@ -42,35 +44,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
-from sissaschool_xmlschema_spark.functions.facets import truncate_value
+from sissaschool_xmlschema_spark.operators.sequence import (
+    duplicate_id,
+    duplicate_reason,
+    row_local_program,
+    tuple_repr,
+    violation_cols,
+)
 from sissaschool_xmlschema_spark.plans.compiler import key_missing_field_check
-
-
-def _tuple_repr(fields) -> F.Column:
-    """String form of the field tuple for the offending_value column."""
-    return truncate_value(
-        F.concat_ws("|", *[F.col(f).cast("string") for f in fields])
-    )
 
 
 def _violation_cols(scope: str | None, order: str | None, fields, path: str,
                     cid: str, reason: F.Column) -> list:
-    scope_col = (
-        F.col(scope).cast("string") if scope else F.lit(None).cast("string")
+    """One violation row per group: the field tuple is the offending
+    value, ``order`` the turn index when it is one of the fields."""
+    return violation_cols(
+        F.col(scope) if scope else None,
+        F.col(order).try_cast("long") if order and order in fields else None,
+        path, cid,
+        F.concat_ws("|", *[F.col(f).cast("string") for f in fields]),
+        reason,
     )
-    order_col = (
-        F.col(order).try_cast("long")
-        if order and order in fields
-        else F.lit(None).cast("long")
-    )
-    return [
-        scope_col.alias("conv_id"),
-        order_col.alias("turn_idx"),
-        F.lit(path).alias("path"),
-        F.lit(cid).alias("constraint_id"),
-        _tuple_repr(fields).alias("offending_value"),
-        reason.alias("reason"),
-    ]
 
 
 def _filters(df: DataFrame, filters) -> DataFrame:
@@ -138,21 +132,6 @@ def unique_dups(df: DataFrame, c: S.Unique) -> DataFrame:
     return unique_program(c, "").dups(df)
 
 
-def duplicate_id(c: S.Unique) -> str:
-    return f"{'key' if isinstance(c, S.Key) else 'unique'}:{c.name}"
-
-
-def duplicate_reason(c: S.Unique, n: F.Column) -> F.Column:
-    """Reason text of a duplicated field tuple seen ``n`` times."""
-    return F.concat(
-        F.lit("duplicated value ("),
-        _tuple_repr(c.fields),
-        F.lit(f") for identity constraint '{c.name}' ("),
-        n.cast("string"),
-        F.lit(" times)"),
-    )
-
-
 def unique_violations(df: DataFrame, c: S.Unique, table: str,
                       order_col: str | None = None) -> DataFrame:
     """Duplicate field tuples for xs:unique / xs:key (identities.py:385-389)."""
@@ -161,24 +140,12 @@ def unique_violations(df: DataFrame, c: S.Unique, table: str,
 
 def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
                                  order_col: str | None = None) -> DataFrame:
-    """xs:key rows with a missing field (identities.py:523-531), on their own;
-    ``validate`` runs the same compiled row check inside stage A."""
-    chk = key_missing_field_check(c, table)
-    scope_col = (
-        F.col(chk.scope).cast("string") if chk.scope
-        else F.lit(None).cast("string")
-    )
-    order_expr = (
-        F.col(order_col).try_cast("long") if order_col else F.lit(None).cast("long")
-    )
-    return df.filter(~chk.ok).select(
-        scope_col.alias("conv_id"),
-        order_expr.alias("turn_idx"),
-        F.lit(chk.path).alias("path"),
-        F.lit(chk.constraint_id).alias("constraint_id"),
-        truncate_value(chk.value).alias("offending_value"),
-        F.lit(chk.reason).alias("reason"),
-    )
+    """xs:key rows with a missing field (identities.py:523-531), on their own:
+    :func:`row_local_program` over the one compiled row check that
+    ``validate`` evaluates inside stage A."""
+    return row_local_program(
+        [key_missing_field_check(c, table)], order_col
+    ).bind(df)
 
 
 @dataclass
@@ -275,7 +242,7 @@ def keyref_program(c: S.Keyref, table: str,
     not_null = [F.col(f).isNotNull() for f in c.fields]
     reason = F.concat(
         F.lit("value ("),
-        _tuple_repr(c.fields),
+        tuple_repr(c.fields),
         F.lit(f") not found for identity constraint '{c.name}' ("),
         F.col("_n").cast("string"),
         F.lit(" times)"),

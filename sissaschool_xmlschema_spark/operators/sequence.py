@@ -15,7 +15,16 @@ stage A's row checks ride it as a violation array selected below the sort.
 groupBy with conditional sums (map-side partial aggregation makes this a single
 shuffle of tiny partial rows), used where no ordered pass runs over the full input.
 
-Both passes are built as programs of prebuilt Columns (:class:`PassProgram`,
+This module also owns the engine's one violation row (``VIOLATION_ROW``:
+``VIOLATION_COLS``, ``VIOLATION_SCHEMA``, :func:`violation_cols`) and its one
+emitter, :class:`PassProgram`: a pass that can emit several violations per
+input row builds an array of :func:`violation_struct` s and explodes it.
+Stage A (:func:`row_local_program`), the ordered pass, the Occurs bounds
+over their per-scope counts and an XML row set's structural flags are all
+``PassProgram`` s; a check with one violation per row selects
+:func:`violation_cols` directly.
+
+Every pass is built as a program of prebuilt Columns (:class:`PassProgram`,
 :class:`OccursProgram`): ``validate`` keeps them per compiled plan and binds
 them to each input; the standalone functions build and bind them per call.
 The incremental runner (``streaming/incremental.py``) writes the
@@ -34,19 +43,20 @@ from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
-from sissaschool_xmlschema_spark.operators.identity import (
-    duplicate_id,
-    duplicate_reason,
-)
 
-VIOLATION_COLS = (
-    "conv_id",
-    "turn_idx",
-    "path",
-    "constraint_id",
-    "offending_value",
-    "reason",
+# the violation row every check emits, in column order (the reference's
+# one XMLSchemaValidationError: path, reason, offending object,
+# exceptions.py:316-339)
+VIOLATION_ROW = (
+    ("conv_id", "string"),
+    ("turn_idx", "bigint"),
+    ("path", "string"),
+    ("constraint_id", "string"),
+    ("offending_value", "string"),
+    ("reason", "string"),
 )
+VIOLATION_COLS = tuple(name for name, _ in VIOLATION_ROW)
+VIOLATION_SCHEMA = ", ".join(f"{n} {t}" for n, t in VIOLATION_ROW)
 
 
 def rides_window(c: object, scope: str, order: str,
@@ -62,31 +72,66 @@ def rides_window(c: object, scope: str, order: str,
     )
 
 
-def violation_struct(conv_id: Column, path: str, constraint_id: str,
-                     value: Column, reason, tix: Column) -> Column:
-    """One violation as the element type every pass explodes:
-    ``(conv_id, path, constraint_id, offending_value, reason, tix)``."""
-    return F.struct(
-        conv_id.alias("conv_id"),
-        F.lit(path).alias("path"),
-        F.lit(constraint_id).alias("constraint_id"),
-        truncate_value(value).alias("offending_value"),
-        (reason if isinstance(reason, Column) else F.lit(reason)).alias(
-            "reason"
-        ),
-        tix.alias("tix"),
+def violation_cols(conv_id, turn_idx, path, constraint_id, value,
+                   reason) -> List[Column]:
+    """The violation row's columns, in order, one per argument: a Column or
+    a literal (None is a typed NULL); ``offending_value`` is truncated like
+    exceptions.py:328-329."""
+    cols = []
+    for (name, dtype), v in zip(
+        VIOLATION_ROW,
+        (conv_id, turn_idx, path, constraint_id, value, reason),
+    ):
+        c = v if isinstance(v, Column) else F.lit(v)
+        c = truncate_value(c) if name == "offending_value" else c.cast(dtype)
+        cols.append(c.alias(name))
+    return cols
+
+
+def violation_struct(conv_id, turn_idx, path, constraint_id, value,
+                     reason) -> Column:
+    """One violation as the element type every pass explodes: the
+    :func:`violation_cols` as one struct, so ``_v.*`` flattens it."""
+    return F.struct(*violation_cols(
+        conv_id, turn_idx, path, constraint_id, value, reason
+    ))
+
+
+def tuple_repr(fields) -> Column:
+    """String form of a field tuple, as identity violations report it."""
+    return truncate_value(
+        F.concat_ws("|", *[F.col(f).cast("string") for f in fields])
+    )
+
+
+def duplicate_id(c: S.Unique) -> str:
+    return f"{'key' if isinstance(c, S.Key) else 'unique'}:{c.name}"
+
+
+def duplicate_reason(c: S.Unique, n: Column) -> Column:
+    """Reason text of a duplicated field tuple seen ``n`` times."""
+    return F.concat(
+        F.lit("duplicated value ("),
+        tuple_repr(c.fields),
+        F.lit(f") for identity constraint '{c.name}' ("),
+        n.cast("string"),
+        F.lit(" times)"),
     )
 
 
 @dataclass
 class PassProgram:
-    """One pass over the input as Columns built once — stage A
-    (``plans/runner.row_local_program``) or the ordered pass
-    (:func:`window_program`): each of ``selects`` in turn is selected next
-    to every input column (the violation bitmask, the window helpers), rows
-    where ``flag`` holds are kept, and their ``violations`` array of
-    :func:`violation_struct` s is exploded into one row each and flattened
-    to the violation schema."""
+    """One pass that emits violations, as Columns built once — stage A
+    (:func:`row_local_program`), the ordered pass (:func:`window_program`),
+    the Occurs bounds over per-scope counts (:class:`OccursProgram`), an
+    XML row set's structural flags: each of ``selects`` in turn is selected
+    (the violation bitmask, the window helpers), rows where ``flag`` holds
+    are kept, and their ``violations`` — an array of
+    :func:`violation_struct` s, NULL where a check passes — are exploded
+    into one row each, the NULLs dropped after the explode.  No
+    higher-order ``filter(array, lambda)`` compacts the array: a lambda is
+    interpreted (CodegenFallback) and would take the projection out of
+    whole-stage codegen."""
 
     selects: List[List[Column]]
     flag: Column
@@ -94,16 +139,66 @@ class PassProgram:
 
     def __post_init__(self) -> None:
         self.explode = F.explode(self.violations).alias("_v")
-        self.flatten = [
-            F.col("_v.conv_id"),
-            F.col("_v.tix").alias("turn_idx"),
-            *[F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]],
-        ]
+        self.emitted = F.col("_v").isNotNull()
+        self.flatten = F.col("_v.*")
 
     def bind(self, df: DataFrame) -> DataFrame:
         for cols in self.selects:
             df = df.select(*cols)
-        return df.filter(self.flag).select(self.explode).select(*self.flatten)
+        return (
+            df.filter(self.flag).select(self.explode)
+            .filter(self.emitted).select(self.flatten)
+        )
+
+
+def row_local_program(checks: Sequence[object],
+                      order: Optional[str]) -> Optional[PassProgram]:
+    """Stage A: the row checks (``plans/compiler.RowCheck``) in one
+    projection (scan-fused, codegen'd); ``None`` without checks.
+
+    Two-phase shape for allocation economy: phase 1 evaluates every predicate
+    into one LONG bitmask — pure arithmetic, zero object allocation for the
+    (overwhelmingly common) clean rows, so 32 scan threads don't fight the GC.
+    Phase 2 builds the violation structs only for rows whose mask ≠ 0 (the
+    explode's input array exists only on that ~1% subset).  A naive
+    struct-array-per-row projection measured 2.5x SLOWER at high thread counts
+    purely from allocation pressure.  ``turn_idx`` is ``order`` (NULL when
+    None).
+    """
+    if not checks:
+        return None
+
+    # one 63-bit mask column per chunk of checks (a LONG holds 63 usable bits;
+    # wider specs just get a second mask in the same projection)
+    chunks = [checks[i: i + 63] for i in range(0, len(checks), 63)]
+    masks = [F.col("*")]
+    for ci, chunk in enumerate(chunks):
+        mask = F.lit(0).cast("long")
+        for i, chk in enumerate(chunk):
+            mask = mask + F.when(
+                ~chk.ok, F.shiftleft(F.lit(1).cast("long"), i)
+            ).otherwise(F.lit(0).cast("long"))
+        masks.append(mask.alias(f"_m{ci}"))
+
+    any_flag = F.col("_m0") > 0
+    for ci in range(1, len(chunks)):
+        any_flag = any_flag | (F.col(f"_m{ci}") > 0)
+
+    tix = None if order is None else F.col(order).try_cast("long")
+    structs = [
+        F.when(
+            F.shiftright(F.col(f"_m{ci}"), i).bitwiseAND(F.lit(1)) == 1,
+            violation_struct(
+                None if chk.scope is None else F.col(chk.scope), tix,
+                chk.path, chk.constraint_id, chk.value, chk.reason,
+            ),
+        )
+        for ci, chunk in enumerate(chunks)
+        for i, chk in enumerate(chunk)
+    ]
+    return PassProgram(
+        selects=[masks], flag=any_flag, violations=F.array(*structs)
+    )
 
 
 def window_program(
@@ -119,15 +214,15 @@ def window_program(
     :func:`rides_window`) as the Columns of a single window pass; ``None``
     without checks.
 
-    Window expressions cannot appear inside the higher-order
-    ``explode(filter(array(...)))`` projection, so the pass is two selects
-    over the SAME window partitioning: the first materializes the helper
-    columns (one exchange + sort), the second is a plain projection Catalyst
-    fuses into it.  The explode runs only on rows where some check fails:
-    ``flag`` is the OR of every check's ``~ok``, TRUE exactly where some
+    Window expressions cannot appear inside the generator's
+    ``explode(array(...))`` projection, so the pass is two selects over the
+    SAME window partitioning: the first materializes the helper columns (one
+    exchange + sort), the second is a plain projection Catalyst fuses into
+    it.  The explode runs only on rows where some check fails: ``flag`` is
+    the OR of every check's ``~ok``, TRUE exactly where some
     ``when(~ok, struct)`` emits (both are NULL-safe the same way).
 
-    ``stage_a`` (``plans/runner.row_local_program``) rides the same pass:
+    ``stage_a`` (:func:`row_local_program`) rides the same pass:
     its bitmask and its violation array for flagged rows are selected below
     the window, so the sort (and exchange) carries that mostly-NULL ``_rv``
     column instead of the columns stage A reads, and the explode emits it
@@ -191,16 +286,15 @@ def window_program(
 
     structs, fails = [], []
 
-    def emit(ok, cid: str, value, reason, tix=None) -> None:
+    def emit(ok, cid: str, value, reason,
+             tix=F.col(order).try_cast("long")) -> None:
         fail = ~ok
         fails.append(fail)
         structs.append(
             F.when(
                 fail,
-                violation_struct(
-                    F.col(scope).cast("string"), table, cid, value, reason,
-                    tix if tix is not None else F.col(order).try_cast("long"),
-                ),
+                violation_struct(F.col(scope), tix, table, cid, value,
+                                 reason),
             )
         )
 
@@ -280,7 +374,7 @@ def window_program(
                 f"occurs:{chk.name}",
                 n,
                 _occurs_reason(chk),
-                tix=F.lit(None).cast("long"),
+                tix=None,
             )
         elif isinstance(chk, S.Unique):
             # once per duplicated tuple, on the last row of its peer run;
@@ -301,7 +395,7 @@ def window_program(
     if not structs:
         return None
 
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
+    arr = F.array(*structs)
     flag = reduce(lambda a, b: a | b, fails)
     if stage_a is None:
         return PassProgram(selects=[helpers], flag=flag, violations=arr)
@@ -352,12 +446,11 @@ class OccursProgram:
     """The standalone Occurs bounds as Columns built once
     (:func:`occurs_program`): per-scope conditional counts (salted partials,
     summed by ``merge``, first when ``salt_key`` is set), then the bounds
-    check and violation rows of ``report`` and ``flatten``."""
+    over them, the :class:`PassProgram` ``report``."""
 
     scope: Column
     counts: List[Column]
-    report: List[Column]
-    flatten: List[Column]
+    report: PassProgram
     salt_key: Optional[Column]
     merge: List[Column]
 
@@ -374,7 +467,7 @@ class OccursProgram:
 
     def reported(self, counts: DataFrame) -> DataFrame:
         """Violation rows of per-scope counts."""
-        return counts.select(*self.report).select(*self.flatten)
+        return self.report.bind(counts)
 
 
 def occurs_program(
@@ -398,35 +491,24 @@ def occurs_program(
     occurs = [c for c in checks if isinstance(c, S.Occurs)]
     if not occurs:
         return None
-    structs = []
-    for i, c in enumerate(occurs):
-        n = F.col(f"_n_{i}")
-        structs.append(
-            F.when(
-                ~_occurs_ok(c, n),
-                F.struct(
-                    F.lit(table).alias("path"),
-                    F.lit(f"occurs:{c.name}").alias("constraint_id"),
-                    n.cast("string").alias("offending_value"),
-                    F.lit(_occurs_reason(c)).alias("reason"),
-                ),
-            )
-        )
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
+    fails = [~_occurs_ok(c, F.col(f"_n_{i}")) for i, c in enumerate(occurs)]
     return OccursProgram(
         scope=F.col(scope),
         counts=[
             F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
             for i, c in enumerate(occurs)
         ],
-        report=[
-            F.col(scope).cast("string").alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.explode(arr).alias("_v"),
-        ],
-        flatten=[F.col(c) for c in VIOLATION_COLS[:2]] + [
-            F.col(f"_v.{c}") for c in VIOLATION_COLS[2:]
-        ],
+        report=PassProgram(
+            selects=[],
+            flag=reduce(lambda a, b: a | b, fails),
+            violations=F.array(*[
+                F.when(fail, violation_struct(
+                    F.col(scope), None, table, f"occurs:{c.name}",
+                    F.col(f"_n_{i}"), _occurs_reason(c),
+                ))
+                for i, (c, fail) in enumerate(zip(occurs, fails))
+            ]),
+        ),
         salt_key=F.pmod(
             F.xxhash64(F.col(scope), F.monotonically_increasing_id()),
             F.lit(salt),

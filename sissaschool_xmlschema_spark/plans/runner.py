@@ -34,10 +34,15 @@ inputs.  The standalone operators (``model_window_violations``,
 ``occurs_violations``, ``unique_violations``, ``keyref_violations``) build
 and bind the same programs per call.
 
-Violations union into the canonical lax-mode error collection
-(ValidationContext.errors, validation.py:216-236); ``strict`` raises on the first
-violation like ``raise_or_collect``; verdict rollup mirrors the schema
-``validity``/``validation_attempted`` attributes (schemas.py:851-876).
+Every branch emits the one violation row of ``operators/sequence.py``
+(``VIOLATION_SCHEMA`` is derived from it): stage A, the window pass and the
+Occurs bounds through its ``PassProgram``, the per-group selects (guard,
+identities) through its ``violation_cols``, the pandas kernels under its
+``VIOLATION_COLS``.  Violations union into the canonical lax-mode error
+collection (ValidationContext.errors, validation.py:216-236); ``strict``
+raises on the first violation like ``raise_or_collect``; verdict rollup
+mirrors the schema ``validity``/``validation_attempted`` attributes
+(schemas.py:851-876).
 """
 
 from __future__ import annotations
@@ -55,19 +60,17 @@ from sissaschool_xmlschema_spark.operators.identity import (
     unique_program,
 )
 from sissaschool_xmlschema_spark.operators.sequence import (
+    VIOLATION_COLS,
+    VIOLATION_SCHEMA,
     OccursProgram,
     PassProgram,
     occurs_program,
     rides_window,
-    violation_struct,
+    row_local_program,
+    violation_cols,
     window_program,
 )
 from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
-
-VIOLATION_SCHEMA = (
-    "conv_id string, turn_idx bigint, path string, constraint_id string, "
-    "offending_value string, reason string"
-)
 
 
 class SparkSchemaValidationError(Exception):
@@ -86,67 +89,9 @@ class SparkSchemaValidationError(Exception):
         )
 
 
-def row_local_program(plan: CompiledPlan) -> Optional[PassProgram]:
-    """Stage A: all row checks in one projection (scan-fused, codegen'd).
-
-    Two-phase shape for allocation economy: phase 1 evaluates every predicate
-    into one LONG bitmask — pure arithmetic, zero object allocation for the
-    (overwhelmingly common) clean rows, so 32 scan threads don't fight the GC.
-    Phase 2 builds the violation structs only for rows whose mask ≠ 0 (the
-    explode's input array exists only on that ~1% subset).  A naive
-    struct-array-per-row projection measured 2.5x SLOWER at high thread counts
-    purely from allocation pressure.
-    """
-    if not plan.row_checks:
-        return None
-
-    # one 63-bit mask column per chunk of checks (a LONG holds 63 usable bits;
-    # wider specs just get a second mask in the same projection)
-    chunks = [
-        plan.row_checks[i: i + 63]
-        for i in range(0, len(plan.row_checks), 63)
-    ]
-    masks = [F.col("*")]
-    for ci, chunk in enumerate(chunks):
-        mask = F.lit(0).cast("long")
-        for i, chk in enumerate(chunk):
-            mask = mask + F.when(
-                ~chk.ok, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-        masks.append(mask.alias(f"_m{ci}"))
-
-    any_flag = F.col("_m0") > 0
-    for ci in range(1, len(chunks)):
-        any_flag = any_flag | (F.col(f"_m{ci}") > 0)
-
-    def conv_id(chk):
-        if chk.scope is None:
-            return F.lit(None).cast("string")
-        return F.col(chk.scope).cast("string")
-
-    tix = F.col(plan.spec.order_col).try_cast("long")
-    structs = [
-        F.when(
-            F.shiftright(F.col(f"_m{ci}"), i).bitwiseAND(F.lit(1)) == 1,
-            violation_struct(
-                conv_id(chk), chk.path, chk.constraint_id,
-                chk.value if chk.value is not None
-                else F.lit(None).cast("string"),
-                chk.reason, tix,
-            ),
-        )
-        for ci, chunk in enumerate(chunks)
-        for i, chk in enumerate(chunk)
-    ]
-    return PassProgram(
-        selects=[masks],
-        flag=any_flag,
-        violations=F.filter(F.array(*structs), lambda x: x.isNotNull()),
-    )
-
-
 def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFrame]:
-    """Stage A over ``df``: the plan's :func:`row_local_program`."""
+    """Stage A over ``df``: the plan's
+    :func:`~sissaschool_xmlschema_spark.operators.sequence.row_local_program`."""
     prog = plan.program.stage_a
     return None if prog is None else prog.bind(df)
 
@@ -281,13 +226,7 @@ def group_check_violations(
                     "reason": str(reason),
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "conv_id", "turn_idx", "path", "constraint_id",
-                "offending_value", "reason",
-            ],
-        )
+        return pd.DataFrame(rows, columns=list(VIOLATION_COLS))
 
     return sub.groupBy(scope).applyInPandas(kernel, VIOLATION_SCHEMA)
 
@@ -334,17 +273,12 @@ def guard_program(spec: S.TableSpec, cap: int) -> GuardProgram:
         scope=spec.scope_col,
         count=F.count(F.lit(1)).alias("_n_rows"),
         oversized=F.col("_n_rows") > cap,
-        report=[
-            F.col(spec.scope_col).cast("string").alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.lit(spec.name).alias("path"),
-            F.lit("limit:max-scope-rows").alias("constraint_id"),
-            F.col("_n_rows").cast("string").alias("offending_value"),
-            F.lit(
-                f"scope group exceeds max_scope_rows={cap}; ordered model "
-                "checks skipped for this group"
-            ).alias("reason"),
-        ],
+        report=violation_cols(
+            F.col(spec.scope_col), None, spec.name, "limit:max-scope-rows",
+            F.col("_n_rows"),
+            f"scope group exceeds max_scope_rows={cap}; ordered model "
+            "checks skipped for this group",
+        ),
         big_scope=[F.col(spec.scope_col).alias("_big_scope")],
     )
 
@@ -393,7 +327,7 @@ def build_program(plan: CompiledPlan) -> SuiteProgram:
             identities.append(keyref_program(c, spec.name))
         else:
             raise ValueError(f"unknown identity constraint {c!r}")
-    stage_a = row_local_program(plan)
+    stage_a = row_local_program(plan.row_checks, spec.order_col)
     return SuiteProgram(
         stage_a=stage_a,
         fused=fused,
@@ -414,7 +348,6 @@ def validate(
     df: DataFrame,
     spec_or_plan: S.TableSpec | CompiledPlan,
     mode: Optional[str] = None,
-    cache_input: bool = False,
 ) -> ValidationResult:
     """Run the full constraint suite; the ``schema.validate`` analogue.
 
@@ -422,19 +355,11 @@ def validate(
     :class:`SparkSchemaValidationError` on the first one (raise_or_collect,
     validation.py:216-236).
 
-    ``cache_input=True`` persists ``df`` before fanning out the check
-    branches — worthwhile when the input is itself a derived view (each union
-    branch would otherwise recompute the derivation); leave False when the
-    input is a plain table scan (columnar re-scans are cheaper than a cache
-    at 100 TB).
-
     A :class:`CompiledPlan` builds its program on first use and keeps it, so
     validating many inputs against one plan only binds it to each
     DataFrame; a bare TableSpec is compiled (and its program built) per
     call.
     """
-    if cache_input:
-        df = df.persist()
     plan = (
         spec_or_plan
         if isinstance(spec_or_plan, CompiledPlan)

@@ -72,9 +72,9 @@ class SparkSchema:
         """Raise :class:`SparkSchemaValidationError` on the first violation."""
         validate(df, self.plan, mode="strict")
 
-    def run(self, df: DataFrame, cache_input: bool = False) -> ValidationResult:
+    def run(self, df: DataFrame) -> ValidationResult:
         """Full result object (violations + verdict/constraint rollups)."""
-        return validate(df, self.plan, cache_input=cache_input)
+        return validate(df, self.plan)
 
     # --- decoding (documents.py:275-299 API shape) -------------------------
 

@@ -59,9 +59,12 @@ each set with its row type and unions them: they are all rows of the
 table.  Its one plan (``_table_plan``) checks each row under its own type
 alone and counts every row in the declared occurrence bounds and
 identities; a table without overlays has neither tag nor union.
-Structural violations are descriptions (``_Flagged``, one pass per row
-set) that only :func:`validate_xml_instance` turns into DataFrames, so
-:func:`xml_instance_tables` builds and binds no validation.
+Structural violations are descriptions (``_Flagged``) that only
+:func:`validate_xml_instance` turns into DataFrames, so
+:func:`xml_instance_tables` builds and binds no validation: one
+``PassProgram`` per row set, gated on the rows where some flag holds, that
+emits the engine's one violation row (so a long ``offending_value`` is
+truncated like every other).
 
 Beyond the flat subset, the reader resolves (r5): wildcard markers
 (``xs:any``/``xs:anyAttribute``/``xs:openContent`` gate the undeclared
@@ -101,15 +104,17 @@ from pyspark.sql import types as T
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.operators.identity import keyref_program
+from sissaschool_xmlschema_spark.operators.sequence import (
+    VIOLATION_SCHEMA,
+    PassProgram,
+    violation_struct,
+)
 from sissaschool_xmlschema_spark.plans.compiler import (
     CompiledPlan,
     compile_plan,
     key_missing_field_check,
 )
-from sissaschool_xmlschema_spark.plans.runner import (
-    VIOLATION_SCHEMA,
-    validate,
-)
+from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import (
     CompiledXsd,
@@ -325,7 +330,8 @@ class _Flagged:
     """Structural violations of one row set, as a description: for each
     ``(cond, constraint_id, value, reason)`` of ``flags``, one violation
     at ``path`` per row of ``rows`` where ``cond`` holds (every row when
-    it is None).  One pass over the rows finds them all; only
+    it is None).  One pass over the rows finds them all, gated on the rows
+    where some flag holds (a :class:`PassProgram`); only
     :func:`validate_xml_instance` turns it into a DataFrame."""
 
     rows: DataFrame
@@ -333,22 +339,18 @@ class _Flagged:
     flags: tuple
 
     def violations(self, label: str) -> DataFrame:
-        found = F.array(*[
-            F.when(F.lit(True) if cond is None else cond, F.struct(
-                F.lit(cid).alias("constraint_id"),
-                value.cast("string").alias("offending_value"),
-                F.lit(reason).alias("reason"),
-            ))
-            for cond, cid, value, reason in self.flags
-        ])
-        return self.rows.select(
-            F.explode(F.filter(found, lambda v: v.isNotNull())).alias("_v")
-        ).select(
-            F.lit(label).alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.lit(self.path).alias("path"),
-            "_v.constraint_id", "_v.offending_value", "_v.reason",
-        )
+        conds = [F.lit(True) if cond is None else cond
+                 for cond, _, _, _ in self.flags]
+        return PassProgram(
+            selects=[],
+            flag=reduce(lambda a, b: a | b, conds),
+            violations=F.array(*[
+                F.when(cond, violation_struct(
+                    label, None, self.path, cid, value, reason
+                ))
+                for cond, (_, cid, value, reason) in zip(conds, self.flags)
+            ]),
+        ).bind(self.rows)
 
 
 class _TableReader:

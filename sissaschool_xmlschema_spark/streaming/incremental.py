@@ -54,7 +54,10 @@ from sissaschool_xmlschema_spark.operators.identity import (
     keyref_program,
     unique_program,
 )
-from sissaschool_xmlschema_spark.operators.sequence import occurs_program
+from sissaschool_xmlschema_spark.operators.sequence import (
+    VIOLATION_ROW,
+    occurs_program,
+)
 from sissaschool_xmlschema_spark.plans.compiler import compile_plan
 from sissaschool_xmlschema_spark.plans.runner import (
     VIOLATION_SCHEMA,
@@ -283,8 +286,8 @@ def run_incremental(
 # ---------------------------------------------------------------------------
 
 _CONTIG_COLS = ["conv_id", "turn_idx", "constraint_id", "reason"]
-_CONTIG_OUT = (
-    "conv_id string, turn_idx long, constraint_id string, reason string"
+_CONTIG_OUT = ", ".join(
+    f"{n} {t}" for n, t in VIOLATION_ROW if n in _CONTIG_COLS
 )
 
 

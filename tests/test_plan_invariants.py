@@ -131,6 +131,8 @@ def test_suite_plan_shape_plain_parquet(spark, tmp_path):
     assert nodes["Window"] == 1, nodes
     assert nodes["Generate"] <= 1, nodes
     assert "Filter" in _path_below(v, "Generate", "Window")
+    # no higher-order lambda: it would leave whole-stage codegen
+    assert "lambdafunction" not in _plan(v)
 
 
 def test_suite_plan_shape_bucketed(spark, tmp_path):
@@ -149,6 +151,7 @@ def test_suite_plan_shape_bucketed(spark, tmp_path):
         assert nodes["Window"] == 1, nodes
         assert nodes["Generate"] <= 1, nodes
         assert "Filter" in _path_below(v, "Generate", "Window")
+        assert "lambdafunction" not in _plan(v)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -515,6 +518,7 @@ def test_xml_document_plan_is_shuffle_free(spark, tmp_path):
         assert nodes["Exchange"] == 0, nodes
         assert nodes["BroadcastExchange"] >= 1, nodes
         assert jobs <= 2, jobs
+        assert "lambdafunction" not in _plan(v)
 
 
 def test_overlay_document_plan_is_shuffle_free(spark):

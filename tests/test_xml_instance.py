@@ -1266,3 +1266,21 @@ def test_stray_text_flagged_once_per_container(spark, tmp_path):
     assert char_data(
         validate_xml_instance(spark, str(p), c, table="rec")
     ) == Counter([("shop/rec", "structure:char-data", "stray")])
+
+
+def test_long_stray_text_is_truncated(spark, tmp_path):
+    """A structural flag reports the engine's one violation row: stray text
+    longer than 200 characters in element-only content is reported by its
+    first 200 (exceptions.py:328-329), like every other offending value."""
+    text = "stray-" + "0123456789" * 30
+    p = tmp_path / "shop-long-stray.xml"
+    with open(SHOP_XML, encoding="utf-8") as f:
+        p.write_text(f.read().replace("<title>", f" {text} <title>"))
+    got = [
+        r.offending_value
+        for r in validate_xml_instance(
+            spark, str(p), compile_xsd(SHOP_XSD, version="1.1")
+        ).collect()
+        if r.constraint_id == "structure:char-data"
+    ]
+    assert got == [text[:200]]
