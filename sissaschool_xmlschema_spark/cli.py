@@ -224,7 +224,8 @@ def cmd_json2xml(args: argparse.Namespace) -> int:
             if not _os.path.isdir(tdir):
                 continue
             df = spark.read.json(tdir)
-            x = encode_table_xml(df, compiled.column_paths.get(t, {}), t)
+            paths = compiled.row_types[t][0].column_paths
+            x = encode_table_xml(df, paths, t)
             body = (
                 x.groupBy("doc_id")
                 .agg(F.array_join(F.transform(

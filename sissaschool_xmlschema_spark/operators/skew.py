@@ -1,8 +1,9 @@
 """Key-skew diagnostics — the planning stage for salted joins and groupBys.
 
 The north rule requires "partitioning / shuffle / skew handled explicitly".
-The engine already ships the *mechanisms* (opt-in salting in
-operators/identity.py and sequence.py, AQE skew-join); this module ships the
+The engine already ships the *mechanisms* (opt-in salting of the occurrence
+counts, ``occurs_program(salt=)`` / ``occurs_violations(salt=)`` in
+operators/sequence.py, and AQE skew-join); this module ships the
 *measurement* that decides when to use them: a one-pass report of how a key
 column's mass is distributed across would-be shuffle partitions.
 
@@ -23,8 +24,8 @@ driver-sized top-N.
   processes a multiple of the average load and salting pays for itself.
 * :func:`suggest_salt` — the engine's own decision rule, as a pure
   function: given the summary row, the salt factor that levels the largest
-  key onto roughly-average tasks (what identity.py/sequence.py's
-  ``salt_factor`` expects).
+  key onto roughly-average tasks (what the ``salt`` argument of
+  sequence.py's ``occurs_program`` / ``occurs_violations`` expects).
 
 All exact and SQL-expressible — the driver's DuckDB oracle reproduces both
 DataFrames bit-for-bit (queries ``skew_hitters`` / ``skew_summary``).
@@ -128,8 +129,8 @@ def suggest_salt(
     the average *partition* load (``n_rows / shuffle_partitions``); else
     the factor that splits the hottest key down to roughly one average
     partition per salt bucket, capped at ``shuffle_partitions``.  Feed the
-    result to the ``salt_factor`` arguments in operators/identity.py /
-    sequence.py.
+    result to the ``salt`` argument of ``occurs_program`` /
+    ``occurs_violations`` in operators/sequence.py.
     """
     avg_partition = summary["n_rows"] / max(shuffle_partitions, 1)
     if avg_partition <= 0 or summary["max_key_n"] <= threshold * avg_partition:

@@ -188,8 +188,9 @@ def group_check_violations(
     """Per-conversation assert via applyInPandas (assertions.py:36-147).
 
     One shuffle on the scope key; each group arrives as a pandas frame sorted
-    by order_col.  Oversized groups are truncated to ``max_group_rows`` with a
-    dedicated guard violation instead of OOMing the executor.
+    by order_col.  Oversized groups keep their first ``max_group_rows`` rows
+    in that order, with a dedicated guard violation, instead of OOMing the
+    executor.
     """
     need = {spec.scope_col, spec.order_col} | set(check.columns)
     sub = df.select(*sorted(need))
@@ -203,6 +204,7 @@ def group_check_violations(
 
         rows = []
         conv = str(pdf[scope].iloc[0])
+        pdf = pdf.sort_values(order)
         if len(pdf) > cap:
             rows.append(
                 {
@@ -215,7 +217,7 @@ def group_check_violations(
                 }
             )
             pdf = pdf.iloc[:cap]
-        for reason in fn(pdf.sort_values(order)):
+        for reason in fn(pdf):
             rows.append(
                 {
                     "conv_id": conv,

@@ -5,16 +5,16 @@ The reference validates XML trees directly (``XMLSchema(...).validate(
 counts per instance, testing/_factory.py:11-42).  The engine's analogue for
 the flat-table subset: read the instance with Spark's native XML source,
 flatten each row element into its table (nested single-occurrence children
-walk ``CompiledXsd.column_paths``), run the ordinary distributed validation
-per table plus the schema's cross-table keyrefs, and add the STRUCTURAL
-checks only a tree sees:
+walk the column paths of the table's ``CompiledXsd.row_types``), run the
+ordinary distributed validation per table plus the schema's cross-table
+keyrefs, and add the STRUCTURAL checks only a tree sees:
 
 * character data inside element-only content (``cvc-complex-type.2.3``;
   the reference's children-validation error on text in a model group) —
   Spark XML surfaces stray text as the ``_VALUE`` field;
 * undeclared attributes / elements (``cvc-complex-type.3.2.2``) — schema
   INFERENCE lists every field present in the data, so anything outside the
-  compiled columns, their prefixes, and ``CompiledXsd.skipped_paths``
+  compiled columns, their prefixes, and the row type's ``skipped`` paths
   (schema-declared subtrees the flat subset doesn't model) is genuinely
   undeclared;
 * repeated occurrences of a child the schema declares single
@@ -49,9 +49,9 @@ several documents, never from splitting one.
 Every row set of a document — a row table, a document row, a nested
 table, a substitution member, an xsi:type or alternative overlay — goes
 through ONE reader (``_TableRead.read``): a ``_TableReader`` walks the
-rows' inferred struct against one VIEW (the declared type's paths, or an
-overlay's — the ``CompiledXsd.xsi_overlays`` comment gives the shape) and
-yields the string-typed flat rows plus the structural flags.  One loop
+rows' inferred struct against one ``xsd_compile.RowType`` (the declared
+type, or an overlay: ``CompiledXsd.row_types`` lists both) and yields the
+string-typed flat rows plus the structural flags.  One loop
 (``_TableRead.typed``) reads a table's row sets, each element against the
 one type the reference gives it (an xsi:type, an xs:alternative arm, the
 member's type for a substitution member, else the declared type), tags
@@ -96,7 +96,8 @@ import os
 import re
 from dataclasses import dataclass, replace
 from functools import partial, reduce
-from typing import NamedTuple, Optional
+from itertools import chain
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,6 +119,7 @@ from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xml_text import declared_encoding
 from sissaschool_xmlschema_spark.xsd_compile import (
     CompiledXsd,
+    RowType,
     _ns_admits,
     compile_xsd,
 )
@@ -202,15 +204,6 @@ def _is_xsi_machinery(field_name: str, nsmap: dict) -> bool:
     return pfx == "xsi" or nsmap.get(pfx) == _XSI_URI
 
 
-def _views(compiled):
-    """``(TableSpec, column paths)`` of each table's declared type and of
-    each of its overlays."""
-    for name, spec in compiled.specs.items():
-        yield spec, compiled.column_paths.get(name, {})
-        for rt in _overlays(compiled, name):
-            yield rt.view["spec"], rt.view["column_paths"]
-
-
 def _elem_required_paths(compiled) -> list:
     """Full violation paths (``table/column``, an overlay's own TableSpec
     name for its rows) of element-backed Required facets — the 'missing
@@ -221,13 +214,13 @@ def _elem_required_paths(compiled) -> list:
     required attributes individually (cvc-complex-type.4).
     """
     out = []
-    for spec, paths in _views(compiled):
-        for col in spec.columns:
-            p = paths.get(col.name)
+    for rt in chain.from_iterable(compiled.row_types.values()):
+        for col in rt.spec.columns:
+            p = rt.column_paths.get(col.name)
             if p is None or any(seg.startswith("@") for seg in p):
                 continue
             if any(isinstance(f, S.Required) for f in col.facets):
-                out.append(f"{spec.name}/{col.name}")
+                out.append(f"{rt.spec.name}/{col.name}")
     return out
 
 
@@ -243,10 +236,10 @@ def _model_ranks(compiled, elem_req) -> dict:
         parent = compiled.parent_of.get(tname)
         if parent is not None and parent != tname:
             ranks[f"{parent}/{tname}"] = pos
-    for spec, _paths in _views(compiled):
-        for i, col in enumerate(spec.columns):
-            if f"{spec.name}/{col.name}" in elem_req:
-                ranks.setdefault(f"{spec.name}/{col.name}", i)
+    for rt in chain.from_iterable(compiled.row_types.values()):
+        for i, col in enumerate(rt.spec.columns):
+            if f"{rt.spec.name}/{col.name}" in elem_req:
+                ranks.setdefault(f"{rt.spec.name}/{col.name}", i)
     return ranks
 
 
@@ -354,20 +347,21 @@ class _Flagged:
 
 
 class _TableReader:
-    """Walks one row element's inferred struct against one view: the
-    declared type's (:func:`_declared_view`) or an overlay's (the
-    ``CompiledXsd.xsi_overlays`` comment)."""
+    """Walks one row element's inferred struct against one
+    :class:`~sissaschool_xmlschema_spark.xsd_compile.RowType`: the
+    table's declared type or one of its overlays."""
 
-    def __init__(self, name, view, compiled, nsmap):
+    def __init__(self, name, row_type: RowType, compiled, nsmap):
         self.name = name
-        self.paths = {tuple(p): col for col, p in view["column_paths"].items()}
+        self.paths = {tuple(p): col
+                      for col, p in row_type.column_paths.items()}
+        self.skipped = {tuple(s) for s in row_type.skipped}
         self.prefixes = set()
-        for p in list(self.paths) + [tuple(s) for s in view["skipped"]]:
+        for p in [*self.paths, *self.skipped]:
             for i in range(1, len(p)):
                 self.prefixes.add(p[:i])
-        self.skipped = {tuple(s) for s in view["skipped"]}
-        self.wildcards = tuple(view["wildcards"])
-        self.mixed = frozenset(view["mixed"])
+        self.wildcards = row_type.wildcards
+        self.mixed = row_type.mixed
         self.target_ns = compiled.target_namespace
         self.nsmap = nsmap
         self.globals = compiled.global_elements
@@ -597,86 +591,43 @@ def _rows_of(container: DataFrame, local: str):
     return container.select(elem.alias("_row"))
 
 
-def _declared_view(compiled: CompiledXsd, name: str) -> dict:
-    """Table ``name``'s declared type as a view shaped like an overlay."""
-    return dict(
-        spec=compiled.specs[name],
-        column_paths=compiled.column_paths.get(name, {}),
-        skipped=compiled.skipped_paths.get(name, ()),
-        wildcards=compiled.wildcards.get(name, ()),
-        mixed=compiled.mixed_paths.get(name, frozenset()),
-    )
-
-
-# the row type tag of a table with overlays (NULL: the declared type)
+# the row type tag of a table with overlays: the row type's position in
+# its CompiledXsd.row_types entry (0: the declared type)
 _ROW_TYPE = "_row_type"
 
 
-class _RowType(NamedTuple):
-    """A row type of a table besides its declared one (:func:`_overlays`)."""
-
-    kind: str  # 'xsi', 'alt' or 'member'
-    which: object  # the xsi:type's name, the arm's position, the member
-    view: dict  # shaped as the CompiledXsd.xsi_overlays comment says
-
-    @property
-    def tag(self) -> str:  # marks its rows in _ROW_TYPE
-        return f"{self.kind}:{self.which}"
-
-
-def _overlays(compiled: CompiledXsd, name: str) -> list:
-    """The :class:`_RowType` of table ``name``, in the reference's order:
-    the types an xsi:type names (elements.py:657-682), the xs:alternative
-    arms, first match wins (elements.py:1345-1365), then the substitution
-    members standing in for the element (elements.py:611-621)."""
-    return [
-        *(_RowType(kind="xsi", which=t, view=ov)
-          for t, ov in compiled.xsi_overlays.get(name, {}).items()),
-        *(_RowType(kind="alt", which=i, view=arm)
-          for i, arm in enumerate(compiled.alt_overlays.get(name, ()))),
-        *(_RowType(kind="member", which=m, view=mo)
-          for m, mo in compiled.subst_overlays.get(name, {}).items()),
-    ]
-
-
-def _only(selector: Optional[str], tag: str) -> str:
+def _only(selector: Optional[str], tag: int) -> str:
     """The SQL predicate ``selector`` (None: every row) on the rows
     tagged ``tag`` only."""
-    mine = f"`{_ROW_TYPE}` = '{tag}'"
+    mine = f"`{_ROW_TYPE}` = {tag}"
     return mine if selector is None else f"({selector}) AND {mine}"
 
 
 def _table_plan(compiled: CompiledXsd, name: str) -> CompiledPlan:
     """The one compiled plan of table ``name``'s flat rows.  Each row's
-    own type checks it: the declared type's row checks hold on the
-    untagged rows, each overlay's (with the paths, constraint ids and
-    reasons of its own TableSpec) on the rows carrying its tag.  The
-    declared identities and occurrence bounds count every row; an
-    overlay's identities the declared type lacks (by name) select its
-    rows only."""
-    spec = compiled.specs[name]
-    overlays = _overlays(compiled, name)
-    if not overlays:
+    own type checks it: each row type's row checks (with the paths,
+    constraint ids and reasons of its own TableSpec) hold on the rows
+    carrying its tag.  The declared identities and occurrence bounds
+    count every row; an overlay's identities the declared type lacks (by
+    name) select its rows only."""
+    row_types = compiled.row_types[name]
+    spec = row_types[0].spec
+    if len(row_types) == 1:
         return compile_plan(spec)
     tag = F.col(_ROW_TYPE)
-
-    def gated(ospec, gate) -> list:
-        return [replace(chk, ok=~gate | chk.ok)
-                for chk in compile_plan(ospec).row_checks]
-
-    checks = gated(replace(spec, identities=()), tag.isNull())
+    checks: list = []
     identities = list(spec.identities)
     declared = {c.name for c in identities}
-    for rt in overlays:
+    for i, rt in enumerate(row_types):
         own = tuple(
-            replace(c, selector=_only(c.selector, rt.tag), **(
-                {"refer_selector": _only(c.refer_selector, rt.tag)}
+            replace(c, selector=_only(c.selector, i), **(
+                {"refer_selector": _only(c.refer_selector, i)}
                 if isinstance(c, S.Keyref) else {}
             ))
-            for c in rt.view["spec"].identities if c.name not in declared
+            for c in rt.spec.identities if c.name not in declared
         )
-        checks += gated(replace(rt.view["spec"], identities=own),
-                        tag.eqNullSafe(rt.tag))
+        checks += [replace(chk, ok=(tag != i) | chk.ok) for chk in
+                   compile_plan(replace(rt.spec, identities=own)).row_checks]
         identities += own
     checks += [key_missing_field_check(c, name)
                for c in spec.identities if isinstance(c, S.Key)]
@@ -696,25 +647,22 @@ class _TableRead:
                  parent: str, keys: list) -> None:
         self.src, self.compiled = src, compiled
         self.name, self.parent, self.keys = name, parent, keys
-        self.overlays = _overlays(compiled, name)
+        self.row_types = compiled.row_types[name]
         self.columns = list(dict.fromkeys(
-            c.name
-            for spec in [compiled.specs[name]]
-            + [rt.view["spec"] for rt in self.overlays]
-            for c in spec.columns
+            c.name for rt in self.row_types for c in rt.spec.columns
         ))
         self.parts: list = []
 
-    def read(self, name, view, rows, rtype, tag=None, flags=(),
-             keys=None) -> DataFrame:
-        """The flat rows of one row set read against one view: ``rows``
-        holds one ``name`` element per row in its ``_row`` column (of type
-        ``rtype``); the flat rows hold the strings at the view's paths
-        (NULL in the table's other columns), tagged ``tag``, and the
-        ``keys`` Columns (by default the table's).  The walk's
-        structural violations and ``flags`` on the same rows join the
-        parts."""
-        rdr = _TableReader(name, view, self.compiled, self.src.nsmap)
+    def read(self, name, tag, rows, rtype, flags=(), keys=None) -> DataFrame:
+        """The flat rows of one row set read against row type ``tag`` (a
+        position in the table's row types): ``rows`` holds one ``name``
+        element per row in its ``_row`` column (of type ``rtype``); the
+        flat rows hold the strings at the row type's paths (NULL in the
+        table's other columns), tagged ``tag``, and the ``keys`` Columns
+        (by default the table's).  The walk's structural violations and
+        ``flags`` on the same rows join the parts."""
+        rdr = _TableReader(name, self.row_types[tag], self.compiled,
+                           self.src.nsmap)
         if isinstance(rtype, T.StructType):
             rdr.walk(rtype, "_row.", ())
         elif () in rdr.paths:
@@ -728,8 +676,8 @@ class _TableRead:
         return rows.select(*[
             rdr.extract.get(c, F.lit(None).cast("string")).alias(c)
             for c in self.columns
-        ], *([F.lit(tag).cast("string").alias(_ROW_TYPE)]
-             if self.overlays else []), *(keys or self.keys))
+        ], *([F.lit(tag).alias(_ROW_TYPE)]
+             if len(self.row_types) > 1 else []), *(keys or self.keys))
 
     def typed(self, rows, member_rows=None) -> Optional[DataFrame]:
         """The table's flat rows (None: there are none): its row elements
@@ -742,24 +690,23 @@ class _TableRead:
         1345-1365), else the declared type; an xsi:type naming no
         compiled type is flagged.  A table without overlays reads its row
         elements as one row set, untagged, as they come."""
-        name, compiled = self.name, self.compiled
+        name, (declared, *overlays) = self.name, self.row_types
         rtype = None if rows is None else rows.schema["_row"].dataType
-        order, named = compiled.specs[name].order_col, None
-        if self.overlays:
+        order, named = declared.spec.order_col, None
+        if overlays:
             # the keys are evaluated on the row elements before they split
             # into row sets, so row ids stay distinct and in document order;
             # the ids of row type i (a member) start at i * 2**33, above
             # every id of one partition (a document is one partition)
-            named = [F.col(compiled.specs[name].scope_col), F.col(order)]
+            named = [F.col(declared.spec.scope_col), F.col(order)]
             rows = None if rows is None else rows.select("*", *self.keys)
         struct = isinstance(rtype, T.StructType)
-        xsi_types = compiled.xsi_overlays.get(name)
+        xsi_types = [rt.name for rt in overlays if rt.kind == "xsi"]
         xf = struct and xsi_types and _xsi_type_field(rtype, self.src.nsmap)
         unknown = ()
         if xf:
             xcol = F.col(f"_row.`{xf}`")
-            known = sorted({*xsi_types, compiled.declared_types.get(name)}
-                           - {None})
+            known = sorted({*xsi_types, declared.name} - {None})
             unknown = ((
                 xcol.isNotNull() & ~_xsi_local(xcol).isin(known),
                 "structure:unknown-xsi-type", xcol,
@@ -767,38 +714,35 @@ class _TableRead:
                 "(elements.py:657-682)",
             ),)
         flats, rest = [], rows
-        for i, rt in enumerate(self.overlays, 1):
+        for i, rt in enumerate(overlays, 1):
             if rt.kind == "member":
-                mrows = member_rows and member_rows(rt.which)
+                mrows = member_rows and member_rows(rt.name)
                 if mrows is not None and isinstance(
                         mrows.schema["_row"].dataType, T.StructType):
                     mrows = mrows.select("*", *self.keys).withColumn(
                         order, F.col(order) + (i << 33))
                     flats.append(self.read(
-                        rt.which, rt.view, mrows,
-                        mrows.schema["_row"].dataType, rt.tag, (), named,
+                        rt.name, i, mrows, mrows.schema["_row"].dataType,
+                        (), named,
                     ))
                 continue
             if rt.kind == "xsi" and xf:
-                cond = F.coalesce(_xsi_local(xcol) == rt.which, F.lit(False))
-            elif rt.kind == "alt" and struct and rt.view["attr"] is None:
+                cond = F.coalesce(_xsi_local(xcol) == rt.name, F.lit(False))
+            elif rt.kind == "alt" and struct and rt.attr is None:
                 cond = F.lit(True)  # the unconditional (default) arm
             elif rt.kind == "alt" and struct \
-                    and f"_{rt.view['attr']}" in rtype.names:
-                tcol = F.col(f"_row.`_{rt.view['attr']}`").cast("string")
-                cond = tcol.isNotNull() & (tcol == rt.view["value"])
+                    and f"_{rt.attr}" in rtype.names:
+                tcol = F.col(f"_row.`_{rt.attr}`").cast("string")
+                cond = tcol.isNotNull() & (tcol == rt.value)
             else:
                 continue  # no row of the document can match
             flats.append(self.read(
-                name, rt.view, rest.filter(cond), rtype, rt.tag,
+                name, i, rest.filter(cond), rtype,
                 () if rt.kind == "xsi" else unknown, named,
             ))
             rest = rest.filter(~cond)
         if rows is not None:
-            flats.insert(0, self.read(
-                name, _declared_view(compiled, name), rest, rtype, None,
-                unknown, named,
-            ))
+            flats.insert(0, self.read(name, 0, rest, rtype, unknown, named))
         return reduce(DataFrame.unionByName, flats) if flats else None
 
 
@@ -893,7 +837,7 @@ def _flatten_nested(src: _Document, compiled, name):
         F.col(pos_cols[-1]).cast("long").alias(spec.order_col),
     ]
     rtype = rows.schema["_row"].dataType
-    paths = compiled.column_paths.get(name, {})
+    paths = compiled.row_types[name][0].column_paths
     if not isinstance(rtype, T.StructType) or (
         set(paths) == {"value"} and tuple(paths["value"]) == ()
     ):
@@ -931,7 +875,7 @@ def _flatten_one(src: _Document, compiled, name):
     # a document-value table's own text IS the declared 'value' column —
     # everything else treats container _VALUE as stray char data
     has_own_text = () in {
-        tuple(p) for p in compiled.column_paths.get(name, {}).values()
+        tuple(p) for p in compiled.row_types[name][0].column_paths.values()
     }
 
     # container-level stray character data (legitimate when the container's

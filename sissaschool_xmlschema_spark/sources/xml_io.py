@@ -145,9 +145,10 @@ def encode_table_xml(
     out_col: str = "xml",
 ) -> DataFrame:
     """Append ``out_col`` holding each flat row-element-table row as one
-    XML element, inverting the instance reader's path flattening
-    (``xsd_compile.CompiledXsd.column_paths``; reference encode direction
-    validators/schemas.py:1761 / converters round-trip).
+    XML element, inverting the instance reader's path flattening (the
+    ``column_paths`` of the table's declared row type,
+    ``xsd_compile.CompiledXsd.row_types[table][0]``; reference encode
+    direction validators/schemas.py:1761 / converters round-trip).
 
     Attribute-backed columns ('@' steps) render as XML attributes via
     Spark's ``to_xml`` attributePrefix convention ('_'); an empty path ()

@@ -162,10 +162,48 @@ class ExternalKeyref:
     last_wins: bool = False
 
 
+@dataclass(frozen=True)
+class RowType:
+    """One type the rows of a table are read and checked against: the
+    table's declared type, or an overlay — a type the reference reads
+    some of its elements against instead (reference elements.py:657-682
+    xsi:type, :1345-1365 xs:alternative, :611-621 substitution member).
+    The instance reader walks each row against ``column_paths``,
+    ``skipped``, ``wildcards`` and ``mixed``, and checks it with
+    ``spec``."""
+
+    kind: str  # 'declared', 'xsi', 'alt' or 'member'
+    # the type's local name (None: an anonymous declared type); a
+    # member's is the member element's name, which its rows carry
+    name: Optional[str]
+    # the row checks; an overlay's TableSpec name is its violation path
+    # prefix, and its identities the declared type lacks select its rows
+    spec: S.TableSpec
+    # column -> element-tree path ('@' marks the attribute step)
+    column_paths: dict
+    # schema-declared subtree paths OUTSIDE the compiled subset (mirrors
+    # `restrictions`): not undeclared content
+    skipped: frozenset
+    # Wildcard markers (xs:any / xs:anyAttribute / xs:openContent): open
+    # content the reader must NOT flag as undeclared (skip/lax suppress;
+    # strict still requires a declaration)
+    wildcards: tuple
+    # path tuples whose complexType is mixed="true" (char data admitted;
+    # () = the row element's own level)
+    mixed: frozenset
+    # an alternative arm's @attr='v' test (attr None: the unconditional
+    # default arm); None on every other kind
+    attr: Optional[str] = None
+    value: Optional[str] = None
+
+
 @dataclass
 class CompiledXsd:
     """Result of :func:`compile_xsd`: one TableSpec per row element, plus
-    cross-table keyrefs and the list of constructs outside the subset."""
+    cross-table keyrefs and the list of constructs outside the subset.
+    ``row_types`` holds what the instance reader needs of every table:
+    its declared :class:`RowType` (whose ``spec`` is ``specs[table]``)
+    followed by its overlays."""
 
     specs: dict
     external_keyrefs: tuple
@@ -174,25 +212,16 @@ class CompiledXsd:
     # container, e.g. car -> cars): what an XML-instance reader uses as the
     # structural rowTag (sources/xml_instance.py)
     parent_of: dict = field(default_factory=dict)
-    # table -> {column -> element-tree path} ('@' marks the attribute step)
-    column_paths: dict = field(default_factory=dict)
-    # table -> set of schema-declared subtree paths OUTSIDE the compiled
-    # subset (mirrors `restrictions`, machine-usable for instance readers)
-    skipped_paths: dict = field(default_factory=dict)
-    # row elements that are repeated SIMPLE children of a global element
-    # (the menù example's shape): one row per occurrence, single column
-    # 'value' holding the element text
-    simple_rows: frozenset = frozenset()
+    # table -> (declared RowType, *overlays): the overlays in the
+    # reference's order — the types an xsi:type may name, the
+    # xs:alternative arms (first match wins, non-matching rows keep the
+    # declared type), then the substitution members.  Overlay rows are
+    # rows of their table: the table's identities and occurrence bounds
+    # count them (sources/xml_instance.py _table_plan).
+    row_types: dict = field(default_factory=dict)
     # document-singleton tables: one row per document holding a global
     # element's own non-repeated fields (the element IS the row)
     doc_rows: frozenset = frozenset()
-    # table -> tuple of Wildcard markers (xs:any / xs:anyAttribute /
-    # xs:openContent): open content the instance reader must NOT flag as
-    # undeclared (skip/lax suppress; strict still requires a declaration)
-    wildcards: dict = field(default_factory=dict)
-    # table -> frozenset of path tuples whose complexType is mixed="true"
-    # (char data admitted; () = the row element's own level)
-    mixed_paths: dict = field(default_factory=dict)
     # global element names whose type is mixed (container-level char data)
     mixed_containers: frozenset = frozenset()
     # schema targetNamespace ('' = no namespace): the ##other/##target
@@ -206,33 +235,6 @@ class CompiledXsd:
     preserve_space: frozenset = frozenset()
     # table -> NestedTable for repeated elements below a row element
     nested_tables: dict = field(default_factory=dict)
-    # An OVERLAY is the view the instance reader walks for rows that
-    # validate against a type other than the table's declared one:
-    # {"spec": TableSpec, "column_paths": {column -> path}, "skipped":
-    # frozenset of paths, "wildcards": tuple of Wildcard, "mixed":
-    # frozenset of paths} — the one-type analogue of this class's
-    # column_paths / skipped_paths / wildcards / mixed_paths entries.
-    # Overlay rows are rows of their table: the spec's row checks (its
-    # name is their violation path prefix) and its identities the
-    # table's spec lacks apply to them alone; the table's identities and
-    # occurrence bounds count them (sources/xml_instance.py _table_plan).
-    # row element or nested table -> {xsi:type local name -> overlay}:
-    # dynamic type substitution on instances (reference elements.py:657-682)
-    xsi_overlays: dict = field(default_factory=dict)
-    # row element -> its declared type's local name (xsi:type naming the
-    # declared type is a no-op, anything else unknown is a violation)
-    declared_types: dict = field(default_factory=dict)
-    # head row element -> {substitution member name -> overlay}:
-    # a member element standing in for its head in the document
-    # (reference elements.py:611-621), validated against the member's own
-    # type
-    subst_overlays: dict = field(default_factory=dict)
-    # row element -> ordered list of conditional-type arms (XSD 1.1
-    # xs:alternative, reference elements.py:1450-1476): an overlay plus
-    # 'attr'/'value' (the @attr='v' test subset; attr None = the
-    # unconditional default arm) and 'type' (the arm's type name).  First
-    # matching arm wins; non-matching rows fall back to the declared type.
-    alt_overlays: dict = field(default_factory=dict)
     # table -> position of its element particle in its container's content
     # model (row elements among their global element's children, nested
     # tables in discovery order): the instance reader reports the FIRST
@@ -323,10 +325,11 @@ class _Ctx:
     # global complexType -> [(name, complexType)] of the types deriving
     # from it
     derived_of: dict = field(default_factory=dict)
-    declared_types: dict = field(default_factory=dict)
-    xsi_overlays: dict = field(default_factory=dict)
-    alt_overlays: dict = field(default_factory=dict)
-    subst_overlays: dict = field(default_factory=dict)
+    # table -> its declared type's local name
+    declared_names: dict = field(default_factory=dict)
+    # table -> {(kind, name, or an arm's position) -> overlay RowType},
+    # in the order the phases add them
+    overlays: dict = field(default_factory=dict)
     nested: dict = field(default_factory=dict)  # name -> NestedTable
     external: list = field(default_factory=list)  # ExternalKeyrefs
 
@@ -1631,22 +1634,43 @@ def _flatten_tables(ctx: _Ctx) -> None:
         ctx.models[gname] = ()
 
 
-def _overlay(ctx: _Ctx, ctype: ET.Element, key: str,
-             spec_name: str) -> tuple:
-    """``(overlay dict, n_pend)``: ``ctype`` flattened under ``key`` (see
-    :func:`_flat`) into the view the instance reader walks, its TableSpec
-    named ``spec_name`` (the violation path prefix).  The nested repeated
-    children it queued are ``ctx.pending_nested[n_pend:]``."""
-    n_pend = len(ctx.pending_nested)
-    cols, uniques = _flat(ctx, ctype, key)
-    return dict(
-        spec=_spec(ctx, spec_name, cols, uniques,
-                   assertions=ctx.assertions.get(key, ())),
+def _row_type(ctx: _Ctx, kind: str, name: Optional[str], key: str,
+              spec: S.TableSpec, cols: list, attr: Optional[str] = None,
+              value: Optional[str] = None) -> RowType:
+    """The :class:`RowType` checked by ``spec`` whose columns ``cols``
+    were flattened under ``key`` (see :func:`_flat`)."""
+    return RowType(
+        kind=kind, name=name, spec=spec,
         column_paths={c.name: c.path for c in cols},
         skipped=frozenset(ctx.skipped.get(key, ())),
         wildcards=tuple(ctx.wildcards.get(key, ())),
         mixed=frozenset(ctx.mixed.get(key, ())),
-    ), n_pend
+        attr=attr, value=value,
+    )
+
+
+def _overlay(ctx: _Ctx, table: str, kind: str, name: str,
+             ctype: ET.Element, attr: Optional[str] = None,
+             value: Optional[str] = None) -> tuple:
+    """``(key, n_pend)``: adds to ``table`` the overlay ``kind``/``name``
+    of complexType ``ctype``, flattened under ``key``.  Its TableSpec's
+    name, the violation path prefix, is ``table@T`` for an xsi:type T,
+    the table's own for an alternative arm and the member's for a
+    substitution member.  The nested repeated children it queued are
+    ``ctx.pending_nested[n_pend:]``."""
+    key = {"xsi": f"{table}@{name}", "alt": f"{table}@alt@{name}",
+           "member": f"{table}@@{name}"}[kind]
+    spec_name = {"xsi": key, "alt": table, "member": name}[kind]
+    n_pend = len(ctx.pending_nested)
+    cols, uniques = _flat(ctx, ctype, key)
+    spec = _spec(ctx, spec_name, cols, uniques,
+                 assertions=ctx.assertions.get(key, ()))
+    # the reader tells xsi:types and members apart by local name: one of
+    # each per name and table, a later one replacing an earlier in place
+    overlays = ctx.overlays.setdefault(table, {})
+    overlays[kind, len(overlays) if kind == "alt" else name] = _row_type(
+        ctx, kind, name, key, spec, cols, attr, value)
+    return key, n_pend
 
 
 def _base_chain(ctx: _Ctx, ct: ET.Element, seen: tuple = ()) -> list:
@@ -1663,8 +1687,8 @@ def _base_chain(ctx: _Ctx, ct: ET.Element, seen: tuple = ()) -> list:
     return []
 
 
-def _xsi_overlays(ctx: _Ctx, name: str, d_local: str, ctype,
-                  nested: bool) -> None:
+def _xsi_row_types(ctx: _Ctx, name: str, d_local: str, ctype,
+                   nested: bool) -> None:
     """Dynamic type substitution on instances (reference
     elements.py:657-682): for table ``name`` of declared type ``d_local``
     (the complexType ``ctype``), every global complexType DERIVING from it
@@ -1673,21 +1697,19 @@ def _xsi_overlays(ctx: _Ctx, name: str, d_local: str, ctype,
     table's overlay become nested tables gated on that xsi:type; below a
     nested table's overlay they are not supported."""
     if d_local:
-        ctx.declared_types[name] = d_local
+        ctx.declared_names[name] = d_local
     for T, tct in ctx.derived_of.get(ctype, ()):
-        key = f"{name}@{T}"
-        ov, n_pend = _overlay(ctx, tct, key, key)
+        key, n_pend = _overlay(ctx, name, "xsi", T, tct)
         if nested:
             del ctx.pending_nested[n_pend:]
         for ent in ctx.pending_nested[n_pend:]:
             if ent["parent"] == key:
                 ent["parent"] = name
                 ent["xsi_type"] = T
-        ctx.xsi_overlays.setdefault(name, {})[T] = ov
 
 
 def _overlays(ctx: _Ctx, version: str) -> None:
-    """The overlays of the row tables: xsi:type (:func:`_xsi_overlays`),
+    """The overlays of the row tables: xsi:type (:func:`_xsi_row_types`),
     XSD 1.1 conditional type alternatives and substitution-group
     members."""
     for tname, ct in ctx.reg.named("complexType"):
@@ -1695,8 +1717,8 @@ def _overlays(ctx: _Ctx, version: str) -> None:
             ctx.derived_of.setdefault(b, []).append((tname, ct))
     for name, (el, ctype, *_rest) in ctx.detected.items():
         decl = _resolve_element(el, ctx)
-        _xsi_overlays(ctx, name, _local(decl.get("type") or ""), ctype,
-                      nested=False)
+        _xsi_row_types(ctx, name, _local(decl.get("type") or ""), ctype,
+                       nested=False)
     # <xs:alternative test="@mode='A'" type="T"/> children of an element
     # declaration (reference XsdAlternative elements.py:1450-1476,
     # conditional assignment elements.py:1345-1365): instance rows whose
@@ -1729,12 +1751,9 @@ def _overlays(ctx: _Ctx, version: str) -> None:
                         "is not a named complexType (arm not applied)"
                     )
                     continue
-                # violation paths read '<element>/<col>'
-                ov, n_pend = _overlay(ctx, tct, f"{name}@alt@{tlocal}", name)
+                _key, n_pend = _overlay(ctx, name, "alt", tlocal, tct,
+                                        attr=attr, value=value)
                 del ctx.pending_nested[n_pend:]  # not supported below arms
-                ctx.alt_overlays.setdefault(name, []).append(
-                    dict(attr=attr, value=value, type=tlocal, **ov)
-                )
     # a global element with substitutionGroup=H may stand in for H in the
     # instance (elements.py:611-621): compile the member's type to an
     # overlay the reader validates member rows against, merging them into
@@ -1757,9 +1776,7 @@ def _overlays(ctx: _Ctx, version: str) -> None:
                 "skipped)"
             )
             continue
-        key = f"{head}@@{gname}"
-        # violation paths read '<member>/<col>'
-        ov, n_pend = _overlay(ctx, mpayload, key, gname)
+        key, n_pend = _overlay(ctx, head, "member", gname, mpayload)
         new = ctx.pending_nested[n_pend:]
         for ent in new:
             if ent["parent"] == key:  # not supported below members
@@ -1771,7 +1788,6 @@ def _overlays(ctx: _Ctx, version: str) -> None:
         ctx.pending_nested[n_pend:] = [
             e for e in new if e["parent"] != key
         ]
-        ctx.subst_overlays.setdefault(head, {})[gname] = ov
 
 
 def _nested_tables(ctx: _Ctx) -> None:
@@ -1809,9 +1825,9 @@ def _nested_tables(ctx: _Ctx) -> None:
         ctx.particle_rank[nname] = qi
         # the nested table's own derived types (issue_314: <item
         # b:type="Concrete..."> below a doc row)
-        _xsi_overlays(ctx, nname, ent["type_name"],
-                      ent["payload"] if ent["kind"] == "complex" else None,
-                      nested=True)
+        _xsi_row_types(ctx, nname, ent["type_name"],
+                       ent["payload"] if ent["kind"] == "complex" else None,
+                       nested=True)
 
 
 def _constraints(ctx: _Ctx, el: ET.Element, host: Optional[str]):
@@ -1941,7 +1957,7 @@ def _chain(nested: dict, table: str) -> list:
 
 def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
               ) -> CompiledXsd:
-    """The TableSpecs and reader maps of every table, restricted to
+    """The TableSpecs and row types of every table, restricted to
     ``row_elements`` (and the nested tables below them) when given."""
     specs = {
         name: _spec(ctx, name, ctx.tables[name], ctx.identities[name],
@@ -1957,16 +1973,12 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
     for nname in ctx.nested:
         top = _chain(ctx.nested, nname)[-1]
         parent_of[nname] = parent_of.get(top, top)
-    column_paths = {
-        name: {c.name: c.path for c in cols}
-        for name, cols in ctx.tables.items()
-    }
+    columns = dict(ctx.tables)
 
     def value_table(name, facets, parent, identities=(), model=()):
-        specs[name] = _spec(ctx, name, [_Column("value", facets)],
-                            identities, model)
+        columns[name] = [_Column("value", facets)]
+        specs[name] = _spec(ctx, name, columns[name], identities, model)
         parent_of[name] = parent
-        column_paths[name] = {"value": ()}
 
     # repeated SIMPLE children as one-column tables: one row per element
     # occurrence, 'value' = element text carrying the simple type's facets
@@ -2045,14 +2057,13 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
         external_keyrefs=tuple(external),
         restrictions=tuple(ctx.restrictions),
         parent_of=parent_of,
-        column_paths=column_paths,
-        skipped_paths={
-            name: frozenset(ctx.skipped.get(name, ())) for name in ctx.tables
+        row_types={
+            name: (_row_type(ctx, "declared", ctx.declared_names.get(name),
+                             name, spec, columns[name]),
+                   *ctx.overlays.get(name, {}).values())
+            for name, spec in specs.items()
         },
-        simple_rows=frozenset(ctx.detected_simple),
         doc_rows=frozenset(doc_rows),
-        wildcards={n: tuple(ctx.wildcards.get(n, ())) for n in specs},
-        mixed_paths={n: frozenset(ctx.mixed.get(n, ())) for n in specs},
         mixed_containers=frozenset(mixed_containers),
         target_namespace=ctx.root.get("targetNamespace") or "",
         global_elements=frozenset(
@@ -2060,10 +2071,6 @@ def _assemble(ctx: _Ctx, row_elements: Optional[Sequence[str]]
         ),
         preserve_space=frozenset(preserve_space),
         nested_tables=kept(ctx.nested),
-        xsi_overlays=kept(ctx.xsi_overlays),
-        declared_types=ctx.declared_types,
-        subst_overlays=kept(ctx.subst_overlays),
-        alt_overlays={n: tuple(o) for n, o in kept(ctx.alt_overlays).items()},
         particle_rank=kept(ctx.particle_rank),
     )
 

@@ -157,8 +157,8 @@ def test_xsd_alternative_arms_in_instance(spark, tmp_path):
     from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
     c = compile_xsd(GAUGE_XSD, version="1.1")
-    assert [(a["attr"], a["value"], a["type"]) for a in
-            c.alt_overlays["gauge"]] == [
+    assert [(rt.attr, rt.value, rt.name) for rt in c.row_types["gauge"]
+            if rt.kind == "alt"] == [
         ("mode", "A", "GaugeA"), ("mode", "A", "GaugeB"),
         ("mode", "B", "GaugeB")]
     p = tmp_path / "panel.xml"

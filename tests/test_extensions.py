@@ -228,6 +228,26 @@ def test_group_check_size_guard(spark):
     v = validate(df, sp).violations.collect()
     assert len(v) == 1
     assert v[0]["constraint_id"] == "group:noop:group-size-guard"
+    # an oversized group is sorted before it is truncated: the check sees
+    # the first max_group_rows turns, whatever order they arrived in
+    seen = S.TableSpec(
+        name="transcripts",
+        group_checks=(
+            S.GroupPandasCheck(
+                "seen",
+                lambda pdf: [",".join(map(str, pdf["turn_idx"]))],
+                ("role",),
+                max_group_rows=2,
+            ),
+        ),
+    )
+    reversed_df = spark.createDataFrame(
+        [("c1", i, "user", "t", None, TS) for i in reversed(range(5))],
+        df.schema,
+    ).coalesce(1)
+    got = {r["constraint_id"]: r["reason"]
+           for r in validate(reversed_df, seen).violations.collect()}
+    assert got["group:seen"] == "0,1"
 
 
 def test_max_scope_rows_guard(spark):

@@ -37,7 +37,7 @@ def test_wildcards_compile_to_markers():
     markers carry the namespace set and processContents mode, and
     restrictions stays clean (the r4 contract breach)."""
     c = compile_xsd(WILDCARD_XSD)
-    w = set(c.wildcards["item"])
+    w = set(c.row_types["item"][0].wildcards)
     assert Wildcard((), "element", "##other", "lax") in w
     assert Wildcard((), "attribute", "##any", "skip") in w
     assert c.restrictions == ()
@@ -118,7 +118,7 @@ def test_mixed_content_repro(spark, tmp_path):
   </xs:sequence></xs:complexType></xs:element>
 </xs:schema>"""
     c = compile_xsd(xsd)
-    assert () in c.mixed_paths["item"]
+    assert () in c.row_types["item"][0].mixed
     p = tmp_path / "mixed.xml"
     p.write_text("<doc><item>hello <a>x</a> world</item></doc>")
     assert count_errors(spark, str(p), c) == 0
@@ -153,7 +153,7 @@ def test_open_content_interleave(spark, tmp_path):
   </xs:sequence></xs:complexType></xs:element>
 </xs:schema>"""
     c = compile_xsd(xsd)
-    assert any(w.kind == "element" for w in c.wildcards["rec"])
+    assert any(w.kind == "element" for w in c.row_types["rec"][0].wildcards)
     p = tmp_path / "oc.xml"
     p.write_text(
         "<doc><rec><surprise>1</surprise><name>a</name></rec></doc>")

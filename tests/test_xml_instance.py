@@ -292,7 +292,9 @@ def test_menu_simple_row_tables(spark):
 
     c = compile_xsd(corpus(f"{MB}/menù.xsd"))
     assert sorted(c.specs) == ["antipasto", "dolce", "primo", "secondo"]
-    assert c.simple_rows == frozenset(c.specs)
+    # one 'value' column holding each element's own text
+    assert {t: rts[0].column_paths for t, rts in c.row_types.items()} == {
+        t: {"value": ()} for t in c.specs}
     assert count_errors(spark, corpus(f"{MB}/menù.xml"), c) == 0
     tabs = xml_instance_tables(spark, corpus(f"{MB}/menù.xml"), c)
     assert sorted(r["value"] for r in tabs["dolce"].collect()) == [
@@ -705,7 +707,8 @@ def test_unknown_xsi_type_is_flagged(spark, tmp_path):
   </xs:sequence></xs:complexType></xs:element>
 </xs:schema>"""
     c = compile_xsd(xsd)
-    assert "Derived" in c.xsi_overlays["rec"]
+    assert ("xsi", "Derived") in [(rt.kind, rt.name)
+                                  for rt in c.row_types["rec"]]
     p = tmp_path / "x.xml"
     p.write_text(
         '<doc xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance">'
@@ -722,7 +725,8 @@ def test_unknown_xsi_type_is_flagged(spark, tmp_path):
 
     c = compile_xsd(NESTED_XSI_XSD)
     assert c.nested_tables["item"].parent_table == "root"
-    assert sorted(c.xsi_overlays["item"]) == ["ItemWide"]
+    assert [rt.name for rt in c.row_types["item"]
+            if rt.kind == "xsi"] == ["ItemWide"]
     p = tmp_path / "nested.xml"
     p.write_text(
         '<root xmlns:b="http://www.w3.org/2001/XMLSchema-instance">'
@@ -868,7 +872,8 @@ def test_substitution_members_in_document(spark, tmp_path):
     AND merge into the head table, so occurrence bounds count head+member
     rows together and a members-only document satisfies the head."""
     c = compile_xsd(SUBST_XSD)
-    assert sorted(c.subst_overlays["product"]) == ["widget"]
+    assert [rt.name for rt in c.row_types["product"]
+            if rt.kind == "member"] == ["widget"]
 
     ok = tmp_path / "ok.xml"
     ok.write_text(
@@ -1071,6 +1076,29 @@ def test_cross_table_keyref_to_single_element_key(spark, tmp_path):
         ("object", "keyref:object_author", "PAR"),
         ("object", "keyref:object_author", "ZZ"),
     ])
+
+
+def test_shop_row_types_in_reference_order():
+    """Each table's row types: its declared type first (whose spec is the
+    table's), then the types an xsi:type may name, the xs:alternative arms
+    (XSD 1.1 only) and the substitution members."""
+    declared = {"rec": "Base", "product": "ProductType", "gauge": "Gauge",
+                "shop": None}
+    overlays = {
+        "rec": [("xsi", "Derived")],
+        "product": [("xsi", "WidgetType"), ("member", "widget")],
+        "gauge": [("xsi", "GaugeA")],
+        "shop": [],
+    }
+    for version, extra in (("1.0", []), ("1.1", [("alt", "GaugeA")])):
+        c = compile_xsd(SHOP_XSD, version=version)
+        assert {t: [(rt.kind, rt.name) for rt in rts]
+                for t, rts in c.row_types.items()} == {
+            t: [("declared", declared[t]), *overlays[t],
+                *(extra if t == "gauge" else [])]
+            for t in c.specs}
+        for t, rts in c.row_types.items():
+            assert rts[0].spec is c.specs[t]
 
 
 def test_xml_instance_tables_mixed_row_sets(spark):

@@ -386,8 +386,9 @@ def test_named_groups_and_attribute_groups():
     # xs:ID in the group still yields the per-document Unique
     assert any(u.name == "id-id-unique" for u in sp.identities)
     # paths recorded for the instance reader
-    assert c.column_paths["row"]["id"] == ("@id",)
-    assert c.column_paths["row"]["title"] == ("title",)
+    paths = c.row_types["row"][0].column_paths
+    assert paths["id"] == ("@id",)
+    assert paths["title"] == ("title",)
 
 
 def test_unresolved_group_ref_is_loud():
@@ -518,7 +519,7 @@ def test_complex_content_extension():
     by = {col.name: col for col in sp.columns}
     assert any(isinstance(f, S.Required) for f in by["id"].facets)
     assert any(u.name == "id-id-unique" for u in sp.identities)
-    assert c.column_paths["row"]["score"] == ("score",)
+    assert c.row_types["row"][0].column_paths["score"] == ("score",)
 
 
 def test_complex_content_restriction_derived_wins():
@@ -580,8 +581,9 @@ def test_simple_content_extension_flattens():
     assert any(isinstance(f, S.BuiltinLexical) and f.type_name == "decimal"
                for f in by["price"].facets)
     assert any(isinstance(f, S.Required) for f in by["price_currency"].facets)
-    assert c.column_paths["row"]["price"] == ("price",)
-    assert c.column_paths["row"]["price_currency"] == ("price", "@currency")
+    paths = c.row_types["row"][0].column_paths
+    assert paths["price"] == ("price",)
+    assert paths["price_currency"] == ("price", "@currency")
 
 
 def test_simple_content_restriction_compiles():
@@ -670,7 +672,7 @@ def test_recursive_type_cycle_is_cut():
     """)
     c = compile_xsd(src)
     assert any("cycle cut" in r for r in c.restrictions)
-    assert any(c.skipped_paths.get(t) for t in c.specs)
+    assert any(rts[0].skipped for rts in c.row_types.values())
 
 
 def test_alternative_arm_outside_subset_is_loud():
@@ -699,9 +701,9 @@ def test_alternative_arm_outside_subset_is_loud():
       </xs:complexContent></xs:complexType>
     """)
     c = compile_xsd(src, version="1.1")
-    arms = c.alt_overlays.get("node", ())
-    assert len(arms) == 1 and arms[0]["attr"] == "kind" \
-        and arms[0]["value"] == "x"
+    arms = [rt for rt in c.row_types["node"] if rt.kind == "alt"]
+    assert len(arms) == 1 and arms[0].attr == "kind" \
+        and arms[0].value == "x"
     assert any("outside" in r and "alternative" in r for r in c.restrictions)
 
 
@@ -768,7 +770,8 @@ def test_nillable_emits_nil_column_and_conditional_required():
     c = compile_xsd(src)
     cols = {col.name: col for col in c.specs["r"].columns}
     assert "v__nil" in cols
-    assert tuple(c.column_paths["r"]["v__nil"]) == ("v", "@xsi:nil")
+    assert tuple(c.row_types["r"][0].column_paths["v__nil"]) == (
+        "v", "@xsi:nil")
     req = [f for f in cols["v"].facets if isinstance(f, S.Required)]
     assert req and req[0].when and "v__nil" in req[0].when
     assert any(isinstance(f, S.Nillable) for f in cols["v"].facets)
